@@ -10,37 +10,56 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Indices inside maximal runs of >= `k` CONSECUTIVE hot entries — the
-    * consecutive-window inflation gate (VERDICT r21 #6). r21's driver
-    * sweep carried two multi-entry contention windows (q21-q26 and a
-    * q120-q283 region) inflated ~3x vs their recorded medians with clean
-    * flanking probes; adjacency is the signature that separates a machine
-    * transient from independent regressions (r18/r21: every refuted
-    * window was contiguous in execution order). Pure so BenchWindowSpec
-    * can pin it on synthetic inflation patterns. */
-  private[graft] def contentionWindows(hot: Seq[Boolean], k: Int): Set[Int] = {
-    val runs = scala.collection.mutable.Set.empty[Int]
-    var i = 0
-    while (i < hot.size) {
-      if (hot(i)) {
-        var j = i
-        while (j < hot.size && hot(j)) j += 1
-        if (j - i >= k) runs ++= (i until j)
-        i = j
-      } else i += 1
-    }
-    runs.toSet
+  /** The 2x contract against an entry's recorded median `e`: a wall above
+    * max(1.8 x e, e + 0.75 s), or above a pure 2.0x ratio regardless of
+    * absolute delta, so a sub-second entry whose +0.5 s of scheduler noise
+    * is under the absolute floor can still never breach the contract
+    * (r15: q28 at 3.35x / +0.49 s and q25 at 2.86x / +0.63 s). */
+  private def slowVsExpect(t: Double, e: Double): Boolean =
+    t > math.max(1.8 * e, e + 0.75) || t > 2.0 * e
+
+  /** Entries the sweep re-runs, from its first-pass walls (name -> s,
+    * -1 = failed) and tools/bench_expect.json's recorded medians: every
+    * failure, plus every entry over [[slowVsExpect]]. A transient — a
+    * co-tenant, a GC storm, I/O pressure — inflates one run; the MIN of
+    * two runs is the operator's cost, while a real plan defect is slow in
+    * both. Capped: if a third of the sweep is slow the slowdown is global
+    * (the contract is moot anyway) and only the worst ratios re-run. */
+  private[graft] def retrySet(walls: Seq[(String, Double)],
+                              expect: Map[String, Double]): Set[String] = {
+    val failed = walls.collect { case (k, t) if t < 0 => k }
+    val slow = walls
+      .filter { case (k, t) => t >= 0 && expect.get(k).exists(slowVsExpect(t, _)) }
+      .sortBy { case (k, t) => -(t / math.max(expect(k), 0.01)) }
+      .take(walls.size / 3).map(_._1)
+    (failed ++ slow).toSet
   }
+
+  /** Median over entries of first-pass wall / recorded median (upper
+    * median for an even count; entries without a row or with a failed run
+    * are left out). A co-tenant that slows the whole sweep moves it even
+    * when no single entry crosses the 2x contract. */
+  private[graft] def sweepRatio(walls: Seq[(String, Double)],
+                                expect: Map[String, Double]): Option[Double] = {
+    val rs = walls.collect { case (k, t) if t >= 0 && expect.contains(k) =>
+      t / math.max(expect(k), 0.01) }.sorted
+    if (rs.isEmpty) None else Some(rs(rs.size / 2))
+  }
+
+  /** Sweep-level contention flag: the sweep ratio above this marks the
+    * whole sweep as run on a busy machine. The 13 r22 same-tree sweeps
+    * (tools/bench_r22_sweep*.json, BenchReplaySpec) read 0.965-0.997 on
+    * the clean ones and 1.047-1.229 on the inflated ones. */
+  private[graft] val SweepInflated = 1.02
+
+  private[graft] def sweepInflated(walls: Seq[(String, Double)],
+                                   expect: Map[String, Double]): Boolean =
+    sweepRatio(walls, expect).exists(_ > SweepInflated)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Warm-up (untimed): first-query costs are JVM/codegen/classloading,
     // not operator cost — touch the read+sort+noop path once so q01's
@@ -131,66 +150,8 @@ object Bench {
       require(dup.isEmpty, s"short-key collision: ${dup.mkString(", ")}")
     }
 
-    // ---- Contention detection + deferred retry -------------------------
-    // Rounds 10 and 11 both showed a contiguous ~40-entry window of the
-    // driver's sweep inflated 3-6x vs the identical entries in an
-    // uncontended run (same fresh-JVM single-pass harness, same order) —
-    // transient external CPU contention on the shared machine, not plans
-    // or JVM state (entries before and after the window match within
-    // noise). A wall-clock taken inside such a window measures the
-    // co-tenant, not the operator. Defense: a tiny single-threaded CPU
-    // probe (~15 ms) timed before each entry samples machine load; entries
-    // whose surrounding probes are inflated are re-run ONCE after the full
-    // sweep (by then the transient has passed) and the MIN of the two
-    // wall-clocks is reported — the standard min-of-k estimator for the
-    // operator's true cost. Clean runs pay ~3 s of probes and re-run
-    // nothing; the retry list is recorded in the output for transparency.
-    var probeSink = 0L   // defeat dead-code elimination across probe calls
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 6_000_000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      probeSink ^= x
-      (System.nanoTime() - t0) / 1e9
-    }
-    val probe0cal = Seq.fill(7)(probe()).sorted.apply(3)   // warmed median (JIT warm-up)
-    val contendedFactor = 1.6
-
-    // ---- I/O + shuffle canary (VERDICT r18 #1) -------------------------
-    // The CPU-spin probe is blind to non-CPU contention: the r18 driver
-    // sweep carried TEN entries at 2.6-7.3x baseline with clean probes and
-    // an empty retry_contended — a quiet re-run refuted every one, so the
-    // inflation was I/O / memory-bandwidth / co-tenant-GC pressure the
-    // spin loop cannot see. This canary is a tiny FIXED Spark job through
-    // the same machinery the entries use — parquet scan (I/O + decode),
-    // one hash-agg exchange (shuffle write+read), noop sink, real task
-    // scheduling — so any contention class that inflates an entry inflates
-    // it too. It runs (a) a few calibration reps, (b) every
-    // `canaryEvery` entries during the sweep (a time SERIES for post-hoc
-    // window correlation, ~0.1-0.2 s each — a few seconds per sweep), and
-    // (c) flanking every retry, where an inflated canary lands the entry
-    // in the new `suspect_env` field: "this min-of-two may STILL be
-    // environment-inflated — do not read it as a regression".
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/customer.parquet")
-        .groupBy("c_mktsegment").count()
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val canarySamples = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    val sweepStart = System.nanoTime()
-    def offNow(): Double = (System.nanoTime() - sweepStart) / 1e9
-    def canarySample(): Double = {
-      val off = offNow(); val c = canary(); canarySamples += ((off, c)); c
-    }
-    val canaryCal = Seq.fill(5)(canarySample()).sorted.apply(2)  // warmed median
-    val canaryFactor = 2.0   // I/O timings are noisier than the CPU spin
-    val canaryEvery = 25
-
-    // Per-entry JVM health: GC time delta across the entry's window (own
-    // JVM's collector — co-tenant GC shows in the canary instead) plus the
-    // sweep-level code-cache occupancy, recorded for post-hoc diagnosis.
+    // Per-entry JVM health: GC time delta across the entry's window plus
+    // the sweep-level code-cache occupancy, recorded for post-hoc diagnosis.
     import scala.jdk.CollectionConverters._
     def gcMsNow(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -199,12 +160,11 @@ object Bench {
       .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
       .map(_.getUsage.getUsed).sum / 1e6
 
-    // (start_offset_s, gc_ms) per timed run, keyed by entry name — the
-    // wall-clock timestamps let a reader correlate an inflated block with
-    // the canary series' window (r18's contiguous-window signature).
+    // (start_offset_s, gc_ms) per timed run, keyed by entry name
+    val sweepStart = System.nanoTime()
     val entryMeta = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
     def timeOnce(e: graft.queries.Entry): Double = {
-      val off = offNow()
+      val off = (System.nanoTime() - sweepStart) / 1e9
       val gc0 = gcMsNow()
       val t0 = System.nanoTime()
       val ok = try {
@@ -222,32 +182,10 @@ object Bench {
       if (ok) elapsed else -1.0
     }
 
-    val probes = new Array[Double](entries.size + 1)
-    val firstPass = entries.zipWithIndex.map { case (e, i) =>
-      probes(i) = probe()
-      if (i > 0 && i % canaryEvery == 0) canarySample()
-      e.name -> timeOnce(e)
-    }
-    probes(entries.size) = probe()
+    val firstPass = entries.map(e => e.name -> timeOnce(e))
 
-    // ---- Expectation-based outlier retry ------------------------------
-    // The probe pair only sees transients BETWEEN entries. Rounds 10-12
-    // each had entries inflated 3-10x by contention entirely INSIDE one
-    // entry's window (r12: q201 read 6.35 s vs its 0.66 s row with clean
-    // flanking probes) — invisible to the probes by construction. Defense:
-    // tools/bench_expect.json tracks each entry's median full-sweep cost
-    // (re-recorded with BASELINE); a first-pass time above
-    // max(1.8 x expect, expect + 0.75 s) — OR above a pure 2.0x ratio
-    // regardless of absolute delta, so a sub-second entry whose +0.5 s of
-    // scheduler noise is under the absolute floor can still never breach
-    // the 2x baseline contract (r15: q28 at 3.35x / +0.49 s and q25 at
-    // 2.86x / +0.63 s were both under the old floor) — joins the retry
-    // pass and the MIN of the two runs is reported (standard
-    // transient-robust estimator). This cannot hide a real regression — a
-    // genuine plan defect is slow in BOTH runs — and the retried names are
-    // published in the "slow" field. Capped: if a third of the sweep
-    // qualifies the slowdown is global (the baseline contract is moot
-    // anyway) and only the worst offenders by ratio re-run.
+    // tools/bench_expect.json: each entry's median full-sweep cost,
+    // re-recorded with BASELINE (tools/record_baseline.py)
     val expect: Map[String, Double] = {
       val f = new java.io.File("tools/bench_expect.json")
       if (!f.exists()) Map.empty
@@ -258,126 +196,29 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
     }
-    val slowIdx: Set[Int] = entries.indices
-      .filter { i =>
-        val t = firstPass(i)._2
-        t >= 0 && expect.get(entries(i).name)
-          .exists(e => t > math.max(1.8 * e, e + 0.75) || t > 2.0 * e)
-      }
-      .sortBy(i => -(firstPass(i)._2 / math.max(expect(entries(i).name), 0.01)))
-      .take(entries.size / 3).toSet
-
-    // Baseline = the MINIMUM probe observed anywhere in the run, not the
-    // startup calibration alone: contention overlapping JVM startup
-    // would inflate a startup-only baseline and blind the detector for
-    // the whole sweep — the exact transient this mechanism defends
-    // against. The floor of 200+ samples is the uncontended cost by
-    // construction (a co-tenant can only ever make the probe SLOWER).
-    val probe0 = math.min(probe0cal, probes.min)
-    // An entry is contention-suspect when BOTH flanking probes are
-    // inflated (min of the two > factor x floor — one slow probe alone
-    // is scheduler noise). Failures are retried too (a transient can
-    // also break a streaming drain's timing assumptions) but are
-    // reported SEPARATELY — a deterministic failure is not evidence of
-    // machine contention. Bounded: worst case re-runs the sweep once.
-    val contendedIdx = entries.indices.filter { i =>
-      math.min(probes(i), probes(i + 1)) > contendedFactor * probe0
-    }.toSet
-    val failedIdx = entries.indices.filter(i => firstPass(i)._2 < 0).toSet
-    // Consecutive-window inflation gate (VERDICT r21 #6): >= 3 adjacent
-    // entries each above 2x their recorded medians mark a contention
-    // WINDOW — every member joins the retry set, including members under
-    // the per-entry slow thresholds (r21's windows carried sub-threshold
-    // riders that distorted PERF without ever qualifying individually).
-    val windowIdx: Set[Int] = contentionWindows(
-      entries.indices.map { i =>
-        val t = firstPass(i)._2
-        t >= 0 && expect.get(entries(i).name).exists(e => t > 2.0 * e)
-      }, 3)
-    val suspect = contendedIdx ++ failedIdx ++ slowIdx ++ windowIdx
-    if (suspect.nonEmpty)
-      System.err.println(s"[bench] retrying ${suspect.size} entries " +
-        s"(contended: ${contendedIdx.toSeq.sorted.map(entries(_).name).mkString(", ")}; " +
-        s"failed: ${failedIdx.toSeq.sorted.map(entries(_).name).mkString(", ")}; " +
-        s"slow-vs-expect: ${slowIdx.toSeq.sorted.map(entries(_).name).mkString(", ")})")
-    // The retry window is probed too: a min-of-two where both runs were
-    // contended is still inflated, and that must be visible in the
-    // record rather than passing as a clean number. Beyond the CPU probe
-    // (r18 #1), the retry window is also CANARY-flanked: an inflated
-    // canary means I/O / memory-bandwidth / co-tenant pressure the spin
-    // probe can't see was live during the retry, so the min-of-two lands
-    // in `suspect_env` instead of passing as a clean slow row.
-    val retryContended = scala.collection.mutable.TreeSet.empty[Int]
-    val envSuspect = scala.collection.mutable.TreeSet.empty[Int]
-    // Canary floor CONTINUITY (VERDICT r19 #5): a run's own min floor is
-    // blind to whole-run contention (every sample inflated together —
-    // BASELINE.md's documented blind spot). The baseline recording now
-    // persists the 3-sweep median floor per scale factor
-    // (__canary_ms__<sf> in bench_expect.json); when a floor for THIS
-    // sf exists, (a) the run self-flags at the sweep level when its
-    // MEDIAN canary sample exceeds canaryFactor x the recorded floor —
-    // the median, not the run min, because the min-of-~20 estimator is
-    // exactly what whole-run contention fools last (a single scheduling
-    // gap yields one cheap sample; induced-contention measurement: the
-    // clean median sits ~1.3x the recorded floor, contended medians
-    // >= 2x, while the contended MIN stayed at 1.6x) — and (b) the
-    // recorded floor joins the run floor (min) for retry suspect_env
-    // flanking, so per-entry flags keep working inside a
-    // wholly-contended sweep. Floors at other scale factors are not
-    // comparable (the canary scans $sfDir/customer.parquet) and are
-    // ignored by key.
-    val recordedCanarySec: Option[Double] =
-      expect.get("__canary_ms__" + new java.io.File(sfDir).getName).map(_ / 1000.0)
-    // the run-local floor mirrors probe0: the MIN over every sample in
-    // the run is the uncontended cost by construction
-    def runCanaryFloor: Double = canarySamples.map(_._2).min
-    def canaryFloor: Double =
-      recordedCanarySec.fold(runCanaryFloor)(math.min(runCanaryFloor, _))
-    def runCanaryMedian: Double = {
-      val xs = canarySamples.map(_._2).sorted
-      xs(xs.size / 2)
-    }
-    def sweepSuspectEnv: Boolean =
-      recordedCanarySec.exists(rec => runCanaryMedian > canaryFactor * rec)
-    // Bounded canary backoff before the retry pass (VERDICT r21 #6 part
-    // b): r21's per-entry retries fired but landed INSIDE the same
-    // contention window, so the min-of-two stayed inflated. Wait until
-    // the I/O+shuffle canary returns under canaryFactor x floor before
-    // re-running — bounded at ~45 s so a permanently-busy box still
-    // completes (the suspect_env flag then records the residual risk).
-    var retryBackoffS = 0.0
-    if (suspect.nonEmpty) {
-      val t0 = System.nanoTime()
-      var tries = 0
-      while (tries < 15 && canarySample() > canaryFactor * canaryFloor) {
-        Thread.sleep(3000); tries += 1
-      }
-      retryBackoffS = (System.nanoTime() - t0) / 1e9
-    }
-    val results = entries.zipWithIndex.map { case (e, i) =>
-      if (!suspect(i)) firstPass(i)
+    // Deferred min-of-two retry: by the end of the sweep a transient has
+    // passed, so each suspect entry re-runs once and reports the MIN.
+    val retry = retrySet(firstPass, expect)
+    val retried = firstPass.map(_._1).filter(retry)
+    val refailed = firstPass.collect { case (k, t) if t < 0 => k }
+    val slowRetried = retried.filterNot(refailed.toSet)
+    if (retried.nonEmpty)
+      System.err.println(s"[bench] retrying ${retried.size} entries " +
+        s"(failed: ${refailed.mkString(", ")}; slow-vs-expect: ${slowRetried.mkString(", ")})")
+    val results = entries.zip(firstPass).map { case (e, (k, t)) =>
+      if (!retry(k)) k -> t
       else {
-        val cb = canarySample()
-        val pb = probe()
         val again = timeOnce(e)
-        val pa = probe()
-        val ca = canarySample()
-        if (math.min(pb, pa) > contendedFactor * probe0) retryContended += i
-        if (math.min(cb, ca) > canaryFactor * canaryFloor) envSuspect += i
-        val best =
-          if (firstPass(i)._2 < 0) again
-          else if (again < 0) firstPass(i)._2
-          else math.min(firstPass(i)._2, again)
-        e.name -> best
+        k -> (if (t < 0) again else if (again < 0) t else math.min(t, again))
       }
     }
-    def names(ix: Iterable[Int]): Seq[String] = ix.toSeq.sorted.map(entries(_).name)
-    val retried = names(contendedIdx)
-    val refailed = names(failedIdx)
-    val slowRetried = names(slowIdx)
-    val windowRetried = names(windowIdx)
-    val retryStillContended = names(retryContended)
-    val envSuspectNames = names(envSuspect)
+    // a min-of-two still over 2x: contention outlasted the sweep, or a
+    // real regression — either way not a clean row
+    val envSuspectNames = results.collect {
+      case (k, v) if retry(k) && v >= 0 && expect.get(k).exists(v > 2.0 * _) => k
+    }
+    val ratio = sweepRatio(firstPass, expect)
+    val sweepSuspectEnv = sweepInflated(firstPass, expect)
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     def f3(v: Double): String = "%.3f".format(v)
 
@@ -392,25 +233,20 @@ object Bench {
     //     bench_full.json) sized to survive the tail window.
     // build.sbt suppresses sbt's "[success]" banner so this line is the
     // final line of output.
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+    def jmap(kvs: Iterable[(String, Double)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     def jarr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val ingestPartsJson = ingestParts
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    // Environment/diagnosis sidecar fields (r18 #1): the canary time
-    // series as (sweep_offset_s, seconds) pairs, per-entry
-    // [start_offset_s, gc_ms] for the entry's LAST timed run, and
-    // sweep-level JVM health. A reader checking a >2x row should first
-    // check suspect_env, then correlate the row's start offset with the
-    // canary series before calling it a regression.
-    val canaryJson = canarySamples
-      .map { case (off, c) => s"[${f3(off)},${f3(c)}]" }.mkString("[", ",", "]")
+    // Diagnosis sidecar fields: the first-pass wall of every re-run entry
+    // (so the retry set and the sweep flag can be replayed from the record),
+    // per-entry [start_offset_s, gc_ms] for the entry's LAST timed run, and
+    // sweep-level JVM health.
     val entryMetaJson = entryMeta
       .map { case (k, (off, gc)) => "\"" + k + "\":[" + f3(off) + "," + gc + "]" }
       .mkString("{", ",", "}")
     val jvmJson =
       s"""{"gc_ms_total":${gcMsNow()},"code_cache_mb":${f3(codeCacheUsedMb())}}"""
     val fullJson =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","ingest":${f3(ingestSec)},"ingest_parts":$ingestPartsJson,"probe_ms":${f3(probe0 * 1000)},"canary_ms":${f3(runCanaryFloor * 1000)},"sweep_suspect_env":$sweepSuspectEnv,"retried":${jarr(retried)},"refailed":${jarr(refailed)},"slow":${jarr(slowRetried)},"window_retry":${jarr(windowRetried)},"retry_backoff_s":${f3(retryBackoffS)},"retry_contended":${jarr(retryStillContended)},"suspect_env":${jarr(envSuspectNames)},"canary_series":$canaryJson,"entry_meta":$entryMetaJson,"jvm":$jvmJson,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","ingest":${f3(ingestSec)},"ingest_parts":${jmap(ingestParts)},"sweep_ratio":${ratio.fold("null")(f3)},"sweep_suspect_env":$sweepSuspectEnv,"retried":${jarr(retried)},"refailed":${jarr(refailed)},"slow":${jarr(slowRetried)},"suspect_env":${jarr(envSuspectNames)},"first_pass":${jmap(firstPass.filter(kv => retry(kv._1)))},"entry_meta":$entryMetaJson,"jvm":$jvmJson,"queries":${jmap(results)},"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     Files.write(java.nio.file.Paths.get(outPath),
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -52,11 +52,8 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <outDir> [copies]")
     val src = args(0); val out = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
 
     // key-domain shift units (multiples of 20; far above any fixture key)
     val CUST = 10000000L   // c_custkey, o_custkey, user_id

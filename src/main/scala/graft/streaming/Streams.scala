@@ -417,8 +417,8 @@ object Streams {
     // must equal the batch fold (same oracle as q03).
     Entry("q51_stream_ingest", DocSync.oracleSqlDocTable) { (s, d) =>
       val stream = ChangeLog.fromEvents(readStreamTable(s, d, "events"))
-      val stateDir = Files.createTempDirectory("graft_docstate").toString
-      val ckpt = Files.createTempDirectory("graft_ckpt").toString
+      val stateDir = newStageDir("graft_docstate")
+      val ckpt = newStageDir("graft_ckpt")
       DocSync.flattenDocs(DocSync.runStream(s, stream, stateDir, ckpt))
     },
 

@@ -517,17 +517,18 @@ object Funnel {
     *     margin = Σ_f ((1000·c_f) div n_tok)·w[f] + n_tok·w[64] + w[65]
     *     is margins()'s aggregate over the bucket∪len∪bias union in
     *     closed form — integer arithmetic throughout, bit-identical.
-    *   - mean_unat: `w2` is null exactly at each doc's terminal token;
-    *     the LEFT model joins leave nulls there and [[Text.knRowUnatCol]]
-    *     propagates them, so count(u)/sum(u) recover knDocMeanOf's
-    *     n_bigrams/nll_unat exactly (resubstitution guarantees every real
-    *     pair matches all four tables, so u is non-null on precisely the
-    *     bigram rows). Docs with tokens but no bigram carry a null
-    *     mean_unat — the same miss the lm left join produced.
+    *   - mean_unat: `u` is scored only on rows whose (w1, w2) pair
+    *     matched `cb` — the condition knScoredAgainst's inner joins
+    *     impose. A matched pair also matches cw1/cw2 (both are derived
+    *     from cb), and `w2` is null at each doc's terminal token, which
+    *     never matches; so count(u)/sum(u) recover knDocMeanOf's
+    *     n_bigrams/nll_unat exactly, for held-out docs as well as for
+    *     the training corpus. Docs with tokens but no matched pair carry
+    *     a null mean_unat — the same miss the lm left join produced.
     * Zero-token docs are absent (both gates fail closed at the consumer's
     * coalesce, as before). Model tables broadcast; the only exchanges are
     * the doc-keyed aggregations — the q274 per-batch pin holds. */
-  private[text] def lmGateSignals(toks: DataFrame, cb: DataFrame,
+  private[graft] def lmGateSignals(toks: DataFrame, cb: DataFrame,
       cw1: DataFrame, cw2: DataFrame, tt: DataFrame,
       wsum: Seq[Long]): DataFrame = {
     val exploded = toks
@@ -543,7 +544,7 @@ object Funnel {
       .join(broadcast(cw1), Seq("w1"), "left")
       .join(broadcast(cw2), Seq("w2"), "left")
       .crossJoin(broadcast(tt))
-      .withColumn("u", Text.knRowUnatCol)
+      .withColumn("u", when(col("cab").isNotNull, Text.knRowUnatCol))
     val perF = scored
       .groupBy(col("doc_id"),
         (Text.tokenHash(col("w1")) % Perceptron.NumBuckets).as("f"))

@@ -357,8 +357,8 @@ object Text {
   /** The per-row KN probability → micro-nat law off joined model columns
     * (cab, c1, n1p, np2, t) — ONE copy shared by [[knScoredAgainst]]
     * (inner-join corpus scoring) and the fused gate-signal pass
-    * (Funnel.lmGateSignals: LEFT-join scoring where a doc's terminal
-    * token carries a null pair and the law propagates the null). */
+    * (Funnel.lmGateSignals: LEFT-join scoring that applies the law only
+    * where the (w1, w2) pair matched cb). */
   private[text] def knRowUnatCol: Column = {
     val p = greatest(col("cab").cast("double") - 0.75, lit(0.0)) / col("c1") +
       ((lit(0.75) * col("n1p")) / col("c1")) *

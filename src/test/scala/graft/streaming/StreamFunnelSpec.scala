@@ -29,4 +29,34 @@ class StreamFunnelSpec extends GraftSuite {
       s"stage-8 gate is vacuous: $drained")
     spark.catalog.clearCache()
   }
+
+  test("g7 signal on a held-out doc scores only bigrams the model has seen") {
+    import org.apache.spark.sql.functions.col
+    import graft.text.Text
+    val s = spark
+    import s.implicits._
+    def toks(docs: (Long, String)*) = docs.toDF("doc_id", "text")
+      .select(col("doc_id"), Text.tokens(col("text")).as("ws"))
+    // model bigrams (a,b), (b,c), (c,d): every letter is a known w1 or w2
+    val (cb, cw1, cw2, tt) =
+      Text.knModelTables(Text.bigramPairsOf(toks(1L -> "a b", 2L -> "b c", 3L -> "c d")))
+    // not in the training corpus: (b,d) and (a,d) are unseen pairs whose
+    // unigrams are both in the model; doc 12 has only a seen pair
+    val held = toks(10L -> "a b d", 11L -> "a d", 12L -> "b c")
+    def means(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+      df.select(col("doc_id"), col("mean_unat")).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+    val got = means(graft.text.Funnel.lmGateSignals(held, cb, cw1, cw2, tt,
+      Seq.fill(graft.text.Perceptron.NumFeatures)(0L)))
+    // reference: the inner-join scoring q252's at-rest path uses
+    val want = means(Text.knDocMeanOf(
+      Text.knScoredAgainst(Text.bigramPairsOf(held), cb, cw1, cw2, tt)))
+    assert(got.keySet == Set(10L, 11L, 12L), s"missing gate rows: $got")
+    for (d <- got.keys) {
+      val w = want.getOrElse(d, None)
+      assert(got(d) == w, s"doc $d: gate ${got(d)} vs inner-join $w")
+    }
+    assert(got(11L).isEmpty && got(10L).isDefined)
+    cb.unpersist()
+  }
 }

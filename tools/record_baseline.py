@@ -34,15 +34,13 @@ for s in sweeps[1:]:
     assert set(s["queries"]) == names, "sweeps cover different entry sets"
 
 # Contention hygiene gate (r20 review): a recording taken from flagged
-# sweeps would bake contention into the medians AND ratchet the canary
-# floor up — silently re-opening the whole-run blind spot the floor
-# exists to close. Any contention flag on any sweep refuses the
-# recording unless --force (the round-18 procedure then applies: record
-# a second batch and show the two agree).
+# sweeps would bake contention into the medians. Any re-run failure,
+# slow entry or sweep-level flag (median first-pass / expect ratio over
+# graft.Bench.SweepInflated) on any sweep refuses the recording unless
+# --force (the round-18 procedure then applies: record a second batch and
+# show the two agree).
 flagged = [(i + 1, k, s.get(k)) for i, s in enumerate(sweeps)
-           for k in ("retried", "refailed", "slow", "retry_contended",
-                     "suspect_env")
-           if s.get(k)] + \
+           for k in ("refailed", "slow") if s.get(k)] + \
           [(i + 1, "sweep_suspect_env", True) for i, s in enumerate(sweeps)
            if s.get("sweep_suspect_env")]
 if flagged:
@@ -54,37 +52,18 @@ if flagged:
               "after a second batch agrees — see BASELINE.md discipline).")
         sys.exit(1)
 
-med = {k: round(statistics.median(s["queries"][k] for s in sweeps), 2)
-       for k in sorted(names)}
-
-# Canary-floor continuity (VERDICT r19 #5): persist the recording's
-# I/O+shuffle canary floor (median of the three sweeps' run-min floors)
-# keyed BY SCALE FACTOR, so a future sweep whose entire run is contended
-# can self-flag against the recorded floor — the one contention class a
-# run's own min cannot see. The key carries the sf basename because the
-# canary scans $sfDir/customer.parquet: floors at different scales are
-# not comparable.
 sfs = {s.get("sf", "").rstrip("/").split("/")[-1] for s in sweeps}
 assert len(sfs) == 1, f"sweeps ran at different scale factors: {sfs}"
-canary_key = f"__canary_ms__{sfs.pop()}"
-canary_med = (round(statistics.median(s["canary_ms"] for s in sweeps), 2)
-              if all("canary_ms" in s for s in sweeps) else None)
-# The floor only LOWERS automatically (a faster observation is a better
-# estimate of the uncontended cost); raising it — e.g. after a genuine
-# hardware change — requires --force, so ambient or sub-threshold
-# contention can never ratchet the sweep-flag bar upward (r20 review).
-if canary_med is not None and canary_key in prev and not force:
-    canary_med = min(canary_med, prev[canary_key])
-if canary_med is not None and canary_key in prev:
-    print(f"canary floor: {prev[canary_key]} -> {canary_med} ms")
+
+med = {k: round(statistics.median(s["queries"][k] for s in sweeps), 2)
+       for k in sorted(names)}
 
 # continuity vs previous medians — computed BEFORE the write so a
 # regressed recording can't overwrite the baseline unnoticed. Only a
 # REGRESSION (new slower than prev past the threshold) blocks recording;
 # a same-magnitude improvement is reported but records freely — refusing
 # it would force --force for exactly the change the gate exists to
-# encourage (r16 advice). (Pseudo-rows like __canary_ms__* never appear
-# in `names`, so they ride outside the per-entry continuity gate.)
+# encourage (r16 advice).
 slower, faster = [], []
 for k in sorted(names & set(prev)):
     a, b = prev[k], med[k]
@@ -103,13 +82,8 @@ if slower and not force:
           "re-sweep, or pass --force for a deliberate re-plan/re-record.")
     sys.exit(1)
 
-out = dict(med)
-# keep any recorded floors for OTHER scale factors; refresh this one
-out.update({k: v for k, v in prev.items() if k.startswith("__canary_ms__")})
-if canary_med is not None:
-    out[canary_key] = canary_med
 with open("tools/bench_expect.json", "w") as f:
-    json.dump(out, f, indent=1, sort_keys=True)
+    json.dump(med, f, indent=1, sort_keys=True)
 
 print()
 ks = sorted(med)

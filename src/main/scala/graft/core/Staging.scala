@@ -6,18 +6,35 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Ingest-time artifact staging shared by the text index (TokenIndex) and
-  * the vector index (VectorIndex): build a projection ONCE per corpus dir,
-  * park it as temp parquet, memoize per JVM, delete at exit.
+/** Scratch state for the harness: the one registry of temp dirs and the
+  * ingest-time artifact staging built on it.
   *
-  * The cache key carries the source parquet's (mtime, size) fingerprint so
-  * a rewritten source under the same dir invalidates the staged artifact
-  * instead of silently serving stale rows (the fixtures are immutable in
-  * practice; this is cheap insurance, not a full catalog).
+  * Every graft temp dir (stream stages, checkpoints, sink outputs, staged
+  * artifacts) comes from [[scratchDir]], and one JVM-exit hook deletes
+  * them all — no caller creates a temp dir or registers a hook itself.
+  *
+  * Staging shared by the text index (TokenIndex) and the vector index
+  * (VectorIndex): build a projection ONCE per corpus dir, park it as
+  * temp parquet, memoize per JVM. The cache key carries the source
+  * parquet's (mtime, size) fingerprint so a rewritten source under the
+  * same dir invalidates the staged artifact instead of silently serving
+  * stale rows (the fixtures are immutable in practice; this is cheap
+  * insurance, not a full catalog).
   */
 private[graft] object Staging {
 
   private val cache = TrieMap.empty[String, String]
+
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(scratch.forEach(f => Fs.deleteRecursively(f)))
+
+  /** A fresh temp dir named `prefix<random>`, deleted at JVM exit, so
+    * repeated harness runs don't leak staged copies into the temp dir. */
+  def scratchDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    scratch.add(dir)
+    dir.toString
+  }
 
   /** Cache key carrying the source parquet's (mtime, size) fingerprint —
     * shared by every per-JVM staging memo (token/vector index here, the
@@ -35,16 +52,14 @@ private[graft] object Staging {
   }
 
   /** Memoize a staged DIRECTORY per fingerprinted source: first use
-    * creates a temp dir (JVM-exit cleaned) and runs `build` into it;
-    * later uses return the same path. The one copy of the
-    * TrieMap + createTempDirectory + shutdown-hook pattern — callers
-    * (the token/vector index below, SyncQueries' merge table) must not
-    * re-implement it. */
+    * takes a [[scratchDir]] and runs `build` into it; later uses return
+    * the same path. The one per-JVM memo of staged dirs — callers (the
+    * token/vector index below, SyncQueries' merge table, the stream
+    * stages and drained stores) must not re-implement it. */
   def stagedDir(dir: String, srcTable: String, name: String)
                (build: String => Unit): String =
     cache.getOrElseUpdate(key(dir, srcTable, name), {
-      val tmp = Files.createTempDirectory(s"graft_$name").toString
-      sys.addShutdownHook(Fs.deleteRecursively(new java.io.File(tmp)))
+      val tmp = scratchDir(s"graft_$name")
       build(tmp)
       tmp
     })

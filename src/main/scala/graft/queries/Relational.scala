@@ -33,7 +33,7 @@ object Relational {
     Entry("q04_roundtrip",
       "SELECT COUNT(*) AS n FROM lineitem") { (s, d) =>
       // source-connector check: parquet -> json -> count parity
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+      val tmp = graft.core.Staging.scratchDir("graft_json")
       T(s, d, "lineitem").write.mode("overwrite").json(tmp)
       s.read.json(tmp).select(count(lit(1)).as("n"))
     },

@@ -5,9 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Tables
+import graft.core.{Drain, Staging, Tables}
 import graft.model.ChangeLog
 import graft.queries.Entry
 import graft.sync.DocSync
@@ -16,26 +16,19 @@ import graft.sync.DocSync
   *
   * Correctness contract is stream-batch equivalence (the prefix-consistency
   * property of the Structured Streaming paper): each query runs a REAL
-  * streaming query (file source, `Trigger.AvailableNow`, memory/foreachBatch
-  * sink) and is hash-checked against a DuckDB batch oracle over the same
-  * rows. The reference's micro-batcher (size trigger 10000 / time trigger
-  * 10 s, ElasticsearchBulkOperator.java:30-41) maps onto source rate options
-  * + `Trigger.ProcessingTime` in production; tests use AvailableNow so the
-  * run drains deterministically.
+  * streaming query (staged file source, memory / file / foreachBatch sink)
+  * and is hash-checked against a DuckDB batch oracle over the same rows.
+  * Every such query runs to completion through [[graft.core.Drain]], the
+  * one drain lifecycle (AvailableNow trigger, checkpoint, state-partition
+  * sizing); every stage, checkpoint and sink dir is a
+  * [[graft.core.Staging.scratchDir]]. The reference's micro-batcher (size
+  * trigger 10000 / time trigger 10 s, ElasticsearchBulkOperator.java:30-41)
+  * maps onto source rate options + `Trigger.ProcessingTime` in production
+  * ([[graft.ingest.Ingest]]).
   */
 object Streams {
 
   private val nameCounter = new AtomicInteger(0)
-
-  private def deleteRecursively(f: java.io.File): Unit = graft.core.Fs.deleteRecursively(f)
-
-  /** All staged dirs go through here: registered for JVM-exit cleanup so
-    * repeated harness runs don't leak staged table copies into /tmp. */
-  private def newStageDir(prefix: String): String = {
-    val tmp = Files.createTempDirectory(prefix).toString
-    sys.addShutdownHook(graft.core.Fs.deleteRecursively(new java.io.File(tmp)))
-    tmp
-  }
 
   /** Write one DataFrame as the i-th ordered file of a staged stream dir.
     * Rewriting through Spark (not a raw file copy) normalizes the driver's
@@ -49,18 +42,17 @@ object Streams {
     val dst = Paths.get(s"$tmp/part-$i.parquet")
     Files.move(f.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
     dst.toFile.setLastModified(1700000000000L + i * 60000L)
-    deleteRecursively(new java.io.File(sub))
+    graft.core.Fs.deleteRecursively(new java.io.File(sub))
   }
 
   /** Stage a table into a fresh dir for a file-stream source (optionally
     * as N identical ordered files = N deterministic batches). Memoized per
     * (dir, table, copies) via the shared per-JVM staging cache
     * ([[graft.core.Staging.stagedDir]] — VERDICT r17 #4: one copy of the
-    * TrieMap+temp-dir+shutdown-hook pattern): seven of the streaming
-    * queries stream the same events table, and staging is a full table
-    * rewrite. */
+    * staged-dir memo): seven of the streaming queries stream the same
+    * events table, and staging is a full table rewrite. */
   private def stage(s: SparkSession, dir: String, table: String, copies: Int = 1): String =
-    graft.core.Staging.stagedDir(dir, table, s"stream_x$copies") { tmp =>
+    Staging.stagedDir(dir, table, s"stream_x$copies") { tmp =>
       val df = Tables(s, dir, table)
       (0 until copies).foreach(i => writeOrderedFile(df, tmp, i))
     }
@@ -71,7 +63,7 @@ object Streams {
     * — the split is a deterministic function of (dir, table, key). */
   private def stageSplit(s: SparkSession, dir: String, table: String, key: String,
                          preds: => Seq[org.apache.spark.sql.Column]): String =
-    graft.core.Staging.stagedDir(dir, table, s"split_$key") { tmp =>
+    Staging.stagedDir(dir, table, s"split_$key") { tmp =>
       val df = Tables(s, dir, table)
       preds.zipWithIndex.foreach { case (p, i) => writeOrderedFile(df.filter(p), tmp, i) }
     }
@@ -182,20 +174,8 @@ object Streams {
     val shStatic = graft.text.Text
       .sizedShingles3(graft.text.TokenIndex.toks(s, d), col("ws"), "szs")
       .persist()   // (doc_id, szs, h)
-    val src = stageQ142(s, d)
-    val ckpt = newStageDir("graft_neardup_ckpt")
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          neardupProbe(batch, shStatic)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-    }
+    Drain.toBatchDirs(Drain.fileStream(s, stageQ142(s, d)),
+      Staging.scratchDir("graft_neardup_ckpt"), out)(neardupProbe(_, shStatic))
     // only the (now drained) per-batch plans referenced the cached index
     shStatic.unpersist()
     ()
@@ -219,33 +199,24 @@ object Streams {
     * produced in a deployment (the drainedRollup posture); q275's timed
     * read serves clusters from it. */
   private[streaming] def drainedNeardupStore(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "documents", "neardup_store")(neardupDrain(s, d, _))
+    Staging.stagedDir(d, "documents", "neardup_store")(neardupDrain(s, d, _))
 
   /** q158's write path: drain the arrival feed's per-doc distinct hashed
     * shingles into a parquet file sink (Spark's exactly-once append) —
     * ONE copy shared by the q158 entry (drained fresh; the write path is
     * its subject) and the memoized store q277 serves from. */
   private[streaming] def shingleDrain(s: SparkSession, d: String, out: String): Unit = {
-    val src = stageQ158(s, d)
-    val schema = s.read.parquet(src).schema
-    val arriving = graft.text.Text.arrivingShingles(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src))
-    val ckpt = newStageDir("graft_idx_ckpt")
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = arriving.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    val arriving = graft.text.Text.arrivingShingles(Drain.fileStream(s, stageQ158(s, d)))
+    Drain.toFiles(arriving, Staging.scratchDir("graft_idx_ckpt"), out)
   }
 
   /** The maintained shingle index and MinHash-signature table as
     * memoized prestaged artifacts (the q158/q263 write paths' standing
     * output in a deployment) — q277 serves the LSH keeper off them. */
   private[streaming] def drainedShingleStore(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "documents", "shingle_store")(shingleDrain(s, d, _))
+    Staging.stagedDir(d, "documents", "shingle_store")(shingleDrain(s, d, _))
   private[streaming] def drainedMinhashStore(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "documents", "mhidx_store")(
+    Staging.stagedDir(d, "documents", "mhidx_store")(
       minhashDrain(s, stageQ158(s, d), _))
 
   /** q274's write path: drain the arrival feed through the per-batch
@@ -271,28 +242,16 @@ object Streams {
     val cw1 = localArtifact(s"${gm.knDir}/cw1")
     val cw2 = localArtifact(s"${gm.knDir}/cw2")
     val tt = localArtifact(s"${gm.knDir}/tt")
-    val src = stageQ142(s, d)
-    val ckpt = newStageDir("graft_funnelgate_ckpt")
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.text.Funnel
-            .gateVerdicts(batch, gm.posteriors, gm.wsum, cb, cw1, cw2, tt)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+    Drain.toBatchDirs(Drain.fileStream(s, stageQ142(s, d)),
+        Staging.scratchDir("graft_funnelgate_ckpt"), out) { batch =>
+      graft.text.Funnel.gateVerdicts(batch, gm.posteriors, gm.wsum, cb, cw1, cw2, tt)
     }
-    ()
   }
 
   /** The maintained verdict store — q274's standing output, memoized
     * for q279's shipped-corpus read. */
   private[streaming] def drainedVerdictStore(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "documents", "verdict_store")(funnelGateDrain(s, d, _))
+    Staging.stagedDir(d, "documents", "verdict_store")(funnelGateDrain(s, d, _))
 
   private[streaming] def stageQ142(s: SparkSession, d: String): String =
     stage3Way(s, d, "documents", "q142_neardup_3way", "doc_id")
@@ -309,11 +268,25 @@ object Streams {
     * doc — samples must not span arrival units, the property the shard
     * format guarantees). Memoized like the other staged sources. */
   private[streaming] def stageQ207(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "documents", "stream_shards") { tmp =>
+    Staging.stagedDir(d, "documents", "stream_shards") { tmp =>
       val shards = graft.ingest.Shards.shardTable(s, d).toDF("shard_id", "bytes")
       (0 until 3).foreach(i =>
         writeOrderedFile(shards.filter(col("shard_id") % 3 === i), tmp, i))
     }
+
+  /** q207's write path: drain the shard arrivals in `src` through the
+    * map-only ustar parse + sample regroup into a parquet file sink at
+    * `out`. The sink's commit log under `ckpt` makes the materialized
+    * corpus exactly-once: a restart resumes, a replay adds nothing
+    * (StreamShardIngestSpec drains the same `ckpt` three times). */
+  private[streaming] def shardDrain(s: SparkSession, src: String, out: String,
+                                    ckpt: String): Unit = {
+    import s.implicits._
+    val parsed = Drain.fileStream(s, src).select(col("shard_id"), col("bytes"))
+      .as[(Long, Array[Byte])]
+      .flatMap { case (shardId, bytes) => graft.ingest.Shards.parseShard(shardId, bytes) }
+    Drain.toFiles(parsed.toDF(), ckpt, out)
+  }
 
   /** Pre-build every staged stream-source dir (bench hygiene, VERDICT r3 #7):
     * staging is harness machinery that converts a static table into the
@@ -381,31 +354,37 @@ object Streams {
   }
 
   private def readStreamTable(s: SparkSession, dir: String, table: String,
-                              copies: Int = 1): DataFrame = {
-    val staged = stage(s, dir, table, copies)
-    val schema = s.read.parquet(staged).schema
-    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged)
-  }
+                              copies: Int = 1): DataFrame =
+    Drain.fileStream(s, stage(s, dir, table, copies))
 
-  /** Run a streaming DF to a memory sink until drained; return the table.
-    *
-    * State-partition sizing: stateful operators create one state store per
-    * shuffle partition and commit every store every micro-batch, so the
-    * per-batch floor cost is O(partitions) REGARDLESS of state size. The
-    * session default (32) is a batch-shuffle setting; for these streams it
-    * means 32 store commits per batch for kilobytes of state. 8 keeps the
-    * floor low at fixture scale while still exercising multi-partition
-    * state; a 100 TB deployment raises it with the key space (it is the
-    * same knob, read at first checkpoint creation). */
-  private def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+  /** Run a streaming DF to a memory sink until drained; return its rows.
+    * The returned frame holds the sink's plan itself, so the sink's
+    * session view is dropped here — a long-lived session gains no
+    * `graft_mem_N` table per call. */
+  private[streaming] def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
     val s = df.sparkSession
     val name = s"graft_mem_${nameCounter.incrementAndGet()}"
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    Drain.run(df, Staging.scratchDir("graft_mem_ckpt"))(
+      _.format("memory").queryName(name).outputMode(mode))
+    val drained = s.table(name)
+    s.catalog.dropTempView(name)
+    drained
+  }
+
+  /** q81/q139/q157's stream-stream join: purchases against the clicks
+    * of the same user in the hour before, both sides watermarked by 1 h,
+    * drained in Append mode to (purchase_id, click_id). */
+  private def purchaseClickJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
+    def side(kind: String, id: String, user: String, ts: String) =
+      readStreamTable(s, d, "events").filter(col("event_type") === kind)
+        .select(col("event_id").as(id), col("user_id").as(user), col("ts").as(ts))
+        .withWatermark(ts, "1 hour")
+    val joined = side("purchase", "purchase_id", "pu", "pts")
+      .join(side("click", "click_id", "cu", "cts"),
+        col("cu") === col("pu") &&
+        col("cts") >= col("pts") - expr("INTERVAL 1 HOUR") && col("cts") <= col("pts"),
+        joinType)
+    runToMemory(joined.select(col("purchase_id"), col("click_id")), OutputMode.Append())
   }
 
   private val eventCountOracle =
@@ -417,8 +396,8 @@ object Streams {
     // must equal the batch fold (same oracle as q03).
     Entry("q51_stream_ingest", DocSync.oracleSqlDocTable) { (s, d) =>
       val stream = ChangeLog.fromEvents(readStreamTable(s, d, "events"))
-      val stateDir = newStageDir("graft_docstate")
-      val ckpt = newStageDir("graft_ckpt")
+      val stateDir = Staging.scratchDir("graft_docstate")
+      val ckpt = Staging.scratchDir("graft_ckpt")
       DocSync.flattenDocs(DocSync.runStream(s, stream, stateDir, ckpt))
     },
 
@@ -523,10 +502,7 @@ object Streams {
         |SELECT epoch_us(ws) AS ws, COUNT(*) AS n FROM kept
         |WHERE ws + INTERVAL '1 day' <= (SELECT w FROM wmf)
         |GROUP BY ws ORDER BY ws""".stripMargin) { (s, d) =>
-      val staged = stageQ55(s, d)
-      val schema = s.read.parquet(staged).schema
-      val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged)
-      val agg = stream.withWatermark("ts", "1 hour")
+      val agg = Drain.fileStream(s, stageQ55(s, d)).withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 day")).agg(count(lit(1)).as("n"))
       runToMemory(agg, OutputMode.Append())
         .select(unix_micros(col("window.start")).as("ws"), col("n")).orderBy(col("ws"))
@@ -605,21 +581,7 @@ object Streams {
         |  ON c.user_id = p.user_id AND c.event_type = 'click' AND p.event_type = 'purchase'
         | AND c.ts >= p.ts - INTERVAL '1 hour' AND c.ts <= p.ts
         |ORDER BY purchase_id, click_id""".stripMargin) { (s, d) =>
-      val purchases = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"),
-                col("ts").as("pts"))
-        .withWatermark("pts", "1 hour")
-      val clicks = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("cu"),
-                col("ts").as("cts"))
-        .withWatermark("cts", "1 hour")
-      val joined = purchases.join(clicks,
-        col("cu") === col("pu") &&
-        col("cts") >= col("pts") - expr("INTERVAL 1 HOUR") && col("cts") <= col("pts"))
-      runToMemory(joined.select(col("purchase_id"), col("click_id")), OutputMode.Append())
-        .orderBy(col("purchase_id"), col("click_id"))
+      purchaseClickJoin(s, d, "inner").orderBy(col("purchase_id"), col("click_id"))
     },
 
     // Stream-stream LEFT OUTER join: matched pairs emit like q81's inner
@@ -651,22 +613,7 @@ object Streams {
         |WHERE purchase_id NOT IN (SELECT purchase_id FROM j)
         |  AND ts < (SELECT w FROM wm)
         |ORDER BY purchase_id, click_id""".stripMargin) { (s, d) =>
-      val purchases = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"),
-                col("ts").as("pts"))
-        .withWatermark("pts", "1 hour")
-      val clicks = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("cu"),
-                col("ts").as("cts"))
-        .withWatermark("cts", "1 hour")
-      val joined = purchases.join(clicks,
-        col("cu") === col("pu") &&
-        col("cts") >= col("pts") - expr("INTERVAL 1 HOUR") && col("cts") <= col("pts"),
-        "left_outer")
-      runToMemory(joined.select(col("purchase_id"), col("click_id")), OutputMode.Append())
-        .orderBy(col("purchase_id"), col("click_id"))
+      purchaseClickJoin(s, d, "left_outer").orderBy(col("purchase_id"), col("click_id"))
     },
 
     // FULL outer stream-stream join — q139 plus the symmetric right-side
@@ -701,21 +648,7 @@ object Streams {
         |WHERE click_id NOT IN (SELECT click_id FROM j)
         |  AND ts + INTERVAL '1 hour' < (SELECT w FROM wm)
         |ORDER BY purchase_id NULLS LAST, click_id NULLS LAST""".stripMargin) { (s, d) =>
-      val purchases = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"),
-                col("ts").as("pts"))
-        .withWatermark("pts", "1 hour")
-      val clicks = readStreamTable(s, d, "events")
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("cu"),
-                col("ts").as("cts"))
-        .withWatermark("cts", "1 hour")
-      val joined = purchases.join(clicks,
-        col("cu") === col("pu") &&
-        col("cts") >= col("pts") - expr("INTERVAL 1 HOUR") && col("cts") <= col("pts"),
-        "full_outer")
-      runToMemory(joined.select(col("purchase_id"), col("click_id")), OutputMode.Append())
+      purchaseClickJoin(s, d, "full_outer")
         .orderBy(col("purchase_id").asc_nulls_last, col("click_id").asc_nulls_last)
     },
 
@@ -832,21 +765,9 @@ object Streams {
       val bset = graft.text.TokenIndex.shingles3(s, d)
         .filter(col("doc_id") % 97 === 0).select(col("h")).distinct()
         .withColumn("hit", lit(1)).persist()
-      val src = stageQ142(s, d)
-      val out = newStageDir("graft_decontam_out")
-      val ckpt = newStageDir("graft_decontam_ckpt")
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-      graft.core.GraftSession.withShufflePartitions(s, 8) {
-        val q = stream.writeStream.trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            decontamProbe(batch, bset)
-              .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-            ()
-          }.start()
-        q.awaitTermination()
-      }
+      val out = Staging.scratchDir("graft_decontam_out")
+      Drain.toBatchDirs(Drain.fileStream(s, stageQ142(s, d)),
+        Staging.scratchDir("graft_decontam_ckpt"), out)(decontamProbe(_, bset))
       s.read.parquet(out)
         .select(col("doc_id"), col("n_shingles"), col("n_hits"), col("permille"))
         .orderBy(col("doc_id"))
@@ -868,7 +789,7 @@ object Streams {
     // PlanShapeSpec pins the per-batch plan (models broadcast, every
     // hash exchange batch-keyed — zero corpus-keyed exchanges).
     Entry("q274_stream_funnel_gate", graft.text.Funnel.v2OracleSql) { (s, d) =>
-      val out = newStageDir("graft_funnelgate_out")
+      val out = Staging.scratchDir("graft_funnelgate_out")
       funnelGateDrain(s, d, out)
       graft.text.Funnel.reportFromGateVerdicts(s.read.parquet(out))
     }.sqlTwin(graft.text.Funnel.v2TwinSql),
@@ -948,7 +869,7 @@ object Streams {
         |SELECT t.doc_id, CAST(COALESCE(c.n_shingles, 0) AS BIGINT) AS n_shingles
         |FROM toks t LEFT JOIN cnt c ON c.doc_id = t.doc_id
         |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
-      val out = newStageDir("graft_idx_out")
+      val out = Staging.scratchDir("graft_idx_out")
       shingleDrain(s, d, out)
       val counts = s.read.parquet(out)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
@@ -976,24 +897,8 @@ object Streams {
         |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS txt_len,
         |  CAST(doc_id % 7 AS INT) AS cls, md5(text) AS txt_md5
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val src = stageQ207(s, d)
-      val schema = s.read.parquet(src).schema
-      val arriving = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val parsed = arriving.select(col("shard_id"), col("bytes"))
-        .as[(Long, Array[Byte])]
-        .flatMap { case (shardId, bytes) =>
-          graft.ingest.Shards.parseShard(shardId, bytes)
-        }
-      val out = newStageDir("graft_shard_out")
-      val ckpt = newStageDir("graft_shard_ckpt")
-      graft.core.GraftSession.withShufflePartitions(s, 8) {
-        val q = parsed.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val out = Staging.scratchDir("graft_shard_out")
+      shardDrain(s, stageQ207(s, d), out, Staging.scratchDir("graft_shard_ckpt"))
       s.read.parquet(out)
         .select(col("doc_id"), col("shard_id"), col("txt_len"), col("cls"),
                 md5(col("txt_bytes")).as("txt_md5"))
@@ -1028,7 +933,7 @@ object Streams {
         |  ROUND(SUM(value) / COUNT(*), 6) AS avg_v
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val src = stageQ183(s, d)
-      val out = newStageDir("graft_rollup_out")
+      val out = Staging.scratchDir("graft_rollup_out")
       rollupDrain(s, src, out)
       rollupMerge(s, out)
     },
@@ -1083,14 +988,13 @@ object Streams {
     // step, drove the entry's round-to-round drift (2.77→3.42→3.17→4.77 s
     // while its own merges held at ~0.9 s).
     Entry.benchOnly("q183_rollup_compacted_read") { (s, d) =>
-      val out = newStageDir("graft_rollup_cmp_out")
+      val out = Staging.scratchDir("graft_rollup_cmp_out")
       graft.core.Fs.copyRecursively(
         new java.io.File(drainedRollup(s, d)), new java.io.File(out))
       def timed[A](f: => A): (A, Double) = {
         val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
       }
-      def nParts: Int = Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .count(f => f.isDirectory && f.getName.startsWith("batch="))
+      def nParts: Int = Drain.batchIds(out).size
       val liveParts = nParts
       val (live, tLive) = timed(rollupMerge(s, out).collect().toSeq)
       rollupCompact(s, out, Long.MaxValue)
@@ -1132,7 +1036,7 @@ object Streams {
     // index rebuilds already model.
     Entry.benchOnly("q195_vector_index_maintenance") { (s, d) =>
       val src = stageQ195(s, d)
-      val out = newStageDir("graft_vecidx_out")
+      val out = Staging.scratchDir("graft_vecidx_out")
       vecIndexDrain(s, d, src, out)
       s.read.parquet(out)
         .groupBy(col("cell"), col("rk"))
@@ -1161,7 +1065,7 @@ object Streams {
     // batch-keyed agg; the corpus-wide table is never rebuilt.
     Entry.benchOnly("q263_minhash_maintenance") { (s, d) =>
       val src = stageQ158(s, d)
-      val out = newStageDir("graft_mhidx_out")
+      val out = Staging.scratchDir("graft_mhidx_out")
       minhashDrain(s, src, out)
       graft.text.Text.minhashBandRows(s.read.parquet(out),
           graft.text.Text.LshNumPerm, graft.text.Text.LshBands)
@@ -1192,7 +1096,7 @@ object Streams {
     // the corpus-wide codes table is never rebuilt.
     Entry.benchOnly("q271_pq_code_maintenance") { (s, d) =>
       val src = stageQ195(s, d)
-      val out = newStageDir("graft_pqcode_out")
+      val out = Staging.scratchDir("graft_pqcode_out")
       pqCodeDrain(s, d, src, out)
       s.read.parquet(out)
         .groupBy(col("sub"), col("code"))
@@ -1233,6 +1137,16 @@ object Streams {
         |    (k, a, b) -> coalesce(a, cast(0 as bigint)) + coalesce(b, cast(0 as bigint))))""".stripMargin
   }
 
+  /** The drained rollup artifact, memoized per sf dir — the output the
+    * continuously-running rollup job maintains in production. The three
+    * read-side q183 entries serve queries FROM it (cardinality /
+    * percentiles read it in place; compacted-read clones it before
+    * mutating); only q183_rollup_job, whose subject IS the write path,
+    * runs its own fresh drain. Prestaged untimed like the token index. */
+  private[streaming] def drainedRollup(s: SparkSession, d: String): String =
+    Staging.stagedDir(d, "events", "rollup_pristine")(
+      rollupDrain(s, stageQ183(s, d), _))
+
   /** q183's job body: drain `src`, writing each micro-batch's PARTIAL
     * (day, event_type) aggregate into its own `batch=<id>` partition
     * under `out`. Fresh checkpoint per call — re-running over the same
@@ -1242,51 +1156,30 @@ object Streams {
     * value histogram rides as a second agg joined on the bucket key so
     * the classic columns' double-addition order is untouched (their 4dp
     * rounding tolerance stays exactly as before). */
-  /** The drained rollup artifact, memoized per sf dir — the output the
-    * continuously-running rollup job maintains in production. The three
-    * read-side q183 entries serve queries FROM it (cardinality /
-    * percentiles read it in place; compacted-read clones it before
-    * mutating); only q183_rollup_job, whose subject IS the write path,
-    * runs its own fresh drain. Prestaged untimed like the token index. */
-  private[streaming] def drainedRollup(s: SparkSession, d: String): String =
-    graft.core.Staging.stagedDir(d, "events", "rollup_pristine")(
-      rollupDrain(s, stageQ183(s, d), _))
-
-  private[streaming] def rollupDrain(s: SparkSession, src: String, out: String): Unit = {
-    val ckpt = newStageDir("graft_rollup_ckpt")
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val keys = Seq("day", "event_type")
-          val bucketed = batch.select(
-            date_trunc("day", col("ts")).cast("date").as("day"),
-            col("event_type"), col("value"), col("user_id"))
-          val base = bucketed.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_v"),
-                 min(col("value")).as("min_v"), max(col("value")).as("max_v"),
-                 // mergeable HLL sketch partial (DataSketches HLL_4): lets
-                 // the rollup serve DISTINCT-count queries without raw
-                 // scans — ES X-Pack rollup stores cardinality sketches
-                 // for exactly this reason. Binary column, unioned (never
-                 // estimated) until query time.
-                 hll_sketch_agg(col("user_id")).as("uid_hll"))
-          val hist = bucketed
-            .withColumn("bkt", expr(ValueHist.bucketSql))
-            .groupBy((keys :+ "bkt").map(col): _*).agg(count(lit(1)).as("bn"))
-            .groupBy(keys.map(col): _*)
-            .agg(map_from_entries(collect_list(struct(col("bkt"), col("bn"))))
-              .as("v_hist"))
-          base.join(hist, keys)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+  private[streaming] def rollupDrain(s: SparkSession, src: String, out: String): Unit =
+    Drain.toBatchDirs(Drain.fileStream(s, src),
+        Staging.scratchDir("graft_rollup_ckpt"), out) { batch =>
+      val keys = Seq("day", "event_type")
+      val bucketed = batch.select(
+        date_trunc("day", col("ts")).cast("date").as("day"),
+        col("event_type"), col("value"), col("user_id"))
+      val base = bucketed.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_v"),
+             min(col("value")).as("min_v"), max(col("value")).as("max_v"),
+             // mergeable HLL sketch partial (DataSketches HLL_4): lets
+             // the rollup serve DISTINCT-count queries without raw
+             // scans — ES X-Pack rollup stores cardinality sketches
+             // for exactly this reason. Binary column, unioned (never
+             // estimated) until query time.
+             hll_sketch_agg(col("user_id")).as("uid_hll"))
+      val hist = bucketed
+        .withColumn("bkt", expr(ValueHist.bucketSql))
+        .groupBy((keys :+ "bkt").map(col): _*).agg(count(lit(1)).as("bn"))
+        .groupBy(keys.map(col): _*)
+        .agg(map_from_entries(collect_list(struct(col("bkt"), col("bn"))))
+          .as("v_hist"))
+      base.join(hist, keys)
     }
-  }
 
   /** The rollup-query merge fold: counts/sums add, mins/maxes fold,
     * avg = merged sum / merged count (why ES rollup stores sum+count). */
@@ -1307,21 +1200,9 @@ object Streams {
     * idempotence; fresh checkpoint per call like [[rollupDrain]]). */
   private[streaming] def vecIndexDrain(s: SparkSession, d: String,
                                        src: String, out: String): Unit = {
-    val ckpt = newStageDir("graft_vecidx_ckpt")
     val cents = graft.vector.VectorIndex.ivfCents(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.vector.Vectors.cellAssignmentsWith(batch, cents)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-    }
+    Drain.toBatchDirs(Drain.fileStream(s, src), Staging.scratchDir("graft_vecidx_ckpt"),
+      out)(graft.vector.Vectors.cellAssignmentsWith(_, cents))
   }
 
   /** q271's job body: drain `src`, encoding each arriving batch's vectors
@@ -1336,21 +1217,9 @@ object Streams {
     * and replay invariance. */
   private[streaming] def pqCodeDrain(s: SparkSession, d: String,
                                      src: String, out: String): Unit = {
-    val ckpt = newStageDir("graft_pqcode_ckpt")
     val (cents, _) = graft.vector.VectorIndex.pq(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.vector.Vectors.pqEncode(batch, cents)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-    }
+    Drain.toBatchDirs(Drain.fileStream(s, src), Staging.scratchDir("graft_pqcode_ckpt"),
+      out)(graft.vector.Vectors.pqEncode(_, cents))
   }
 
   /** q263's job body: drain `src`, computing each arriving batch's
@@ -1364,23 +1233,12 @@ object Streams {
     * cores (3.17 → 3.89 s min-of-3) and neutral at 32 — the codegen'd
     * min-aggregate beats the exchange it pays for (the exchange runs at
     * drain-narrowed parallelism over 8-byte rows). */
-  private[streaming] def minhashDrain(s: SparkSession, src: String, out: String): Unit = {
-    val ckpt = newStageDir("graft_mhidx_ckpt")
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    graft.core.GraftSession.withShufflePartitions(s, 8) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.text.Text.minhashSignatures(
-            graft.text.Text.arrivingShingles(batch), graft.text.Text.LshNumPerm)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+  private[streaming] def minhashDrain(s: SparkSession, src: String, out: String): Unit =
+    Drain.toBatchDirs(Drain.fileStream(s, src), Staging.scratchDir("graft_mhidx_ckpt"),
+        out) { batch =>
+      graft.text.Text.minhashSignatures(
+        graft.text.Text.arrivingShingles(batch), graft.text.Text.LshNumPerm)
     }
-  }
 
   /** The rollup-query cardinality fold: union the stored sketch binaries,
     * estimate ONCE over the merged sketch (estimating per-partial and
@@ -1453,9 +1311,7 @@ object Streams {
   /** Phase 1: fold all batch ids < upTo into `.compact_tmp_batch=<max>`.
     * Returns the target id; None when there is nothing to compact. */
   private[streaming] def compactWrite(s: SparkSession, out: String, upTo: Long): Option[Long] = {
-    val batches = Option(new java.io.File(out).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getName.stripPrefix("batch=").toLong).filter(_ < upTo).sorted
+    val batches = Drain.batchIds(out).filter(_ < upTo)
     if (batches.length < 2) None
     else {
       val folded = s.read.parquet(batches.map(b => s"$out/batch=$b"): _*)
@@ -1477,10 +1333,8 @@ object Streams {
   /** Phase 2: delete the fold's inputs (every id <= target), then rename
     * the staged dir into place as `batch=<target>`. */
   private[streaming] def compactCommit(out: String, target: Long): Unit = {
-    Option(new java.io.File(out).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        f.getName.stripPrefix("batch=").toLong <= target)
-      .foreach(graft.core.Fs.deleteRecursively)
+    Drain.batchIds(out).filter(_ <= target)
+      .foreach(b => graft.core.Fs.deleteRecursively(new java.io.File(s"$out/batch=$b")))
     Files.move(Paths.get(s"$out/.compact_tmp_batch=$target"),
                Paths.get(s"$out/batch=$target"))
   }

@@ -2,8 +2,9 @@ package graft.sync
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.model.ChangeLog
@@ -100,17 +101,12 @@ object DocSync {
     * merge is the same logic. */
   def runStream(spark: SparkSession, changeStream: DataFrame, stateDir: String,
                 checkpointDir: String, numBuckets: Int = 16): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // drain-mode state-partition sizing (same rationale as the streaming
-    // query harness): the per-batch fold shuffles a micro-batch of change
-    // events, so 8 partitions bounds the per-trigger task floor; the
-    // production facade (graft.ingest.Ingest) leaves the session setting
-    // alone and a deployment sizes it with the batch volume.
-    graft.core.GraftSession.withShufflePartitions(spark, 8) {
-      val q = startStream(spark, changeStream, stateDir, checkpointDir, numBuckets,
-        Trigger.AvailableNow())
-      q.awaitTermination()
-    }
+    // drain mode (graft.core.Drain): the per-batch fold shuffles a
+    // micro-batch of change events, so the drain's 8 partitions bound the
+    // per-trigger task floor; the production facade (graft.ingest.Ingest)
+    // leaves the session setting alone and a deployment sizes it with the
+    // batch volume.
+    graft.core.Drain.run(changeStream, checkpointDir)(mergeSink(_, stateDir, numBuckets))
     docTable(spark, stateDir, numBuckets)
   }
 
@@ -120,13 +116,17 @@ object DocSync {
                   checkpointDir: String, numBuckets: Int,
                   trigger: org.apache.spark.sql.streaming.Trigger)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changeStream.writeStream
+    mergeSink(changeStream.writeStream, stateDir, numBuckets)
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch.sparkSession, batch, stateDir, numBuckets)
-      }
       .start()
+
+  /** The merge-upsert sink, shared by the drained and the triggered run. */
+  private def mergeSink(w: DataStreamWriter[Row], stateDir: String, numBuckets: Int)
+      : DataStreamWriter[Row] =
+    w.foreachBatch { (batch: DataFrame, _: Long) =>
+      mergeBatch(batch.sparkSession, batch, stateDir, numBuckets)
+    }
 
   /** Merge ONE change-log batch into the versioned table: fold to a
     * per-key increment, read the current state of just the dirty buckets,
@@ -188,27 +188,32 @@ object DocSync {
     * version covers every bucket, so older versions become unreachable
     * before they are deleted. */
   def compact(spark: SparkSession, stateDir: String, numBuckets: Int = 16): Unit = {
-    val versions = Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
+    val versions = versionDirs(stateDir)
     if (versions.isEmpty) return
     val cur = s"$stateDir/v${nextVersionId(stateDir)}"
     currentState(spark, stateDir, numBuckets)
       .repartition(numBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(cur)
     Files.writeString(Paths.get(s"$cur/_coverage"), (0 until numBuckets).mkString(","))
-    versions.foreach(graft.core.Fs.deleteRecursively)
+    versions.foreach { case (_, v) => graft.core.Fs.deleteRecursively(v) }
   }
 
   private def bucketOf(rowKey: Column, numBuckets: Int): Column =
     pmod(xxhash64(rowKey), lit(numBuckets.toLong)).cast("int")
 
+  /** Every version dir `v<n>` under `stateDir` (committed or torn) with
+    * its id, newest first — the one listing the allocator, compaction and
+    * the state reader share. */
+  private def versionDirs(stateDir: String): Seq[(Long, java.io.File)] =
+    Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("v"))
+      .map(f => (f.getName.drop(1).toLong, f))
+      .sortBy(-_._1)
+
   /** Next version id: one past the highest existing dir (committed or
     * torn) — the single allocation path for batches AND compaction. */
   private def nextVersionId(stateDir: String): Long =
-    Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .map(_.getName.drop(1).toLong)
-      .maxOption.map(_ + 1).getOrElse(0L)
+    versionDirs(stateDir).headOption.map(_._1 + 1).getOrElse(0L)
 
   /** Assemble the current doc table: newest covering version per bucket.
     * Reads only the selected `bucket=<b>` dirs (partition-pruned paths);
@@ -217,10 +222,8 @@ object DocSync {
   private def currentState(sp: SparkSession, stateDir: String, numBuckets: Int,
                            onlyBuckets: Option[Set[Int]] = None,
                            maxVersion: Option[Long] = None): DataFrame = {
-    val versions = Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .filter(f => maxVersion.forall(f.getName.drop(1).toLong <= _))
-      .sortBy(-_.getName.drop(1).toLong)
+    val versions = versionDirs(stateDir)
+      .collect { case (id, v) if maxVersion.forall(id <= _) => v }
     val chosen = scala.collection.mutable.Map.empty[Int, Option[String]]
     versions.foreach { v =>
       // _coverage is the COMMIT MARKER, written only after the parquet

@@ -26,19 +26,9 @@ class StreamShardIngestSpec extends GraftSuite {
     val ckpt = Files.createTempDirectory("graft_shardspec_ckpt").toString
 
     val shards = Shards.shardTable(spark, sf).toDF("shard_id", "bytes").cache()
-    val schema = shards.schema
 
-    def drain(): Unit = {
-      val arriving = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val parsed = arriving.select(col("shard_id"), col("bytes"))
-        .as[(Long, Array[Byte])]
-        .flatMap { case (sid, b) => Shards.parseShard(sid, b) }
-      val q = parsed.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // q207's own drain, always under the same checkpoint
+    def drain(): Unit = Streams.shardDrain(spark, src, out, ckpt)
 
     // phase 1: first arrival wave
     Streams.writeOrderedFile(shards.filter(col("shard_id") % 2 === 0), src, 0)

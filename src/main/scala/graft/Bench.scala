@@ -174,11 +174,6 @@ object Bench {
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
       entryMeta(e.name) = (off, gcMsNow() - gc0)
-      // Per-query isolation (untimed): queries may persist() intermediates
-      // that feed multiple consumers (e.g. the near-dup shingle set); drop
-      // them so a later query's timing never pays eviction/GC for an
-      // earlier one — and so teardown isn't attributed to this query.
-      spark.catalog.clearCache()
       if (ok) elapsed else -1.0
     }
 

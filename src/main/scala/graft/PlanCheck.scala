@@ -69,7 +69,6 @@ object PlanCheck {
         .foreach(l => println(s"EXCH[$name]: " + l.trim.take(200)))
       plan.linesIterator.filter(l => l.contains("Join") || l.contains("BroadcastExchange"))
         .foreach(l => println(s"JOIN[$name]: " + l.trim.take(160)))
-      spark.catalog.clearCache()
 
       (1 to reps).foreach { i =>
         Seq(jobs, stages, tasks).foreach(_.set(0)); Seq(input, swrite).foreach(_.set(0))
@@ -77,7 +76,6 @@ object PlanCheck {
         val t0 = System.nanoTime()
         e.fn(spark, args(1)).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
         // listener events are posted asynchronously; give the bus a moment
         Thread.sleep(500)
         println(f"$name ${args(1)} rep$i: $wall%.2f s  " +

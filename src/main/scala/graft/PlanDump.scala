@@ -22,7 +22,6 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      spark.catalog.clearCache()
       println(s"dumped $name ($suffix)")
     }
     spark.stop()

@@ -66,7 +66,6 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
-      finally spark.catalog.clearCache()  // drop per-query persisted intermediates
     }
     require(status.keySet == selected.keySet,
       s"verify accounting drift: missing rows for ${selected.keySet -- status.keySet}")

@@ -25,14 +25,6 @@ object GraftSession {
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
-    // Let AQE coalesce CACHED plans' output partitioning too (default
-    // false): a bare persist() of an exchange-bearing subtree otherwise
-    // pins shuffle.partitions tiny cached blocks and every consumer fans
-    // that many scan tasks (the r21→r22 KN finding, VERDICT r21 item 1;
-    // measured r22 on the persist-heavy tier: q266 476→~100 tasks class).
-    // Purely physical — partition COUNT of cached data, sized by AQE's
-    // advisory bytes at any scale; results and cached semantics unchanged.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     // Driver fixtures have carried events.ts as parquet TIMESTAMP(NANOS)
     // (rejected outright by the reader unless surfaced as epoch-nanos

@@ -5,9 +5,19 @@ import java.nio.file.Files
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Scratch state for the harness: the one registry of temp dirs and the
-  * ingest-time artifact staging built on it.
+/** Scratch state: the one materialization policy for intermediates, the
+  * one registry of temp dirs, and the ingest-time artifact staging built
+  * on it.
+  *
+  * Intermediates read more than once are [[materialize]]d (an eager
+  * `localCheckpoint`): the returned frame owns its blocks, and Spark's
+  * ContextCleaner frees them once that frame is unreachable, so an entry
+  * that returns a plan over them leaves nothing for its caller to clear.
+  * A frame needed only inside one function goes through [[using]], and a
+  * fixpoint loop [[release]]s each superseded round, so neither waits
+  * for a GC. No other code persists, caches or checkpoints a frame.
   *
   * Every graft temp dir (stream stages, checkpoints, sink outputs, staged
   * artifacts) comes from [[scratchDir]], and one JVM-exit hook deletes
@@ -24,6 +34,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[graft] object Staging {
 
   private val cache = TrieMap.empty[String, String]
+
+  /** Compute `df` once, now, into executor blocks; the returned frame
+    * reads those blocks with its lineage truncated. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Free a [[materialize]]d frame's blocks now. (`Dataset.unpersist`
+    * does not: a checkpointed frame is not in the CacheManager.) A frame
+    * that is not itself materialized is left alone. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
+  /** Materialize `df` for `body` and free its blocks when `body` returns:
+    * `body` must finish every read of the frame (collect, count, write)
+    * before it returns. */
+  def using[A](df: DataFrame)(body: DataFrame => A): A = {
+    val m = materialize(df)
+    try body(m) finally release(m)
+  }
 
   private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   sys.addShutdownHook(scratch.forEach(f => Fs.deleteRecursively(f)))

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.Entry
 import WarcShards.Warc
 
@@ -158,31 +158,33 @@ object Redirects {
     * (per-doc resolution report) and q240 (dedup on the resolved key). */
   def resolved(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val recs = T(s, d, "documents").select(col("doc_id")).as[Long]
+    // one WARC parse feeds the redirect map AND the state
+    val recs = Staging.materialize(T(s, d, "documents").select(col("doc_id")).as[Long]
       .groupByKey(_ / docsPerShard)
       .mapGroups { (shardId, ids) => buildShard(shardId, ids.toSeq) }
       .flatMap(parseShard _)
-      .toDF("url", "doc_id", "is3xx", "loc_canon")
-      .persist()   // one WARC parse feeds the redirect map AND the state
+      .toDF("url", "doc_id", "is3xx", "loc_canon"))
     // the redirect map: 3xx records whose canonical Location exists in
     // the corpus (an off-corpus Location has no record to fetch — the
     // chain cannot advance); join on CANONICAL URL strings, so q218's
     // kernel is load-bearing for every hop
-    // persisted: the map is re-joined by EVERY hop round — without the pin
+    // materialized: the map is re-joined by EVERY hop round — without it
     // each round re-runs this URL-keyed join of the two recs projections
-    val redirects = recs.filter(col("is3xx"))
+    val redirects = Staging.materialize(recs.filter(col("is3xx"))
       .join(recs.select(col("url").as("tgt_url"), col("doc_id").as("tgt")),
         col("loc_canon") === col("tgt_url"))
-      .select(col("doc_id").as("src"), col("tgt"))
-      .persist()
-    var state = recs.select(col("doc_id"), col("doc_id").as("cur"),
-      lit(0).as("hops")).localCheckpoint()
+      .select(col("doc_id").as("src"), col("tgt")))
+    var state = Staging.materialize(recs.select(col("doc_id"), col("doc_id").as("cur"),
+      lit(0).as("hops")))
     for (_ <- 1 to MaxHops) {
-      state = state.join(redirects, col("cur") === col("src"), "left")
+      val prev = state
+      // materialized: truncates the unrolled join lineage (q225)
+      state = Staging.materialize(state.join(redirects, col("cur") === col("src"), "left")
         .select(col("doc_id"), coalesce(col("tgt"), col("cur")).as("cur"),
-          (col("hops") + when(col("tgt").isNull, 0).otherwise(1)).as("hops"))
-        .localCheckpoint()   // truncate the unrolled join lineage (q225)
+          (col("hops") + when(col("tgt").isNull, 0).otherwise(1)).as("hops")))
+      Staging.release(prev)
     }
+    Staging.release(redirects)
     state
       .join(recs.select(col("doc_id").as("cur"), col("url").as("final_url"),
         col("is3xx")), "cur")

@@ -50,9 +50,8 @@ case class AnnTopK(queryIds: Seq[Int], k: Int, child: LogicalPlan)
   * index (`VectorIndex.ivf` — the deployment shape: no training, no
   * persist at declaration); without it the rule falls back to live
   * training, which runs a bounded-sample k-means during analysis of the
-  * declaring query and inherits annIvf's documented caller-cleanup
-  * contract (`spark.catalog.clearCache()` releases the norm projection
-  * it persists).
+  * declaring query over annIvf's materialized norm projection, whose
+  * blocks are freed once the expanded plan is dropped.
   */
 case class ExpandAnnTopK(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {

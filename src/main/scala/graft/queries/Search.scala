@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 
 /** ES `simple_query_string` — the user-facing mini query language
   * (`+required -prohibited "a phrase" prefix*`). The parser produces an
@@ -647,10 +647,10 @@ object Search {
         |SELECT s1, s2, score FROM ph
         |ORDER BY score DESC, s1, s2 LIMIT 5""".stripMargin) { (s, d) =>
       import s.implicits._
-      // One vocab-sized unigram agg, cached: corpus stats, both candidate
-      // picks, and scoring all read it (three tiny jobs on the cache).
-      val uni = graft.text.TokenIndex.words(s, d)
-        .groupBy(col("w")).agg(count(lit(1)).as("c")).cache()
+      // One vocab-sized unigram agg, materialized: corpus stats, both
+      // candidate picks, and scoring all read it (three tiny jobs on it).
+      val uni = Staging.materialize(graft.text.TokenIndex.words(s, d)
+        .groupBy(col("w")).agg(count(lit(1)).as("c")))
       // t (total tokens) + v (vocab size) in ONE agg over uni — the
       // round-10 shape paid two extra full corpus/vocab count jobs.
       val stats = uni.agg(sum(col("c")).as("t"), count(lit(1)).as("v")).head()
@@ -1059,10 +1059,10 @@ object Search {
         |  ROUND(ln(1 + (n - df + 0.5) / (df + 0.5)) *
         |        tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS weight
         |FROM parts ORDER BY term""".stripMargin) { (s, d) =>
-      val toks = graft.text.TokenIndex.toks(s, d)
+      // feeds corpus stats, doc stats, tf, and df — one scan
+      val toks = Staging.materialize(graft.text.TokenIndex.toks(s, d)
         .select(col("doc_id"), size(col("ws")).as("dl"),
-                filter(col("ws"), w => w.isin("data", "stream")).as("qws"))
-        .persist()   // feeds corpus stats, doc stats, tf, and df — one scan
+                filter(col("ws"), w => w.isin("data", "stream")).as("qws")))
       val Array(nDocs, avgdl) = toks.agg(count(lit(1)).cast("double"), avg(col("dl")))
         .collect()(0).toSeq.map(_.asInstanceOf[Double]).toArray
       val dl1 = toks.filter(col("doc_id") === 1).select(col("dl")).collect()(0).getInt(0)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
+import graft.core.Staging
 import graft.model.ChangeLog
 
 /** The heart of the reference pipeline, Spark-first: flatten + merge-upsert.
@@ -135,11 +136,9 @@ object DocSync {
   def mergeBatch(sp: SparkSession, batch: DataFrame, stateDir: String,
                  numBuckets: Int): Unit = {
     // the two-shuffle fold feeds both the dirty-bucket collect and the
-    // merge: persist so it runs once per batch, not twice
-    val inc = foldIncrement(batch)
-      .withColumn("bucket", bucketOf(col("rowKey"), numBuckets))
-      .persist()
-    try {
+    // merge: materialize it so it runs once per batch, not twice
+    Staging.using(foldIncrement(batch)
+        .withColumn("bucket", bucketOf(col("rowKey"), numBuckets))) { inc =>
       val dirty = inc.select("bucket").distinct()
         .collect().map(_.getInt(0)).sorted   // bounded: <= numBuckets rows
       if (dirty.nonEmpty) {
@@ -162,8 +161,7 @@ object DocSync {
           .write.mode("overwrite").partitionBy("bucket").parquet(cur)
         Files.writeString(Paths.get(s"$cur/_coverage"), dirty.mkString(","))
       }
-    } finally inc.unpersist()
-    ()
+    }
   }
 
   /** The doc table AS OF committed version `asOf` — newest covering
@@ -197,6 +195,9 @@ object DocSync {
     Files.writeString(Paths.get(s"$cur/_coverage"), (0 until numBuckets).mkString(","))
     versions.foreach { case (_, v) => graft.core.Fs.deleteRecursively(v) }
   }
+
+  private val stateSchema = StructType(Seq(StructField("rowKey", StringType),
+    StructField("doc", MapType(StringType, StringType))))
 
   private def bucketOf(rowKey: Column, numBuckets: Int): Column =
     pmod(xxhash64(rowKey), lit(numBuckets.toLong)).cast("int")
@@ -243,15 +244,10 @@ object DocSync {
         }
       }
     }
-    val paths = chosen.values.flatten.toSeq.sorted
-    if (paths.isEmpty)
-      sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("rowKey", StringType),
-          StructField("doc", MapType(StringType, StringType)),
-          StructField("bucket", IntegerType))))
-    else
-      sp.read.parquet(paths: _*)
-        .withColumn("bucket", bucketOf(col("rowKey"), numBuckets))
+    // the table's own schema: no footer-inference job per read, and zero
+    // paths read as an empty table
+    sp.read.schema(stateSchema).parquet(chosen.values.flatten.toSeq.sorted: _*)
+      .withColumn("bucket", bucketOf(col("rowKey"), numBuckets))
   }
 
   /** Final doc table flattened to the fixture's qualifier columns —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.{Dialect, Entry}
 
 /** Curation funnel (SURVEY.md Q224) — the per-stage survivor report every
@@ -155,17 +155,11 @@ object Funnel {
     * this fixture every doc has >= 10 tokens so all left joins hit). */
   def reportV2(s: SparkSession, d: String): DataFrame = {
     val docs = T(s, d, "documents")
-    // persisted: consumed twice — the training collect, then the scored
-    // plan inside the report (the q242 pattern; without the pin the
-    // 5-signal tokenize pass runs twice per report)
-    // Persist-to-return contract (here and the q268 entry): `g` backs
-    // the RETURNED plan, so this function cannot unpersist it —
-    // the caller owns eviction after materializing. Both harnesses drop
-    // it via clearCache() per entry; a library caller holding the report
-    // across many calls should clear the cache likewise (blocks are
-    // MEMORY_AND_DISK and LRU-evicted under pressure, so worst case is
-    // recompute-on-read, never OOM).
-    val g = QualityModel.bucketFrame(docs).persist()
+    // materialized: consumed twice — the training collect, then the
+    // scored plan inside the report (the q242 pattern; without it the
+    // 5-signal tokenize pass runs twice per report). Its blocks belong to
+    // the returned plan and are freed once that plan is dropped.
+    val g = Staging.materialize(QualityModel.bucketFrame(docs))
     val m1 = QualityModel.trainPosteriors(g, "label")
     val scored = g.select(col("doc_id"), QualityModel.scoreCol(m1).as("score"))
     // stages 7+8's signals: separate KN and margin chains. The fused
@@ -405,7 +399,7 @@ object Funnel {
                                        wsum: Seq[Long], knDir: String)
 
   private[graft] def gateModels(s: SparkSession, d: String): GateModels = {
-    val dir = graft.core.Staging.stagedDir(d, "documents", "funnelgate") { tmp =>
+    val dir = Staging.stagedDir(d, "documents", "funnelgate") { tmp =>
       // The three model families are independent trainings over the same
       // corpus — build them CONCURRENTLY on cloned sessions (r18 #3: this
       // staging sat on the prestage critical path at ~9 s sequential;
@@ -414,9 +408,8 @@ object Funnel {
         () => {
           val ss = graft.core.GraftSession.clonedSession(s)
           import ss.implicits._
-          val g = QualityModel.bucketFrame(T(ss, d, "documents")).persist()
-          val m1 = QualityModel.trainPosteriors(g, "label")
-          g.unpersist()
+          val m1 = Staging.using(QualityModel.bucketFrame(T(ss, d, "documents")))(
+            QualityModel.trainPosteriors(_, "label"))
           m1.zipWithIndex.flatMap { case (row, sig) =>
             row.zipWithIndex.map { case (ppm, b) => (sig, b, ppm) } }
             .toDF("sig", "b", "ppm").coalesce(1).write.parquet(s"$tmp/posteriors")
@@ -437,9 +430,9 @@ object Funnel {
           val (cb, cw1, cw2, tt) = Text.knModelTables(Text.bigramPairs(ss, d))
           cb.write.parquet(s"$tmp/cb"); cw1.write.parquet(s"$tmp/cw1")
           cw2.write.parquet(s"$tmp/cw2"); tt.write.parquet(s"$tmp/tt")
-          // knModelTables persists cb for its derived tables; this staging
-          // path is done with it once the four artifacts are written
-          cb.unpersist()
+          // this staging path is done with the materialized cb once the
+          // four artifacts are written
+          Staging.release(cb)
         })
       // all three trainings run to completion; first failure rethrown
       // (fatal included), extras suppressed (graft.core.Concurrent)

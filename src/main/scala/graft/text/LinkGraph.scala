@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.Entry
 
 /** Link-graph authority scoring (SURVEY.md Q225) — fixed-point PageRank,
@@ -39,7 +39,7 @@ import graft.queries.Entry
   * node id) + one map-side-combinable integer-sum agg + a left join back
   * to the node set for dangling-in-degree nodes — the textbook
   * distributed PageRank shuffle pattern; each iteration's result is
-  * localCheckpoint'ed so the unrolled lineage cannot blow up the plan
+  * materialized so the unrolled lineage cannot blow up the plan
   * (q90's lesson). At 100 TB nodes/edges partition by id; nothing is
   * driver-side except N (one-row count, mirrored by the oracle's
   * COUNT(*) subquery).
@@ -50,7 +50,7 @@ object LinkGraph {
   val Iterations = 8
 
   /** Lineage-truncation mode for the iterative fixpoints. [[Local]] (the
-    * sandbox default) uses `localCheckpoint()` — executor-local blocks,
+    * sandbox default) uses [[Staging.materialize]] — executor-local blocks,
     * no IO, but NOT fault-tolerant: losing an executor mid-fixpoint loses
     * blocks that have no lineage left to recompute them. On a real
     * cluster pass [[Reliable]] — each round persists to the configured
@@ -62,7 +62,7 @@ object LinkGraph {
   case object Local extends CkptMode
   case object Reliable extends CkptMode
   private def truncate(df: DataFrame, mode: CkptMode): DataFrame = mode match {
-    case Local    => df.localCheckpoint()
+    case Local    => Staging.materialize(df)
     case Reliable => df.checkpoint()
   }
 
@@ -89,34 +89,38 @@ object LinkGraph {
     * (`base` must carry (v, b); `init` carries (v, r)). */
   def rankFixpoint(edges0: DataFrame, base: DataFrame, init: DataFrame,
                    ckpt: CkptMode = Local): DataFrame = {
-    // The edge list (and the derived out-degree table) is referenced by
-    // EVERY iteration; without a pin each round's action re-runs the whole
-    // edge derivation — for the extracted link graph that is 8 full
+    // The edge list with its src's out-degree is referenced by EVERY
+    // iteration; without materializing it each round's action re-runs the
+    // whole edge derivation — for the extracted link graph that is 8 full
     // corpus scans + HTML parses per entry (measured: the dominant cost of
-    // q225/q238 before this pin). Both frames are O(edges), orders of
-    // magnitude smaller than the corpus. Safe to release at return: every
-    // round is lineage-truncated, so the returned frame never references
-    // them.
-    // the out-degree join is round-invariant, so it is paid ONCE here
-    // (edge rows gain their src's od) instead of once per iteration —
-    // each round is then a single equi-join + one map-side-combinable agg
-    val edges = edges0.persist()
-    val eo = edges.join(
-      edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src").persist()
-    val b = base.persist()   // also read once per round (dangling left join)
+    // q225/q238 before this). O(edges), orders of magnitude smaller than
+    // the corpus. The out-degree join is round-invariant, so it is paid
+    // ONCE here instead of once per iteration — each round is then a
+    // single equi-join + one map-side-combinable agg. Both tables are
+    // released at return: every round is lineage-truncated, so the
+    // returned frame never references them.
+    val eo = Staging.materialize(outDegrees(edges0))
+    val b = Staging.materialize(base)   // also read once per round (dangling left join)
     var r = init
     for (_ <- 1 to Iterations) {
       val contrib = eo.join(r, col("src") === col("v"))
         .select(col("dst"), expr("r div od").as("c"))
       val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
+      val prev = r
       r = truncate(b.join(sums, col("v") === col("dst"), "left")
         .select(col("v"),
           (col("b") + expr("85 * coalesce(s, 0L) div 100")).as("r")),
         ckpt)   // truncate lineage: 8 unrolled join+agg rounds
+      Staging.release(prev)
     }
-    edges.unpersist(); eo.unpersist(); b.unpersist()
+    Staging.release(eo); Staging.release(b)
     r
   }
+
+  /** Edge rows (src, dst) with their src's out-degree `od`; the edge
+    * frame's two references share one exchange. */
+  private def outDegrees(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
 
   /** Integer PageRank over an extracted edge list; returns (node, score). */
   def pagerank(nodes: DataFrame, edges: DataFrame, n: Long): DataFrame =
@@ -144,23 +148,23 @@ object LinkGraph {
   def dualRankFixpoint(edges0: DataFrame, base: DataFrame, init: DataFrame,
                        ckpt: CkptMode = Local): DataFrame = {
     // same per-iteration reuse + hoisted out-degree join as [[rankFixpoint]]
-    val edges = edges0.persist()
-    val eo = edges.join(
-      edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src").persist()
-    val b = base.persist()   // also read once per round (dangling left join)
+    val eo = Staging.materialize(outDegrees(edges0))
+    val b = Staging.materialize(base)   // also read once per round (dangling left join)
     var r = init
     for (_ <- 1 to Iterations) {
       val contrib = eo.join(r, col("src") === col("v"))
         .select(col("dst"), expr("pr div od").as("cp"), expr("tr div od").as("ct"))
       val sums = contrib.groupBy(col("dst"))
         .agg(sum(col("cp")).as("sp"), sum(col("ct")).as("st"))
+      val prev = r
       r = truncate(b.join(sums, col("v") === col("dst"), "left")
         .select(col("v"),
           (col("bp") + expr("85 * coalesce(sp, 0L) div 100")).as("pr"),
           (col("bt") + expr("85 * coalesce(st, 0L) div 100")).as("tr")),
         ckpt)   // truncate lineage: 8 unrolled join+agg rounds
+      Staging.release(prev)
     }
-    edges.unpersist(); eo.unpersist(); b.unpersist()
+    Staging.release(eo); Staging.release(b)
     r
   }
 
@@ -182,12 +186,13 @@ object LinkGraph {
     */
   def hits(nodes0: DataFrame, edges0: DataFrame, ckpt: CkptMode = Local): DataFrame = {
     // node + edge frames are referenced by every half-step (8 of them) —
-    // the same per-iteration reuse pin as [[rankFixpoint]]
-    val nodes = nodes0.persist()
-    val edges = edges0.persist()
+    // the same per-iteration reuse as [[rankFixpoint]]
+    val nodes = Staging.materialize(nodes0)
+    val edges = Staging.materialize(edges0)
     // one half-step: re-expand `vec` across edges (joinKey side consumes,
-    // groupKey side accumulates), then L1-normalize to 1e6
-    def half(vec: DataFrame, joinKey: String, groupKey: String): DataFrame = {
+    // groupKey side accumulates), then L1-normalize to 1e6; returns the
+    // truncated raw step (to release once superseded) and its normalized view
+    def half(vec: DataFrame, joinKey: String, groupKey: String): (DataFrame, DataFrame) = {
       val raw = truncate(nodes.select(col("v")).join(
           edges.join(vec.select(col("v").as("vv"), col("x")),
               col(joinKey) === col("vv"))
@@ -199,19 +204,21 @@ object LinkGraph {
       // absorbing half-step summing to 0) must yield all-zero scores,
       // not div-by-zero NULLs silently poisoning every later round; for
       // any live graph t >= 1 and the guard is arithmetic identity
-      raw.crossJoin(broadcast(raw.agg(sum(col("x")).as("t"))))
-        .select(col("v"), expr("1000000 * x div greatest(t, 1L)").as("x"))
+      (raw, raw.crossJoin(broadcast(raw.agg(sum(col("x")).as("t"))))
+        .select(col("v"), expr("1000000 * x div greatest(t, 1L)").as("x")))
     }
     var h = nodes.select(col("v"), lit(1000000L).as("x"))
     var a: DataFrame = h
+    var (rawA, rawH) = (a, h)
     for (_ <- 1 to HitsIterations) {
-      a = half(h, "src", "dst")   // authority: hub mass over in-links
-      h = half(a, "dst", "src")   // hub: authority mass over out-links
+      val (ra, na) = half(h, "src", "dst")   // authority: hub mass over in-links
+      Staging.release(rawA); rawA = ra; a = na
+      val (rh, nh) = half(a, "dst", "src")   // hub: authority mass over out-links
+      Staging.release(rawH); rawH = rh; h = nh
     }
     // every half-step is lineage-truncated, so edges can be released here;
-    // nodes backs the RETURNED plan (persist-to-return contract — the
-    // harness clearCache()s per entry, a library caller owns eviction)
-    edges.unpersist()
+    // nodes and the last two steps back the RETURNED plan
+    Staging.release(edges)
     nodes.select(col("v"))
       .join(h.select(col("v").as("hv"), col("x").as("hub")), col("v") === col("hv"))
       .join(a.select(col("v").as("av"), col("x").as("auth")), col("v") === col("av"))
@@ -343,22 +350,26 @@ object LinkGraph {
     * are absent — the "crawl within k hops of the seed list" frontier. */
   def bfsDepths(edges0: DataFrame, seeds: DataFrame, maxDepth: Int,
                 ckpt: CkptMode = Local): DataFrame = {
-    // the edge list is re-joined by every layer — same reuse pin as
+    // the edge list is re-joined by every layer — same reuse as
     // [[rankFixpoint]]; released at return (every layer is truncated)
-    val edges = edges0.persist()
+    val edges = Staging.materialize(edges0)
     var labeled = truncate(seeds.select(col("v"), lit(0).as("depth")), ckpt)
-    var frontier = labeled.select(col("v"))
+    var frontier = labeled
     for (k <- 1 to maxDepth) {
       // one join + distinct + anti join per layer — O(frontier edges)
-      val next = truncate(frontier.join(edges, col("v") === col("src"))
+      val layer = truncate(frontier.select(col("v")).join(edges, col("v") === col("src"))
         .select(col("dst").as("v")).distinct()
         .join(labeled.select(col("v").as("seen")), col("v") === col("seen"), "left_anti")
         .select(col("v"), lit(k).as("depth")),
         ckpt)
-      labeled = truncate(labeled.unionByName(next), ckpt)
-      frontier = next.select(col("v"))
+      val prev = labeled
+      labeled = truncate(labeled.unionByName(layer), ckpt)
+      if (frontier ne prev) Staging.release(frontier)
+      Staging.release(prev)
+      frontier = layer
     }
-    edges.unpersist()
+    if (frontier ne labeled) Staging.release(frontier)
+    Staging.release(edges)
     labeled
   }
 

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.{Dialect, Entry}
 
 /** Linear hashed-feature quality classifier (SURVEY.md Q264/Q265) — the
@@ -46,7 +46,7 @@ import graft.queries.{Dialect, Entry}
   *
   * Scale posture (the q242 driver-artifact law): training state is O(66)
   * longs ON THE DRIVER; each step is one map-only scoring pass over the
-  * persisted sparse feature frame (weights enter as literal arrays —
+  * materialized sparse feature frame (weights enter as literal arrays —
   * no join), a top-4 TakeOrderedAndProject, and one 66-row update agg —
   * the corpus is never weight-joined or re-shuffled. At 100 TB a
   * deployment trains on a driver-sized sample (q234's own posture) and
@@ -362,11 +362,9 @@ object Perceptron {
     * redundancy, was the suite's most latency-amplifying shape (16
     * sequential tiny jobs per caller, r18's contended-sweep amplifier). */
   private[graft] def stagedModel(s: SparkSession, d: String): (Seq[Long], Seq[Long]) = {
-    val dir = graft.core.Staging.stagedDir(d, "documents", "pcptmodel") { tmp =>
+    val dir = Staging.stagedDir(d, "documents", "pcptmodel") { tmp =>
       import s.implicits._
-      val feats = sparseFeatures(s, d).persist()
-      val (w, wsum) = train(feats)
-      feats.unpersist()
+      val (w, wsum) = Staging.using(sparseFeatures(s, d))(train)
       (0 until NumFeatures).map(f => (f, w(f), wsum(f)))
         .toDF("f", "w", "wsum").coalesce(1)
         .write.mode("overwrite").parquet(tmp)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.{Dialect, Entry}
 
 /** Training-data pipeline composites on top of the text/dedup primitives:
@@ -92,48 +92,44 @@ object Pipeline {
   def clusterPairs(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     val fwd = pairs.select(col("doc_a").as("s"), col("doc_b").as("t"))
-    val edges = fwd.unionByName(fwd.select(col("t").as("s"), col("s").as("t"))).persist()
     // Materialize the (corpus-scale) pair derivation at the session's full
     // partitioning BEFORE entering the loop's narrow scope below.
-    edges.count()
-    // Each round's result is localCheckpoint'ed, NOT persist'ed: the next
+    val edges = Staging.materialize(
+      fwd.unionByName(fwd.select(col("t").as("s"), col("s").as("t"))))
+    // Each round's result is materialized (lineage truncated): the next
     // round references it twice (propagation join + change count), so a
-    // lineage-preserving cache would double the logical plan every round —
-    // exponential plan blowup by round ~10. Checkpointing truncates the
-    // plan to the materialized result (on a cluster: checkpoint() to a DFS
-    // dir for executor-loss tolerance — same call shape).
+    // lineage-preserving plan would double every round — exponential
+    // plan blowup by round ~10.
     //
     // The loop itself moves only the edge/label tables (orders of
     // magnitude smaller than the corpus), so its joins run at a narrow
     // partitioning — per-round cost is dominated by fixed task scheduling
     // otherwise. A deployment whose edge list is itself huge raises the
     // same knob.
-    var labels = edges.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-    graft.core.GraftSession.withShufflePartitions(spark, 8) {
-      labels = labels.localCheckpoint()
+    val labels = graft.core.GraftSession.withShufflePartitions(spark, 8) {
+      var labels = Staging.materialize(edges.select(col("s").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl")))
       var changed = 1L
       while (changed > 0) {
         val nb = edges.join(labels.select(col("id").as("nid"), col("lbl").as("nlbl")),
             col("t") === col("nid"))
           .groupBy(col("s")).agg(min(col("nlbl")).as("nbl"))
         // the PREVIOUS label rides along as `old`, so convergence detection
-        // is a shuffle-free filter+count over the checkpointed blocks —
+        // is a shuffle-free filter+count over the materialized blocks —
         // the former formulation re-joined `next` against `labels` (one
         // extra join + exchange per round just to count changes)
-        val next = labels.join(nb, col("id") === col("s"), "left")
+        val next = Staging.materialize(labels.join(nb, col("id") === col("s"), "left")
           .select(col("id"), col("lbl").as("old"),
-                  least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-          .localCheckpoint()
+                  least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl")))
         changed = next.filter(col("lbl") =!= col("old")).count()
         // the superseded snapshot is dead once the change count is known —
-        // release its blocks now (not at ContextCleaner GC time) so storage
-        // holds at most two label snapshots regardless of round count
-        labels.unpersist()
-        labels = next.select(col("id"), col("lbl"))
+        // storage holds at most two label snapshots regardless of round count
+        Staging.release(labels)
+        labels = next
       }
+      labels
     }
-    edges.unpersist()
+    Staging.release(edges)
     labels.select(col("id").as("doc_id"), col("lbl").cast("bigint").as("cluster"))
       .orderBy(col("doc_id"))
   }
@@ -239,15 +235,14 @@ object Pipeline {
     * the rows of `n` (lang, n_tok) exactly: base = floor(bud*n/T), the
     * B - Σ base leftover units to the largest remainders, ties by lang
     * ascending. ONE copy shared by the published allocation table (q258)
-    * and the sampler that executes it (q259). The O(langs) count table
-    * is persisted inside — the budget scalar, the base derivation and
-    * the leftover each reference it, and without the pin each reference
-    * re-runs the corpus aggregation. BIGINT headroom: bud*n_tok must stay
+    * and the sampler that executes it (q259). The budget scalar, the base
+    * derivation and the leftover each reference the O(langs) count table
+    * inside one plan, so its aggregation exchange runs once and the other
+    * references read it as a ReusedExchange. BIGINT headroom: bud*n_tok must stay
     * under 2^63 — true for any per-language token count here and up to
     * ~3e18 token-products; a 100 TB deployment rescales n to per-million
     * shares before apportioning, same method one scale down. */
-  private def hamiltonAlloc(n0: DataFrame, budget: String): DataFrame = {
-    val n = n0.persist()
+  private def hamiltonAlloc(n: DataFrame, budget: String): DataFrame = {
     val tt = n.agg(sum(col("n_tok")).cast("bigint").as("t"))
     val q = n.crossJoin(broadcast(tt))
       .withColumn("bud", expr(budget))
@@ -352,20 +347,19 @@ object Pipeline {
       |              COUNT(DISTINCT tw.doc_id) AS n_partners
       |       FROM vw JOIN tw ON tw.win = vw.win GROUP BY 1)""".stripMargin
 
-  /** The corpus's (doc_id, h1, h2) window-fingerprint rows, PERSISTED —
+  /** The corpus's (doc_id, h1, h2) window-fingerprint rows, MATERIALIZED —
     * q257 consumes it three ways (leak join's val side, train side, and
-    * the per-val-doc window counts) and q260 twice; without the pin each
+    * the per-val-doc window counts) and q260 twice; without it each
     * reference re-runs the posexplode + window-string build + double
-    * xxhash64 over the whole corpus (the q146 `fl` lesson). Callers own
-    * the frame for the duration of their entry; Verify's per-entry
-    * clearCache drops the blocks. */
+    * xxhash64 over the whole corpus (the q146 `fl` lesson). Build it once
+    * per entry and pass the frame to every consumer. */
   private[text] def winFpRows(s: SparkSession, d: String): DataFrame =
-    winFingerprints(s, d).select(col("doc_id"), col("h1"), col("h2")).persist()
+    Staging.materialize(winFingerprints(s, d).select(col("doc_id"), col("h1"), col("h2")))
 
   /** DataFrame twin of [[splitLeakCtesSql]]'s lk: per LEAKED val doc the
     * distinct leaked-window count and distinct train-partner count,
     * joined on the 128-bit window fingerprint. O(leaked docs) rows.
-    * Takes the persisted [[winFpRows]] frame so both consumers (q257,
+    * Takes the materialized [[winFpRows]] frame so both consumers (q257,
     * q260) share one corpus pass. */
   private[text] def splitLeakTable(wf: DataFrame): DataFrame = {
     val vw = wf.filter(col("doc_id") % 10 === 7).distinct()
@@ -426,7 +420,7 @@ object Pipeline {
     Entry("q90_dedup_clusters", q90OracleSql) { (s, d) =>
       // sh is the ingest-staged shingle table (TokenIndex.shingles3): its
       // consumers re-scan a small staged parquet instead of re-deriving
-      // shingles, and no persisted blocks leak past the entry.
+      // shingles, and no materialized blocks leak past the entry.
       val sh = TokenIndex.shingles3(s, d)
       val inter = sh.as("x").join(sh.as("y"),
           col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
@@ -768,9 +762,9 @@ object Pipeline {
     // SINGLE 64-bit key would already be ~3% birthday-bound. The window
     // string is dropped before the exchange; the oracle/twin SQL keeps
     // the string key (equal counts as long as the fingerprint is
-    // collision-free, which the width guarantees). `fl` is persisted
-    // because both the per-doc window counts and the coverage union
-    // consume it.
+    // collision-free, which the width guarantees). The fingerprint rows
+    // are materialized because both the per-doc window counts and the
+    // coverage union consume them.
     Entry("q146_window_dedup",
       s"""WITH ${Text.wordsCtesSql},
         |$winCtesSql,
@@ -792,9 +786,11 @@ object Pipeline {
       val t = TokenIndex.toks(s, d).filter(size(col("ws")) > 0)
       // 128-bit fingerprint replaces the string BEFORE the exchange —
       // winFingerprints drops `win`, so the shuffle carries 16 bytes/row.
-      val fl = winFingerprints(s, d)
+      // fl feeds pd (window counts) AND cv (coverage union): the
+      // fingerprint build under it is materialized, the window runs per
+      // consumer
+      val fl = Staging.materialize(winFingerprints(s, d))
         .withColumn("n", count(lit(1)).over(Window.partitionBy(col("h1"), col("h2"))))
-        .persist()   // feeds pd (window counts) AND cv (coverage union)
       val pd = fl.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_windows"),
              sum(when(col("n") > 1, 1).otherwise(0)).as("n_dup"))
@@ -1212,9 +1208,9 @@ object Pipeline {
     // posture: the driver holds only the chosen rule), and a greedy
     // leftmost re-segmentation via the aggregate() fold — 'a b' -> 'ab'
     // once per non-overlapping occurrence, the reference BPE semantics.
-    // Rounds never rescan the corpus: the segmented vocab is persisted,
-    // each round derives from the previous (materialize-then-unpersist,
-    // nothing leaks past the entry).
+    // Rounds never rescan the corpus: the segmented vocab is materialized,
+    // each round derives from the previous and releases it (nothing leaks
+    // past the entry).
     Entry("q161_bpe_merges", bpeOracleSql) { (s, d) => bpeMerges(s, d) }
       .sqlTwin(bpeTwinSql),
 
@@ -1541,14 +1537,13 @@ object Pipeline {
         |SELECT cc.doc_id, cc.lang, cc.n_tok, CAST(cc.cum AS BIGINT) AS cum_tok
         |FROM cc JOIN al ON al.lang = cc.lang
         |WHERE cc.cum <= al.alloc_tok ORDER BY cc.doc_id""".stripMargin) { (s, d) =>
-      // persisted: `nt` feeds the language totals (allocation) AND the
-      // per-lang cumulative draw — without the pin the whole DSIR
-      // selection chain above it runs twice (it is the draw's input).
+      // materialized: `nt` feeds the language totals (allocation) AND the
+      // per-lang cumulative draw — without it the whole DSIR selection
+      // chain above it runs twice (it is the draw's input).
       // O(selected docs) rows of (id, lang, count).
-      val nt = TokenIndex.toks(s, d)
+      val nt = Staging.materialize(TokenIndex.toks(s, d)
         .join(dsirSelected(s, d).select(col("doc_id")), "doc_id")
-        .select(col("doc_id"), col("lang"), size(col("ws")).cast("bigint").as("n_tok"))
-        .persist()
+        .select(col("doc_id"), col("lang"), size(col("ws")).cast("bigint").as("n_tok")))
       val al = hamiltonAlloc(
         nt.groupBy(col("lang")).agg(sum(col("n_tok")).cast("bigint").as("n_tok")),
         "t div 2").select(col("lang"), col("alloc_tok"))
@@ -1740,10 +1735,10 @@ object Pipeline {
     * map-only), cluster attach (singletons self-labeled), per-cluster
     * (score DESC, doc_id) argmax — ONE copy consumed by both cluster
     * tiers (exact q268 / LSH q272) so the keeper rule cannot drift
-    * between them. Persist-to-return contract (see Funnel.reportV2):
-    * `g` backs the returned plan; harnesses clearCache() per entry. */
+    * between them. `g` is read by the training collect and the returned
+    * plan, so it is materialized (as Funnel.reportV2). */
   private def keeperFrame(s: SparkSession, d: String, cl: DataFrame): DataFrame = {
-    val g = QualityModel.bucketFrame(T(s, d, "documents")).persist()
+    val g = Staging.materialize(QualityModel.bucketFrame(T(s, d, "documents")))
     val m1 = QualityModel.trainPosteriors(g, "label")
     keeperTail(g.select(col("doc_id"), QualityModel.scoreCol(m1).as("score")), cl)
   }
@@ -1845,19 +1840,18 @@ object Pipeline {
     * attached — shared by q262 (the published selection) and q266 (the
     * draw that consumes it). */
   private def dsirSelected(s: SparkSession, d: String): DataFrame = {
-    // persisted: `feat` is consumed THREE times (raw bucket rollup qd,
-    // target rollup pd, per-doc score) — without the pin each consumer
-    // re-runs the corpus-wide bigram explode + hash + (doc_id, b) agg,
-    // the most expensive stage of the whole DSIR chain. O(docs x 64)
-    // rows, hashed-bucket profile only — never the bigrams themselves.
-    // Persist-to-return contract (Funnel.reportV2's discipline): the
-    // returned plan reads these pins; harnesses clearCache() per entry.
-    val feat = Text.bigramPairs(s, d)
+    // materialized: `feat` is consumed THREE times (raw bucket rollup qd,
+    // target rollup pd, per-doc score) — without it each consumer re-runs
+    // the corpus-wide bigram explode + hash + (doc_id, b) agg, the most
+    // expensive stage of the whole DSIR chain (the two joins' inferred
+    // not-null filters push below the agg, so exchange reuse would not
+    // share it). O(docs x 64) rows, hashed-bucket profile only — never
+    // the bigrams themselves.
+    val feat = Staging.materialize(Text.bigramPairs(s, d)
       .select(col("doc_id"),
         (graft.functions.vec.tokenHash(
           concat(col("w1"), lit(" "), col("w2"))) % 64).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c")))
     val tgt = TokenIndex.toks(s, d)
       .filter(col("lang") === "en" && size(col("ws")) >= 25 &&
         size(filter(col("ws"), w => w.isin(dsirStop: _*))) * 100 >= size(col("ws")) * 3)
@@ -1874,13 +1868,12 @@ object Pipeline {
       .select(col("b"),
         expr("CAST(FLOOR(1000000 * ln(((COALESCE(pc, 0) + 1.0e0) * (qt + 64.0e0)) / " +
              "((qc + 1.0e0) * (pt + 64.0e0)))) AS BIGINT)").as("lam"))
-    // persisted: consumed by the rank window AND the k-threshold count
-    // (without the pin the lam subtree plans and runs twice)
+    // consumed by the rank window AND the k-threshold count; each re-reads
+    // the materialized feat, an O(docs x 64) scan
     val score = feat.join(broadcast(lam), "b")
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).cast("bigint").as("n_bigrams"),
            sum(col("c") * col("lam")).cast("bigint").as("logw_unat"))
-      .persist()
     val kk = score.agg(expr("COUNT(*) div 4").as("k"))
     score
       .withColumn("ord", col("doc_id") % 1000003L * 2654435761L % 1000000007L)
@@ -2023,8 +2016,8 @@ object Pipeline {
     * corpus- or vocab-sized stays distributed. */
   private def bpeLearn(s: SparkSession, d: String): Seq[(Int, String, String, String, Long)] = {
     val wf = TokenIndex.words(s, d).groupBy(col("w")).agg(count(lit(1)).as("f"))
-    var syms = wf.select(col("w"), col("f"),
-      expr("filter(split(w, ''), t -> t <> '')").as("s")).persist()
+    var syms = Staging.materialize(wf.select(col("w"), col("f"),
+      expr("filter(split(w, ''), t -> t <> '')").as("s")))
     val rules = Seq.newBuilder[(Int, String, String, String, Long)]
     for (r <- 1 to bpeRounds) {
       val pairs = syms.filter(size(col("s")) >= 2)
@@ -2036,12 +2029,10 @@ object Pipeline {
       val best = pairs.orderBy(col("cnt").desc, col("a"), col("b")).limit(1).head()
       val (a, b, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
       rules += ((r, a, b, a + b, cnt))
-      if (r < bpeRounds) {
-        val next = syms.withColumn("s", expr(bpeFold("s", a, b, r))).persist()
-        next.count() // materialize before releasing the parent's blocks
-        syms.unpersist()
-        syms = next
-      } else syms.unpersist()
+      val prev = syms
+      if (r < bpeRounds)
+        syms = Staging.materialize(syms.withColumn("s", expr(bpeFold("s", a, b, r))))
+      Staging.release(prev)
     }
     rules.result()
   }

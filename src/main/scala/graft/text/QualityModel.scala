@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.queries.Entry
 
 /** Model-based document quality scoring (SURVEY.md Q234) — the trained
@@ -147,13 +147,12 @@ object QualityModel {
     * have doc_id + text). Exposed for QualityModelSpec's synthetic
     * separation pin. */
   def confusion(docs: DataFrame): DataFrame = {
-    val u = bucketFrame(docs)
-      // per-row unpivot — generates 5 (sig, bucket) rows with NO shuffle
+    // ONE signal pass feeds both training and scoring (without it the
+    // stack+tokenize runs twice); per-row unpivot — generates 5
+    // (sig, bucket) rows with NO shuffle
+    val u = Staging.materialize(bucketFrame(docs)
       .selectExpr("doc_id", "label",
-        "stack(5, 0, b0, 1, b1, 2, b2, 3, b3, 4, b4) AS (sig, b)")
-      // ONE signal pass feeds both training and scoring (bench clears
-      // caches per entry; without this the stack+tokenize runs twice)
-      .persist()
+        "stack(5, 0, b0, 1, b1, 2, b2, 3, b3, 4, b4) AS (sig, b)"))
     // training: O(signals x 10) rows — map-side-combinable agg
     val m = u.groupBy(col("sig"), col("b"))
       .agg(expr("CAST((1000000 * (SUM(label) + 1)) div (COUNT(*) + 2) AS BIGINT)")
@@ -271,7 +270,7 @@ object QualityModel {
     // pred) cells with round-2 score extrema — pred1/pred2 flips land in
     // their own rows.
     Entry("q242_quality_selftrain", selftrainSql("//", duck = true)) { (s, d) =>
-      val g = bucketFrame(T(s, d, "documents")).persist()
+      val g = Staging.materialize(bucketFrame(T(s, d, "documents")))
       val m1 = trainPosteriors(g, "label")
       val g1 = g.withColumn("score1", scoreCol(m1))
       val m2 = trainPosteriors(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.functions.vec
 import graft.queries.Entry
 
@@ -404,15 +404,13 @@ object Vectors {
 
   /** Train the coarse quantizer alone — the ingest-staged `ivfcents`
     * artifact (VectorIndex.ivf): the centroid geometry is what the QUERY
-    * side needs to pick probe cells without re-training. Persists the
-    * norm projection through training (count + init collect + Lloyd
-    * rounds all consume it), then releases it — no cache blocks leak
-    * past the call. */
+    * side needs to pick probe cells without re-training. Materializes
+    * the norm projection through training (count + init collect + Lloyd
+    * rounds all consume it), then releases it — no blocks leak past the
+    * call. */
   def trainCoarseQuantizer(emb: DataFrame, nlist: Int = 8, iters: Int = 3,
-                           trainCap: Int = 100000): Array[Array[Double]] = {
-    val e = withNorm(emb).persist()
-    try trainCoarse(e, nlist, iters, trainCap) finally e.unpersist()
-  }
+                           trainCap: Int = 100000): Array[Array[Double]] =
+    Staging.using(withNorm(emb))(trainCoarse(_, nlist, iters, trainCap))
 
   /** Multi-probe assignment against GIVEN centroids (the staged-cents
     * path: one corpus pass, no training). */
@@ -437,20 +435,17 @@ object Vectors {
     * With a staged `index` ((vec_id, rk, cell) from VectorIndex.cells) the
     * training/assignment is skipped entirely — the labels join the norm
     * projection on vec_id, the deployment shape.
-    * Persisted: the pair join consumes it on both sides (and the summary
-    * a third time); callers own cleanup via `spark.catalog.clearCache()`
-    * (the Bench/Verify per-entry contract, as lshCandidates). */
+    * Materialized: the pair join consumes it on both sides (and the
+    * summary a third time). */
   private def semanticAssigned(emb: DataFrame, nlist: Int, iters: Int,
                                trainCap: Int, probes: Int,
                                index: Option[DataFrame]): DataFrame =
-    (index match {
+    Staging.materialize(index match {
       case Some(cells) => withNorm(emb).join(cells, "vec_id")
         .select(col("vec_id"), col("rk"), col("cell"), col("v"), col("nrm"))
       case None =>
-        val e = withNorm(emb).persist()
-        val cents = try trainCoarse(e, nlist, iters, trainCap) finally e.unpersist()
-        assignCellsTop(withNorm(emb), cents, probes)
-    }).persist()
+        assignCellsTop(withNorm(emb), trainCoarseQuantizer(emb, nlist, iters, trainCap), probes)
+    })
 
   /** Within-cell exact-cosine pairs (id_a < id_b, cos_r >= tau). A pair
     * meeting in several shared cells reports once, under the smallest
@@ -550,15 +545,14 @@ object Vectors {
     * Note: at fixture scale (2000 vectors) training dominates the wall
     * time and brute force wins; the inverted-file structure pays off when
     * cells hold millions of vectors each.
-    * The norm projection is persisted (training + final assignment + the
-    * probe join all consume it); callers own cleanup via
-    * `spark.catalog.clearCache()` — the Bench/Verify per-entry contract,
-    * as lshCandidates and semanticAssigned.
+    * The norm projection is materialized (training + final assignment +
+    * the probe join all consume it); its blocks belong to the returned
+    * plan.
     */
   def annIvf(emb: DataFrame, queryIds: Seq[Int], k: Int,
              nlist: Int = 16, nprobe: Int = 6, iters: Int = 3,
              trainCap: Int = 100000): DataFrame = {
-    val e = withNorm(emb).persist()
+    val e = Staging.materialize(withNorm(emb))
     val cents = trainCoarse(e, nlist, iters, trainCap)
     ivfSearch(assignCells(e, cents), cents, queryIds, k, nprobe)
   }

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan over `src/main/scala` (the OracleLintSpec posture): the
-  * run-to-completion drain lifecycle lives only in [[Drain]], and the
+  * run-to-completion drain lifecycle lives only in [[Drain]], the
   * temp-dir + JVM-exit-hook pattern only in the scratch registry
-  * ([[Staging.scratchDir]]). A new hand-rolled drain loop or temp dir
-  * fails here instead of growing another copy to keep in step. */
+  * ([[Staging.scratchDir]]), and intermediate materialization only in
+  * [[Staging]]. A new hand-rolled drain loop, temp dir or persist fails
+  * here instead of growing another copy to keep in step. */
 class DrainLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -44,5 +45,18 @@ class DrainLintSpec extends AnyFunSuite {
     val enclosingDef = Files.readAllLines(root.resolve("graft/ingest/Ingest.scala")).asScala
       .take(line).filter(_.trim.startsWith("def ")).last
     assert(enclosingDef.contains("def stopGracefully("), enclosingDef)
+  }
+
+  test("materialization lives only in Staging; nothing calls clearCache()") {
+    val found = Seq(".persist(", ".cache()", "localCheckpoint(", ".unpersist(", ".checkpoint(")
+      .flatMap(sites).filterNot(_._1 == "graft/core/Staging.scala")
+    // the one exception: LinkGraph's Reliable mode checkpoints each
+    // fixpoint round to the configured DFS dir (CheckpointModeSpec)
+    val (reliable, rest) = found.partition { case (f, _, line) =>
+      f == "graft/text/LinkGraph.scala" && line.contains("case Reliable => df.checkpoint()")
+    }
+    assert(rest.isEmpty, rest.mkString("\n"))
+    assert(reliable.size == 1, found.mkString("\n"))
+    assert(sites("clearCache()").isEmpty, sites("clearCache()").mkString("\n"))
   }
 }

@@ -181,11 +181,11 @@ class PlanShapeSpec extends GraftSuite {
     // by the same (h1, h2) key — Catalyst must plan a single Exchange
     // feeding both Window operators, and the window string must never
     // ride a shuffle (q146's payload diet).
-    // cache-independence: q146's persisted fingerprint frame is a strict
-    // subplan of this entry's, so a prior q146 run would substitute an
-    // InMemoryTableScan and hide the exchange this pin inspects (fine at
-    // runtime — cache reuse is the point of the persist — but the pin
-    // must see the cold plan)
+    // cache-independence: no entry persists (Staging materializes into
+    // lineage-free blocks instead), but a frame another spec cached over a
+    // strict subplan of this entry's would substitute an InMemoryTableScan
+    // and hide the exchange this pin inspects — the pin must see the cold
+    // plan
     spark.catalog.clearCache()
     val p = planOf("q256_dup_span_scrub")
     val exchanges = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(p).toList
@@ -244,19 +244,23 @@ class PlanShapeSpec extends GraftSuite {
     // the corpus contributes ONE lang-keyed aggregation; the budget total
     // and leftover are one-row broadcasts (never a shuffled join); the
     // single-partition ranking window runs on the O(langs) decision table
-    val p = planOf("q258_budget_apportion")
-    // the persisted lang table appears as InMemoryTableScan at every
-    // reference (its cached plan text echoes the one FileScan) — the
-    // corpus-scan budget is therefore the number of DISTINCT shuffle
-    // plan_ids, not textual scan mentions
-    assert(p.contains("InMemoryTableScan"),
-      s"the O(langs) count table must be persisted, not re-aggregated:\n$p")
+    // the O(langs) count table is read three times in one plan (budget
+    // total, base derivation, leftover): its lang aggregation exchange
+    // runs ONCE and the other references read it as a ReusedExchange,
+    // so the EXECUTED plan (after AQE's stage reuse) scans the corpus
+    // once and holds one distinct lang exchange
+    val df = SparkEntry.queries("q258_budget_apportion")(spark, sf)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(p.contains("ReusedExchange"),
+      s"the O(langs) count table must be computed once, not re-aggregated:\n$p")
+    assert("FileScan parquet".r.findAllIn(p).size == 1, s"corpus must be scanned once:\n$p")
     assert(p.contains("BroadcastExchange"), s"budget scalars must broadcast:\n$p")
     val exchanges =
       "Exchange hashpartitioning\\([^)]*\\), [A-Z_]+, \\[plan_id=\\d+\\]".r.findAllIn(p).toList
     assert(exchanges.forall(_.contains("lang#")),
       s"only the lang aggregation may shuffle:\n${exchanges.mkString("\n")}")
-    assert(exchanges.toSet.size <= 1,
+    assert(exchanges.toSet.size == 1,
       s"corpus must aggregate once:\n${exchanges.mkString("\n")}")
   }
 

@@ -101,11 +101,12 @@ object Bench {
     // With overlap, ingest_parts seconds no longer sum to the "ingest"
     // wall-clock — each label is still that artifact's true build cost.
     locally {
-      // Each chain runs on its OWN cloned session (isolated SQLConf): the
-      // merge-table build overrides shuffle partitions for its drain
-      // (DocSync), and on a shared session that override is visible to
+      // Each chain runs on its OWN cloned session (isolated SQLConf):
+      // stream-prestage's drains override shuffle partitions
+      // (Drain.run), and on a shared session that override is visible to
       // every concurrently planning job in the other chains — an index
       // build planned at partitions=8 distorts ingest_parts (r19 ADVICE).
+      // The merge-table build runs DocSync.mergeBatch, no drain.
       // Every cloned() call is evaluated INSIDE a staged() body (chain 1
       // via the lazy val, re-attempted per step), so a NonFatal clone
       // failure degrades to that artifact's per-entry failures instead of

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Aggregates, Dialect, Entry, Geo, Metrics, Relational, Scalars, Search}
+import graft.queries.{Aggregates, Entry, Geo, Metrics, Relational, Scalars, Search}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -14,79 +14,67 @@ import graft.queries.{Aggregates, Dialect, Entry, Geo, Metrics, Relational, Scal
 object SparkEntry {
 
   // SQL entry path (SURVEY.md §3.4 C): entries without an explicit
-  // Spark-dialect twin get one derived from the oracle SQL by the
-  // mechanical rename bridge; SqlParitySpec executes every twin against
+  // Spark-dialect twin get one derived from the oracle SQL by the dialect
+  // bridge (`Entry.sparkSql`); SqlParitySpec executes every twin against
   // the DataFrame plan, so a bad derivation cannot pass silently. A
   // derivation REJECT (rule token inside a string literal) is isolated to
   // that entry — recorded in [[twinDerivationErrors]] and failed by
   // SqlParitySpec — instead of throwing here, where one bad oracle would
   // take down registration for every unrelated bench/correctness run.
-  private val derived: Seq[(Entry, Option[String], Boolean)] = {
-    val declared =
-      Relational.entries ++
-      Aggregates.entries ++
-      Scalars.entries ++
-      Geo.entries ++
-      Metrics.entries ++
-      Search.entries ++
-      sync.SyncQueries.entries ++
-      streaming.Streams.entries ++
-      text.Text.entries ++
-      text.Pipeline.entries ++
-      text.Utf8Repair.entries ++
-      text.Normalize.entries ++
-      text.Html.entries ++
-      text.Urls.entries ++
-      text.LangId.entries ++
-      text.Robots.entries ++
-      text.Sitemap.entries ++
-      text.Domains.entries ++
-      text.Funnel.entries ++
-      text.LinkGraph.entries ++
-      text.Anchors.entries ++
-      text.QualityModel.entries ++
-      text.Perceptron.entries ++
-      text.Unigram.entries ++
-      text.Sentences.entries ++
-      text.Pii.entries ++
-      vector.Vectors.entries ++
-      multimodal.Multimodal.entries ++
-      multimodal.MmEmbed.entries ++
-      multimodal.Video.entries ++
-      multimodal.Spectral.entries ++
-      multimodal.Ulaw.entries ++
-      multimodal.Flac.entries ++
-      multimodal.PerceptualHash.entries ++
-      multimodal.AspectBuckets.entries ++
-      multimodal.Vad.entries ++
-      multimodal.Resample.entries ++
-      multimodal.Tiff.entries ++
-      ingest.Shards.entries ++
-      ingest.CompressedShards.entries ++
-      ingest.ZipShards.entries ++
-      ingest.WarcShards.entries ++
-      ingest.Redirects.entries
-    declared.map { e =>
-      if (e.sparkSqlOverride.nonEmpty || e.oracle.isEmpty) (e, None, false)
-      else
-        scala.util.Try(e.sqlTwin(Dialect.duckToSpark(e.oracle.get))) match {
-          case scala.util.Success(withTwin) => (withTwin, None, true)
-          case scala.util.Failure(ex)       => (e, Some(ex.getMessage), false)
-        }
-    }
-  }
-
-  val allEntries: Seq[Entry] = derived.map(_._1)
+  val allEntries: Seq[Entry] =
+    Relational.entries ++
+    Aggregates.entries ++
+    Scalars.entries ++
+    Geo.entries ++
+    Metrics.entries ++
+    Search.entries ++
+    sync.SyncQueries.entries ++
+    streaming.Streams.entries ++
+    text.Text.entries ++
+    text.Pipeline.entries ++
+    text.Utf8Repair.entries ++
+    text.Normalize.entries ++
+    text.Html.entries ++
+    text.Urls.entries ++
+    text.LangId.entries ++
+    text.Robots.entries ++
+    text.Sitemap.entries ++
+    text.Domains.entries ++
+    text.Funnel.entries ++
+    text.LinkGraph.entries ++
+    text.Anchors.entries ++
+    text.QualityModel.entries ++
+    text.Perceptron.entries ++
+    text.Unigram.entries ++
+    text.Sentences.entries ++
+    text.Pii.entries ++
+    vector.Vectors.entries ++
+    multimodal.Multimodal.entries ++
+    multimodal.MmEmbed.entries ++
+    multimodal.Video.entries ++
+    multimodal.Spectral.entries ++
+    multimodal.Ulaw.entries ++
+    multimodal.Flac.entries ++
+    multimodal.PerceptualHash.entries ++
+    multimodal.AspectBuckets.entries ++
+    multimodal.Vad.entries ++
+    multimodal.Resample.entries ++
+    multimodal.Tiff.entries ++
+    ingest.Shards.entries ++
+    ingest.CompressedShards.entries ++
+    ingest.ZipShards.entries ++
+    ingest.WarcShards.entries ++
+    ingest.Redirects.entries
 
   /** Names whose `spark.sql` twin was DERIVED by the dialect bridge (vs
     * declared explicitly) — DialectFuzzSpec pins literal-region
     * preservation over exactly this set. */
-  val bridgedTwins: Set[String] = derived.collect { case (e, _, true) => e.name }.toSet
+  val bridgedTwins: Set[String] = allEntries.filter(_.bridgedTwin).map(_.name).toSet
 
   /** Twin-derivation rejects by entry name (empty in a healthy build);
     * SqlParitySpec fails each named entry individually. */
   val twinDerivationErrors: Map[String, String] =
-    derived.collect { case (e, Some(msg), _) => e.name -> msg }.toMap
+    allEntries.flatMap(e => e.twinError.map(e.name -> _)).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Mini-TPC-H-Q5: the 6-table join + revenue rollup. */

@@ -197,10 +197,6 @@ object ZipShards {
         .select(col("doc_id"), col("shard_id"), col("n_fields"),
                 col("txt_len"), col("cls"), md5(col("txt_bytes")).as("txt_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, doc_id div 8 AS shard_id, 2 AS n_fields,
-        |  CAST(octet_length(CAST(text AS BINARY)) AS BIGINT) AS txt_len,
-        |  CAST(doc_id % 7 AS INT) AS cls, md5(text) AS txt_md5
-        |FROM documents ORDER BY doc_id""".stripMargin)
+    }
   )
 }

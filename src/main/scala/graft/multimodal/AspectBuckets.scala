@@ -71,7 +71,7 @@ object AspectBuckets {
 
   /** q210's oracle: the same scaled-error argmin as SQL — the ordered
     * CASE encodes "first minimal bucket wins" exactly. */
-  private def bucketSql(idiv: String): String = {
+  private def bucketSql: String = {
     def err(bn: Int, bd: Int) = s"(ABS(w*$bd - $bn*h) * ${144 / bd})"
     val (e1, e43, e34, e169, e916) =
       (err(1, 1), err(4, 3), err(3, 4), err(16, 9), err(9, 16))
@@ -86,7 +86,7 @@ object AspectBuckets {
       |        ELSE '9:16' END AS bucket
       |      FROM dim)
       |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_images,
-      |  CAST((COUNT(*) + ${batchSize - 1}) $idiv $batchSize AS BIGINT) AS n_batches
+      |  CAST((COUNT(*) + ${batchSize - 1}) // $batchSize AS BIGINT) AS n_batches
       |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin
   }
 
@@ -95,7 +95,7 @@ object AspectBuckets {
     // nearest-bucket assignment -> the 5-row batch plan. The oracle
     // recomputes assignment AND plan from the dim formulas, so a wrong
     // argmin or tie anywhere shifts a bucket count and fails the hash.
-    Entry("q210_aspect_buckets", bucketSql("//")) { (s, d) =>
+    Entry("q210_aspect_buckets", bucketSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -111,6 +111,6 @@ object AspectBuckets {
         .select(col("bucket"), col("n_images"),
           floor((col("n_images") + (batchSize - 1)) / batchSize).cast("bigint").as("n_batches"))
         .orderBy(col("bucket"))
-    }.sqlTwin(bucketSql("div"))
+    }
   )
 }

@@ -353,10 +353,10 @@ object Flac {
     * signal formula — hash equality proves the whole encode∘decode chain
     * (container walk, CRCs, rice, predictor) reproduced it exactly. The
     * projected pred_order pins that the decoder read the subframe type. */
-  private def flacSql(series: (Int, String) => String): String =
+  private def flacSql: String =
     s"""WITH au AS (SELECT doc_id, CAST(32 + doc_id % 48 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(80, "i")}),
+      |iser AS (SELECT UNNEST(range(80)) AS i),
       |sm AS (SELECT doc_id, n, (doc_id*37 + i*101) % 4096 - 2048 AS s
       |       FROM au, iser WHERE i < n)
       |SELECT doc_id, CAST(n AS INT) AS n_samples, CAST($SampleRate AS INT) AS sr,
@@ -370,8 +370,7 @@ object Flac {
     // id, round-tripped through the bit-level parser (metadata walk, both
     // CRCs, rice, predictor reconstruction). Map-only, no shuffle before
     // the output sort.
-    Entry("q282_flac_decode",
-      flacSql((n, c) => s"SELECT UNNEST(range($n)) AS $c")) { (s, d) =>
+    Entry("q282_flac_decode", flacSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -383,6 +382,6 @@ object Flac {
         .select(col("doc_id"), col("n_samples"), col("sr"), col("bps"),
                 col("pred_order"), col("sum_s"), col("abs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(flacSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c"))
+    }
   )
 }

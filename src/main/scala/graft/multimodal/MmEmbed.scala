@@ -150,18 +150,17 @@ object MmEmbed {
 
   private val QueryIds = Seq(1, 2, 4)   // 1, 4 image; 2 audio — cross-modal
 
-  /** The shared oracle text, dialect-parameterized like Multimodal.bmpSql:
-    * `series(n, c)` yields a 0..n-1 column named c, `idiv` is integer
-    * division. Feature terms mirror [[MediaEncoder]] verbatim; the cosine
+  /** The shared oracle text (the twin is bridged, like
+    * Multimodal.bmpSql's). Feature terms mirror [[MediaEncoder]] verbatim; the cosine
     * tail mirrors [[Vectors.topK]]'s exact arithmetic — left-associated
     * dot, norm = sqrt(self-dot), cos = dot / (nrm * qnrm), ROUND 6. */
-  private def topkSql(series: (Int, String) => String, idiv: String): String = {
+  private def topkSql: String = {
     def dotOf(a: String, b: String) =
       (0 until 8).map(i => s"$a.e$i*$b.q$i").mkString(" + ")
     s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 13 AS INT) AS w,
       |                    CAST(1 + doc_id % 9 AS INT) AS h
       |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (${series(13, "x")}), ys AS (${series(9, "y")}),
+      |xs AS (SELECT UNNEST(range(13)) AS x), ys AS (SELECT UNNEST(range(9)) AS y),
       |px AS (SELECT doc_id, w, h, x, y,
       |         (doc_id*31 + x*7 + y*13) % 256 AS r,
       |         (doc_id*17 + x*11 + y*5) % 256 AS g,
@@ -170,22 +169,22 @@ object MmEmbed {
       |ie AS (SELECT doc_id,
       |         CAST(SUM(r) AS DOUBLE) AS e0, CAST(SUM(g) AS DOUBLE) AS e1,
       |         CAST(SUM(b) AS DOUBLE) AS e2,
-      |         CAST(SUM(CASE WHEN ((2*x) $idiv w)*2 + ((2*y) $idiv h) = 0 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e3,
-      |         CAST(SUM(CASE WHEN ((2*x) $idiv w)*2 + ((2*y) $idiv h) = 1 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e4,
-      |         CAST(SUM(CASE WHEN ((2*x) $idiv w)*2 + ((2*y) $idiv h) = 2 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e5,
-      |         CAST(SUM(CASE WHEN ((2*x) $idiv w)*2 + ((2*y) $idiv h) = 3 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e6,
+      |         CAST(SUM(CASE WHEN ((2*x) // w)*2 + ((2*y) // h) = 0 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e3,
+      |         CAST(SUM(CASE WHEN ((2*x) // w)*2 + ((2*y) // h) = 1 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e4,
+      |         CAST(SUM(CASE WHEN ((2*x) // w)*2 + ((2*y) // h) = 2 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e5,
+      |         CAST(SUM(CASE WHEN ((2*x) // w)*2 + ((2*y) // h) = 3 THEN r+g+b ELSE 0 END) AS DOUBLE) AS e6,
       |         CAST(w*h*128 AS DOUBLE) AS e7
       |       FROM px GROUP BY doc_id, w, h),
       |au AS (SELECT doc_id, CAST(16 + doc_id % 50 AS INT) AS n
       |       FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(66, "i")}),
+      |iser AS (SELECT UNNEST(range(66)) AS i),
       |sm AS (SELECT doc_id, n, i, (doc_id*37 + i*101) % 4001 - 2000 AS s
       |       FROM au, iser WHERE i < n),
       |ae AS (SELECT doc_id,
-      |         CAST(SUM(CASE WHEN (4*i) $idiv n = 0 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e0,
-      |         CAST(SUM(CASE WHEN (4*i) $idiv n = 1 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e1,
-      |         CAST(SUM(CASE WHEN (4*i) $idiv n = 2 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e2,
-      |         CAST(SUM(CASE WHEN (4*i) $idiv n = 3 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e3,
+      |         CAST(SUM(CASE WHEN (4*i) // n = 0 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e0,
+      |         CAST(SUM(CASE WHEN (4*i) // n = 1 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e1,
+      |         CAST(SUM(CASE WHEN (4*i) // n = 2 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e2,
+      |         CAST(SUM(CASE WHEN (4*i) // n = 3 THEN ABS(s) ELSE 0 END) AS DOUBLE) AS e3,
       |         SUM(s*s) / 1024.0e0 AS e4,
       |         CAST(SUM(CASE WHEN i >= 1 AND s * ((doc_id*37 + (i-1)*101) % 4001 - 2000) < 0
       |                       THEN 1 ELSE 0 END) * 1000 AS DOUBLE) AS e5,
@@ -217,11 +216,9 @@ object MmEmbed {
     // arithmetic, so a hash match proves decoder, feature encoder, and
     // top-k all at once. Queries 1/4 are images, 2 is audio; neighbors
     // may come from either modality (one embedding space by design).
-    Entry("q269_mm_embed_topk",
-      topkSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q269_mm_embed_topk", topkSql) { (s, d) =>
       Vectors.topK(stagedMediaEmbeddings(s, d), QueryIds, 5)
-    }.sqlTwin(
-      topkSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     // The scale path: the same queries against the STAGED media IVF
     // (ingest-time centroids + cell labels — the q62_ann_ivf_pq posture);

@@ -908,21 +908,21 @@ object Multimodal {
     def open(): Handle = new Handle()
   }
 
-  /** q196's oracle, parameterized by dialect: `series(n)` yields a 0..n-1
-    * column named v, `idiv` is integer division. The formula terms mirror
-    * [[Bmp.r]]/[[Bmp.g]]/[[Bmp.b]] verbatim. */
-  private def bmpSql(series: (Int, String) => String, idiv: String): String = {
+  /** q196's oracle; its `spark.sql` twin is bridged (`UNNEST(range(n))`
+    * → `explode(sequence(0, n-1))`, `//` → `div`). The formula terms
+    * mirror [[Bmp.r]]/[[Bmp.g]]/[[Bmp.b]] verbatim. */
+  private def bmpSql: String = {
     def lum(x: String, y: String) =
       s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
         s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
     s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 13 AS INT) AS w,
       |                    CAST(1 + doc_id % 9 AS INT) AS h
       |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (${series(13, "x")}), ys AS (${series(9, "y")}),
+      |xs AS (SELECT UNNEST(range(13)) AS x), ys AS (SELECT UNNEST(range(9)) AS y),
       |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
       |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (${series(8, "xo")}), yo AS (${series(6, "yo")}),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) $idiv 8", s"(yo*h) $idiv 6")}) AS BIGINT) AS rs_sum
+      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
+      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
       |       FROM img, xo, yo GROUP BY 1)
       |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
       |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
@@ -932,30 +932,30 @@ object Multimodal {
   /** q198's oracle: [[bmpSql]]'s shape under PNG dims (1+id%16 x
     * 1+id%11) — the lum formula terms mirror the shared channel
     * generators verbatim; only the container differs on the Spark side. */
-  private def pngSql(series: (Int, String) => String, idiv: String): String = {
+  private def pngSql: String = {
     def lum(x: String, y: String) =
       s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
         s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
     s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 16 AS INT) AS w,
       |                    CAST(1 + doc_id % 11 AS INT) AS h
       |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (${series(16, "x")}), ys AS (${series(11, "y")}),
+      |xs AS (SELECT UNNEST(range(16)) AS x), ys AS (SELECT UNNEST(range(11)) AS y),
       |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
       |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (${series(8, "xo")}), yo AS (${series(6, "yo")}),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) $idiv 8", s"(yo*h) $idiv 6")}) AS BIGINT) AS rs_sum
+      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
+      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
       |       FROM img, xo, yo GROUP BY 1)
       |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
       |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
       |ORDER BY i.doc_id""".stripMargin
   }
 
-  /** q197's oracle, dialect-parameterized like [[bmpSql]]; the sample
+  /** q197's oracle, bridged like [[bmpSql]]; the sample
     * term mirrors [[Wav.sample]] verbatim. */
-  private def wavSql(series: (Int, String) => String): String =
+  private def wavSql: String =
     s"""WITH au AS (SELECT doc_id, CAST(16 + doc_id % 50 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(66, "i")}),
+      |iser AS (SELECT UNNEST(range(66)) AS i),
       |sm AS (SELECT doc_id, n, (doc_id*37 + i*101) % 4001 - 2000 AS s
       |       FROM au, iser WHERE i < n)
       |SELECT doc_id, CAST(n AS INT) AS n_samples, CAST(8000 AS INT) AS sr,
@@ -963,25 +963,25 @@ object Multimodal {
       |  CAST(SUM(s*s) AS BIGINT) AS energy_sum
       |FROM sm GROUP BY doc_id, n ORDER BY doc_id""".stripMargin
 
-  /** q201's oracle, dialect-parameterized like [[pngSql]]. The channel
+  /** q201's oracle, bridged like [[pngSql]]. The channel
     * terms mirror [[Gif.rgbAt]] verbatim: the shared generative formulas,
     * with ids % 5 == 0 quantized to {0, 255} per channel (the narrow-
     * palette branch that exercises the LZW dictionary and width bumps). */
-  private def gifSql(series: (Int, String) => String, idiv: String): String = {
+  private def gifSql: String = {
     def ch(k1: Int, k2: Int, k3: Int, x: String, y: String) = {
       val raw = s"(doc_id*$k1 + ($x)*$k2 + ($y)*$k3) % 256"
-      s"(CASE WHEN doc_id % 5 = 0 THEN (($raw) $idiv 128) * 255 ELSE $raw END)"
+      s"(CASE WHEN doc_id % 5 = 0 THEN (($raw) // 128) * 255 ELSE $raw END)"
     }
     def lum(x: String, y: String) =
       s"${ch(31, 7, 13, x, y)} + ${ch(17, 11, 5, x, y)} + ${ch(23, 3, 19, x, y)}"
     s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 14 AS INT) AS w,
       |                    CAST(1 + doc_id % 12 AS INT) AS h
       |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (${series(14, "x")}), ys AS (${series(12, "y")}),
+      |xs AS (SELECT UNNEST(range(14)) AS x), ys AS (SELECT UNNEST(range(12)) AS y),
       |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
       |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (${series(8, "xo")}), yo AS (${series(6, "yo")}),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) $idiv 8", s"(yo*h) $idiv 6")}) AS BIGINT) AS rs_sum
+      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
+      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
       |       FROM img, xo, yo GROUP BY 1)
       |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
       |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
@@ -999,8 +999,7 @@ object Multimodal {
     // no shuffle before the output sort); bytes at 100 TB arrive in the
     // binary column instead of being fabricated, everything else is
     // unchanged.
-    Entry("q196_bmp_decode",
-      bmpSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q196_bmp_decode", bmpSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -1011,8 +1010,7 @@ object Multimodal {
       }.toDF()
         .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      bmpSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     // REAL audio decode (see [[Wav]]): the q196 proof shape on the audio
     // modality — PCM WAV bytes round-tripped through an actual RIFF
@@ -1021,8 +1019,7 @@ object Multimodal {
     // recomputed by the oracle from the generative formula. Map-only, no
     // shuffle before the output sort; at 100 TB the bytes arrive in the
     // binary column and everything else is unchanged.
-    Entry("q197_wav_decode",
-      wavSql((n, c) => s"SELECT UNNEST(range($n)) AS $c")) { (s, d) =>
+    Entry("q197_wav_decode", wavSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -1034,8 +1031,7 @@ object Multimodal {
         .select(col("doc_id"), col("n_samples"), col("sr"),
                 col("abs_sum"), col("energy_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      wavSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c")),
+    },
 
     // REAL compressed-raster decode (see [[Png]]): q196's proof shape on
     // a format with an actual compression layer — zlib (JDK-provided) +
@@ -1045,8 +1041,7 @@ object Multimodal {
     // filter/inflate/walk pipeline is a faithful inverse of the encoder.
     // Map-only, no shuffle before the output sort; at 100 TB the bytes
     // arrive in the binary column and everything else is unchanged.
-    Entry("q198_png_decode",
-      pngSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q198_png_decode", pngSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -1057,8 +1052,7 @@ object Multimodal {
       }.toDF()
         .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      pngSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     // REAL lossy decode — JPEG (see [[Jpeg]]): bytes written by the JDK's
     // own encoder, dims recovered by OUR from-scratch JFIF segment walk
@@ -1083,8 +1077,7 @@ object Multimodal {
     // sub-blocks (reassembly exercised). Map-only, no shuffle before the
     // output sort; at 100 TB the bytes arrive in the binary column and
     // everything else is unchanged.
-    Entry("q201_gif_decode",
-      gifSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q201_gif_decode", gifSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -1095,8 +1088,7 @@ object Multimodal {
       }.toDF()
         .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      gifSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     Entry("q199_jpeg_decode",
       """SELECT doc_id, CAST(1 + doc_id % 15 AS INT) AS w,

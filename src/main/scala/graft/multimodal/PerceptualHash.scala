@@ -87,7 +87,7 @@ object PerceptualHash {
     * luminance from the generative channel formulas under the GROUP key
     * p, threshold bits folded into the two 32-bit halves, bucket sizes
     * from a window over the hash. */
-  private def dhashSql(series: (Int, String) => String, idiv: String): String = {
+  private def dhashSql: String = {
     def lum(x: String, y: String) =
       s"(p*31 + ($x)*7 + ($y)*13) % 256 + (p*17 + ($x)*11 + ($y)*5) % 256 + " +
         s"(p*23 + ($x)*3 + ($y)*19) % 256"
@@ -95,8 +95,8 @@ object PerceptualHash {
       |             FROM documents WHERE doc_id % 3 = 1),
       |dim AS (SELECT doc_id, p, CAST(1 + p % 13 AS INT) AS w,
       |               CAST(1 + p % 9 AS INT) AS h FROM img),
-      |xs AS (${series(9, "x")}), ys AS (${series(8, "y")}),
-      |l AS (SELECT doc_id, x, y, ${lum(s"(x*w) $idiv 9", s"(y*h) $idiv 8")} AS v
+      |xs AS (SELECT UNNEST(range(9)) AS x), ys AS (SELECT UNNEST(range(8)) AS y),
+      |l AS (SELECT doc_id, x, y, ${lum(s"(x*w) // 9", s"(y*h) // 8")} AS v
       |      FROM dim, xs, ys),
       |bits AS (SELECT a.doc_id, a.x, a.y,
       |           CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS bit
@@ -117,8 +117,7 @@ object PerceptualHash {
     // -> 64 threshold bits -> ONE hash-keyed window for bucket sizes.
     // The oracle recomputes hash AND buckets from the formulas, so a
     // wrong bit anywhere collapses the groups and fails the hash check.
-    Entry("q209_image_dhash_dedup",
-      dhashSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q209_image_dhash_dedup", dhashSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -132,7 +131,6 @@ object PerceptualHash {
           count(lit(1)).over(Window.partitionBy(col("dh_hi"), col("dh_lo"))))
         .select(col("doc_id"), col("dh_hi"), col("dh_lo"), col("bucket_n"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      dhashSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div"))
+    }
   )
 }

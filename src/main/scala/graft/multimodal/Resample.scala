@@ -66,13 +66,13 @@ object Resample {
 
   /** q212's oracle: original samples plus midpoints via an i→i+1
     * self-join, truncating division on both engines. */
-  private def resampleSql(series: (Int, String) => String, idiv: String): String =
+  private def resampleSql: String =
     s"""WITH au AS (SELECT doc_id, CAST(16 + doc_id % 50 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(66, "i")}),
+      |iser AS (SELECT UNNEST(range(66)) AS i),
       |sm AS (SELECT doc_id, n, i, (doc_id*37 + i*101) % 4001 - 2000 AS s
       |       FROM au, iser WHERE i < n),
-      |mid AS (SELECT a.doc_id, (a.s + b.s) $idiv 2 AS m
+      |mid AS (SELECT a.doc_id, (a.s + b.s) // 2 AS m
       |        FROM sm a JOIN sm b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
       |base AS (SELECT doc_id, SUM(s) AS ss, SUM(ABS(s)) AS sa FROM sm GROUP BY 1),
       |mids AS (SELECT doc_id, SUM(m) AS ms, SUM(ABS(m)) AS ma FROM mid GROUP BY 1)
@@ -87,8 +87,7 @@ object Resample {
     // 2x upsample (see [[upsample2x]]): real WAV decode -> exact-integer
     // interpolation; the oracle re-derives midpoints via a self-join.
     // Map-only, no shuffle before the output sort.
-    Entry("q212_pcm_upsample",
-      resampleSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q212_pcm_upsample", resampleSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -100,7 +99,6 @@ object Resample {
         .select(col("doc_id"), col("n_out"), col("sr_out"),
                 col("sum_s"), col("abs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      resampleSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div"))
+    }
   )
 }

@@ -210,18 +210,18 @@ object Tiff {
   }
 
   /** q214's oracle: the Q196 shape under TIFF dims (1+id%17 x 1+id%8). */
-  private def tiffSql(series: (Int, String) => String, idiv: String): String = {
+  private def tiffSql: String = {
     def lum(x: String, y: String) =
       s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
         s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
     s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 17 AS INT) AS w,
       |                    CAST(1 + doc_id % 8 AS INT) AS h
       |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (${series(17, "x")}), ys AS (${series(8, "y")}),
+      |xs AS (SELECT UNNEST(range(17)) AS x), ys AS (SELECT UNNEST(range(8)) AS y),
       |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
       |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (${series(8, "xo")}), yo AS (${series(6, "yo")}),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) $idiv 8", s"(yo*h) $idiv 6")}) AS BIGINT) AS rs_sum
+      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
+      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
       |       FROM img, xo, yo GROUP BY 1)
       |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
       |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
@@ -233,8 +233,7 @@ object Tiff {
     // corpus alternates II/MM files and single/two-strip layouts; hash
     // equality proves decoder == encoder⁻¹ across both orders. Map-only,
     // no shuffle before the output sort.
-    Entry("q214_tiff_decode",
-      tiffSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q214_tiff_decode", tiffSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
@@ -245,7 +244,6 @@ object Tiff {
       }.toDF()
         .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      tiffSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div"))
+    }
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Entry
+import graft.queries.{Dialect, Entry}
 
 /** REAL compressed-audio decode (SURVEY.md Q208) — G.711 µ-law in a Sun
   * AU container, the classic telephony codec (ITU-T G.711, public spec)
@@ -183,23 +183,23 @@ object Ulaw {
 
   /** q208's oracle: the µ-law expansion replicated as SQL integer
     * arithmetic over the codeword formula — u = complement, exponent,
-    * mantissa, bias; dialect-parameterized like the other codec oracles.
+    * mantissa, bias; bridged like the other codec oracles.
     * The canonicalization (encode∘decode) collapses, for each (exp,
     * mant, sign) class, a raw byte to its canonical code — but expansion
     * is CLASS-INVARIANT (decode(raw) == decode(canonical) by
     * construction), so the oracle decodes the RAW byte directly. */
-  private def ulawSql(series: (Int, String) => String, idiv: String): String = {
+  private def ulawSql: String = {
     s"""WITH au AS (SELECT doc_id, CAST(24 + doc_id % 40 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(64, "i")}),
+      |iser AS (SELECT UNNEST(range(64)) AS i),
       |cw AS (SELECT doc_id, n, (doc_id*37 + i*101) % 256 AS c
       |       FROM au, iser WHERE i < n),
       |ex AS (SELECT doc_id, n, 255 - c AS u FROM cw),
       |sm AS (SELECT doc_id, n,
       |         CASE WHEN u >= 128 THEN -((((u % 128) % 16) * 8 + 132) *
-      |                CAST(POWER(2, (u % 128) $idiv 16) AS BIGINT) - 132)
+      |                CAST(POWER(2, (u % 128) // 16) AS BIGINT) - 132)
       |              ELSE ((u % 16) * 8 + 132) *
-      |                CAST(POWER(2, u $idiv 16) AS BIGINT) - 132 END AS s
+      |                CAST(POWER(2, u // 16) AS BIGINT) - 132 END AS s
       |       FROM ex)
       |SELECT doc_id, CAST(n AS INT) AS n_samples, CAST(8000 AS INT) AS sr,
       |  CAST(SUM(s) AS BIGINT) AS sum_s, CAST(SUM(ABS(s)) AS BIGINT) AS abs_sum
@@ -208,20 +208,20 @@ object Ulaw {
 
   /** q213's oracle: the A-law expansion as SQL arithmetic — XOR 0x55
     * unmask, segment/mantissa split, chord offset, shift, sign (bit 7
-    * SET = positive); dialect-parameterized on integer division and the
-    * XOR spelling. */
-  private def alawSql(series: (Int, String) => String, idiv: String,
-                      xor: (String, String) => String): String = {
+    * SET = positive). The XOR spelling is the one structural switch
+    * (DuckDB `xor(a, b)`, Spark `a ^ b`); the twin is bridged from the
+    * Spark side. */
+  private def alawSql(xor: (String, String) => String): String = {
     s"""WITH au AS (SELECT doc_id, CAST(24 + doc_id % 40 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(64, "i")}),
+      |iser AS (SELECT UNNEST(range(64)) AS i),
       |cw AS (SELECT doc_id, n, CAST((doc_id*37 + i*101) % 256 AS INT) AS c
       |       FROM au, iser WHERE i < n),
       |ex AS (SELECT doc_id, n, ${xor("c", "85")} AS u FROM cw),
       |mg AS (SELECT doc_id, n, u,
       |         ((u % 128) % 16) * 16 + 8 +
-      |           CASE WHEN (u % 128) $idiv 16 >= 1 THEN 256 ELSE 0 END AS base,
-      |         (u % 128) $idiv 16 AS exp
+      |           CASE WHEN (u % 128) // 16 >= 1 THEN 256 ELSE 0 END AS base,
+      |         (u % 128) // 16 AS exp
       |       FROM ex),
       |sm AS (SELECT doc_id, n,
       |         (CASE WHEN u >= 128 THEN 1 ELSE -1 END) *
@@ -239,8 +239,7 @@ object Ulaw {
     // replicates the expansion in SQL from the codeword formula, so hash
     // equality proves container + expansion. Map-only, no shuffle before
     // the output sort.
-    Entry("q208_ulaw_decode",
-      ulawSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q208_ulaw_decode", ulawSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -252,8 +251,7 @@ object Ulaw {
         .select(col("doc_id"), col("n_samples"), col("sr"),
                 col("sum_s"), col("abs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      ulawSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     // The A-law twin (see [[alawDecode]]): same AU container with the
     // header's encoding field = 27 — the decoder dispatches the
@@ -262,8 +260,7 @@ object Ulaw {
     // canonical, so the raw congruence byte is the codeword and the
     // oracle decodes it directly. Map-only, no shuffle before the sort.
     Entry("q213_alaw_decode",
-      alawSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//",
-        (a, b) => s"xor($a, $b)")) { (s, d) =>
+      alawSql((a, b) => s"xor($a, $b)")) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -275,8 +272,6 @@ object Ulaw {
         .select(col("doc_id"), col("n_samples"), col("sr"),
                 col("sum_s"), col("abs_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      alawSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div",
-        (a, b) => s"CAST($a ^ $b AS INT)"))
+    }.sqlTwin(Dialect.duckToSpark(alawSql((a, b) => s"CAST($a ^ $b AS INT)")))
   )
 }

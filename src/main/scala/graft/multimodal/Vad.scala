@@ -68,10 +68,10 @@ object Vad {
 
   /** q211's oracle: gaps-and-islands over the generative samples — the
     * independently-shaped derivation of the same segmentation spec. */
-  private def vadSql(series: (Int, String) => String): String =
+  private def vadSql: String =
     s"""WITH au AS (SELECT doc_id, CAST(16 + doc_id % 50 AS INT) AS n
       |            FROM documents WHERE doc_id % 3 = 2),
-      |iser AS (${series(66, "i")}),
+      |iser AS (SELECT UNNEST(range(66)) AS i),
       |sm AS (SELECT doc_id, n, i, (doc_id*37 + i*101) % 4001 - 2000 AS s
       |       FROM au, iser WHERE i < n),
       |act AS (SELECT doc_id, n, i FROM sm WHERE ABS(s) >= ${threshold}),
@@ -96,8 +96,7 @@ object Vad {
     // run-length scan; the oracle re-derives the segmentation via SQL
     // gaps-and-islands, so a boundary bug in either shape mismatches.
     // Map-only, no shuffle before the output sort.
-    Entry("q211_audio_vad",
-      vadSql((n, c) => s"SELECT UNNEST(range($n)) AS $c")) { (s, d) =>
+    Entry("q211_audio_vad", vadSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -109,7 +108,6 @@ object Vad {
         .select(col("doc_id"), col("n_samples"), col("n_active"),
                 col("n_segments"), col("max_run"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      vadSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c"))
+    }
   )
 }

@@ -283,10 +283,10 @@ object Video {
     * real duplicate-clip groups of up to four. */
   def clipKey(id: Long): Long = id - id % 12 + 2
 
-  /** q202's oracle, dialect-parameterized like the Q196-Q201 oracles; the
+  /** q202's oracle, bridged like the Q196-Q201 oracles; the
     * channel terms mirror [[Avi.r]]/[[Avi.g]]/[[Avi.b]] verbatim and the
     * sampled-frame rule mirrors [[Avi.sampledFrames]]. */
-  private def aviSql(series: (Int, String) => String, idiv: String): String = {
+  private def aviSql: String = {
     def lum(f: String, x: String, y: String) =
       s"(doc_id*31 + ($f)*29 + ($x)*7 + ($y)*13) % 256 + " +
         s"(doc_id*17 + ($f)*23 + ($x)*11 + ($y)*5) % 256 + " +
@@ -296,9 +296,9 @@ object Video {
       |                    CAST(2 + doc_id % 9 AS INT) AS nf,
       |                    CAST(LEAST(4, 2 + doc_id % 9) AS INT) AS k
       |             FROM documents WHERE doc_id % 3 = 2),
-      |js AS (${series(4, "j")}), xs AS (${series(11, "x")}), ys AS (${series(7, "y")}),
+      |js AS (SELECT UNNEST(range(4)) AS j), xs AS (SELECT UNNEST(range(11)) AS x), ys AS (SELECT UNNEST(range(7)) AS y),
       |sl AS (SELECT doc_id,
-      |         CAST(SUM(${lum(s"(j*nf) $idiv k", "x", "y")}) AS BIGINT) AS slum_sum
+      |         CAST(SUM(${lum(s"(j*nf) // k", "x", "y")}) AS BIGINT) AS slum_sum
       |       FROM vid, js, xs, ys WHERE j < k AND x < w AND y < h GROUP BY 1)
       |SELECT v.doc_id, v.w, v.h, v.nf AS n_frames, v.k AS n_sampled, s.slum_sum
       |FROM vid v JOIN sl s ON s.doc_id = v.doc_id
@@ -314,8 +314,7 @@ object Video {
     // including the sampling rule. Map-only, no shuffle before the
     // output sort; at 100 TB the bytes arrive in the binary column and
     // everything else is unchanged.
-    Entry("q202_avi_frame_sample",
-      aviSql((n, c) => s"SELECT UNNEST(range($n)) AS $c", "//")) { (s, d) =>
+    Entry("q202_avi_frame_sample", aviSql) { (s, d) =>
       import s.implicits._
       val payloads = T(s, d, "documents")
         .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
@@ -327,8 +326,7 @@ object Video {
         .select(col("doc_id"), col("w"), col("h"), col("n_frames"),
                 col("n_sampled"), col("slum_sum"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      aviSql((n, c) => s"SELECT explode(sequence(0, ${n - 1})) AS $c", "div")),
+    },
 
     // Video perceptual dedup (SURVEY Q291; VERDICT r19 #4) — the q209 ∘
     // q202 composition a video corpus actually runs: re-encodes and

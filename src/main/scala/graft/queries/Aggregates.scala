@@ -494,13 +494,7 @@ object Aggregates {
         .agg(count(lit(1)).as("n"),
              round(gm(col("value")), 6).as("geo_mean"))
         .orderBy(col("event_type"))
-    }.sqlTwin(
-      // the SQL twin states the identical math with builtins (the
-      // Aggregator is the DataFrame-side surface under test; avg(ln) and
-      // the buffer's exp(sum/count) follow the same double path)
-      """SELECT event_type, COUNT(*) AS n,
-        |  ROUND(EXP(AVG(LN(value))), 6) AS geo_mean
-        |FROM events WHERE value > 0 GROUP BY 1 ORDER BY 1""".stripMargin),
+    },
 
     // ES date_range agg: explicit half-open date buckets with open ends
     // (*-1996, 1996-1999, 1999-*). A CASE over the scan — one hash agg,

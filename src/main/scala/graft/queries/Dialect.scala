@@ -1,25 +1,41 @@
 package graft.queries
 
-/** DuckDB→Spark SQL bridge for the SQL entry path (SURVEY.md §3.4 C).
+import scala.util.matching.Regex
+
+/** DuckDB→Spark SQL bridge for the SQL entry path (SURVEY.md §3.4 C): the
+  * one place that knows how the two dialects differ.
   *
   * Each declared query carries ONE oracle SQL (DuckDB executes it for the
   * driver's hash compare). Most of that SQL is dialect-shared; where it is
   * not, the differences are almost all pure FUNCTION RENAMES with identical
-  * semantics and argument order. This bridge applies those renames as
-  * ordered LITERAL substitutions so the `spark.sql` twin is derived from
-  * the same source of truth instead of hand-maintaining ~40 near-identical
-  * statements. Entries whose twin differs STRUCTURALLY (1-based indexing,
-  * aggregate ORDER BY, correlated LIMIT 1, grouped generators, ...) set an
-  * explicit `Entry.sqlTwin` override instead — the bridge never runs on
-  * those.
+  * semantics and argument order. This bridge applies those rewrites in
+  * order so the `spark.sql` twin is derived from the same source of truth
+  * instead of hand-maintaining near-identical statements: an entry (or a
+  * SQL template) writes its oracle once, in DuckDB SQL. Entries whose twin
+  * differs STRUCTURALLY (1-based indexing, aggregate ORDER BY, correlated
+  * LIMIT 1, grouped generators, ...) set an explicit `Entry.sqlTwin`
+  * override instead — the bridge never runs on those, and OracleLintSpec
+  * rejects an override the bridge would have produced.
+  *
+  * Rule admission: a rule is added only if the two sides have IDENTICAL
+  * semantics on every input, not just on the fixtures. A rewrite whose
+  * edge cases differ stays a structural switch in its template: e.g.
+  * DuckDB's `list_distinct` drops NULLs where Spark's `array_distinct`
+  * keeps one, so QualityModel keeps its own switch.
+  *
+  * The one pattern rule, [[UnnestRange]]: `unnest(range(N))` →
+  * `explode(sequence(0, N-1))` and `unnest(range(A, B))` →
+  * `explode(sequence(A, B-1))`, either case of `unnest`, integer-literal
+  * arguments only (the bound is computed, so the twin text is plain
+  * literals). It does not fire when `N = 0` or `B <= A`: DuckDB's range
+  * is empty there while Spark's `sequence` runs descending. Non-literal
+  * bounds (`range(size(ws) - 15)`) are left alone.
   *
   * Every derived twin is executed and compared row-for-row against the
-  * DataFrame entry by SqlParitySpec. Known limitation: substitutions are
-  * position-blind, so a rename token appearing inside a STRING LITERAL of
-  * a future oracle would be rewritten too; the parity run catches any
-  * rewrite that changes results on the fixtures, but an author adding an
-  * oracle containing e.g. a literal `'strpos'` should use an explicit
-  * `Entry.sqlTwin` override instead of this bridge.
+  * DataFrame entry by SqlParitySpec. Known limitation: rewrites are
+  * position-blind, so a rule token inside a STRING LITERAL would be
+  * rewritten too; [[duckToSpark]] rejects such an oracle (the entry then
+  * needs an explicit `Entry.sqlTwin`).
   */
 object Dialect {
 
@@ -29,13 +45,50 @@ object Dialect {
   val tokensSparkSql: String =
     "filter(split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ')), ' '), w -> w <> '')"
 
-  private[queries] lazy val rules: Seq[(String, String)] = Seq(
+  /** One rewrite of the bridge. `hits(s)` lists the spans of `s` the
+    * rewrite would change — the literal-clash guard rejects an oracle on
+    * any hit inside a string literal. */
+  private[queries] sealed trait Rule {
+    def apply(sql: String): String
+    def hits(s: String): List[String]
+  }
+
+  /** A literal substitution. A quoted `from` is a composite fragment that
+    * rewrites literal content by design, so it never clashes. */
+  private[queries] final case class Rename(from: String, to: String) extends Rule {
+    def apply(sql: String): String = sql.replace(from, to)
+    def hits(s: String): List[String] =
+      if (!from.contains("'") && s.contains(from)) List(from) else Nil
+  }
+
+  /** `unnest(range(N))` / `unnest(range(A, B))` with integer-literal
+    * bounds → `explode(sequence(lo, hi))`, only for a non-empty range
+    * (see the object doc). */
+  private[queries] case object UnnestRange extends Rule {
+    private val pattern = """(?:unnest|UNNEST)\(range\((\d+)(?:, *(\d+))?\)\)""".r
+
+    private def rewrite(m: Regex.Match): Option[String] = {
+      val (lo, end) =
+        if (m.group(2) == null) (BigInt(0), BigInt(m.group(1)))
+        else (BigInt(m.group(1)), BigInt(m.group(2)))
+      if (end > lo) Some(s"explode(sequence($lo, ${end - 1}))") else None
+    }
+
+    def apply(sql: String): String =
+      pattern.replaceSomeIn(sql, m => rewrite(m).map(Regex.quoteReplacement))
+    def hits(s: String): List[String] =
+      pattern.findAllMatchIn(s).filter(rewrite(_).nonEmpty).map(_.matched).toList
+  }
+
+  private def renames(pairs: (String, String)*): Seq[Rule] =
+    pairs.map { case (from, to) => Rename(from, to) }
+
+  private[queries] lazy val rules: Seq[Rule] = renames(
     // composite fragments first (they contain tokens the generic rules
     // would otherwise corrupt)
     graft.text.Text.tokenHashSql -> "token_hash(w)",   // the registered kernel
     graft.text.Text.tokensSql -> tokensSparkSql,
     "unnest(ws) AS w, unnest(range(len(ws))) AS pos" -> "posexplode(ws) AS (pos, w)",
-    "(SELECT unnest(range(16)) AS i) g" -> "(SELECT explode(sequence(0, 15)) AS i) g",
     // div/mod bit extraction is equivalent to >>/& ONLY for non-negative
     // h — which token_hash guarantees (fold mod 1e9+7, always in
     // [0, 1e9+7)); this rule must not be reused for signed hash columns
@@ -46,7 +99,12 @@ object Dialect {
     // oracle can never be eaten
     ", ' ', 'g')" -> ", ' ')",
     ", '', 'g')" -> ", '')",
-    ", '_', 'g')" -> ", '_')",
+    ", '_', 'g')" -> ", '_')"
+  ) ++ Seq(
+    // before the generic `unnest(` rename, which would leave
+    // `explode(range(..))` behind
+    UnnestRange
+  ) ++ renames(
     // generic function renames (identical semantics + argument order)
     "list_filter" -> "filter",
     "string_split" -> "split",
@@ -148,24 +206,23 @@ object Dialect {
   /** Derive the Spark twin of an oracle statement. Identity for SQL that is
     * already dialect-shared.
     *
-    * Guard: substitutions are position-blind, so a rename token INSIDE a
-    * quoted string literal would be corrupted — and a corrupted literal
-    * used in a filter that matches nothing at fixture scale would pass the
-    * parity run silently. Any oracle whose literals contain a rule token is
-    * rejected here (SqlParitySpec derives every twin, so the reject fires
-    * at test time): that entry must declare an explicit `Entry.sqlTwin`.
-    * Only quote-free rule tokens can sit inside a literal; quoted composite
-    * rules are by construction not literal content. */
+    * Guard: rewrites are position-blind, so a rule token INSIDE a quoted
+    * string literal would be corrupted — and a corrupted literal used in a
+    * filter that matches nothing at fixture scale would pass the parity
+    * run silently. Any oracle with a [[Rule.hits]] inside a literal is
+    * rejected here (`Entry.sparkSql` derives every twin and SqlParitySpec
+    * fails each reject by name): that entry must declare an explicit
+    * `Entry.sqlTwin`. Only quote-free rule tokens can sit inside a
+    * literal; quoted composite rules are by construction not literal
+    * content. */
   def duckToSpark(sql: String): String = {
     val (lits, unterminated) = scanLiterals(sql)
     require(!unterminated,
       "duckToSpark: statement ends inside a string literal — malformed oracle SQL")
-    val clashes = rules.collect {
-      case (from, _) if !from.contains("'") && lits.exists(_.contains(from)) => from
-    }
+    val clashes = rules.flatMap(r => lits.flatMap(r.hits)).distinct
     require(clashes.isEmpty,
       s"duckToSpark: rule token(s) ${clashes.mkString(", ")} inside a string literal — " +
         "declare an explicit Entry.sqlTwin for this oracle instead of the bridge")
-    rules.foldLeft(sql) { case (acc, (from, to)) => acc.replace(from, to) }
+    rules.foldLeft(sql)((acc, r) => r(acc))
   }
 }

@@ -52,29 +52,30 @@ object Geo {
 
   /** Geohash cell id at precision `p` (5 bits/char, even bit positions from
     * the MSB are longitude — the standard encoding) as a single integer
-    * expression over the scaled-integer coordinates; `idiv` is the
-    * engine's integer-division operator (Spark `div`, DuckDB `//`).
-    * Bit extraction is div/mod arithmetic, not engine bit operators, so
-    * the fragment parses identically in both dialects. */
-  def geohashBitsSql(idiv: String, p: Int): String = {
+    * expression over the scaled-integer coordinates, in DuckDB SQL (a
+    * Spark caller bridges it with [[Dialect.duckToSpark]]). Bit
+    * extraction is div/mod arithmetic, not engine bit operators, so the
+    * bridge's `//` → `div` is the only dialect difference. */
+  def geohashBitsSql(p: Int): String = {
     val lonBits = (5 * p + 1) / 2
     val latBits = 5 * p / 2
     val latK = "(CAST(c_custkey AS BIGINT) * 7919 % 18000)"
     val lonM = "(CAST(c_custkey AS BIGINT) * 104729 % 36000)"
-    val ilat = s"($latK * ${1L << latBits} $idiv 18000)"
-    val ilon = s"($lonM * ${1L << lonBits} $idiv 36000)"
+    val ilat = s"($latK * ${1L << latBits} // 18000)"
+    val ilon = s"($lonM * ${1L << lonBits} // 36000)"
     (0 until 5 * p).map { j =>
       val (src, bit) =
         if (j % 2 == 0) (ilon, lonBits - 1 - j / 2) else (ilat, latBits - 1 - (j - 1) / 2)
-      s"(($src $idiv ${1L << bit}) % 2) * ${1L << (5 * p - 1 - j)}"
+      s"(($src // ${1L << bit}) % 2) * ${1L << (5 * p - 1 - j)}"
     }.mkString("(", " + ", ")")
   }
 
-  /** Base32 rendering of a precomputed `bits` column at precision `p`. */
-  def geohashCharsSql(idiv: String, p: Int): String =
+  /** Base32 rendering of a precomputed `bits` column at precision `p`,
+    * in DuckDB SQL like [[geohashBitsSql]]. */
+  def geohashCharsSql(p: Int): String =
     (0 until p).map { c =>
       s"substr('0123456789bcdefghjkmnpqrstuvwxyz', " +
-        s"CAST((bits $idiv ${1L << (5 * (p - 1 - c))}) % 32 AS INT) + 1, 1)"
+        s"CAST((bits // ${1L << (5 * (p - 1 - c))}) % 32 AS INT) + 1, 1)"
     }.mkString("concat(", ", ", ")")
 
   private val ghPrecision = 3
@@ -440,12 +441,12 @@ object Geo {
 
     // ES geohash_grid: bucket count per geohash cell (precision 3).
     Entry("q89_geohash_grid",
-      s"""WITH b AS (SELECT ${geohashBitsSql("//", ghPrecision)} AS bits FROM customer),
-        |g AS (SELECT ${geohashCharsSql("//", ghPrecision)} AS gh FROM b)
+      s"""WITH b AS (SELECT ${geohashBitsSql(ghPrecision)} AS bits FROM customer),
+        |g AS (SELECT ${geohashCharsSql(ghPrecision)} AS gh FROM b)
         |SELECT gh, COUNT(*) AS n FROM g GROUP BY 1 ORDER BY gh""".stripMargin) { (s, d) =>
       T(s, d, "customer")
-        .select(expr(geohashBitsSql("div", ghPrecision)).as("bits"))
-        .select(expr(geohashCharsSql("div", ghPrecision)).as("gh"))
+        .select(expr(Dialect.duckToSpark(geohashBitsSql(ghPrecision))).as("bits"))
+        .select(expr(Dialect.duckToSpark(geohashCharsSql(ghPrecision))).as("gh"))
         .groupBy(col("gh")).agg(count(lit(1)).as("n"))
         .orderBy(col("gh"))
     },

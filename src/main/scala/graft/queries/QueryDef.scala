@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One declared query: the Spark implementation plus (when SQL-expressible)
@@ -10,20 +12,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SQL entry path (SURVEY.md §3.4 entry C): every oracle-backed query must
   * ALSO run via `spark.sql` and match the DataFrame result row-for-row —
   * SqlParitySpec enforces it across the whole registry. [[sparkSql]] is
-  * that twin: the oracle SQL verbatim when it is ANSI enough for both
-  * engines, or the [[sqlTwin]] override when the oracle leans on DuckDB
-  * dialect (list_*, unnest, arg_max, epoch_us, ...).
+  * that twin: the oracle bridged by [[Dialect.duckToSpark]], or the
+  * [[sqlTwin]] override where the twin differs structurally.
   */
 case class Entry(name: String,
                  fn: (SparkSession, String) => DataFrame,
                  oracle: Option[String],
                  sparkSqlOverride: Option[String] = None) {
 
-  /** The `spark.sql` twin: explicit override, else the (dialect-shared)
-    * oracle SQL. None only for bench-only sketch entries. */
-  def sparkSql: Option[String] = sparkSqlOverride.orElse(oracle)
+  /** The bridge's derivation, for an oracle-backed entry without an
+    * override. A reject stays with this entry: [[sparkSql]] is then None
+    * and [[twinError]] says why. */
+  private lazy val bridged: Option[Try[String]] =
+    if (sparkSqlOverride.isEmpty) oracle.map(o => Try(Dialect.duckToSpark(o))) else None
 
-  /** Attach a Spark-dialect twin where the oracle SQL is DuckDB-specific. */
+  /** The `spark.sql` twin: explicit override, else the bridged oracle.
+    * None for bench-only sketch entries and for a bridge reject. */
+  def sparkSql: Option[String] = sparkSqlOverride.orElse(bridged.flatMap(_.toOption))
+
+  /** Whether [[sparkSql]] was derived by the bridge. */
+  def bridgedTwin: Boolean = bridged.exists(_.isSuccess)
+
+  /** The bridge's reject message, if it rejected this entry's oracle. */
+  def twinError: Option[String] = bridged.flatMap(_.failed.toOption).map(_.getMessage)
+
+  /** Attach a Spark-dialect twin where the oracle differs structurally
+    * from anything the bridge derives. */
   def sqlTwin(sql: String): Entry = copy(sparkSqlOverride = Some(sql))
 }
 

@@ -286,25 +286,7 @@ object Search {
         .filter(pred)
         .select(col("p_partkey"), round(score, 4).as("score"))
         .orderBy(col("score").desc, col("p_partkey"))
-    }.sqlTwin(
-      """WITH f AS (SELECT p_partkey, p_size,
-        |  ' ' || trim(regexp_replace(lower(p_name), '[^a-z0-9]+', ' ')) || ' ' AS name_s,
-        |  ' ' || trim(regexp_replace(lower(p_type), '[^a-z0-9]+', ' ')) || ' ' AS type_s,
-        |  ' ' || trim(regexp_replace(lower(p_brand), '[^a-z0-9]+', ' ')) || ' ' AS brand_s
-        |FROM part)
-        |SELECT p_partkey, ROUND(CAST(
-        |    1.0
-        |  + CASE WHEN type_s LIKE '% economy %' THEN 2.0 ELSE 0.0 END
-        |  + CASE WHEN type_s LIKE '% promo %' THEN 1.0 ELSE 0.0 END
-        |  + CASE WHEN type_s LIKE '% medium %' THEN 0.5 ELSE 0.0 END
-        |  + CASE WHEN p_size BETWEEN 10 AND 40 THEN 1.0 ELSE 0.0 END
-        |  + CASE WHEN name_s LIKE '% re%' THEN 1.0 ELSE 0.0 END AS DOUBLE), 4) AS score
-        |FROM f
-        |WHERE name_s LIKE '% bolt %'
-        |  AND (type_s LIKE '% economy %' OR type_s LIKE '% promo %' OR type_s LIKE '% medium %')
-        |  AND NOT (brand_s LIKE '% brand 17 %')
-        |  AND (p_size BETWEEN 10 AND 40 OR name_s LIKE '% re%')
-        |ORDER BY score DESC, p_partkey""".stripMargin),
+    },
 
     // ES query_string request OPTIONS (SURVEY Q283): the two parameters a
     // 6.3 user sets alongside the query text — `default_operator: AND`
@@ -348,24 +330,7 @@ object Search {
         .filter(pred)
         .select(col("p_partkey"), round(score, 4).as("score"))
         .orderBy(col("score").desc, col("p_partkey"))
-    }.sqlTwin(
-      """WITH f AS (SELECT p_partkey, p_size,
-        |  ' ' || trim(regexp_replace(lower(p_name), '[^a-z0-9]+', ' ')) || ' ' AS name_s,
-        |  ' ' || trim(regexp_replace(lower(p_type), '[^a-z0-9]+', ' ')) || ' ' AS type_s,
-        |  ' ' || trim(regexp_replace(lower(p_brand), '[^a-z0-9]+', ' ')) || ' ' AS brand_s
-        |FROM part)
-        |SELECT p_partkey, ROUND(CAST(
-        |    CASE WHEN name_s LIKE '% small %' THEN 2.0 ELSE 0.0 END
-        |  + CASE WHEN type_s LIKE '% small %' THEN 1.0 ELSE 0.0 END
-        |  + CASE WHEN name_s LIKE '% economy %' THEN 2.0 ELSE 0.0 END
-        |  + CASE WHEN type_s LIKE '% economy %' THEN 1.0 ELSE 0.0 END
-        |  + CASE WHEN p_size > 5 AND p_size <= 45 THEN 1.0 ELSE 0.0 END AS DOUBLE), 4) AS score
-        |FROM f
-        |WHERE (name_s LIKE '% small %' OR type_s LIKE '% small %')
-        |  AND (name_s LIKE '% economy %' OR type_s LIKE '% economy %')
-        |  AND NOT (brand_s LIKE '% brand 3 %')
-        |  AND (p_size > 5 AND p_size <= 45)
-        |ORDER BY score DESC, p_partkey""".stripMargin),
+    },
 
     // ES `_count` API (SURVEY Q285; VERDICT r18 #5): the most-hit
     // missing endpoint — COUNT under a full DSL predicate, here q280's
@@ -1212,7 +1177,7 @@ object Search {
         .select(col("a.doc_id").as("doc_id")).distinct()
         .orderBy(col("doc_id"))
     }.sqlTwin(
-      // structural gap: pre-DISTINCT alias in ORDER BY (q97's twin shape)
+      // structural gap: pre-DISTINCT alias in ORDER BY (q74's twin shape)
       s"""WITH ${Dialect.duckToSpark(graft.text.Text.wordsCtesSql)},
         |m AS (SELECT DISTINCT a.doc_id FROM words a
         |      JOIN words b ON b.doc_id = a.doc_id

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.core.{Drain, Staging, Tables}
 import graft.model.ChangeLog
-import graft.queries.Entry
+import graft.queries.{Dialect, Entry}
 import graft.sync.DocSync
 
 /** Structured Streaming surface — SURVEY.md Q51-Q59.
@@ -845,7 +845,7 @@ object Streams {
           coalesce(sum(when(col("reached") >= 8 && col("keeper") === 1L,
             col("n_tok"))), lit(0L)).cast("bigint").as("n_tok_shipped"))
         .orderBy(col("lang"))
-    }.sqlTwin(graft.text.Funnel.shippedSql(duck = false)),
+    }.sqlTwin(Dialect.duckToSpark(graft.text.Funnel.shippedSql(duck = false))),
 
     // Q59: update output mode — per-batch emissions; the final value per key
     // is the batch-equivalent count (counts are monotone across batches).
@@ -912,11 +912,7 @@ object Streams {
         .select(col("doc_id"), col("shard_id"), col("txt_len"), col("cls"),
                 md5(col("txt_bytes")).as("txt_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, doc_id div 8 AS shard_id,
-        |  CAST(octet_length(CAST(text AS BINARY)) AS BIGINT) AS txt_len,
-        |  CAST(doc_id % 7 AS INT) AS cls, md5(text) AS txt_md5
-        |FROM documents ORDER BY doc_id""".stripMargin),
+    },
 
     // ES X-Pack rollup job (introduced in 6.3 — the reference's exact ES
     // line): a continuous background job pre-aggregates a time-series

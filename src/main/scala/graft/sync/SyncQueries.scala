@@ -70,12 +70,6 @@ object SyncQueries {
       |    arg_max(props, seq) FILTER (WHERE props IS NOT NULL) AS props
       |  FROM live$sfx GROUP BY row_key)""".stripMargin
 
-  /** Spark-dialect flavor of [[foldCtes]] (STRING casts, max_by). */
-  private def foldCtesSpark(sfx: String, where: String): String =
-    foldCtes(sfx, where)
-      .replace("AS VARCHAR)", "AS STRING)")
-      .replace("arg_max(", "max_by(")
-
   val entries: Seq[Entry] = Seq(
 
     Entry("q03_merge_upsert", DocSync.oracleSqlDocTable) { (s, d) =>
@@ -141,28 +135,7 @@ object SyncQueries {
         |FROM live GROUP BY row_key ORDER BY row_key""".stripMargin) { (s, d) =>
       val dir = stagedMergeTable(s, d)
       DocSync.flattenDocs(DocSync.snapshot(s, dir, asOf = 0))
-    }.sqlTwin(
-      """WITH puts AS (
-        |  SELECT CAST(event_id % 199 AS STRING) AS row_key, event_id AS seq,
-        |         event_type,
-        |         CAST(CAST(value AS DECIMAL(18,6)) AS STRING) AS value_s,
-        |         CASE WHEN event_id % 3 <> 0 THEN CAST(user_id AS STRING) END AS user_id_s,
-        |         props
-        |  FROM events WHERE event_id < (SELECT MAX(event_id) div 2 FROM events)),
-        |dels AS (
-        |  SELECT CAST((event_id + 25) % 199 AS STRING) AS row_key, event_id AS seq
-        |  FROM events
-        |  WHERE event_id % 50 = 0 AND event_id < (SELECT MAX(event_id) div 2 FROM events)),
-        |last_del AS (SELECT row_key, MAX(seq) AS del_seq FROM dels GROUP BY 1),
-        |live AS (
-        |  SELECT p.* FROM puts p LEFT JOIN last_del d USING (row_key)
-        |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq)
-        |SELECT row_key,
-        |  max_by(event_type, seq) AS event_type,
-        |  max_by(value_s, seq) AS value,
-        |  max_by(user_id_s, seq) FILTER (WHERE user_id_s IS NOT NULL) AS user_id,
-        |  max_by(props, seq) FILTER (WHERE props IS NOT NULL) AS props
-        |FROM live GROUP BY row_key ORDER BY row_key""".stripMargin),
+    },
 
     // Snapshot diff (SURVEY.md Q227) — the q220 follow-on every
     // incremental consumer needs: WHAT changed between two committed
@@ -204,21 +177,7 @@ object SyncQueries {
             .otherwise("unchanged").as("change"))
         .groupBy(col("change")).agg(count(lit(1)).as("n_keys"))
         .orderBy(col("change"))
-    }.sqlTwin(
-      s"""WITH ${foldCtesSpark("0", "event_id < (SELECT MAX(event_id) div 2 FROM events)")},
-        |${foldCtesSpark("1", "TRUE")},
-        |cat AS (
-        |  SELECT CASE
-        |    WHEN a.row_key IS NULL THEN 'added'
-        |    WHEN b.row_key IS NULL THEN 'removed'
-        |    WHEN (a.event_type IS DISTINCT FROM b.event_type)
-        |      OR (a.value IS DISTINCT FROM b.value)
-        |      OR (a.user_id IS DISTINCT FROM b.user_id)
-        |      OR (a.props IS DISTINCT FROM b.props) THEN 'changed'
-        |    ELSE 'unchanged' END AS change
-        |  FROM docs0 a FULL JOIN docs1 b ON a.row_key = b.row_key)
-        |SELECT change, COUNT(*) AS n_keys FROM cat
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    },
 
     Entry("q49_map_concat",
       // map_concat LWW + map_values/map_keys integrity: per doc, number of

@@ -235,26 +235,21 @@ object Funnel {
       |FROM stages LEFT JOIN counts ON reached >= stage_idx
       |GROUP BY 1, 2 ORDER BY stage_idx""".stripMargin
 
-  /** q276's oracle/twin: the same base + perdoc derivation rolled up per
+  /** q276's oracle: the same base + perdoc derivation rolled up per
     * HOST with each doc attributed to the gate that dropped it (reached
     * = k ⇔ survived stage k and failed stage k+1) — the report a crawl
-    * operator reads to see WHERE each host's documents die. `duck`
-    * selects the dialect of the spliced base fragment. */
-  private def yieldByHostSql(duck: Boolean): String = {
-    val idiv = if (duck) "//" else "div"
-    val ws = if (duck) Text.tokensSql else Dialect.tokensSparkSql
-    val len = if (duck) "len" else "size"
-    val fil = if (duck) "list_filter" else "filter"
-    s"""WITH t AS (SELECT doc_id, text, $ws AS ws FROM documents),
+    * operator reads to see WHERE each host's documents die. */
+  private def yieldByHostSql: String =
+    s"""WITH t AS (SELECT doc_id, text, ${Text.tokensSql} AS ws FROM documents),
       |base AS (
       |  SELECT doc_id, text,
-      |    NOT ((((doc_id $idiv 4) % 5) % 2 = 1) AND ((doc_id $idiv 4) % 10 IN (1, 3))) AS allowed,
-      |    doc_id $idiv 4 AS grp,
-      |    $len(ws) AS n_tok,
-      |    $len($fil(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) AS n_stop
+      |    NOT ((((doc_id // 4) % 5) % 2 = 1) AND ((doc_id // 4) % 10 IN (1, 3))) AS allowed,
+      |    doc_id // 4 AS grp,
+      |    len(ws) AS n_tok,
+      |    len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) AS n_stop
       |  FROM t),
       |$perdocCteSql
-      |SELECT CAST((doc_id $idiv 4) % 5 AS BIGINT) AS host,
+      |SELECT CAST((doc_id // 4) % 5 AS BIGINT) AS host,
       |  CAST(COUNT(*) AS BIGINT) AS n_fetched,
       |  CAST(SUM(CASE WHEN reached = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_robots_blocked,
       |  CAST(SUM(CASE WHEN reached = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_url_dup,
@@ -262,13 +257,13 @@ object Funnel {
       |  CAST(SUM(CASE WHEN reached = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_text_dup,
       |  CAST(SUM(CASE WHEN reached = 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
       |FROM perdoc GROUP BY 1 ORDER BY host""".stripMargin
-  }
 
-  /** q252's oracle/twin body: the v1 gate ladder (byte-compatible
+  /** q252's oracle body: the v1 gate ladder (byte-compatible
     * arithmetic) + the q234 model chain + the q244 per-doc LM mean + the
     * q264 perceptron chain, all replayed in SQL — the hash pins the
     * eight-level NESTING across four subsystems, not just each gate
-    * alone. `duck` selects the dialect for every spliced fragment. */
+    * alone. `duck` selects the side of the spliced fragments' structural
+    * switches (QualityModel.chain, Perceptron.chainSql). */
   private def v2Sql(duck: Boolean): String =
     s"""WITH ${v2CtesSql(duck)},
        |counts AS (SELECT reached, COUNT(*) AS c FROM perdoc GROUP BY 1),
@@ -291,24 +286,18 @@ object Funnel {
     * mount the keeper tier on the SAME eight-level derivation q252
     * hashes against; `base` (n_tok) and the model CTEs stay visible to
     * downstream fragments. */
-  private[graft] def v2CtesSql(duck: Boolean): String = {
-    val idiv = if (duck) "//" else "div"
-    val ws = if (duck) Text.tokensSql else Dialect.tokensSparkSql
-    val len = if (duck) "len" else "size"
-    val fil = if (duck) "list_filter" else "filter"
-    val qm = QualityModel.chain(idiv, duck)
-    val knDuck = s"${Text.knChainSql},\n${Text.knDocMeanCteSql}"
-    val kn = if (duck) knDuck else Dialect.duckToSpark(knDuck)
-    s"""ft AS (SELECT doc_id, text, $ws AS ws FROM documents),
+  private[graft] def v2CtesSql(duck: Boolean): String =
+    s"""ft AS (SELECT doc_id, text, ${Text.tokensSql} AS ws FROM documents),
        |base AS (
        |  SELECT doc_id, text,
-       |    NOT ((((doc_id $idiv 4) % 5) % 2 = 1) AND ((doc_id $idiv 4) % 10 IN (1, 3))) AS allowed,
-       |    doc_id $idiv 4 AS grp,
-       |    $len(ws) AS n_tok,
-       |    $len($fil(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) AS n_stop
+       |    NOT ((((doc_id // 4) % 5) % 2 = 1) AND ((doc_id // 4) % 10 IN (1, 3))) AS allowed,
+       |    doc_id // 4 AS grp,
+       |    len(ws) AS n_tok,
+       |    len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) AS n_stop
        |  FROM ft),
-       |$qm,
-       |$kn,
+       |${QualityModel.chain(duck)},
+       |${Text.knChainSql},
+       |${Text.knDocMeanCteSql},
        |${Perceptron.chainSql(duck)},
        |${Perceptron.marginCteSql},
        |lv1 AS (
@@ -342,15 +331,15 @@ object Funnel {
        |  LEFT JOIN sc q ON q.doc_id = l.doc_id
        |  LEFT JOIN pd p ON p.doc_id = l.doc_id
        |  LEFT JOIN psm pm ON pm.doc_id = l.doc_id)""".stripMargin
-  }
 
   /** q252's oracle/twin, exposed for the ingest-time gate (q274 in
     * Streams) — ONE copy: the hash check pins "gate at ingest" ==
     * "funnel at rest" the same way q261 rides q254's text. */
   private[graft] def v2OracleSql: String = v2Sql(duck = true)
-  private[graft] def v2TwinSql: String = v2Sql(duck = false)
+  private[graft] def v2TwinSql: String = Dialect.duckToSpark(v2Sql(duck = false))
 
-  /** q279's oracle/twin: the SHIPPED corpus — the eight-level funnel
+  /** q279's oracle (`duck`), or the Spark side of its structural
+    * switches for the bridge: the SHIPPED corpus — the eight-level funnel
     * (v2CtesSql, the exact text q252 hashes against) COMPOSED with the
     * near-dup quality keeper (Pipeline's pair/closure/keeper fragments,
     * the exact text q268 hashes against), rolled up per language with
@@ -362,16 +351,13 @@ object Funnel {
     * five subsystems (robots/URL/rule ladder, NB, KN, perceptron,
     * keeper) in a single number per language. */
   private[graft] def shippedSql(duck: Boolean): String = {
-    val shingles =
-      if (duck) Text.shingle3CteSql(distinct = true)
-      else Dialect.duckToSpark(Text.shingle3CteSql(distinct = true))
     val closure =
       if (duck) Pipeline.closureCtesSql
       else s"""${Pipeline.clusterLevelCtes(6)},
               |cl AS (SELECT id AS doc_id, CAST(lbl AS BIGINT) AS cluster FROM l6)""".stripMargin
     val recursive = if (duck) "RECURSIVE " else ""
     s"""WITH $recursive${v2CtesSql(duck)},
-       |$shingles,
+       |${Text.shingle3CteSql(distinct = true)},
        |${Pipeline.pairTailCtes},
        |$closure,
        |${Pipeline.keeperCtesSql},
@@ -595,7 +581,7 @@ object Funnel {
   val entries: Seq[Entry] = Seq(
     Entry("q252_curation_funnel_v2", v2Sql(duck = true)) { (s, d) =>
       reportV2(s, d)
-    }.sqlTwin(v2Sql(duck = false)),
+    }.sqlTwin(v2TwinSql),
 
     // ---- drop ATTRIBUTION by host (SURVEY Q276) ----
     // q224 reports how many docs survive each gate; the question a crawl
@@ -608,7 +594,7 @@ object Funnel {
     // host-keyed rollup; at 100 TB the two keeper windows are the
     // funnel's own cost and the rollup is a map-side-combinable agg to
     // O(hosts) rows.
-    Entry("q276_funnel_yield_by_host", yieldByHostSql(duck = true)) { (s, d) =>
+    Entry("q276_funnel_yield_by_host", yieldByHostSql) { (s, d) =>
       reachFlags(s, d)
         .withColumn("reached",
           when(col("reach5"), 5)
@@ -624,7 +610,7 @@ object Funnel {
           sum(when(col("reached") === 4, 1L).otherwise(0L)).as("n_text_dup"),
           sum(when(col("reached") === 5, 1L).otherwise(0L)).as("n_kept"))
         .orderBy(col("host"))
-    }.sqlTwin(yieldByHostSql(duck = false)),
+    },
 
     Entry("q224_curation_funnel",
       s"""WITH t AS (SELECT doc_id, text, ${Text.tokensSql} AS ws FROM documents),
@@ -637,15 +623,6 @@ object Funnel {
         |  FROM t),
         |$oracleBody""".stripMargin) { (s, d) =>
       report(s, d)
-    }.sqlTwin(
-      s"""WITH t AS (SELECT doc_id, text, ${Dialect.tokensSparkSql} AS ws FROM documents),
-        |base AS (
-        |  SELECT doc_id, text,
-        |    NOT ((((doc_id div 4) % 5) % 2 = 1) AND ((doc_id div 4) % 10 IN (1, 3))) AS allowed,
-        |    doc_id div 4 AS grp,
-        |    size(ws) AS n_tok,
-        |    size(filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) AS n_stop
-        |  FROM t),
-        |$oracleBody""".stripMargin)
+    }
   )
 }

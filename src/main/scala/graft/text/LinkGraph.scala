@@ -231,9 +231,9 @@ object LinkGraph {
     * level and re-inline the chain exponentially — the q226/q235/q241
     * lesson, fourth sighting); only the final a/h pair is referenced
     * twice, which costs one extra inline of the prefix, not 2^k. */
-  private def hitsOracleSql(idiv: String): String = {
+  private def hitsOracleSql: String = {
     def norm(src: String) =
-      s"SELECT v, CAST(((1000000 * x) $idiv (GREATEST(SUM(x) OVER (), 1))) AS BIGINT) AS x FROM $src"
+      s"SELECT v, CAST(((1000000 * x) // (GREATEST(SUM(x) OVER (), 1))) AS BIGINT) AS x FROM $src"
     val rounds = (1 to HitsIterations).map { k =>
       s"""ar$k AS (
          |  SELECT nodes.v, COALESCE(SUM(y.x), 0) AS x
@@ -279,55 +279,54 @@ object LinkGraph {
   /** Unrolled power-iteration CTEs `<prefix>1..<prefix>Iterations` over a
     * per-node base-mass expression — shared by the q225 PageRank and
     * q238 TrustRank oracles (they differ only in `baseSql`/`initSql`). */
-  private def iterCtes(idiv: String, prefix: String, baseSql: String): String = {
-    def d(a: String, b: String) = s"(($a) $idiv ($b))"
+  private def iterCtes(prefix: String, baseSql: String): String =
     (1 to Iterations).map { k =>
       s"""$prefix$k AS (
          |  SELECT nodes.v,
          |    CAST($baseSql +
-         |    ${d("85 * COALESCE(SUM(x.c), 0)", "100")} AS BIGINT) AS r
+         |    ${intDiv("85 * COALESCE(SUM(x.c), 0)", "100")} AS BIGINT) AS r
          |  FROM nodes LEFT JOIN (
-         |    SELECT e.dst, ${d("r.r", "o.od")} AS c
+         |    SELECT e.dst, ${intDiv("r.r", "o.od")} AS c
          |    FROM edges e JOIN $prefix${k - 1} r ON r.v = e.src
          |    JOIN outd o ON o.src = e.src) x
          |  ON x.dst = nodes.v GROUP BY nodes.v)""".stripMargin
     }.mkString(",\n")
-  }
 
-  private def prBase(idiv: String) = s"((15 * ${Scale}) $idiv (100 * (SELECT n FROM nn)))"
-  private def trBase(idiv: String) =
-    s"(CASE WHEN nodes.v % 97 = 0 THEN ((15 * ${Scale}) $idiv (100 * (SELECT ns FROM sn))) ELSE 0 END)"
+  /** `a // b` with both operands parenthesized. */
+  private def intDiv(a: String, b: String) = s"(($a) // ($b))"
 
-  /** Unrolled oracle recurrence (DuckDB `//`; the Spark twin swaps `div`). */
-  private def oracleSql(idiv: String): String = {
-    def d(a: String, b: String) = s"(($a) $idiv ($b))"
+  private def prBase = s"((15 * ${Scale}) // (100 * (SELECT n FROM nn)))"
+  private def trBase =
+    s"(CASE WHEN nodes.v % 97 = 0 THEN ((15 * ${Scale}) // (100 * (SELECT ns FROM sn))) ELSE 0 END)"
+
+  /** Unrolled oracle recurrence. */
+  private def oracleSql: String = {
     s"""WITH nn AS (SELECT COUNT(*) AS n FROM documents),
        |nodes AS (SELECT doc_id AS v FROM documents),
        |$edgesSql,
        |outd AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY 1),
-       |r0 AS (SELECT v, ${d(Scale.toString, "(SELECT n FROM nn)")} AS r FROM nodes),
-       |${iterCtes(idiv, "r", prBase(idiv))}
+       |r0 AS (SELECT v, ${intDiv(Scale.toString, "(SELECT n FROM nn)")} AS r FROM nodes),
+       |${iterCtes("r", prBase)}
        |SELECT v AS node, r AS score FROM r$Iterations
        |ORDER BY score DESC, node LIMIT 20""".stripMargin
   }
 
   /** q238 oracle: BOTH recurrences (PageRank chain p*, TrustRank chain
     * t*) plus the spam-mass composition — `1e6·max(pr−tr,0)//pr`. */
-  private def trustOracleSql(idiv: String): String = {
-    def d(a: String, b: String) = s"(($a) $idiv ($b))"
+  private def trustOracleSql: String = {
     s"""WITH nn AS (SELECT COUNT(*) AS n FROM documents),
        |sn AS (SELECT COUNT(*) AS ns FROM documents WHERE doc_id % 97 = 0),
        |nodes AS (SELECT doc_id AS v FROM documents),
        |$edgesSql,
        |outd AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY 1),
-       |p0 AS (SELECT v, ${d(Scale.toString, "(SELECT n FROM nn)")} AS r FROM nodes),
-       |${iterCtes(idiv, "p", prBase(idiv))},
+       |p0 AS (SELECT v, ${intDiv(Scale.toString, "(SELECT n FROM nn)")} AS r FROM nodes),
+       |${iterCtes("p", prBase)},
        |t0 AS (SELECT v,
-       |  CASE WHEN v % 97 = 0 THEN ${d(Scale.toString, "(SELECT ns FROM sn)")} ELSE 0 END AS r
+       |  CASE WHEN v % 97 = 0 THEN ${intDiv(Scale.toString, "(SELECT ns FROM sn)")} ELSE 0 END AS r
        |  FROM nodes),
-       |${iterCtes(idiv, "t", trBase(idiv))}
+       |${iterCtes("t", trBase)}
        |SELECT p.v AS node, p.r AS pr, t.r AS tr,
-       |  CAST(${d("1000000 * GREATEST(p.r - t.r, 0)", "p.r")} AS BIGINT) AS spam_ppm
+       |  CAST(${intDiv("1000000 * GREATEST(p.r - t.r, 0)", "p.r")} AS BIGINT) AS spam_ppm
        |FROM p$Iterations p JOIN t$Iterations t ON t.v = p.v
        |ORDER BY spam_ppm DESC, pr DESC, node LIMIT 20""".stripMargin
   }
@@ -396,7 +395,7 @@ object LinkGraph {
   }
 
   val entries: Seq[Entry] = Seq(
-    Entry("q225_pagerank", oracleSql("//")) { (s, d) =>
+    Entry("q225_pagerank", oracleSql) { (s, d) =>
       val docs = T(s, d, "documents")
       // one-row driver scalar, mirrored by the oracle's COUNT(*) subquery
       val n = docs.count()
@@ -404,7 +403,7 @@ object LinkGraph {
       pagerank(nodes, extractedEdges(s, d, n), n)
         .select(col("v").as("node"), col("r").as("score"))
         .orderBy(col("score").desc, col("node")).limit(20)
-    }.sqlTwin(oracleSql("div")),
+    },
 
     // Crawl-depth BFS (SURVEY.md Q226): hop distance from the seed list
     // over the same extracted graph — the frontier schedule of a
@@ -434,7 +433,7 @@ object LinkGraph {
     // pins trust propagation (reachability from seeds included:
     // unreached nodes sit at exactly 1e6 ppm) AND the two chains'
     // relative arithmetic.
-    Entry("q238_trustrank", trustOracleSql("//")) { (s, d) =>
+    Entry("q238_trustrank", trustOracleSql) { (s, d) =>
       val docs = T(s, d, "documents")
       // two one-row driver scalars, mirrored by the oracle's COUNT(*)s
       val n = docs.count()
@@ -451,7 +450,7 @@ object LinkGraph {
         .select(col("v").as("node"), col("pr"), col("tr"),
           expr("CAST((1000000 * GREATEST(pr - tr, 0L)) div pr AS BIGINT)").as("spam_ppm"))
         .orderBy(col("spam_ppm").desc, col("pr").desc, col("node")).limit(20)
-    }.sqlTwin(trustOracleSql("div")),
+    },
 
     // HITS hubs & authorities (SURVEY.md Q245) — link-analysis signal #3
     // over the same extracted graph: where PageRank scores "endorsed
@@ -463,11 +462,11 @@ object LinkGraph {
     // oracle replays all 4 unrolled rounds including the normalization
     // scalars, so the hash pins the mutual recursion, the truncating
     // normalizations, and both join directions.
-    Entry("q245_hits", hitsOracleSql("//")) { (s, d) =>
+    Entry("q245_hits", hitsOracleSql) { (s, d) =>
       val docs = T(s, d, "documents")
       val n = docs.count()   // one-row driver scalar (oracle: COUNT(*))
       val nodes = docs.select(col("doc_id").as("v"))
       hits(nodes, extractedEdges(s, d, n)).orderBy(col("node"))
-    }.sqlTwin(hitsOracleSql("div"))
+    }
   )
 }

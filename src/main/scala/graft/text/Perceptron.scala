@@ -65,28 +65,22 @@ object Perceptron {
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
-  // ---- shared SQL chain (oracle duck=true / spark twin duck=false) ----
+  // ---- shared SQL chain: DuckDB SQL, the Spark side bridged by
+  // Dialect.duckToSpark. `duck` keeps the two structural switches the
+  // bridge has no rule for: the MATERIALIZED CTE hint and the hex shard
+  // parse (DuckDB's '0x' || cast vs Spark's conv). ----
 
   /** The training chain CTEs: t, lab, wrd, feat, w0, then one
     * (j_k, w_k) pair per step. Splice with `WITH` and consume `w$Steps`
     * (final weights) / `feat`+`lab` (for scoring). ONE copy shared by
     * q264, q265 and q252's stage-8 gate. */
   private[text] def chainSql(duck: Boolean): String = {
-    val idiv = if (duck) "//" else "div"
-    val ws = if (duck) Text.tokensSql else Dialect.tokensSparkSql
-    val len = if (duck) "len" else "size"
-    val fil = if (duck) "list_filter" else "filter"
     val mat = if (duck) "MATERIALIZED " else ""
-    val th = if (duck) Text.tokenHashSql else "token_hash(w)"
     val shard =
       if (duck)
         s"CAST(('0x' || substr(md5('$Seed:' || CAST(doc_id AS VARCHAR)), 1, 4)) AS INT) % $Shards"
       else
         s"CAST(CAST(conv(substr(md5(concat('$Seed:', CAST(doc_id AS STRING))), 1, 4), 16, 10) AS INT) % $Shards AS INT)"
-    val unn = if (duck) "unnest(ws)" else "explode(ws)"
-    val w0 =
-      if (duck) s"SELECT unnest(range($NumFeatures)) AS f"
-      else s"SELECT explode(sequence(0, ${NumFeatures - 1})) AS f"
     val levels = (1 to Steps).map { k =>
       val sh = (k - 1) % Shards
       val upd =
@@ -110,22 +104,22 @@ object Perceptron {
          |    FROM pj$k)
          |  GROUP BY f)""".stripMargin
     }.mkString(",\n")
-    s"""pt AS (SELECT doc_id, $ws AS ws FROM documents),
+    s"""pt AS (SELECT doc_id, ${Text.tokensSql} AS ws FROM documents),
        |plab AS $mat(SELECT doc_id,
-       |    CASE WHEN $len(ws) >= 25
-       |              AND 1000 * $len($fil(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) >= 30 * $len(ws)
+       |    CASE WHEN len(ws) >= 25
+       |              AND 1000 * len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in'))) >= 30 * len(ws)
        |         THEN 1 ELSE -1 END AS y,
        |    $shard AS shard,
-       |    CAST($len(ws) AS BIGINT) AS n_tok
-       |  FROM pt WHERE $len(ws) > 0),
-       |pwrd AS (SELECT doc_id, $unn AS w FROM pt),
+       |    CAST(len(ws) AS BIGINT) AS n_tok
+       |  FROM pt WHERE len(ws) > 0),
+       |pwrd AS (SELECT doc_id, unnest(ws) AS w FROM pt),
        |pfeat AS $mat(
-       |  SELECT w.doc_id, w.f, CAST((1000 * w.c) $idiv l.n_tok AS BIGINT) AS x
-       |  FROM (SELECT doc_id, ($th) % $NumBuckets AS f, COUNT(*) AS c FROM pwrd GROUP BY 1, 2) w
+       |  SELECT w.doc_id, w.f, CAST((1000 * w.c) // l.n_tok AS BIGINT) AS x
+       |  FROM (SELECT doc_id, (${Text.tokenHashSql}) % $NumBuckets AS f, COUNT(*) AS c FROM pwrd GROUP BY 1, 2) w
        |  JOIN plab l ON l.doc_id = w.doc_id
        |  UNION ALL SELECT doc_id, $NumBuckets, n_tok FROM plab
        |  UNION ALL SELECT doc_id, ${NumBuckets + 1}, CAST(1 AS BIGINT) FROM plab),
-       |pw0 AS ($w0, CAST(0 AS BIGINT) AS w, CAST(0 AS BIGINT) AS wsum),
+       |pw0 AS (SELECT unnest(range($NumFeatures)) AS f, CAST(0 AS BIGINT) AS w, CAST(0 AS BIGINT) AS wsum),
        |$levels""".stripMargin
   }
 
@@ -176,7 +170,6 @@ object Perceptron {
     * POST-AGG tier (the grid cross-join multiplies O(docs) margin rows
     * by 6 before ONE agg; the window rides 6 rows). */
   private def sweepSql(duck: Boolean): String = {
-    val idiv = if (duck) "//" else "div"
     val grid =
       if (duck) s"SELECT unnest([${SweepGrid.mkString(", ")}]) AS thr"
       else s"SELECT explode(array(${SweepGrid.mkString("L, ")}L)) AS thr"
@@ -193,8 +186,8 @@ object Perceptron {
        |  GROUP BY 1),
        |pstat AS (
        |  SELECT thr, tp, fp, fn, tn,
-       |    CAST(1000 * tp $idiv NULLIF(tp + fp, 0) AS BIGINT) AS precision_permille,
-       |    CAST(1000 * tp $idiv NULLIF(tp + fn, 0) AS BIGINT) AS recall_permille
+       |    CAST(1000 * tp // NULLIF(tp + fp, 0) AS BIGINT) AS precision_permille,
+       |    CAST(1000 * tp // NULLIF(tp + fn, 0) AS BIGINT) AS recall_permille
        |  FROM pcells)
        |SELECT CAST(thr AS BIGINT) AS thr, tp, fp, fn, tn,
        |  precision_permille, recall_permille,
@@ -213,7 +206,6 @@ object Perceptron {
     * window partitions by lang — no single-partition stage (q253's
     * scale-correct window shape). */
   private def sweepByLangSql(duck: Boolean): String = {
-    val idiv = if (duck) "//" else "div"
     val grid =
       if (duck) s"SELECT unnest([${SweepGrid.mkString(", ")}]) AS thr"
       else s"SELECT explode(array(${SweepGrid.mkString("L, ")}L)) AS thr"
@@ -232,8 +224,8 @@ object Perceptron {
        |  GROUP BY 1, 2),
        |pstat AS (
        |  SELECT lang, thr, tp, fp, fn, tn,
-       |    CAST(1000 * tp $idiv NULLIF(tp + fp, 0) AS BIGINT) AS precision_permille,
-       |    CAST(1000 * tp $idiv NULLIF(tp + fn, 0) AS BIGINT) AS recall_permille
+       |    CAST(1000 * tp // NULLIF(tp + fp, 0) AS BIGINT) AS precision_permille,
+       |    CAST(1000 * tp // NULLIF(tp + fn, 0) AS BIGINT) AS recall_permille
        |  FROM pcells)
        |SELECT lang, CAST(thr AS BIGINT) AS thr, tp, fp, fn, tn,
        |  precision_permille, recall_permille,
@@ -385,7 +377,7 @@ object Perceptron {
       val (w, wsum) = stagedModel(s, d)
       (0 until NumFeatures).map(f => (f, w(f), wsum(f)))
         .toDF("f", "w", "wsum").orderBy(col("f"))
-    }.sqlTwin(trainSql(duck = false)),
+    }.sqlTwin(Dialect.duckToSpark(trainSql(duck = false))),
 
     // ---- the scorer: corpus confusion under the averaged weights ----
     // The weights come from the staged artifact (one training per JVM),
@@ -404,7 +396,7 @@ object Perceptron {
           max(col("margin")).cast("bigint").as("max_margin"))
         .orderBy(col("label"), col("pred"))
       out
-    }.sqlTwin(applySql(duck = false)),
+    }.sqlTwin(Dialect.duckToSpark(applySql(duck = false))),
 
     // ---- the operating-point sweep (VERDICT r16 #6) ----
     // q265 reports ONE confusion matrix at margin 0 while q252's stage 8
@@ -441,7 +433,7 @@ object Perceptron {
         .select(col("thr"), col("tp"), col("fp"), col("fn"), col("tn"),
           col("precision_permille"), col("recall_permille"), col("chosen"))
         .orderBy(col("thr"))
-    }.sqlTwin(sweepSql(duck = false)),
+    }.sqlTwin(Dialect.duckToSpark(sweepSql(duck = false))),
 
     // ---- per-language operating points (q273 × q250's conditioning) ----
     // One shared model, per-language knees: the pooled margin hides
@@ -477,6 +469,6 @@ object Perceptron {
         .select(col("lang"), col("thr"), col("tp"), col("fp"), col("fn"), col("tn"),
           col("precision_permille"), col("recall_permille"), col("chosen"))
         .orderBy(col("lang"), col("thr"))
-    }.sqlTwin(sweepByLangSql(duck = false))
+    }.sqlTwin(Dialect.duckToSpark(sweepByLangSql(duck = false)))
   )
 }

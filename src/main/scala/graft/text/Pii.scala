@@ -96,11 +96,11 @@ object Pii {
       (emails.map(_.length) ++ phones.map(_.length)).sum.toLong)
   }
 
-  private def oracleSql(idiv: String): String =
+  private def oracleSql: String =
     s"""WITH p AS (
        |  SELECT doc_id,
        |    CAST(doc_id % 3 AS BIGINT) AS n_emails,
-       |    CAST((doc_id $idiv 3) % 2 AS BIGINT) AS n_phones,
+       |    CAST((doc_id // 3) % 2 AS BIGINT) AS n_phones,
        |    length(CAST(doc_id AS VARCHAR)) AS idlen
        |  FROM documents)
        |SELECT doc_id, n_emails, n_phones,
@@ -111,7 +111,7 @@ object Pii {
   private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   val entries: Seq[Entry] = Seq(
-    Entry("q255_pii_scrub", oracleSql("//")) { (s, d) =>
+    Entry("q255_pii_scrub", oracleSql) { (s, d) =>
       import s.implicits._
       T(s, d, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
@@ -122,6 +122,6 @@ object Pii {
         }
         .toDF("doc_id", "n_emails", "n_phones", "n_redacted_chars", "n_residual_pii")
         .orderBy(col("doc_id"))
-    }.sqlTwin(oracleSql("div").replace("AS VARCHAR", "AS STRING"))
+    }
   )
 }

@@ -202,29 +202,23 @@ object Pipeline {
     * considered and REJECTED: the fixture corpus has zero duplicate
     * texts, so it would pin nothing — the q225 degenerate-fixture
     * lesson.) */
-  private def cardSql(idiv: String, duck: Boolean): String = {
-    val ws = if (duck) Text.tokensSql else Dialect.tokensSparkSql
-    val len = if (duck) "len" else "size"
-    val stop = if (duck)
-      "len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
-    else
-      "size(filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
-    val sv = if (duck) "VARCHAR" else "STRING"
-    s"""WITH t AS (SELECT doc_id, lang, source, $ws AS ws FROM documents),
+  private def cardSql: String = {
+    val stop = "len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
+    s"""WITH t AS (SELECT doc_id, lang, source, ${Text.tokensSql} AS ws FROM documents),
        |f AS (SELECT lang, source,
-       |    CAST($len(ws) AS BIGINT) AS n_tok,
-       |    CASE WHEN $len(ws) >= 25 AND 1000 * $stop >= 30 * $len(ws)
+       |    CAST(len(ws) AS BIGINT) AS n_tok,
+       |    CASE WHEN len(ws) >= 25 AND 1000 * $stop >= 30 * len(ws)
        |         THEN 1 ELSE 0 END AS keep
-       |  FROM t WHERE $len(ws) > 0)
+       |  FROM t WHERE len(ws) > 0)
        |SELECT CAST(GROUPING(lang) AS INT) AS g_lang,
        |  CAST(GROUPING(source) AS INT) AS g_source,
        |  CAST(GROUPING(keep) AS INT) AS g_keep,
        |  COALESCE(lang, '(all)') AS lang,
        |  COALESCE(source, '(all)') AS source,
-       |  COALESCE(CAST(keep AS $sv), '(all)') AS keep,
+       |  COALESCE(CAST(keep AS VARCHAR), '(all)') AS keep,
        |  COUNT(*) AS n_docs,
        |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-       |  CAST(SUM(n_tok) $idiv COUNT(*) AS BIGINT) AS mean_tok
+       |  CAST(SUM(n_tok) // COUNT(*) AS BIGINT) AS mean_tok
        |FROM f
        |GROUP BY GROUPING SETS ((lang, source, keep), (lang, source), (lang), ())
        |ORDER BY g_lang, g_source, g_keep, lang, source, keep""".stripMargin
@@ -382,7 +376,7 @@ object Pipeline {
     // re-shuffle the corpus k times. The keep dimension is the q96 rule
     // in its integer form; the grouping-flag columns disambiguate
     // '(all)' rollup rows from data values.
-    Entry("q246_corpus_card", cardSql("//", duck = true)) { (s, d) =>
+    Entry("q246_corpus_card", cardSql) { (s, d) =>
       val stops = Seq("the", "a", "of", "and", "to", "is", "in")
       val f0 = T(s, d, "documents")
         .select(col("lang"), col("source"), Text.tokens(col("text")).as("ws"))
@@ -409,7 +403,7 @@ object Pipeline {
              col("n_docs"), col("n_tokens"), col("mean_tok"))
         .orderBy(col("g_lang"), col("g_source"), col("g_keep"),
              col("lang"), col("source"), col("keep"))
-    }.sqlTwin(cardSql("div", duck = false)),
+    },
 
     // ---- near-dup clustering: pairwise dups -> components -> keep-one ----
     // The declared query derives its pair set EXACTLY (hashed-shingle
@@ -1693,7 +1687,7 @@ object Pipeline {
     // by true duplication).
     Entry("q268_quality_keeper",
       s"""WITH RECURSIVE $pairCtes,
-        |${QualityModel.chain("//", duck = true)},
+        |${QualityModel.chain(duck = true)},
         |$closureCtesSql,
         |$keeperTailSql""".stripMargin) { (s, d) =>
       val sh = TokenIndex.shingles3(s, d)
@@ -1705,11 +1699,11 @@ object Pipeline {
         Text.jaccardScored(sh, inter, 0.2).select(col("doc_a"), col("doc_b")))
       keeperFrame(s, d, cl)
     }.sqlTwin(
-      s"""WITH ${Dialect.duckToSpark(pairCtes)},
-        |${QualityModel.chain("div", duck = false)},
+      Dialect.duckToSpark(s"""WITH $pairCtes,
+        |${QualityModel.chain(duck = false)},
         |${clusterLevelCtes(6)},
         |cl AS (SELECT id AS doc_id, CAST(lbl AS BIGINT) AS cluster FROM l6),
-        |$keeperTailSql""".stripMargin),
+        |$keeperTailSql""".stripMargin)),
 
     // ---- the keeper rule on the LSH tier (q272, VERDICT r16 #4) ----
     // q268's declared entry derives its clusters from the exact

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Staging, Tables}
-import graft.queries.Entry
+import graft.queries.{Dialect, Entry}
 
 /** Model-based document quality scoring (SURVEY.md Q234) — the trained
   * classifier tier above q96's threshold rules, the FineWeb/CCNet-class
@@ -54,37 +54,33 @@ object QualityModel {
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
-  /** Shared signal/bucket/label derivation. `idiv` is the engine's
-    * integer-division spelling; `lenFn`/`tokens`/`distinctFn`/`regexFlag`
-    * differ between DuckDB and Spark SQL. Package-visible: q252's funnel
-    * oracle splices this chain so its model gate replays the SAME
-    * training the q234 entry pins. */
-  private[text] def chain(idiv: String, duck: Boolean): String = {
-    val ws = if (duck) Text.tokensSql else graft.queries.Dialect.tokensSparkSql
-    val len = if (duck) "len" else "size"
+  /** Shared signal/bucket/label derivation, in DuckDB SQL (the Spark
+    * side is bridged by [[graft.queries.Dialect.duckToSpark]]).
+    * Package-visible: q252's funnel oracle splices this chain so its
+    * model gate replays the SAME training the q234 entry pins. `duck`
+    * is the one structural switch: DuckDB's `list_distinct` drops NULLs
+    * where Spark's `array_distinct` keeps one, so no bridge rule maps
+    * them. */
+  private[text] def chain(duck: Boolean): String = {
     val dis = if (duck) "list_distinct" else "array_distinct"
-    val stop = if (duck)
-      "len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
-    else
-      "size(filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
-    val re = if (duck) "regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')"
-             else "regexp_replace(text, '[a-zA-Z0-9 ]', '')"
-    s"""t AS (SELECT doc_id, $ws AS ws, text FROM documents),
+    val stop = "len(list_filter(ws, w -> w IN ('the', 'a', 'of', 'and', 'to', 'is', 'in')))"
+    val re = "regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')"
+    s"""t AS (SELECT doc_id, ${Text.tokensSql} AS ws, text FROM documents),
        |f AS (SELECT doc_id,
-       |    CAST($len(ws) AS BIGINT) AS n_tok,
+       |    CAST(len(ws) AS BIGINT) AS n_tok,
        |    CAST($stop AS BIGINT) AS n_stop,
        |    CAST(length(text) AS BIGINT) AS n_char,
        |    CAST(length($re) AS BIGINT) AS n_punct,
-       |    CAST($len($dis(ws)) AS BIGINT) AS n_uniq
-       |  FROM t WHERE $len(ws) > 0),
+       |    CAST(len($dis(ws)) AS BIGINT) AS n_uniq
+       |  FROM t WHERE len(ws) > 0),
        |g AS (SELECT doc_id,
        |    CASE WHEN n_tok >= 25 AND 1000 * n_stop >= 30 * n_tok
        |         THEN 1 ELSE 0 END AS label,
-       |    LEAST((n_tok) $idiv 16, 9) AS b0,
-       |    LEAST(((1000 * n_stop) $idiv n_tok) $idiv 20, 9) AS b1,
-       |    LEAST(((1000 * n_punct) $idiv n_char) $idiv 10, 9) AS b2,
-       |    LEAST(((1000 * n_uniq) $idiv n_tok) $idiv 100, 9) AS b3,
-       |    LEAST((((n_char - n_punct) * 10) $idiv n_tok) $idiv 5, 9) AS b4
+       |    LEAST((n_tok) // 16, 9) AS b0,
+       |    LEAST(((1000 * n_stop) // n_tok) // 20, 9) AS b1,
+       |    LEAST(((1000 * n_punct) // n_char) // 10, 9) AS b2,
+       |    LEAST(((1000 * n_uniq) // n_tok) // 100, 9) AS b3,
+       |    LEAST((((n_char - n_punct) * 10) // n_tok) // 5, 9) AS b4
        |  FROM f),
        |u AS (SELECT doc_id, label, 0 AS sig, b0 AS b FROM g
        |  UNION ALL SELECT doc_id, label, 1, b1 FROM g
@@ -92,7 +88,7 @@ object QualityModel {
        |  UNION ALL SELECT doc_id, label, 3, b3 FROM g
        |  UNION ALL SELECT doc_id, label, 4, b4 FROM g),
        |m AS (SELECT sig, b,
-       |    CAST((1000000 * (SUM(label) + 1)) $idiv (COUNT(*) + 2) AS BIGINT) AS ppm
+       |    CAST((1000000 * (SUM(label) + 1)) // (COUNT(*) + 2) AS BIGINT) AS ppm
        |  FROM u GROUP BY 1, 2),
        |sc AS (SELECT u.doc_id, u.label, CAST(SUM(m.ppm) AS BIGINT) AS score
        |  FROM u JOIN m ON m.sig = u.sig AND m.b = u.b
@@ -224,8 +220,8 @@ object QualityModel {
     * absent from the gated training set fall back to the Laplace prior
     * 500000 (LEFT JOIN + COALESCE), matching the Spark side's dense
     * lookup-array default. */
-  private def selftrainSql(idiv: String, duck: Boolean): String =
-    s"""WITH ${chain(idiv, duck)},
+  private def selftrainSql(duck: Boolean): String =
+    s"""WITH ${chain(duck)},
        |p1 AS (SELECT doc_id, label, score,
        |    CASE WHEN score >= 2500000 THEN 1 ELSE 0 END AS pred1 FROM sc),
        |u2 AS (SELECT u.doc_id,
@@ -234,7 +230,7 @@ object QualityModel {
        |  FROM u JOIN p1 p ON p.doc_id = u.doc_id
        |  WHERE p.score < $PseudoNeg OR p.score >= $PseudoPos),
        |m2 AS (SELECT sig, b,
-       |    CAST((1000000 * (SUM(pseudo) + 1)) $idiv (COUNT(*) + 2) AS BIGINT) AS ppm
+       |    CAST((1000000 * (SUM(pseudo) + 1)) // (COUNT(*) + 2) AS BIGINT) AS ppm
        |  FROM u2 GROUP BY 1, 2),
        |sc2 AS (SELECT u.doc_id,
        |    CAST(SUM(COALESCE(m2.ppm, 500000)) AS BIGINT) AS score2
@@ -250,9 +246,9 @@ object QualityModel {
 
   val entries: Seq[Entry] = Seq(
     Entry("q234_quality_model",
-      s"WITH ${chain("//", duck = true)}\n$finalSelect") { (s, d) =>
+      s"WITH ${chain(duck = true)}\n$finalSelect") { (s, d) =>
       confusion(T(s, d, "documents"))
-    }.sqlTwin(s"WITH ${chain("div", duck = false)}\n$finalSelect"),
+    }.sqlTwin(Dialect.duckToSpark(s"WITH ${chain(duck = false)}\n$finalSelect")),
 
     // q242: one SELF-TRAINING round over the q234 model — the classifier
     // bootstrap every FineWeb-Edu-class pipeline runs (rule labels train
@@ -269,7 +265,7 @@ object QualityModel {
     // Output pins both generations: (rule label, round-1 pred, round-2
     // pred) cells with round-2 score extrema — pred1/pred2 flips land in
     // their own rows.
-    Entry("q242_quality_selftrain", selftrainSql("//", duck = true)) { (s, d) =>
+    Entry("q242_quality_selftrain", selftrainSql(duck = true)) { (s, d) =>
       val g = Staging.materialize(bucketFrame(T(s, d, "documents")))
       val m1 = trainPosteriors(g, "label")
       val g1 = g.withColumn("score1", scoreCol(m1))
@@ -286,6 +282,6 @@ object QualityModel {
           min(col("score2")).as("min_score2"),
           max(col("score2")).as("max_score2"))
         .orderBy(col("label"), col("pred1"), col("pred2"))
-    }.sqlTwin(selftrainSql("div", duck = false))
+    }.sqlTwin(Dialect.duckToSpark(selftrainSql(duck = false)))
   )
 }

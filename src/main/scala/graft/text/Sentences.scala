@@ -118,13 +118,12 @@ object Sentences {
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
-  /** Arithmetic replay of the fabrication schedule (see object doc):
-    * shared text for DuckDB (`//`) and Spark (`div`). */
-  private def oracleSql(idiv: String): String =
+  /** Arithmetic replay of the fabrication schedule (see object doc). */
+  private def oracleSql: String =
     s"""WITH q AS (
        |  SELECT doc_id, CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS nw
        |  FROM documents),
-       |s AS (SELECT doc_id, nw, nw $idiv 26 AS fc, nw % 26 AS r FROM q),
+       |s AS (SELECT doc_id, nw, nw // 26 AS fc, nw % 26 AS r FROM q),
        |t AS (SELECT doc_id, nw, fc, r,
        |    CASE WHEN r = 0 THEN 0 WHEN r <= 5 THEN 1 WHEN r <= 11 THEN 2
        |         WHEN r <= 18 THEN 3 ELSE 4 END AS ne,
@@ -133,14 +132,14 @@ object Sentences {
        |  FROM s),
        |u AS (SELECT doc_id, nw, rs, 4 * fc + ne AS n_sent FROM t),
        |v AS (SELECT doc_id, nw, n_sent,
-       |    ((n_sent + 2) $idiv 3) -
+       |    ((n_sent + 2) // 3) -
        |      (CASE WHEN (n_sent - 1) % 3 = 0 AND rs = 1 THEN 1 ELSE 0 END) AS n_abbrev
        |  FROM u)
        |SELECT doc_id, n_sent, n_abbrev, nw + n_abbrev AS n_toks
        |FROM v ORDER BY doc_id""".stripMargin
 
   val entries: Seq[Entry] = Seq(
-    Entry("q237_sentence_segment", oracleSql("//")) { (s, d) =>
+    Entry("q237_sentence_segment", oracleSql) { (s, d) =>
       import s.implicits._
       T(s, d, "documents").select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
@@ -150,6 +149,6 @@ object Sentences {
         }
         .toDF("doc_id", "n_sent", "n_abbrev", "n_toks")
         .orderBy(col("doc_id"))
-    }.sqlTwin(oracleSql("div"))
+    }
   )
 }

@@ -223,9 +223,10 @@ object Text {
       .withColumn("row_unat", floor(lit(1000000) * -log(p)))
   }
 
-  /** q251's oracle/twin body, parameterized on the engine's host-concat
-    * and integer-division spellings (the only dialect differences). */
-  private def heldoutGapSql(host: String, idiv: String): String =
+  /** q251's oracle body, parameterized on the host expression: the one
+    * structural switch (DuckDB's `||` casts the integer host id to text,
+    * Spark's needs `concat`); the twin is bridged from the concat side. */
+  private def heldoutGapSql(host: String): String =
     s"""WITH $wordsCtesSql,
        |$bigramCteSql,
        |$knHeldoutCtesSql,
@@ -241,9 +242,9 @@ object Text {
        |    CAST(SUM(CASE WHEN held = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_train_bigrams,
        |    CAST(SUM(CASE WHEN held = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_held_bigrams,
        |    CAST(SUM(CASE WHEN held = 0 THEN row_unat ELSE 0 END)
-       |      $idiv NULLIF(SUM(CASE WHEN held = 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS train_mean_unat,
+       |       //  NULLIF(SUM(CASE WHEN held = 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS train_mean_unat,
        |    CAST(SUM(CASE WHEN held = 1 THEN row_unat ELSE 0 END)
-       |      $idiv NULLIF(SUM(CASE WHEN held = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS held_mean_unat
+       |       //  NULLIF(SUM(CASE WHEN held = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS held_mean_unat
        |  FROM sc GROUP BY 1)
        |SELECT host, n_train_docs, n_held_docs, n_train_bigrams, n_held_bigrams,
        |  train_mean_unat, held_mean_unat,
@@ -817,15 +818,7 @@ object Text {
           col("b.doc_id") === col("a.doc_id") && (inOrder || reversed))
         .select(col("a.doc_id").as("doc_id")).distinct()
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      // structural gap: pre-DISTINCT alias in ORDER BY (as in q74's twin)
-      s"""WITH ${graft.queries.Dialect.duckToSpark(wordsCtesSql)}
-        |SELECT DISTINCT a.doc_id AS doc_id FROM words a
-        |JOIN words b ON b.doc_id = a.doc_id
-        | AND ((b.pos > a.pos AND b.pos - a.pos - 1 <= 2)
-        |   OR (b.pos < a.pos AND a.pos - b.pos + 1 <= 2))
-        |WHERE a.w = 'data' AND b.w = 'stream'
-        |ORDER BY doc_id""".stripMargin),
+    },
 
     // ES fuzzy query: terms within edit distance 1 of the query term
     Entry("q75_fuzzy_match",
@@ -1548,7 +1541,7 @@ object Text {
     // integers, the gap is a plain BIGINT difference (may be negative —
     // a host the model generalizes to better than its own training half).
     Entry("q251_heldout_gap_by_host",
-      heldoutGapSql("'www.site' || ((sc.doc_id // 4) % 5) || '.com'", " // ")) { (s, d) =>
+      heldoutGapSql("'www.site' || ((sc.doc_id // 4) % 5) || '.com'")) { (s, d) =>
       knHeldoutScored(s, d)
         .groupBy(expr("concat('www.site', (doc_id div 4) % 5, '.com')").as("host"))
         .agg(
@@ -1565,7 +1558,7 @@ object Text {
         .withColumn("gap_unat", (col("held_mean_unat") - col("train_mean_unat")).cast("long"))
         .orderBy(col("host"))
     }.sqlTwin(graft.queries.Dialect.duckToSpark(
-      heldoutGapSql("concat('www.site', (sc.doc_id div 4) % 5, '.com')", " div "))),
+      heldoutGapSql("concat('www.site', (sc.doc_id // 4) % 5, '.com')"))),
 
     // ---- Q143 PMI collocation ranking (BPE merge-candidate signal) ----
     // Tokenizer-vocabulary induction starts from exactly this statistic:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Entry
+import graft.queries.{Dialect, Entry}
 
 /** Unigram-LM (SentencePiece-style) subword tokenizer (SURVEY.md
   * Q235/Q236) — the other mainstream subword algorithm beside BPE
@@ -173,12 +173,10 @@ object Unigram {
     }.toSeq
   }
 
-  // ---- shared oracle chain (DuckDB + Spark dialects) -------------------
+  // ---- shared oracle chain (DuckDB SQL; the twins are bridged) ---------
 
-  /** wf .. wv CTEs. Differences between dialects: the tokenizer spelling,
-    * integer-range explosion, and the `//` vs `div` spelling (only used
-    * downstream). The dp CTEs are engine-neutral text. */
-  private def chainSql(duck: Boolean): String = {
+  /** wf .. wv CTEs. The dp CTEs are engine-neutral text. */
+  private def chainSql: String = {
     // Each dp CTE references ONLY dp{k-1} (the prior three bests ride as
     // b1/b2/b3 state columns), so CTE inlining stays a LINEAR chain — the
     // first formulation joined dp{k-2}/dp{k-3}/dp{k-4} directly and the
@@ -203,7 +201,7 @@ object Unigram {
          |  FROM dp${k - 1} d
          |$joins)""".stripMargin
     }.mkString(",\n")
-    s"""${prefixSql(duck)},
+    s"""$prefixSql,
        |dp0 AS (SELECT w, CAST(0 AS BIGINT) AS best,
        |          CAST(NULL AS BIGINT) AS b1, CAST(NULL AS BIGINT) AS b2,
        |          CAST(NULL AS BIGINT) AS b3, CAST(NULL AS BIGINT) AS value
@@ -218,20 +216,16 @@ object Unigram {
     * encode DP's 13 unused CTEs: Spark analyzes unreferenced CTE
     * definitions too, and the combined depth crossed the analyzer's
     * iteration cap. */
-  private def prefixSql(duck: Boolean): String = {
-    val ws = if (duck) Text.tokensSql else graft.queries.Dialect.tokensSparkSql
-    val un = if (duck) "unnest" else "explode"
-    val ls = if (duck) s"range(${PieceMin}, ${PieceMax + 1})" else s"sequence(${PieceMin}, ${PieceMax})"
-    val is = if (duck) s"range(1, ${MaxLen})" else s"sequence(1, ${MaxLen - 1})"
-    s"""toks AS (SELECT doc_id, $ws AS ws FROM documents),
-       |words AS (SELECT doc_id, $un(ws) AS w FROM toks),
+  private def prefixSql: String =
+    s"""toks AS (SELECT doc_id, ${Text.tokensSql} AS ws FROM documents),
+       |words AS (SELECT doc_id, unnest(ws) AS w FROM toks),
        |wf AS (SELECT w, COUNT(*) AS f FROM words GROUP BY 1),
        |pc AS (
        |  SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS p,
        |         CAST(SUM(f) AS BIGINT) AS cnt
        |  FROM wf
-       |  CROSS JOIN (SELECT $un($ls) AS l) gl
-       |  CROSS JOIN (SELECT $un($is) AS i) gi
+       |  CROSS JOIN (SELECT unnest(range(${PieceMin}, ${PieceMax + 1})) AS l) gl
+       |  CROSS JOIN (SELECT unnest(range(1, ${MaxLen})) AS i) gi
        |  WHERE i + l - 1 <= LEAST(length(w), $MaxLen)
        |  GROUP BY 1),
        |sel AS (
@@ -240,22 +234,21 @@ object Unigram {
        |          ROW_NUMBER() OVER (ORDER BY cnt * (length(p) - 1) DESC, p) AS rnk
        |        FROM pc)
        |  WHERE rnk <= $V)""".stripMargin
-  }
 
-  private def trainSql(idiv: String, duck: Boolean): String =
-    s"""WITH ${chainSql(duck)}
+  private def trainSql: String =
+    s"""WITH $chainSql
        |SELECT CAST(rnk AS INT) AS rnk, p AS piece, cnt,
-       |  CAST((1000000 * cnt) $idiv (SELECT SUM(cnt) FROM sel) AS BIGINT) AS prob_ppm
+       |  CAST((1000000 * cnt) // (SELECT SUM(cnt) FROM sel) AS BIGINT) AS prob_ppm
        |FROM sel ORDER BY rnk""".stripMargin
 
-  private def encodeSql(idiv: String, duck: Boolean): String =
-    s"""WITH ${chainSql(duck)}
+  private def encodeSql: String =
+    s"""WITH $chainSql
        |SELECT t.doc_id, COUNT(*) AS n_words,
        |  CAST(SUM(CASE WHEN length(t.w) > $MaxLen THEN length(t.w)
-       |           ELSE 1024 * ((v.value + 16) $idiv 1024) - v.value END) AS BIGINT)
+       |           ELSE 1024 * ((v.value + 16) // 1024) - v.value END) AS BIGINT)
        |    AS n_pieces,
        |  CAST(SUM(CASE WHEN length(t.w) > $MaxLen THEN 0
-       |           ELSE (v.value + 16) $idiv 1024 END) AS BIGINT) AS score
+       |           ELSE (v.value + 16) // 1024 END) AS BIGINT) AS score
        |FROM words t LEFT JOIN wv v ON v.w = t.w
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -287,9 +280,7 @@ object Unigram {
     * frequency-weighted usage agg. `sfx` suffixes every CTE name;
     * `selName` is the piece table (columns p, v) the walk segments
     * against. Yields `usage$sfx(piece, used)`. */
-  private def walkCtes(sfx: String, selName: String, duck: Boolean): String = {
-    val un = if (duck) "unnest" else "explode"
-    val steps = if (duck) s"range(1, ${MaxLen + 1})" else s"sequence(1, $MaxLen)"
+  private def walkCtes(sfx: String, selName: String): String = {
     val pCols = (0 to MaxLen).map(j => s"p$j")
     // forward chain carrying the full dp vector: dpf_k adds p_k
     val dpfs = (1 to MaxLen).map { k =>
@@ -349,16 +340,16 @@ object Unigram {
        |$bks,
        |em_pieces$sfx AS (
        |  SELECT b.w, $unpivot AS p
-       |  FROM bk$sfx$MaxLen b CROSS JOIN (SELECT $un($steps) AS i) gi),
+       |  FROM bk$sfx$MaxLen b CROSS JOIN (SELECT unnest(range(1, ${MaxLen + 1})) AS i) gi),
        |usage$sfx AS (
        |  SELECT e.p AS piece, CAST(SUM(f.f) AS BIGINT) AS used
        |  FROM em_pieces$sfx e JOIN wf f ON f.w = e.w
        |  WHERE e.p IS NOT NULL GROUP BY 1)""".stripMargin
   }
 
-  private def emSql(idiv: String, duck: Boolean): String = {
-    s"""WITH ${prefixSql(duck)},
-       |${walkCtes("", "sel", duck)},
+  private def emSql: String =
+    s"""WITH $prefixSql,
+       |${walkCtes("", "sel")},
        |sel2 AS (
        |  SELECT piece, used,
        |    ROW_NUMBER() OVER (ORDER BY used * (length(piece) - 1) DESC, piece) AS rnk2
@@ -366,29 +357,30 @@ object Unigram {
        |SELECT CAST(s.rnk AS INT) AS rnk, s.p AS piece, s.cnt,
        |  CAST(COALESCE(u.used, 0) AS BIGINT) AS used,
        |  CAST(u.rnk2 AS INT) AS rnk2,
-       |  CAST((1000000 * u.used) $idiv (SELECT CAST(SUM(used) AS BIGINT) FROM sel2)
+       |  CAST((1000000 * u.used) // (SELECT CAST(SUM(used) AS BIGINT) FROM sel2)
        |    AS BIGINT) AS prob2_ppm
        |FROM sel s LEFT JOIN sel2 u ON u.piece = s.p
        |ORDER BY rnk""".stripMargin
-  }
 
   /** q243's oracle: the shared encode chain aggregated at q230's host
     * key instead of per doc — tokenizer FERTILITY (pieces per word) by
     * domain, the corpus-noise signal tokenizer papers report per source
-    * (noisy hosts segment into more pieces per word). */
-  private def fertilitySql(idiv: String, duck: Boolean): String = {
+    * (noisy hosts segment into more pieces per word). `duck` is the one
+    * structural switch: DuckDB's `||` casts the integer host id to text,
+    * Spark's needs `concat`. */
+  private def fertilitySql(duck: Boolean): String = {
     val host =
       if (duck) "'www.site' || ((t.doc_id // 4) % 5) || '.com'"
-      else "concat('www.site', (t.doc_id div 4) % 5, '.com')"
+      else "concat('www.site', (t.doc_id // 4) % 5, '.com')"
     val pieces =
       s"""SUM(CASE WHEN length(t.w) > $MaxLen THEN length(t.w)
-         |      ELSE 1024 * ((v.value + 16) $idiv 1024) - v.value END)""".stripMargin
-    s"""WITH ${chainSql(duck)}
+         |      ELSE 1024 * ((v.value + 16) // 1024) - v.value END)""".stripMargin
+    s"""WITH $chainSql
        |SELECT $host AS host,
        |  COUNT(DISTINCT t.doc_id) AS n_docs,
        |  COUNT(*) AS n_words,
        |  CAST($pieces AS BIGINT) AS n_pieces,
-       |  CAST((1000 * $pieces) $idiv COUNT(*) AS BIGINT) AS fert_pm
+       |  CAST((1000 * $pieces) // COUNT(*) AS BIGINT) AS fert_pm
        |FROM words t LEFT JOIN wv v ON v.w = t.w
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
@@ -399,7 +391,7 @@ object Unigram {
     // q235: the training job — measure substring counting + selection,
     // refresh the artifact cache, surface the piece table with its
     // integer-scaled unigram probabilities.
-    Entry("q235_unigram_train", trainSql("//", duck = true)) { (s, d) =>
+    Entry("q235_unigram_train", trainSql) { (s, d) =>
       import s.implicits._
       val rs = train(s, d)
       cache.put(d, rs)
@@ -407,11 +399,11 @@ object Unigram {
       rs.map(r => (r.rnk, r.piece, r.cnt, 1000000L * r.cnt / total))
         .toDF("rnk", "piece", "cnt", "prob_ppm")
         .orderBy(col("rnk"))
-    }.sqlTwin(trainSql("div", duck = false)),
+    },
 
     // q236: the apply path — per-DISTINCT-word integer Viterbi under the
     // broadcast piece table, then one corpus equi-join + per-doc sum.
-    Entry("q236_unigram_encode", encodeSql("//", duck = true)) { (s, d) =>
+    Entry("q236_unigram_encode", encodeSql) { (s, d) =>
       import s.implicits._
       val pv = rules(s, d).map(r => r.piece -> r.v).toMap
       val wordVals = TokenIndex.words(s, d).select(col("w")).distinct()
@@ -426,7 +418,7 @@ object Unigram {
         .agg(count(lit(1)).as("n_words"),
           sum(col("n")).as("n_pieces"), sum(col("s")).as("score"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(encodeSql("div", duck = false)),
+    },
 
     // q241: one hard-EM (Viterbi) round over the seed inventory — the
     // refinement loop SentencePiece actually runs (Kudo, ACL 2018 §3.2;
@@ -440,7 +432,7 @@ object Unigram {
     // probabilities over survivors. Vocab-sized work end-to-end (the
     // corpus is never re-read): one wf agg + a per-word compiled kernel
     // + one O(V) usage agg; the output is the V-row fate table.
-    Entry("q241_unigram_em", emSql("//", duck = true)) { (s, d) =>
+    Entry("q241_unigram_em", emSql) { (s, d) =>
       import s.implicits._
       val rs = rules(s, d)
       val pv = rs.map(r => r.piece -> r.v).toMap
@@ -461,7 +453,7 @@ object Unigram {
           if (u > 0) Some(1000000L * u / totalUsed) else None)
       }.toDF("rnk", "piece", "cnt", "used", "rnk2", "prob2_ppm")
         .orderBy(col("rnk"))
-    }.sqlTwin(emSql("div", duck = false)),
+    },
 
     // q243: tokenizer FERTILITY by host — pieces-per-word at q230's
     // domain key, the per-source corpus-noise signal tokenizer reports
@@ -472,7 +464,7 @@ object Unigram {
     // word-keyed join, and the rollup is ONE host-keyed agg (q230's
     // posture — O(hosts) output, integer per-mille fertility so the
     // rollup is order-independent and hash-exact).
-    Entry("q243_token_fertility", fertilitySql("//", duck = true)) { (s, d) =>
+    Entry("q243_token_fertility", fertilitySql(duck = true)) { (s, d) =>
       import s.implicits._
       val pv = rules(s, d).map(r => r.piece -> r.v).toMap
       val wordVals = TokenIndex.words(s, d).select(col("w")).distinct()
@@ -489,6 +481,6 @@ object Unigram {
           sum(col("n")).as("n_pieces"),
           expr("CAST((1000 * SUM(n)) div COUNT(*) AS BIGINT)").as("fert_pm"))
         .orderBy(col("host"))
-    }.sqlTwin(fertilitySql("div", duck = false))
+    }.sqlTwin(Dialect.duckToSpark(fertilitySql(duck = false)))
   )
 }

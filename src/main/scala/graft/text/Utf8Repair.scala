@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Entry
+import graft.queries.{Dialect, Entry}
 
 /** Byte-level UTF-8 validation + repair (SURVEY.md Q206) — the encoding
   * screen every crawl-derived training corpus runs before any text op:
@@ -128,13 +128,13 @@ object Utf8Repair {
   case class RepairRow(doc_id: Long, n_bytes_in: Long, n_invalid: Int, rep: String)
 
   /** The oracle rebuilds the repaired string with substr/concat: segment
-    * boundaries at i*n/(k+1) code points, one U+FFFD per injection —
-    * dialect-parameterized on integer division and on how the
-    * replacement char is spelled (DuckDB `chr` is code-point;
-    * Spark's `chr` is mod-256 ASCII, so the twin embeds the literal). */
-  private def utf8Sql(idiv: String, octetLen: String => String,
+    * boundaries at i*n/(k+1) code points, one U+FFFD per injection.
+    * The byte-level functions are structural switches: DuckDB `chr` is
+    * code-point while Spark's `chr` is mod-256 ASCII, so the twin embeds
+    * the literal, and the twin hashes the UTF-8 encoding explicitly. */
+  private def utf8Sql(octetLen: String => String,
                       md5Of: String => String, rep: String): String = {
-    def b(i: Int, m: Int) = s"(($i*n) $idiv $m)"
+    def b(i: Int, m: Int) = s"(($i*n) // $m)"
     s"""WITH t AS (SELECT doc_id, text, CAST(doc_id % 4 AS INT) AS k,
       |                  length(text) AS n
       |           FROM documents),
@@ -163,7 +163,7 @@ object Utf8Repair {
     // md5(repaired) equality proves byte-exact repair cross-engine.
     // Map-only, no shuffle before the output sort.
     Entry("q206_utf8_repair",
-      utf8Sql("//", t => s"octet_length(CAST($t AS BLOB))", r => s"md5($r)", "chr(65533)")) { (s, d) =>
+      utf8Sql(t => s"octet_length(CAST($t AS BLOB))", r => s"md5($r)", "chr(65533)")) { (s, d) =>
       import s.implicits._
       T(s, d, "documents")
         .select(col("doc_id"), col("text"))
@@ -178,8 +178,8 @@ object Utf8Repair {
           length(col("rep")).cast("bigint").as("n_chars_out"),
           md5(encode(col("rep"), "UTF-8")).as("rep_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      utf8Sql("div", t => s"octet_length(encode($t, 'UTF-8'))",
-        r => s"md5(encode($r, 'UTF-8'))", "'\ufffd'"))
+    }.sqlTwin(Dialect.duckToSpark(
+      utf8Sql(t => s"octet_length(encode($t, 'UTF-8'))",
+        r => s"md5(encode($r, 'UTF-8'))", "'\ufffd'")))
   )
 }

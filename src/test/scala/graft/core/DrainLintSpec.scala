@@ -11,13 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * temp-dir + JVM-exit-hook pattern only in the scratch registry
   * ([[Staging.scratchDir]]), and intermediate materialization only in
   * [[Staging]]. A new hand-rolled drain loop, temp dir or persist fails
-  * here instead of growing another copy to keep in step. */
+  * here instead of growing another copy to keep in step. The temp-dir
+  * rule also scans `src/test/scala`: a spec's hand-made temp dir is
+  * never deleted, so every full run would leave it behind. */
 class DrainLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
+  private val testRoot = Paths.get("src/test/scala")
 
-  /** (path under src/main/scala, line number, line) of every occurrence. */
-  private def sites(token: String): Seq[(String, Int, String)] = {
+  /** (path under `root`, line number, line) of every occurrence. */
+  private def sites(token: String, root: Path = root): Seq[(String, Int, String)] = {
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     files.flatMap { f: Path =>
@@ -36,6 +39,10 @@ class DrainLintSpec extends AnyFunSuite {
   test("temp dirs and JVM-exit hooks exist once, in the scratch registry") {
     assert(filesOf("Files.createTempDirectory") == Seq("graft/core/Staging.scala"))
     assert(filesOf("sys.addShutdownHook") == Seq("graft/core/Staging.scala"))
+    val inTests = sites("createTempDirectory", testRoot)
+      .filterNot(_._1 == "graft/core/DrainLintSpec.scala")
+    assert(inTests.isEmpty,
+      "specs must take temp dirs from Staging.scratchDir:\n" + inTests.mkString("\n"))
   }
 
   test("awaitTermination only in Drain and Ingest.stopGracefully") {
@@ -49,7 +56,7 @@ class DrainLintSpec extends AnyFunSuite {
 
   test("materialization lives only in Staging; nothing calls clearCache()") {
     val found = Seq(".persist(", ".cache()", "localCheckpoint(", ".unpersist(", ".checkpoint(")
-      .flatMap(sites).filterNot(_._1 == "graft/core/Staging.scala")
+      .flatMap(sites(_)).filterNot(_._1 == "graft/core/Staging.scala")
     // the one exception: LinkGraph's Reliable mode checkpoints each
     // fixpoint round to the configured DFS dir (CheckpointModeSpec)
     val (reliable, rest) = found.partition { case (f, _, line) =>

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -59,10 +57,9 @@ class VerifyDumpSpec extends GraftSuite {
   }
 
   test("dumped parquet footer is naive timestamp[us] with identical values") {
-    val dir = Files.createTempDirectory("verify_dump").toFile
-    dir.deleteOnExit()
+    val dir = Staging.scratchDir("verify_dump")
     val df = spark.read.parquet(s"$sf/events.parquet").select("event_id", "ts")
-    val out = s"${dir.getAbsolutePath}/q_ts"
+    val out = s"$dir/q_ts"
     graft.Verify.canonicalize(df).coalesce(1).write.mode("overwrite").parquet(out)
 
     val flags = timestampFlags(out)

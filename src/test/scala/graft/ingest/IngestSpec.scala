@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.model.ChangeLog
 import graft.sync.DocSync
 
@@ -21,7 +21,7 @@ class IngestSpec extends GraftSuite {
     // startup doesn't mask the actual replay rate
     val events = Tables(spark, sf01, "events")
     val log = ChangeLog.fromEvents(events)
-    val src = Files.createTempDirectory("graft_ingest_src").toString
+    val src = Staging.scratchDir("graft_ingest_src")
     log.coalesce(1).write.mode("overwrite").parquet(s"$src/files")
     new java.io.File(s"$src/files").listFiles()
       .filter(_.getName.endsWith(".parquet")).zipWithIndex
@@ -30,8 +30,8 @@ class IngestSpec extends GraftSuite {
 
     val cfg = Ingest.SyncConfig(
       sourceDir = src,
-      stateDir = Files.createTempDirectory("graft_ingest_state").toString,
-      checkpointDir = Files.createTempDirectory("graft_ingest_ckpt").toString,
+      stateDir = Staging.scratchDir("graft_ingest_state"),
+      checkpointDir = Staging.scratchDir("graft_ingest_ckpt"),
       trigger = Trigger.AvailableNow())   // test trigger; prod default is 10 s
 
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -75,8 +75,8 @@ class IngestSpec extends GraftSuite {
 
     val cfg = Ingest.SyncConfig(
       sourceDir = "<memory>",   // unused by startFrom — the seam replaces it
-      stateDir = Files.createTempDirectory("graft_mem_state").toString,
-      checkpointDir = Files.createTempDirectory("graft_mem_ckpt").toString,
+      stateDir = Staging.scratchDir("graft_mem_state"),
+      checkpointDir = Staging.scratchDir("graft_mem_ckpt"),
       trigger = Trigger.AvailableNow())
 
     val q = Ingest.startFrom(spark, ms.toDF(), cfg)
@@ -110,8 +110,8 @@ class IngestSpec extends GraftSuite {
 
     val cfg = Ingest.SyncConfig(
       sourceDir = "<kafka-wire>",
-      stateDir = Files.createTempDirectory("graft_json_state").toString,
-      checkpointDir = Files.createTempDirectory("graft_json_ckpt").toString,
+      stateDir = Staging.scratchDir("graft_json_state"),
+      checkpointDir = Staging.scratchDir("graft_json_ckpt"),
       trigger = Trigger.AvailableNow())
 
     val q = Ingest.startFrom(spark,
@@ -128,7 +128,7 @@ class IngestSpec extends GraftSuite {
     def ev(key: String, seq: Long, v: String) =
       ChangeEvent("PUT", key, seq, new java.sql.Timestamp(0), Seq(Cell("f", "q", v)))
 
-    val src = Files.createTempDirectory("graft_stop_src").toString
+    val src = Staging.scratchDir("graft_stop_src")
     def addFile(i: Int, evs: Seq[ChangeEvent]): Unit = {
       spark.createDataset(evs).toDF().coalesce(1).write.parquet(s"$src/b$i")
       new java.io.File(s"$src/b$i").listFiles().filter(_.getName.endsWith(".parquet"))
@@ -140,8 +140,8 @@ class IngestSpec extends GraftSuite {
 
     val cfg = Ingest.SyncConfig(
       sourceDir = src,
-      stateDir = Files.createTempDirectory("graft_stop_state").toString,
-      checkpointDir = Files.createTempDirectory("graft_stop_ckpt").toString,
+      stateDir = Staging.scratchDir("graft_stop_state"),
+      checkpointDir = Staging.scratchDir("graft_stop_ckpt"),
       trigger = Trigger.AvailableNow())
 
     // first run drains both files; stopGracefully after termination is a no-op

@@ -21,6 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *      rewrite must leave every literal byte-identical and still apply
   *      renames outside (so the guard is not accidentally vacuous).
   *
+  * "Rule token" covers the pattern rule too: firing instances of
+  * `unnest(range(..))` with integer-literal bounds ride every property
+  * next to the literal renames.
+  *
   * Pure string-level — no SparkSession, runs in milliseconds.
   */
 class DialectFuzzSpec extends AnyFunSuite {
@@ -45,8 +49,21 @@ class DialectFuzzSpec extends AnyFunSuite {
     (m.map(mm => mm.matched.substring(1, mm.matched.length - 1)), unterminated)
   }
 
-  private val quoteFreeTokens: Seq[String] =
-    Dialect.rules.map(_._1).filterNot(_.contains("'"))
+  private val renames: Seq[Dialect.Rename] = Dialect.rules.collect { case r: Dialect.Rename => r }
+
+  private val quoteFreeRenames: Seq[String] = renames.map(_.from).filterNot(_.contains("'"))
+
+  /** Firing instances of [[Dialect.UnnestRange]]: either case of
+    * `unnest`, one- or two-argument form, non-empty range. */
+  private val rangeToken: Gen[String] = for {
+    un <- Gen.oneOf("unnest", "UNNEST")
+    lo <- Gen.chooseNum(0, 50)
+    n <- Gen.chooseNum(1, 50)
+    twoArg <- Gen.oneOf(true, false)
+  } yield if (twoArg) s"$un(range($lo, ${lo + n}))" else s"$un(range($n))"
+
+  private val quoteFreeToken: Gen[String] =
+    Gen.frequency(quoteFreeRenames.size -> Gen.oneOf(quoteFreeRenames), 3 -> rangeToken)
 
   // quote soup: heavy on the characters that stress region boundaries
   private val soupChar: Gen[String] = Gen.frequency(
@@ -54,7 +71,7 @@ class DialectFuzzSpec extends AnyFunSuite {
     3 -> Gen.const("''"),
     4 -> Gen.alphaChar.map(_.toString),
     2 -> Gen.oneOf(" ", "(", ")", ",", "="),
-    2 -> Gen.oneOf(quoteFreeTokens))
+    2 -> quoteFreeToken)
   private val soup: Gen[String] =
     Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, soupChar)).map(_.mkString)
 
@@ -87,7 +104,7 @@ class DialectFuzzSpec extends AnyFunSuite {
 
   test("every quote-free rule token inside any literal is rejected, anywhere in the statement") {
     val cases = for {
-      tok <- Gen.oneOf(quoteFreeTokens)
+      tok <- quoteFreeToken
       pre <- litBody; post <- litBody
       head <- litBody // a harmless literal BEFORE the poisoned one
     } yield (tok, s"SELECT a, '$head' FROM t WHERE b = '$pre$tok$post' ORDER BY a")
@@ -99,14 +116,14 @@ class DialectFuzzSpec extends AnyFunSuite {
 
   test("accepted statements: literals byte-identical, renames applied outside") {
     val cases = for {
-      tok <- Gen.oneOf(quoteFreeTokens)
+      tok <- quoteFreeToken
       lit1 <- litBody; lit2 <- litBody
     } yield (tok, s"SELECT $tok x), '$lit1' FROM t WHERE c <> '$lit2'")
     samples(cases, 500).foreach { case (tok, sql) =>
       val out = Dialect.duckToSpark(sql)
       assert(Dialect.literalsOf(out) == Dialect.literalsOf(sql),
         s"rewrite touched a literal: <$sql> -> <$out>")
-      assert(!out.contains(tok) || Dialect.rules.exists(r => r._1 == tok && r._2.contains(tok)),
+      assert(!out.contains(tok) || renames.exists(r => r.from == tok && r.to.contains(tok)),
         s"rename not applied outside literals: <$sql> -> <$out>")
     }
   }
@@ -150,8 +167,8 @@ class DialectFuzzSpec extends AnyFunSuite {
     // reshaped any other literal would surface here structurally even if
     // fixture data happened to agree.
     def masked(sql: String): List[String] = {
-      val cleaned = Dialect.rules.foldLeft(sql) { case (acc, (from, to)) =>
-        acc.replace(from, " ").replace(to, " ")
+      val cleaned = renames.foldLeft(sql) { (acc, r) =>
+        acc.replace(r.from, " ").replace(r.to, " ")
       }
       Dialect.literalsOf(cleaned).filter(_.nonEmpty).sorted
     }
@@ -164,5 +181,55 @@ class DialectFuzzSpec extends AnyFunSuite {
       assert(masked(twin) == masked(oracle),
         s"${e.name}: literal regions changed through the bridge")
     }
+  }
+
+  test("range rule: integer-literal unnest(range(..)) becomes explode(sequence(..)), both cases") {
+    val cases = Seq(
+      "SELECT unnest(range(16)) AS i" -> "SELECT explode(sequence(0, 15)) AS i",
+      "SELECT UNNEST(range(13)) AS x" -> "SELECT explode(sequence(0, 12)) AS x",
+      "SELECT unnest(range(1)) AS x" -> "SELECT explode(sequence(0, 0)) AS x",
+      "SELECT unnest(range(2, 5)) AS l" -> "SELECT explode(sequence(2, 4)) AS l",
+      "SELECT UNNEST(range(1, 12)) AS i" -> "SELECT explode(sequence(1, 11)) AS i",
+      "SELECT UNNEST(range(4,9)) AS i" -> "SELECT explode(sequence(4, 8)) AS i")
+    cases.foreach { case (in, want) =>
+      assert(Dialect.UnnestRange(in) == want, s"pattern rule on <$in>")
+      assert(Dialect.duckToSpark(in) == want, s"bridge on <$in>")
+    }
+    // the computed bound, not the text, decides: N-1 over the whole int range drawn
+    samples(for { lo <- Gen.chooseNum(0, 100000); n <- Gen.chooseNum(1, 100000) }
+        yield (lo, n), 300).foreach { case (lo, n) =>
+      assert(Dialect.duckToSpark(s"SELECT UNNEST(range($lo, ${lo + n})) AS v") ==
+        s"SELECT explode(sequence($lo, ${lo + n - 1})) AS v")
+    }
+  }
+
+  test("range rule: empty ranges stay untouched (Spark's sequence would run descending)") {
+    Seq("SELECT unnest(range(0)) AS i", "SELECT UNNEST(range(0)) AS i",
+        "SELECT unnest(range(5, 5)) AS i", "SELECT UNNEST(range(7, 3)) AS i").foreach { sql =>
+      assert(Dialect.UnnestRange(sql) == sql, s"pattern rule fired on empty range <$sql>")
+      assert(!Dialect.duckToSpark(sql).contains("sequence"), s"bridge derived a sequence for <$sql>")
+    }
+  }
+
+  test("range rule: non-literal bounds stay untouched") {
+    Seq("SELECT unnest(range(size(ws) - 15)) AS i",
+        "SELECT UNNEST(range(n)) AS i",
+        "SELECT unnest(range(len(ws))) AS pos",
+        "SELECT unnest(range(1, len(ws))) AS pos").foreach { sql =>
+      assert(Dialect.UnnestRange(sql) == sql, s"pattern rule fired on <$sql>")
+      assert(!Dialect.duckToSpark(sql).contains("sequence"), s"bridge derived a sequence for <$sql>")
+    }
+  }
+
+  test("range rule: its token inside a string literal is rejected, an empty range's is not") {
+    Seq("UNNEST(range(3))", "UNNEST(range(1, 12))", "unnest(range(8))").foreach { tok =>
+      val e = intercept[IllegalArgumentException](
+        Dialect.duckToSpark(s"SELECT 'x $tok y' AS s, UNNEST(range(2)) AS i"))
+      assert(e.getMessage.contains(tok), s"reject must name <$tok>: ${e.getMessage}")
+    }
+    // an empty range is never rewritten, so quoting one corrupts nothing
+    assert(Dialect.UnnestRange.hits("UNNEST(range(0))").isEmpty)
+    assert(Dialect.duckToSpark("SELECT 'UNNEST(range(5, 5))' AS s") ==
+      "SELECT 'UNNEST(range(5, 5))' AS s")
   }
 }

@@ -31,8 +31,8 @@ class GeoSpec extends GraftSuite {
     val rows = spark.range(1, 500).toDF("c_custkey")
       .select(col("c_custkey"),
         expr(Geo.latSql).as("lat"), expr(Geo.lonSql).as("lon"),
-        expr(Geo.geohashBitsSql("div", p)).as("bits"))
-      .selectExpr("c_custkey", "lat", "lon", Geo.geohashCharsSql("div", p) + " AS gh")
+        expr(Dialect.duckToSpark(Geo.geohashBitsSql(p))).as("bits"))
+      .selectExpr("c_custkey", "lat", "lon", Dialect.duckToSpark(Geo.geohashCharsSql(p)) + " AS gh")
       .collect()
     rows.foreach { r =>
       val want = canonical(r.getDouble(1), r.getDouble(2), p)

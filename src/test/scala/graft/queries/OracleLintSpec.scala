@@ -127,6 +127,24 @@ class OracleLintSpec extends AnyFunSuite {
       s"stale allowlist rows (entry gone or cleaned up — remove them): ${stale.mkString(", ")}")
   }
 
+  test("no explicit twin repeats the dialect bridge") {
+    // An `Entry.sqlTwin` exists for a STRUCTURAL gap the bridge cannot
+    // derive; one that equals the bridge's own output (whitespace
+    // aside) is a second hand-kept copy of the oracle that drifts
+    // silently when the oracle changes. Delete it and let the bridge
+    // derive the twin.
+    def norm(sql: String): String = sql.replaceAll("\\s+", " ").trim
+    val repeats = for {
+      e <- graft.SparkEntry.allEntries if !graft.SparkEntry.bridgedTwins(e.name)
+      twin <- e.sparkSqlOverride
+      oracle <- e.oracle
+      bridged <- scala.util.Try(Dialect.duckToSpark(oracle)).toOption
+      if norm(bridged) == norm(twin)
+    } yield e.name
+    assert(repeats.isEmpty,
+      s"explicit sqlTwin equals Dialect.duckToSpark(oracle) — drop the twin: ${repeats.mkString(", ")}")
+  }
+
   test("the lint flags the pre-fix q244 fragment (regression self-test)") {
     // the exact round-14 defect text this audit exists to catch
     val preFix = "GREATEST(CAST(cab AS DOUBLE) - 0.75, 0.0) / c1 + ((0.75 * n1p) / c1)"

@@ -1,11 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSuite, SparkEntry}
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 
 /** At-rest layout + physical-strategy evidence for the 100 TB posture
   * (SURVEY.md §4.3): the fixtures are single files, but the production
@@ -16,7 +14,7 @@ import graft.core.Tables
 class PhysicalLayoutSpec extends GraftSuite {
 
   test("date-partitioned layout: day filter prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft_part_events").toString
+    val dir = Staging.scratchDir("graft_part_events")
     Tables(spark, sf, "events")
       .withColumn("day", date_trunc("day", col("ts")).cast("date"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)

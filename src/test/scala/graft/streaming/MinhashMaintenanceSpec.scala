@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.GraftSuite
+import graft.core.Staging
 import graft.text.TokenIndex
 
 /** q263's claim: the incrementally-maintained MinHash signature table IS
@@ -28,7 +27,7 @@ class MinhashMaintenanceSpec extends GraftSuite {
 
   test("maintained signatures equal the batch-built artifact; replay is idempotent") {
     val src = Streams.stageQ158(spark, sf)
-    val out = Files.createTempDirectory("graft_mhidx_spec_out").toString
+    val out = Staging.scratchDir("graft_mhidx_spec_out")
     Streams.minhashDrain(spark, src, out)
 
     val maintained = sigRows(out)

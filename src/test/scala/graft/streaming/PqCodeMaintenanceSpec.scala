@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.GraftSuite
+import graft.core.Staging
 import graft.vector.VectorIndex
 
 /** q271's claim: the incrementally-maintained PQ-codes table IS the staged
@@ -23,7 +22,7 @@ class PqCodeMaintenanceSpec extends GraftSuite {
 
   test("maintained PQ codes equal the batch-encoded artifact; replay is idempotent") {
     val src = Streams.stageQ195(spark, sf)
-    val out = Files.createTempDirectory("graft_pqcode_spec_out").toString
+    val out = Staging.scratchDir("graft_pqcode_spec_out")
     Streams.pqCodeDrain(spark, sf, src, out)
 
     val maintained = codes(out)

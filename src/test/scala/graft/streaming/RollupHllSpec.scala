@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 
 /** The rollup's mergeable HLL sketch column (q183_rollup_cardinality):
   * distinct-count served from stored sketch partials must (a) track the
@@ -20,10 +18,10 @@ class RollupHllSpec extends GraftSuite {
 
   private def drained(): (String, String) = {
     val events = Tables(spark, sf, "events")
-    val src = Files.createTempDirectory("graft_hll_src").toString
+    val src = Staging.scratchDir("graft_hll_src")
     (0 to 2).foreach(i =>
       Streams.writeOrderedFile(events.filter(col("event_id") % 3 === i), src, i))
-    val out = Files.createTempDirectory("graft_hll_out").toString
+    val out = Staging.scratchDir("graft_hll_out")
     Streams.rollupDrain(spark, src, out)
     (src, out)
   }

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 
 /** The rollup's log-bucketed histogram column (q183_rollup_percentiles):
   * percentiles served from stored bucket-count partials must (a) land
@@ -18,10 +16,10 @@ class RollupPctlSpec extends GraftSuite {
 
   private def drained(): String = {
     val events = Tables(spark, sf, "events")
-    val src = Files.createTempDirectory("graft_pctl_src").toString
+    val src = Staging.scratchDir("graft_pctl_src")
     (0 to 2).foreach(i =>
       Streams.writeOrderedFile(events.filter(col("event_id") % 3 === i), src, i))
-    val out = Files.createTempDirectory("graft_pctl_out").toString
+    val out = Staging.scratchDir("graft_pctl_out")
     Streams.rollupDrain(spark, src, out)
     out
   }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 
 /** q183's exactly-once claim rests on idempotent replay, not a stateful
   * store: a batch writes ONLY its own `batch=<id>` partition, so
@@ -21,9 +19,9 @@ class RollupReplaySpec extends GraftSuite {
 
   test("full replay into the same rollup dir changes nothing") {
     val events = Tables(spark, sf, "events")
-    val src = Files.createTempDirectory("graft_rollup_replay_src").toString
+    val src = Staging.scratchDir("graft_rollup_replay_src")
     (0 to 2).foreach(i => Streams.writeOrderedFile(events.filter(col("event_id") % 3 === i), src, i))
-    val out = Files.createTempDirectory("graft_rollup_replay_out").toString
+    val out = Staging.scratchDir("graft_rollup_replay_out")
 
     Streams.rollupDrain(spark, src, out)
     val first = Streams.rollupMerge(spark, out).collect().toSeq
@@ -43,9 +41,9 @@ class RollupReplaySpec extends GraftSuite {
 
   private def drained(): (String, Seq[org.apache.spark.sql.Row]) = {
     val events = Tables(spark, sf, "events")
-    val src = Files.createTempDirectory("graft_compact_src").toString
+    val src = Staging.scratchDir("graft_compact_src")
     (0 to 2).foreach(i => Streams.writeOrderedFile(events.filter(col("event_id") % 3 === i), src, i))
-    val out = Files.createTempDirectory("graft_compact_out").toString
+    val out = Staging.scratchDir("graft_compact_out")
     Streams.rollupDrain(spark, src, out)
     (out, Streams.rollupMerge(spark, out).collect().toSeq)
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.GraftSuite
+import graft.core.Staging
 
 /** q275 — the incremental-dedup serving path: clusters read off the
   * stream-maintained pair store must equal q90's at-rest clustering
@@ -20,7 +21,7 @@ class StreamClusterSpec extends GraftSuite {
     // fresh drain of the same arrival replay must reproduce the
     // maintained store's merged pair set row-for-row.
     import org.apache.spark.sql.functions.col
-    val out = java.nio.file.Files.createTempDirectory("graft_neardup_fresh").toString
+    val out = Staging.scratchDir("graft_neardup_fresh")
     try {
       Streams.neardupDrain(spark, sf, out)
       def pairs(dir: String): Seq[(Long, Long, Double)] =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.model.ChangeLog
 import graft.sync.DocSync
 
@@ -26,9 +26,9 @@ class StreamRestartSpec extends GraftSuite {
     val full = ChangeLog.fromEvents(events)
     val expected = DocSync.flattenDocs(DocSync.fold(full)).collect().toSeq
 
-    val src = Files.createTempDirectory("graft_restart_src").toString
-    val state = Files.createTempDirectory("graft_restart_state").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val src = Staging.scratchDir("graft_restart_src")
+    val state = Staging.scratchDir("graft_restart_state")
+    val ckpt = Staging.scratchDir("graft_restart_ckpt")
     val schema = full.schema
 
     def runOnce(): DataFrame = {
@@ -64,9 +64,9 @@ class StreamRestartSpec extends GraftSuite {
   test("a batch touching one key rewrites only that key's bucket (O(changed) writes)") {
     import graft.model.ChangeLog.{Cell, ChangeEvent}
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_bucket_src").toString
-    val state = Files.createTempDirectory("graft_bucket_state").toString
-    val ckpt = Files.createTempDirectory("graft_bucket_ckpt").toString
+    val src = Staging.scratchDir("graft_bucket_src")
+    val state = Staging.scratchDir("graft_bucket_state")
+    val ckpt = Staging.scratchDir("graft_bucket_ckpt")
 
     def ev(key: String, seq: Long, v: String) =
       ChangeEvent("PUT", key, seq, new java.sql.Timestamp(0), Seq(Cell("f", "q", v)))

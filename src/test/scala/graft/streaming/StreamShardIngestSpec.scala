@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
-import graft.core.Tables
+import graft.core.{Staging, Tables}
 import graft.ingest.Shards
 
 /** q207's arrival semantics pinned at spec scale: incremental shard
@@ -21,9 +19,9 @@ class StreamShardIngestSpec extends GraftSuite {
     val docs = Tables(spark, sf, "documents")
     val nDocs = docs.count()
 
-    val src = Files.createTempDirectory("graft_shardspec_src").toString
-    val out = Files.createTempDirectory("graft_shardspec_out").toString
-    val ckpt = Files.createTempDirectory("graft_shardspec_ckpt").toString
+    val src = Staging.scratchDir("graft_shardspec_src")
+    val out = Staging.scratchDir("graft_shardspec_out")
+    val ckpt = Staging.scratchDir("graft_shardspec_ckpt")
 
     val shards = Shards.shardTable(spark, sf).toDF("shard_id", "bytes").cache()
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.GraftSuite
+import graft.core.Staging
 import graft.vector.VectorIndex
 
 /** q195's claim: the incrementally-maintained cell index IS the staged
@@ -23,7 +22,7 @@ class VectorIndexMaintenanceSpec extends GraftSuite {
 
   test("maintained index equals the batch-built artifact; replay is idempotent") {
     val src = Streams.stageQ195(spark, sf)
-    val out = Files.createTempDirectory("graft_vecidx_spec_out").toString
+    val out = Staging.scratchDir("graft_vecidx_spec_out")
     Streams.vecIndexDrain(spark, sf, src, out)
 
     val maintained = postings(out)

@@ -3,6 +3,7 @@ package graft.sync
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
+import graft.core.Staging
 import graft.model.ChangeLog
 
 /** Snapshot (time-travel) reads over the versioned merge table (q220):
@@ -17,7 +18,7 @@ class SnapshotReadSpec extends GraftSuite {
     DocSync.flattenDocs(df).collect().map(_.mkString("|")).toSet
 
   test("pinned v0 reader survives a later merge; v1 reader sees it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapspec").toString
+    val dir = Staging.scratchDir("graft_snapspec")
     val log = ChangeLog.fromEvents(graft.core.Tables(spark, sf, "events"))
 
     // log-ordered halves (the streaming sink's contract: batch n+1 seqs
@@ -41,7 +42,7 @@ class SnapshotReadSpec extends GraftSuite {
   }
 
   test("a torn version (no _coverage) is invisible to pinned and current reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapspec2").toString
+    val dir = Staging.scratchDir("graft_snapspec2")
     val log = ChangeLog.fromEvents(graft.core.Tables(spark, sf, "events"))
     DocSync.mergeBatch(spark, log, dir, 16)
     val committed = rows(DocSync.docTable(spark, dir))

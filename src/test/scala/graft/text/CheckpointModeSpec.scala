@@ -1,10 +1,9 @@
 package graft.text
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
+import graft.core.Staging
 
 /** The reliable-checkpoint toggle for the iterative graph tier
   * (LinkGraph.CkptMode): `localCheckpoint()` blocks are executor-local
@@ -22,7 +21,7 @@ class CheckpointModeSpec extends GraftSuite {
     // shared across suites — restore the previous dir and delete ours so no
     // state leaks past this spec (r16 advice).
     val prev = spark.sparkContext.getCheckpointDir
-    val dir = Files.createTempDirectory("graft-ckpt").toString
+    val dir = Staging.scratchDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     try body finally {
       prev.foreach(spark.sparkContext.setCheckpointDir)

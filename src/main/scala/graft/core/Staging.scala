@@ -6,6 +6,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftPlans
 
 /** Scratch state: the one materialization policy for intermediates, the
   * one registry of temp dirs, and the ingest-time artifact staging built
@@ -40,10 +41,11 @@ private[graft] object Staging {
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Free a [[materialize]]d frame's blocks now. (`Dataset.unpersist`
-    * does not: a checkpointed frame is not in the CacheManager.) A frame
+    * does not: a checkpointed frame is not in the CacheManager; and
+    * `RDD.unpersist` would log a lineage WARN for every release.) A frame
     * that is not itself materialized is left alone. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD => GraftPlans.unpersist(r.rdd)
     case _ => ()
   }
 

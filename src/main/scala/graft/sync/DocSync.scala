@@ -22,53 +22,54 @@ import graft.model.ChangeLog
   *   4. a Delete removes the whole document (Observer.java:97-108); a later
   *      Put revives it.
   *
-  * The fold is expressed relationally (join + max_by aggregation) rather
-  * than as a per-key in-memory replay: every step is a shuffle-partitionable
-  * DataFrame op, so the same code runs unchanged on a 1000-executor cluster
-  * over a 100 TB change log — there is no per-key array materialization and
-  * no driver-side state.
+  * The fold is one hash aggregation keyed on `rowKey`: each key's events
+  * are collected, sorted by `seq` and replayed by a per-key `aggregate`
+  * (a Delete resets the doc, a Put `map_concat`s its cells, and the
+  * session's pinned `LAST_WIN` map-key dedup makes the later cell win).
+  * It runs as partial + final aggregation around ONE shuffle: no per-cell
+  * rows, no join, no driver-side state. The price is per-key state: one
+  * key's events of ONE input are held as an array — a micro-batch's worth
+  * for the streaming sink, the whole log for [[fold]] (q03 at sf0.1: about
+  * 500 events per key).
   */
 object DocSync {
 
   private val emptyDoc: Column = typedLit(Map.empty[String, String])
 
   /** OP-4 flatten + OP-7 fold of a complete change log to the final
-    * document table `(rowKey: String, doc: Map[String,String])`.
-    *
-    * Plan shape: one small agg for last-delete seqs, a (broadcastable)
-    * left join, one explode, one (rowKey, qualifier) max_by agg, one
-    * map_from_entries collect — all map-side-combinable hash aggregates.
-    */
-  def fold(changeLog: DataFrame): DataFrame = {
-    val lastDel = changeLog.filter(col("op") === "DELETE")
-      .groupBy("rowKey").agg(max("seq").as("del_seq"))
-
-    val liveCells = changeLog.filter(col("op") === "PUT")
-      .join(lastDel, Seq("rowKey"), "left")
-      .filter(col("del_seq").isNull || col("seq") > col("del_seq"))
-      .select(col("rowKey"), col("seq"), posexplode(col("cells")).as(Seq("pos", "cell")))
-
-    // LWW per (rowKey, qualifier): order by (seq, pos-within-put) — the
-    // reference's HashMap.put iteration order made explicit.
-    val lww = liveCells
-      .groupBy(col("rowKey"), col("cell.qualifier").as("qualifier"))
-      .agg(max_by(col("cell.value"), struct(col("seq"), col("pos"))).as("value"))
-
-    lww.groupBy("rowKey")
-      .agg(map_from_entries(collect_list(struct(col("qualifier"), col("value")))).as("doc"))
-  }
+    * document table `(rowKey: String, doc: Map[String,String])`: the
+    * [[foldIncrement]] of the whole log, keeping the keys with a
+    * non-empty doc. Per-key state is the key's whole event history. */
+  def fold(changeLog: DataFrame): DataFrame =
+    foldIncrement(changeLog).filter(size(col("delta")) > 0)
+      .select(col("rowKey"), col("delta").as("doc"))
 
   /** Fold one micro-batch into a per-key increment:
     * `(rowKey, delta: Map, hadDelete: Boolean)` where `delta` holds the
-    * LWW fields written after the batch's last delete (if any). */
+    * LWW fields written after the batch's last delete (if any). Keys
+    * whose events are only cell-less Puts are absent, so they dirty no
+    * bucket.
+    *
+    * Plan shape: one `groupBy(rowKey)` — `array_sort(collect_list(...))`
+    * partial-aggregated before its one shuffle — then a map-only
+    * `aggregate` replay. A Delete sorts after a Put of the same `seq`
+    * (that Put is dead), and ops other than PUT/DELETE are ignored. */
   def foldIncrement(batch: DataFrame): DataFrame = {
-    fold(batch)
-      .join(batch.filter(col("op") === "DELETE").select("rowKey").distinct()
-              .withColumn("hadDelete", lit(true)),
-            Seq("rowKey"), "full")
-      .select(col("rowKey"),
-              coalesce(col("doc"), emptyDoc).as("delta"),
-              coalesce(col("hadDelete"), lit(false)).as("hadDelete"))
+    def state(doc: Column, hadDelete: Column): Column =
+      struct(doc.as("doc"), hadDelete.as("hadDelete"))
+    val events = batch.filter(col("op").isin("PUT", "DELETE"))
+      .groupBy("rowKey")
+      .agg(array_sort(collect_list(struct(col("seq"),
+        (col("op") === "DELETE").as("isDelete"), col("cells")))).as("events"))
+    val replayed = aggregate(col("events"), state(emptyDoc, lit(false)), (acc, e) =>
+      when(e("isDelete"), state(emptyDoc, lit(true)))
+        .otherwise(state(
+          map_concat(acc("doc"), coalesce(map_from_entries(
+            transform(e("cells"), c => struct(c("qualifier"), c("value")))), emptyDoc)),
+          acc("hadDelete"))))
+    events.select(col("rowKey"), replayed.as("s"))
+      .select(col("rowKey"), col("s.doc").as("delta"), col("s.hadDelete").as("hadDelete"))
+      .filter(size(col("delta")) > 0 || col("hadDelete"))
   }
 
   /** OP-7 merge-upsert of a batch increment into the existing doc table.
@@ -135,8 +136,8 @@ object DocSync {
     * Shared by the streaming sink and batch/backfill writers (q220). */
   def mergeBatch(sp: SparkSession, batch: DataFrame, stateDir: String,
                  numBuckets: Int): Unit = {
-    // the two-shuffle fold feeds both the dirty-bucket collect and the
-    // merge: materialize it so it runs once per batch, not twice
+    // the fold feeds both the dirty-bucket collect and the merge:
+    // materialize it so it runs once per batch, not twice
     Staging.using(foldIncrement(batch)
         .withColumn("bucket", bucketOf(col("rowKey"), numBuckets))) { inc =>
       val dirty = inc.select("bucket").distinct()

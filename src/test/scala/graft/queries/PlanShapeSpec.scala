@@ -905,4 +905,21 @@ class PlanShapeSpec extends GraftSuite {
     // codegen spans render as "*(n)" prefixes in the finalized plan
     assert(p.contains("WholeStageCodegen") || p.contains("*("), s"no codegen span:\n$p")
   }
+
+  test("DocSync.foldIncrement: one rowKey-keyed exchange, no Generate, no join") {
+    import spark.implicits._
+    import graft.model.ChangeLog.{Cell, ChangeEvent}
+    val events = (0 until 60).map { i =>
+      if (i % 7 == 0) ChangeEvent("DELETE", s"k${i % 5}", i, new java.sql.Timestamp(0), null)
+      else ChangeEvent("PUT", s"k${i % 5}", i, new java.sql.Timestamp(0),
+        Seq(Cell("f", s"q${i % 3}", i.toString)))
+    }
+    val log = spark.createDataset(spark.sparkContext.parallelize(events, 3)).toDF()
+    val p = graft.sync.DocSync.foldIncrement(log).queryExecution.executedPlan.toString
+    val exchanges = "\\bExchange .*".r.findAllIn(p).toList
+    assert(exchanges.size == 1 && exchanges.head.startsWith("Exchange hashpartitioning(rowKey#"),
+      s"the fold must shuffle once, by rowKey:\n$p")
+    assert(!p.contains("Generate"), s"no per-cell rows:\n$p")
+    assert(!p.contains("Join"), s"no join:\n$p")
+  }
 }

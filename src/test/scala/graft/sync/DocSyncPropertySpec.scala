@@ -28,6 +28,19 @@ class DocSyncPropertySpec extends GraftSuite {
       else ChangeEvent("PUT", k, i.toLong, new java.sql.Timestamp(0), cs)
     })
 
+  /** A log cut into 1-5 contiguous `seq` ranges (some possibly empty),
+    * each batch's rows shuffled: revivals and deletes straddle the cuts. */
+  private def genBatches: Gen[(List[ChangeEvent], List[List[ChangeEvent]])] = for {
+    log <- genLog
+    n <- Gen.choose(0, 4)
+    cuts <- Gen.listOfN(n, Gen.choose(0, log.size))
+    seed <- Gen.long
+  } yield {
+    val bounds = 0 +: cuts.sorted :+ log.size
+    val rnd = new scala.util.Random(seed)
+    (log, bounds.zip(bounds.tail).map { case (a, b) => rnd.shuffle(log.slice(a, b)) })
+  }
+
   /** The obviously-correct model: sequential per-key replay. */
   private def model(log: List[ChangeEvent]): Map[String, Map[String, String]] = {
     val state = scala.collection.mutable.Map.empty[String, Map[String, String]]
@@ -46,6 +59,26 @@ class DocSyncPropertySpec extends GraftSuite {
       val folded = DocSync.fold(df).collect()
         .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
       folded == model(log)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(25).withWorkers(1), prop)
+    assert(res.passed, s"scalacheck: ${res.status}")
+  }
+
+  test("incremental fold + merge over random batch splits == sequential replay model") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val emptyState = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("rowKey", StringType),
+        StructField("doc", MapType(StringType, StringType)))))
+    val prop = Prop.forAll(genBatches) { case (log, batches) =>
+      // 3 input partitions: the fold's partial AND final aggregation run
+      val replayed = batches.foldLeft(emptyState) { (state, b) =>
+        DocSync.merge(state, DocSync.foldIncrement(
+          spark.createDataset(spark.sparkContext.parallelize(b, 3)).toDF()))
+      }.collect().map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
+      replayed == model(log)
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(25).withWorkers(1), prop)

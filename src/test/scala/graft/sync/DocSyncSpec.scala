@@ -30,6 +30,10 @@ class DocSyncSpec extends GraftSuite {
     DocSync.fold(df).collect()
       .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
 
+  private def increment(df: DataFrame): Map[String, (Map[String, String], Boolean)] =
+    DocSync.foldIncrement(df).collect()
+      .map(r => r.getString(0) -> (r.getMap[String, String](1).toMap -> r.getBoolean(2))).toMap
+
   test("family is dropped: doc keyed by qualifier only (Observer.java:74-79)") {
     val d = docs(log(put("k", 1, ("fam_a", "title", "t1"), ("fam_b", "size", "9"))))
     assert(d("k") === Map("title" -> "t1", "size" -> "9"))
@@ -113,5 +117,18 @@ class DocSyncSpec extends GraftSuite {
     val incremental = finalState.collect()
       .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
     assert(incremental === oneShot)
+  }
+
+  test("increment: a key with only cell-less Puts is absent, so it dirties no bucket") {
+    // a wire-decoded Put may carry no cells array at all
+    val noCells = ChangeEvent("PUT", "empty", 2, ts(2), null)
+    val inc = increment(log(put("empty", 1), noCells, put("live", 3, ("f", "a", "1"))))
+    assert(inc === Map("live" -> (Map("a" -> "1") -> false)))
+  }
+
+  test("increment: a key with only a Delete is present, empty delta and hadDelete") {
+    val inc = increment(log(del("gone", 1), put("live", 2, ("f", "a", "1"))))
+    assert(inc === Map("gone" -> (Map.empty[String, String] -> true),
+      "live" -> (Map("a" -> "1") -> false)))
   }
 }

@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 import graft.multimodal.Multimodal.Bmp
 
@@ -27,13 +25,15 @@ import graft.multimodal.Multimodal.Bmp
   * tie rule, and the batch plan. AspectBucketSpec pins the assignment
   * against a direct rational-arithmetic reference and the tie ordering.
   *
-  * Scale posture: decode + assignment are map-only; the plan groupBy
-  * touches 5 bucket rows — O(corpus) scan, O(1) shuffle payload. At
-  * 100 TB the bytes arrive in the binary column; everything else holds.
+  * Scale posture: decode + assignment are one per-payload function
+  * ([[assignRow]]) run by `Dataset.map` through [[Multimodal.decoded]] —
+  * map-only, like every codec entry, so a native decoder swap covers
+  * this entry too (one with per-partition state would bring its own
+  * `mapPartitions` at its call site); the plan groupBy touches 5 bucket
+  * rows — O(corpus) scan, O(1) shuffle payload. At 100 TB the bytes
+  * arrive in the binary column; everything else holds.
   */
 object AspectBuckets {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   /** (label, bn, bd) in priority order; lcm of denominators = 144. */
   val buckets: Seq[(String, Int, Int)] =
@@ -56,17 +56,9 @@ object AspectBuckets {
 
   case class BucketRow(doc_id: Long, bucket: String)
 
-  /** Partition-scoped batch handle — the q196-q214 codec seam, so a
-    * native decoder swap covers this entry like every other one. */
-  object BucketCodec {
-    final class Handle private[BucketCodec] () {
-      def assignBatch(batch: Seq[(Long, Array[Byte])]): Seq[BucketRow] =
-        batch.map { case (id, bytes) =>
-          val img = Bmp.decode(bytes)
-          BucketRow(id, assign(img.w, img.h))
-        }
-    }
-    def open(): Handle = new Handle()
+  def assignRow(id: Long, bytes: Array[Byte]): BucketRow = {
+    val img = Bmp.decode(bytes)
+    BucketRow(id, assign(img.w, img.h))
   }
 
   /** q210's oracle: the same scaled-error argmin as SQL — the ordered
@@ -96,14 +88,7 @@ object AspectBuckets {
     // recomputes assignment AND plan from the dim formulas, so a wrong
     // argmin or tie anywhere shifts a bucket count and fails the hash.
     Entry("q210_aspect_buckets", bucketSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Bmp.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = BucketCodec.open()
-        rows.grouped(64).flatMap(codec.assignBatch)
-      }.toDF()
+      Multimodal.decoded(s, d, 1)(Bmp.encode)(assignRow)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n_images"))
         // integer ceil-division: Column./ is double division, so floor it

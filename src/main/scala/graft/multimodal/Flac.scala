@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 
 /** REAL transform-free lossless-audio decode (SURVEY.md Q282) — the FLAC
@@ -44,8 +42,6 @@ import graft.queries.Entry
   * disappears); no shuffle before the output sort.
   */
 object Flac {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   // ---- deterministic fixture -------------------------------------------
 
@@ -336,17 +332,11 @@ object Flac {
   case class FlacFeature(doc_id: Long, n_samples: Int, sr: Int, bps: Int,
                          pred_order: Int, sum_s: Long, abs_sum: Long)
 
-  object FlacCodec {
-    final class Handle private[FlacCodec] () {
-      def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[FlacFeature] =
-        batch.map { case (id, bytes) =>
-          val f = decodeFlac(bytes)
-          FlacFeature(id, f.samples.length, f.sampleRate, f.bps, f.order,
-            f.samples.map(_.toLong).sum,
-            f.samples.map(s => math.abs(s).toLong).sum)
-        }
-    }
-    def open(): Handle = new Handle()
+  def feature(id: Long, bytes: Array[Byte]): FlacFeature = {
+    val f = decodeFlac(bytes)
+    FlacFeature(id, f.samples.length, f.sampleRate, f.bps, f.order,
+      f.samples.map(_.toLong).sum,
+      f.samples.map(s => math.abs(s).toLong).sum)
   }
 
   /** q282's oracle: FLAC is lossless, so the oracle replays the ORIGINAL
@@ -371,17 +361,7 @@ object Flac {
     // CRCs, rice, predictor reconstruction). Map-only, no shuffle before
     // the output sort.
     Entry("q282_flac_decode", flacSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, encodeFlac(id)))
-      payloads.mapPartitions { rows =>
-        val codec = FlacCodec.open()
-        rows.grouped(64).flatMap(codec.decodeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("sr"), col("bps"),
-                col("pred_order"), col("sum_s"), col("abs_sum"))
-        .orderBy(col("doc_id"))
+      Multimodal.decoded(s, d, 2)(encodeFlac)(feature).orderBy(col("doc_id"))
     }
   )
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Staging, Tables}
+import graft.core.Staging
 import graft.queries.Entry
 import graft.vector.Vectors
 
@@ -35,86 +35,70 @@ import graft.vector.Vectors
   *    (segment = 4i div n); e4 = Σs²/1024; e5 = strict zero
   *    crossings × 1000; e6 = n × 1000; e7 = max|s| × 10.
   *
-  * Scale posture: the embed stage is map-only partition-batched decode
-  * (q155's encoder-session shape — at 100 TB the bytes arrive in the
-  * binary column and the fabrication seam disappears); exact top-k rides
-  * the bounded TopK aggregator (shuffle carries ≤ partitions × queries
-  * × k pairs); the staged IVF variant reads ingest-time artifacts
-  * (centroids + cell labels keyed on the source table's fingerprint, the
-  * VectorIndex posture) so the query pays one label join + the probed
-  * cells, never training.
+  * Scale posture: the embed stage is map-only — [[embedImage]] and
+  * [[embedAudio]] are per-payload functions run by `Dataset.map` through
+  * [[Multimodal.decoded]] (at 100 TB the bytes arrive in the binary
+  * column and the fabrication seam disappears; a real CLIP/CLAP session
+  * with per-partition state would bring its own `mapPartitions` at its
+  * call site); exact top-k rides the bounded TopK aggregator (shuffle
+  * carries ≤ partitions × queries × k pairs); the staged IVF variant
+  * reads ingest-time artifacts (centroids + cell labels keyed on the
+  * source table's fingerprint, the VectorIndex posture) so the query pays
+  * one label join + the probed cells, never training.
   */
 object MmEmbed {
 
   case class MmVec(vec_id: Long, modality: String, embedding: Seq[Double])
 
-  /** Stand-in for a real embedding-model session (CLIP/CLAP-style): a
-    * per-partition handle with batch-in/batch-out methods — swap the
-    * feature arithmetic for real model calls; the Spark plumbing
-    * (partition batching, unified output schema) stays identical. */
-  final class MediaEncoder private[MmEmbed] () {
-    def embedImageBatch(batch: Seq[(Long, Array[Byte])]): Seq[MmVec] =
-      batch.map { case (id, bytes) =>
-        val img = Multimodal.Bmp.decode(bytes)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        val quad = new Array[Long](4)
-        var y = 0
-        while (y < img.h) {
-          var x = 0
-          while (x < img.w) {
-            val (r, g, b) = img.rgb(x, y)
-            sr += r; sg += g; sb += b
-            quad((2 * x / img.w) * 2 + (2 * y / img.h)) += (r + g + b).toLong
-            x += 1
-          }
-          y += 1
-        }
-        MmVec(id, "image", Seq(sr.toDouble, sg.toDouble, sb.toDouble,
-          quad(0).toDouble, quad(1).toDouble, quad(2).toDouble, quad(3).toDouble,
-          (img.w.toLong * img.h * 128).toDouble))
+  /** Stand-in for a real embedding model (CLIP-style) on a decoded
+    * image — swap the feature arithmetic for a real model call; the Spark
+    * plumbing (one typed map, unified output schema) stays identical. */
+  def embedImage(id: Long, bytes: Array[Byte]): MmVec = {
+    val img = Multimodal.Bmp.decode(bytes)
+    var sr = 0L; var sg = 0L; var sb = 0L
+    val quad = new Array[Long](4)
+    var y = 0
+    while (y < img.h) {
+      var x = 0
+      while (x < img.w) {
+        val (r, g, b) = img.rgb(x, y)
+        sr += r; sg += g; sb += b
+        quad((2 * x / img.w) * 2 + (2 * y / img.h)) += (r + g + b).toLong
+        x += 1
       }
-
-    def embedAudioBatch(batch: Seq[(Long, Array[Byte])]): Seq[MmVec] =
-      batch.map { case (id, bytes) =>
-        val wav = Multimodal.Wav.decode(bytes)
-        val n = wav.samples.length
-        val seg = new Array[Long](4)
-        var energy = 0L; var cross = 0L; var maxAbs = 0L
-        var i = 0
-        while (i < n) {
-          val s = wav.samples(i)
-          seg(4 * i / n) += math.abs(s).toLong
-          energy += s.toLong * s
-          if (i >= 1 && s.toLong * wav.samples(i - 1) < 0) cross += 1
-          if (math.abs(s).toLong > maxAbs) maxAbs = math.abs(s).toLong
-          i += 1
-        }
-        MmVec(id, "audio", Seq(seg(0).toDouble, seg(1).toDouble,
-          seg(2).toDouble, seg(3).toDouble, energy.toDouble / 1024.0,
-          cross * 1000.0, n * 1000.0, maxAbs * 10.0))
-      }
+      y += 1
+    }
+    MmVec(id, "image", Seq(sr.toDouble, sg.toDouble, sb.toDouble,
+      quad(0).toDouble, quad(1).toDouble, quad(2).toDouble, quad(3).toDouble,
+      (img.w.toLong * img.h * 128).toDouble))
   }
-  object MediaEncoder { def open(): MediaEncoder = new MediaEncoder() }
+
+  /** The audio face of the same stand-in (CLAP-style), into the same
+    * 8-dim space. */
+  def embedAudio(id: Long, bytes: Array[Byte]): MmVec = {
+    val wav = Multimodal.Wav.decode(bytes)
+    val n = wav.samples.length
+    val seg = new Array[Long](4)
+    var energy = 0L; var cross = 0L; var maxAbs = 0L
+    var i = 0
+    while (i < n) {
+      val s = wav.samples(i)
+      seg(4 * i / n) += math.abs(s).toLong
+      energy += s.toLong * s
+      if (i >= 1 && s.toLong * wav.samples(i - 1) < 0) cross += 1
+      if (math.abs(s).toLong > maxAbs) maxAbs = math.abs(s).toLong
+      i += 1
+    }
+    MmVec(id, "audio", Seq(seg(0).toDouble, seg(1).toDouble,
+      seg(2).toDouble, seg(3).toDouble, energy.toDouble / 1024.0,
+      cross * 1000.0, n * 1000.0, maxAbs * 10.0))
+  }
 
   /** The unified media-embedding view: every image/audio doc decoded and
     * feature-encoded into one `(vec_id, modality, embedding)` space. */
-  def mediaEmbeddings(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables(s, d, "documents")
-    val img = docs.filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-      .map(id => (id, Multimodal.Bmp.encode(id)))
-      .mapPartitions { rows =>
-        val enc = MediaEncoder.open()          // per-partition session init
-        rows.grouped(64).flatMap(enc.embedImageBatch)
-      }
-    val au = docs.filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-      .map(id => (id, Multimodal.Wav.encode(id)))
-      .mapPartitions { rows =>
-        val enc = MediaEncoder.open()
-        rows.grouped(64).flatMap(enc.embedAudioBatch)
-      }
-    img.union(au).toDF()
-  }
+  def mediaEmbeddings(s: SparkSession, d: String): DataFrame =
+    Multimodal.decoded(s, d, 1)(Multimodal.Bmp.encode)(embedImage)
+      .union(Multimodal.decoded(s, d, 2)(Multimodal.Wav.encode)(embedAudio))
 
   /** The media-embedding TABLE as an ingest-time artifact (the TokenIndex
     * argument — ES analyzes text at WRITE time, queries never re-analyze;
@@ -150,10 +134,11 @@ object MmEmbed {
 
   private val QueryIds = Seq(1, 2, 4)   // 1, 4 image; 2 audio — cross-modal
 
-  /** The shared oracle text (the twin is bridged, like
-    * Multimodal.bmpSql's). Feature terms mirror [[MediaEncoder]] verbatim; the cosine
-    * tail mirrors [[Vectors.topK]]'s exact arithmetic — left-associated
-    * dot, norm = sqrt(self-dot), cos = dot / (nrm * qnrm), ROUND 6. */
+  /** The shared oracle text (the twin is bridged, like [[Raster.sql]]'s).
+    * Feature terms mirror [[embedImage]]/[[embedAudio]] verbatim; the
+    * cosine tail mirrors [[Vectors.topK]]'s exact arithmetic —
+    * left-associated dot, norm = sqrt(self-dot), cos = dot / (nrm * qnrm),
+    * ROUND 6. */
   private def topkSql: String = {
     def dotOf(a: String, b: String) =
       (0 until 8).map(i => s"$a.e$i*$b.q$i").mkString(" + ")

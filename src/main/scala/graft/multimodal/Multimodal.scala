@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,19 +13,21 @@ import graft.queries.Entry
   *
   * Media payloads are opaque `binary` columns inside a typed struct
   * `mm(kind, text, bytes, vec)`; modality dispatch is plain `CASE WHEN`
-  * so Catalyst prunes/pushes around it. The decode step is a typed
-  * `mapPartitions` pipeline (batch-shaped like a real image/audio decode).
-  * Two codecs ship: [[Bmp]]/[[RealCodec]] is a REAL BI_RGB BMP
-  * encoder/decoder (q196 — pure byte arithmetic, full header validation,
-  * padded bottom-up row walk, nearest-neighbor resample; oracle-checked
-  * as encoder⁻¹); [[Wav]] (q197), [[Png]] (q198) and [[Jpeg]] (q199 —
-  * JDK `javax.imageio`) are real too, so [[FakeCodec]] remains, clearly
-  * marked, only for formats whose bindings this container genuinely lacks
-  * — with G.711 (q208/q213) and FLAC (q282) real, that is video codecs
-  * and MP3/AAC-class transform audio (MDCT + Huffman + psychoacoustics;
+  * so Catalyst prunes/pushes around it. A codec is a per-payload
+  * function run by `Dataset.map` — [[decoded]] is the one fabricate →
+  * decode path every media entry shares; a binding with per-partition
+  * state (a JNI or ONNX session) would bring its own `mapPartitions` at
+  * its call site. [[Bmp]] is a REAL BI_RGB BMP encoder/decoder (q196 —
+  * pure byte arithmetic, full header validation, padded bottom-up row
+  * walk, nearest-neighbor resample; oracle-checked as encoder⁻¹); [[Wav]]
+  * (q197), [[Png]] (q198), [[Gif]] (q201) and [[Jpeg]] (q199 — JDK
+  * `javax.imageio`) are real too, and every lossless raster decodes to
+  * one [[Raster]]. [[FakeCodec]] remains, clearly marked, only for
+  * formats whose bindings this container genuinely lacks — with G.711
+  * (q208/q213) and FLAC (q282) real, that is video codecs and
+  * MP3/AAC-class transform audio (MDCT + Huffman + psychoacoustics;
   * final disposition, SURVEY Q282) — deriving "features" from byte
-  * lengths only. The Spark-side plumbing (schema, encoders, partition
-  * batching) is shared and real in both paths.
+  * lengths only.
   */
 object Multimodal {
 
@@ -52,42 +56,50 @@ object Multimodal {
   case class MmTransformed(doc_id: Long, kind: String,
                            out_w: Int, out_h: Int, n_sampled: Int)
 
-  /** Stand-in for a real decoder binding (libjpeg/ffmpeg/JNI): stateful
-    * per-partition handle + batch-in/batch-out API. The arithmetic is a
-    * DETERMINISTIC FAKE of decode/resize/frame-sample — swap the bodies
-    * for the real codec calls; the Spark plumbing stays identical. */
-  object FakeCodec {
-    final class Handle private[FakeCodec] () {
-      def decodeBatch(batch: Seq[MmRow]): Seq[MmFeature] =
-        batch.map { r =>
-          val width = 1 + r.n_bytes % 64
-          val height = 1 + r.n_bytes % 48
-          val frames = if (r.kind == "audio") 1 + r.n_bytes % 30 else 1
-          MmFeature(r.doc_id, r.kind, r.n_bytes, width, height, frames)
-        }
+  /** The one decode path of every media entry: each `doc_id % 3 =
+    * residue` document gets a payload fabricated by `enc` (the fixture
+    * corpus carries no media bytes; at 100 TB they arrive in the binary
+    * column instead) and decoded by `dec` in one typed `Dataset.map` —
+    * map-only, no shuffle. */
+  def decoded[P, F <: Product : TypeTag](s: SparkSession, d: String, residue: Int)(
+      enc: Long => P)(dec: (Long, P) => F): DataFrame = {
+    import s.implicits._
+    T(s, d, "documents").filter(col("doc_id") % 3 === residue)
+      .select(col("doc_id")).as[Long]
+      .map(id => dec(id, enc(id)))
+      .toDF()
+  }
 
-      /** Aspect-preserving fit into maxW x maxH (integer floor scaling),
-        * plus uniform frame sampling down to at most maxFrames. */
-      def transformBatch(batch: Seq[MmFeature], maxW: Int, maxH: Int,
-                         maxFrames: Int): Seq[MmTransformed] =
-        batch.map { f =>
-          val (outW, outH) =
-            if (f.width <= maxW && f.height <= maxH) (f.width, f.height)
-            else if (maxW.toLong * f.height <= maxH.toLong * f.width)
-              (maxW, math.max(1, (f.height.toLong * maxW / f.width).toInt))
-            else
-              (math.max(1, (f.width.toLong * maxH / f.height).toInt), maxH)
-          MmTransformed(f.doc_id, f.kind, outW, outH, math.min(maxFrames, f.n_frames))
-        }
+  /** Stand-in for a real decoder binding (libjpeg/ffmpeg/JNI). The
+    * arithmetic is a DETERMINISTIC FAKE of decode/resize/frame-sample —
+    * swap the bodies for the real codec calls; the Spark plumbing stays
+    * identical. */
+  object FakeCodec {
+    def decode(r: MmRow): MmFeature = {
+      val width = 1 + r.n_bytes % 64
+      val height = 1 + r.n_bytes % 48
+      val frames = if (r.kind == "audio") 1 + r.n_bytes % 30 else 1
+      MmFeature(r.doc_id, r.kind, r.n_bytes, width, height, frames)
     }
-    def open(): Handle = new Handle()
+
+    /** Aspect-preserving fit into maxW x maxH (integer floor scaling),
+      * plus uniform frame sampling down to at most maxFrames. */
+    def transform(f: MmFeature, maxW: Int, maxH: Int, maxFrames: Int): MmTransformed = {
+      val (outW, outH) =
+        if (f.width <= maxW && f.height <= maxH) (f.width, f.height)
+        else if (maxW.toLong * f.height <= maxH.toLong * f.width)
+          (maxW, math.max(1, (f.height.toLong * maxW / f.width).toInt))
+        else
+          (math.max(1, (f.width.toLong * maxH / f.height).toInt), maxH)
+      MmTransformed(f.doc_id, f.kind, outW, outH, math.min(maxFrames, f.n_frames))
+    }
   }
 
   /** A REAL image codec for the one raster format that needs no external
     * library: BI_RGB (uncompressed, 24 bpp, bottom-up) Windows BMP — pure
     * byte arithmetic, so the decode path stops being a stub for this
-    * format ([[FakeCodec]] remains, documented, for the lib-bound formats:
-    * JPEG/PNG/audio need bindings this container lacks).
+    * format ([[FakeCodec]] remains, documented, only for the lib-bound
+    * formats).
     *
     * The fixture corpus carries no media bytes, so payloads are FABRICATED
     * deterministically from doc_id (the q87-q89 derived-coordinate
@@ -138,19 +150,9 @@ object Multimodal {
 
     import ByteIo.getLE
 
-    /** A decoded image: header-derived dims + a pixel accessor returning
-      * (r, g, b) with y=0 at the TOP (the decoder hides bottom-up order
-      * and row padding — the part a stub never exercises). */
-    final case class Decoded(w: Int, h: Int, bytes: Array[Byte], offset: Int, rowSize: Int) {
-      def rgb(x: Int, y: Int): (Int, Int, Int) = {
-        val o = offset + (h - 1 - y) * rowSize + 3 * x
-        (bytes(o + 2) & 0xff, bytes(o + 1) & 0xff, bytes(o) & 0xff)
-      }
-    }
-
     /** Parse a BI_RGB 24bpp BMP; every header field the format requires is
       * actually validated, so malformed bytes fail loudly, not garbage-out. */
-    def decode(bytes: Array[Byte]): Decoded = {
+    def decode(bytes: Array[Byte]): Raster.BottomUp = {
       require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M', "not a BMP")
       require(getLE(bytes, 2, 4) == bytes.length, "file-size field mismatch")
       val offset = getLE(bytes, 10, 4)
@@ -160,20 +162,9 @@ object Multimodal {
       require(getLE(bytes, 30, 4) == 0, "not BI_RGB")
       val rowSize = ByteIo.rowSize24(w)
       require(offset + rowSize * h <= bytes.length, "truncated pixel data")
-      Decoded(w, h, bytes, offset, rowSize)
+      Raster.BottomUp(w, h, bytes, offset, rowSize)
     }
-
-    /** Nearest-neighbor resample to outW x outH: source pixel
-      * (x*w / outW, y*h / outH), integer floor — the same rule the oracle
-      * states arithmetically. */
-    def resampleSum(img: Decoded, outW: Int, outH: Int): Long =
-      (for (yo <- 0 until outH; xo <- 0 until outW) yield {
-        val (r, g, b) = img.rgb(xo * img.w / outW, yo * img.h / outH)
-        (r + g + b).toLong
-      }).sum
   }
-
-  case class BmpFeature(doc_id: Long, w: Int, h: Int, lum_sum: Long, rs_sum: Long)
 
   /** The audio twin of [[Bmp]]: RIFF/WAVE PCM (16-bit mono) — the one
     * audio container needing no external library. Same proof shape as
@@ -248,6 +239,13 @@ object Multimodal {
         if (u >= 0x8000) u - 0x10000 else u    // sign-extend LE i16
       }
       DecodedWav(sr, samples)
+    }
+
+    def feature(id: Long, bytes: Array[Byte]): WavFeature = {
+      val wav = decode(bytes)
+      WavFeature(id, wav.samples.length, wav.sampleRate,
+        wav.samples.map(s => math.abs(s).toLong).sum,
+        wav.samples.map(s => s.toLong * s).sum)
     }
   }
 
@@ -355,18 +353,10 @@ object Multimodal {
       out.toByteArray
     }
 
-    /** Decoded image, `pix` top-down packed RGB. */
-    final case class DecodedPng(w: Int, h: Int, pix: Array[Byte]) {
-      def rgb(x: Int, y: Int): (Int, Int, Int) = {
-        val o = (y * w + x) * 3
-        (pix(o) & 0xff, pix(o + 1) & 0xff, pix(o + 2) & 0xff)
-      }
-    }
-
     /** Full critical-chunk parse: CRC-validated walk, IHDR validation,
       * multi-chunk IDAT reassembly, zlib inflate, and the inverse of all
       * five scanline filters. */
-    def decode(bytes: Array[Byte]): DecodedPng = {
+    def decode(bytes: Array[Byte]): Raster.Packed = {
       require(bytes.length >= 8 &&
         signature.indices.forall(i => bytes(i) == signature(i)), "not a PNG")
       var off = 8
@@ -427,15 +417,8 @@ object Multimodal {
           pix(y * stride + i) = (rv & 0xff).toByte
         }
       }
-      DecodedPng(w, h, pix)
+      Raster.Packed(w, h, pix)
     }
-
-    /** Same nearest-neighbor rule as [[Bmp.resampleSum]]. */
-    def resampleSum(img: DecodedPng, outW: Int, outH: Int): Long =
-      (for (yo <- 0 until outH; xo <- 0 until outW) yield {
-        val (r, g, b) = img.rgb(xo * img.w / outW, yo * img.h / outH)
-        (r + g + b).toLong
-      }).sum
   }
 
   /** REAL lossy-raster decode for the most common image format: JPEG via
@@ -562,6 +545,16 @@ object Multimodal {
       * round-trip (per-channel mean error is DC-quantization-bounded;
       * JpegCodecSpec pins the measured envelope, this is ~3x margin). */
     val lumTolerance: Double = 60.0
+
+    /** Dims from OUR segment walk, pixels from the JDK's Huffman+IDCT;
+      * the two must agree on the dims. */
+    def feature(id: Long, bytes: Array[Byte]): JpegFeature = {
+      val (w, h) = headerDims(bytes)
+      val img = decodePixels(bytes)
+      require(img.getWidth == w && img.getHeight == h,
+        s"header walk ($w x $h) disagrees with ImageIO (${img.getWidth} x ${img.getHeight})")
+      JpegFeature(id, w, h, math.abs(meanLum(img) - formulaMeanLum(id)) <= lumTolerance)
+    }
   }
 
   /** REAL palette-raster decode: GIF87a/89a with a from-scratch LZW layer
@@ -776,19 +769,11 @@ object Multimodal {
       out.toByteArray
     }
 
-    /** Decoded image, `pix` top-down packed RGB (PNG's layout). */
-    final case class DecodedGif(w: Int, h: Int, pix: Array[Byte]) {
-      def rgb(x: Int, y: Int): (Int, Int, Int) = {
-        val o = (y * w + x) * 3
-        (pix(o) & 0xff, pix(o + 1) & 0xff, pix(o + 2) & 0xff)
-      }
-    }
-
     /** Full parse: signature, logical screen descriptor, global/local
       * color tables, extension sub-block walk, LZW decode, palette
       * mapping. Every structural field is validated — malformed bytes
       * fail loudly, never garbage-out. */
-    def decode(bytes: Array[Byte]): DecodedGif = {
+    def decode(bytes: Array[Byte]): Raster.Packed = {
       def u8(i: Int): Int = { require(i < bytes.length, "truncated GIF"); bytes(i) & 0xff }
       def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
       val sig = new String(bytes.slice(0, 6), "US-ASCII")
@@ -838,119 +823,23 @@ object Multimodal {
         val (r, g, b) = palette(ci)
         pix(3 * i) = r.toByte; pix(3 * i + 1) = g.toByte; pix(3 * i + 2) = b.toByte
       }
-      DecodedGif(w, h, pix)
+      Raster.Packed(w, h, pix)
     }
 
-    /** Same nearest-neighbor rule as [[Bmp.resampleSum]]. */
-    def resampleSum(img: DecodedGif, outW: Int, outH: Int): Long =
-      (for (yo <- 0 until outH; xo <- 0 until outW) yield {
-        val (r, g, b) = img.rgb(xo * img.w / outW, yo * img.h / outH)
-        (r + g + b).toLong
-      }).sum
+    /** [[rgbAt]]'s channel sum as SQL over (x, y), for the [[Raster.sql]]
+      * oracle: ids % 5 == 0 quantize each channel to {0, 255}. */
+    def lumSql(x: String, y: String): String = {
+      def ch(k1: Int, k2: Int, k3: Int) = {
+        val raw = s"(doc_id*$k1 + ($x)*$k2 + ($y)*$k3) % 256"
+        s"(CASE WHEN doc_id % 5 = 0 THEN (($raw) // 128) * 255 ELSE $raw END)"
+      }
+      s"${ch(31, 7, 13)} + ${ch(17, 11, 5)} + ${ch(23, 3, 19)}"
+    }
   }
-
-  case class GifFeature(doc_id: Long, w: Int, h: Int, lum_sum: Long, rs_sum: Long)
 
   case class JpegFeature(doc_id: Long, w: Int, h: Int, lum_ok: Boolean)
 
-  case class PngFeature(doc_id: Long, w: Int, h: Int, lum_sum: Long, rs_sum: Long)
-
-  /** The real-codec handle: same partition-scoped batch API as
-    * [[FakeCodec]], but the batch methods actually parse bytes. */
-  object RealCodec {
-    final class Handle private[RealCodec] () {
-      def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[BmpFeature] =
-        batch.map { case (id, bytes) =>
-          val img = Bmp.decode(bytes)
-          val lum = (for (y <- 0 until img.h; x <- 0 until img.w) yield {
-            val (r, g, b) = img.rgb(x, y); (r + g + b).toLong
-          }).sum
-          BmpFeature(id, img.w, img.h, lum, Bmp.resampleSum(img, 8, 6))
-        }
-
-      def decodeWavBatch(batch: Seq[(Long, Array[Byte])]): Seq[WavFeature] =
-        batch.map { case (id, bytes) =>
-          val wav = Wav.decode(bytes)
-          WavFeature(id, wav.samples.length, wav.sampleRate,
-            wav.samples.map(s => math.abs(s).toLong).sum,
-            wav.samples.map(s => s.toLong * s).sum)
-        }
-
-      def decodePngBatch(batch: Seq[(Long, Array[Byte])]): Seq[PngFeature] =
-        batch.map { case (id, bytes) =>
-          val img = Png.decode(bytes)
-          val lum = (for (y <- 0 until img.h; x <- 0 until img.w) yield {
-            val (r, g, b) = img.rgb(x, y); (r + g + b).toLong
-          }).sum
-          PngFeature(id, img.w, img.h, lum, Png.resampleSum(img, 8, 6))
-        }
-
-      def decodeGifBatch(batch: Seq[(Long, Array[Byte])]): Seq[GifFeature] =
-        batch.map { case (id, bytes) =>
-          val img = Gif.decode(bytes)
-          val lum = (for (y <- 0 until img.h; x <- 0 until img.w) yield {
-            val (r, g, b) = img.rgb(x, y); (r + g + b).toLong
-          }).sum
-          GifFeature(id, img.w, img.h, lum, Gif.resampleSum(img, 8, 6))
-        }
-
-      def decodeJpegBatch(batch: Seq[(Long, Array[Byte])]): Seq[JpegFeature] =
-        batch.map { case (id, bytes) =>
-          val (w, h) = Jpeg.headerDims(bytes)        // our segment walk
-          val img = Jpeg.decodePixels(bytes)         // JDK Huffman+IDCT
-          require(img.getWidth == w && img.getHeight == h,
-            s"header walk ($w x $h) disagrees with ImageIO (${img.getWidth} x ${img.getHeight})")
-          val lumOk =
-            math.abs(Jpeg.meanLum(img) - Jpeg.formulaMeanLum(id)) <= Jpeg.lumTolerance
-          JpegFeature(id, w, h, lumOk)
-        }
-    }
-    def open(): Handle = new Handle()
-  }
-
-  /** q196's oracle; its `spark.sql` twin is bridged (`UNNEST(range(n))`
-    * → `explode(sequence(0, n-1))`, `//` → `div`). The formula terms
-    * mirror [[Bmp.r]]/[[Bmp.g]]/[[Bmp.b]] verbatim. */
-  private def bmpSql: String = {
-    def lum(x: String, y: String) =
-      s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
-        s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
-    s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 13 AS INT) AS w,
-      |                    CAST(1 + doc_id % 9 AS INT) AS h
-      |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (SELECT UNNEST(range(13)) AS x), ys AS (SELECT UNNEST(range(9)) AS y),
-      |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
-      |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
-      |       FROM img, xo, yo GROUP BY 1)
-      |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
-      |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
-      |ORDER BY i.doc_id""".stripMargin
-  }
-
-  /** q198's oracle: [[bmpSql]]'s shape under PNG dims (1+id%16 x
-    * 1+id%11) — the lum formula terms mirror the shared channel
-    * generators verbatim; only the container differs on the Spark side. */
-  private def pngSql: String = {
-    def lum(x: String, y: String) =
-      s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
-        s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
-    s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 16 AS INT) AS w,
-      |                    CAST(1 + doc_id % 11 AS INT) AS h
-      |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (SELECT UNNEST(range(16)) AS x), ys AS (SELECT UNNEST(range(11)) AS y),
-      |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
-      |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
-      |       FROM img, xo, yo GROUP BY 1)
-      |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
-      |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
-      |ORDER BY i.doc_id""".stripMargin
-  }
-
-  /** q197's oracle, bridged like [[bmpSql]]; the sample
+  /** q197's oracle, bridged like [[Raster.sql]]; the sample
     * term mirrors [[Wav.sample]] verbatim. */
   private def wavSql: String =
     s"""WITH au AS (SELECT doc_id, CAST(16 + doc_id % 50 AS INT) AS n
@@ -963,52 +852,18 @@ object Multimodal {
       |  CAST(SUM(s*s) AS BIGINT) AS energy_sum
       |FROM sm GROUP BY doc_id, n ORDER BY doc_id""".stripMargin
 
-  /** q201's oracle, bridged like [[pngSql]]. The channel
-    * terms mirror [[Gif.rgbAt]] verbatim: the shared generative formulas,
-    * with ids % 5 == 0 quantized to {0, 255} per channel (the narrow-
-    * palette branch that exercises the LZW dictionary and width bumps). */
-  private def gifSql: String = {
-    def ch(k1: Int, k2: Int, k3: Int, x: String, y: String) = {
-      val raw = s"(doc_id*$k1 + ($x)*$k2 + ($y)*$k3) % 256"
-      s"(CASE WHEN doc_id % 5 = 0 THEN (($raw) // 128) * 255 ELSE $raw END)"
-    }
-    def lum(x: String, y: String) =
-      s"${ch(31, 7, 13, x, y)} + ${ch(17, 11, 5, x, y)} + ${ch(23, 3, 19, x, y)}"
-    s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 14 AS INT) AS w,
-      |                    CAST(1 + doc_id % 12 AS INT) AS h
-      |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (SELECT UNNEST(range(14)) AS x), ys AS (SELECT UNNEST(range(12)) AS y),
-      |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
-      |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
-      |       FROM img, xo, yo GROUP BY 1)
-      |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
-      |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
-      |ORDER BY i.doc_id""".stripMargin
-  }
-
   val entries: Seq[Entry] = Seq(
 
     // REAL media decode (see [[Bmp]]): fabricate spec-compliant BMP bytes
     // per image doc, round-trip them through an actual header/pixel-walk
-    // parser + nearest-neighbor resample inside the partition-batched
-    // codec pattern, and let the oracle recompute the features from the
-    // generative formula — hash equality proves decoder == encoder⁻¹.
-    // Scale posture: identical to q73 (map-only, one batch-shaped pass,
-    // no shuffle before the output sort); bytes at 100 TB arrive in the
-    // binary column instead of being fabricated, everything else is
+    // parser + nearest-neighbor resample, and let the oracle recompute the
+    // features from the generative formula — hash equality proves
+    // decoder == encoder⁻¹. Scale posture: identical to q73 (map-only, one
+    // pass, no shuffle before the output sort); bytes at 100 TB arrive in
+    // the binary column instead of being fabricated, everything else is
     // unchanged.
-    Entry("q196_bmp_decode", bmpSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Bmp.encode(id)))   // payload bytes ride the rows
-      payloads.mapPartitions { rows =>
-        val codec = RealCodec.open()       // per-partition init, as q73
-        rows.grouped(64).flatMap(codec.decodeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
+    Entry("q196_bmp_decode", Raster.sql(13, 9)) { (s, d) =>
+      decoded(s, d, 1)(Bmp.encode)((id, b) => RasterFeature.of(id, Bmp.decode(b)))
         .orderBy(col("doc_id"))
     },
 
@@ -1020,17 +875,7 @@ object Multimodal {
     // shuffle before the output sort; at 100 TB the bytes arrive in the
     // binary column and everything else is unchanged.
     Entry("q197_wav_decode", wavSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Wav.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = RealCodec.open()
-        rows.grouped(64).flatMap(codec.decodeWavBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("sr"),
-                col("abs_sum"), col("energy_sum"))
-        .orderBy(col("doc_id"))
+      decoded(s, d, 2)(Wav.encode)(Wav.feature).orderBy(col("doc_id"))
     },
 
     // REAL compressed-raster decode (see [[Png]]): q196's proof shape on
@@ -1041,27 +886,11 @@ object Multimodal {
     // filter/inflate/walk pipeline is a faithful inverse of the encoder.
     // Map-only, no shuffle before the output sort; at 100 TB the bytes
     // arrive in the binary column and everything else is unchanged.
-    Entry("q198_png_decode", pngSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Png.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = RealCodec.open()
-        rows.grouped(64).flatMap(codec.decodePngBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
+    Entry("q198_png_decode", Raster.sql(16, 11)) { (s, d) =>
+      decoded(s, d, 1)(Png.encode)((id, b) => RasterFeature.of(id, Png.decode(b)))
         .orderBy(col("doc_id"))
     },
 
-    // REAL lossy decode — JPEG (see [[Jpeg]]): bytes written by the JDK's
-    // own encoder, dims recovered by OUR from-scratch JFIF segment walk
-    // (hash-exact vs the generative formula: the lossless container
-    // layer), pixels decoded by the JDK's independent Huffman+IDCT with
-    // the mean-luminance drift bounded (`lum_ok`, oracle-asserted TRUE;
-    // JpegCodecSpec pins the tighter envelope). Map-only, no shuffle
-    // before the output sort; at 100 TB the bytes arrive in the binary
-    // column and everything else is unchanged.
     // REAL palette-raster decode — GIF (see [[Gif]]): the second
     // from-scratch compression layer after PNG's zlib, and this one is
     // OURS both directions (LZW variable-width codes, dictionary growth,
@@ -1077,33 +906,24 @@ object Multimodal {
     // sub-blocks (reassembly exercised). Map-only, no shuffle before the
     // output sort; at 100 TB the bytes arrive in the binary column and
     // everything else is unchanged.
-    Entry("q201_gif_decode", gifSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Gif.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = RealCodec.open()
-        rows.grouped(64).flatMap(codec.decodeGifBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
+    Entry("q201_gif_decode", Raster.sql(14, 12, Gif.lumSql)) { (s, d) =>
+      decoded(s, d, 1)(Gif.encode)((id, b) => RasterFeature.of(id, Gif.decode(b)))
         .orderBy(col("doc_id"))
     },
 
+    // REAL lossy decode — JPEG (see [[Jpeg]]): bytes written by the JDK's
+    // own encoder, dims recovered by OUR from-scratch JFIF segment walk
+    // (hash-exact vs the generative formula: the lossless container
+    // layer), pixels decoded by the JDK's independent Huffman+IDCT with
+    // the mean-luminance drift bounded (`lum_ok`, oracle-asserted TRUE;
+    // JpegCodecSpec pins the tighter envelope). Map-only, no shuffle
+    // before the output sort; at 100 TB the bytes arrive in the binary
+    // column and everything else is unchanged.
     Entry("q199_jpeg_decode",
       """SELECT doc_id, CAST(1 + doc_id % 15 AS INT) AS w,
         |  CAST(1 + doc_id % 10 AS INT) AS h, TRUE AS lum_ok
         |FROM documents WHERE doc_id % 3 = 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Jpeg.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = RealCodec.open()
-        rows.grouped(64).flatMap(codec.decodeJpegBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("lum_ok"))
-        .orderBy(col("doc_id"))
+      decoded(s, d, 1)(Jpeg.encode)(Jpeg.feature).orderBy(col("doc_id"))
     },
 
     Entry("q65_multimodal",
@@ -1126,8 +946,8 @@ object Multimodal {
         .orderBy(col("kind"))
     },
 
-    // typed mapPartitions "decode": batch-shaped feature extraction whose
-    // fake codec is pure arithmetic on byte length -> SQL-expressible oracle.
+    // typed "decode": per-row feature extraction whose fake codec is pure
+    // arithmetic on byte length -> SQL-expressible oracle.
     Entry("q73_mm_decode",
       """SELECT doc_id,
         |  CASE WHEN doc_id % 3 = 1 THEN 'image' ELSE 'audio' END AS kind,
@@ -1137,31 +957,24 @@ object Multimodal {
         |  CAST(CASE WHEN doc_id % 3 = 2 THEN 1 + octet_length(CAST(text AS BLOB)) % 30 ELSE 1 END AS INT) AS n_frames
         |FROM documents WHERE doc_id % 3 <> 0 ORDER BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val payloads = mmView(s, d)
+      // the codec is the deterministic fake (no media libs in this
+      // container); everything around it is the real plumbing
+      mmView(s, d)
         .filter(col("mm.kind") =!= "text")
         .select(col("doc_id"), col("mm.kind").as("kind"),
                 length(col("mm.bytes")).as("n_bytes"))
         .as[MmRow]
-      // partition-batched decode stub, batch-shaped like a real codec
-      // binding: one library/context init per partition, payloads pulled in
-      // fixed-size batches (what a GPU/JNI decoder wants), rows emitted per
-      // batch. The codec itself is the deterministic fake (no media libs in
-      // this container); everything around it is the real plumbing.
-      payloads.mapPartitions { rows =>
-        val codec = FakeCodec.open()   // per-partition init (JNI/ctx analog)
-        rows.grouped(64).flatMap { batch =>
-          codec.decodeBatch(batch)
-        }
-      }.toDF()
+        .map(FakeCodec.decode)
+        .toDF()
         .select(col("doc_id"), col("kind"), col("n_bytes"),
                 col("width"), col("height"), col("n_frames"))
         .orderBy(col("doc_id"))
     },
 
     // resize + frame-sample over the decoded features — the other half of
-    // the training-pipeline media transform chain; same batch-shaped
-    // codec-binding pattern, deterministic-fake arithmetic (aspect-fit
-    // into 32x24, uniform sample to <= 8 frames) so the oracle replays it.
+    // the training-pipeline media transform chain; same per-row codec
+    // function pattern, deterministic-fake arithmetic (aspect-fit into
+    // 32x24, uniform sample to <= 8 frames) so the oracle replays it.
     Entry("q80_mm_transform",
       """WITH f AS (
         |  SELECT doc_id,
@@ -1180,17 +993,13 @@ object Multimodal {
         |  CAST(LEAST(8, fr) AS INT) AS n_sampled
         |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val payloads = mmView(s, d)
+      mmView(s, d)
         .filter(col("mm.kind") =!= "text")
         .select(col("doc_id"), col("mm.kind").as("kind"),
                 length(col("mm.bytes")).as("n_bytes"))
         .as[MmRow]
-      payloads.mapPartitions { rows =>
-        val codec = FakeCodec.open()
-        rows.grouped(64).flatMap { batch =>
-          codec.transformBatch(codec.decodeBatch(batch), 32, 24, 8)
-        }
-      }.toDF()
+        .map(r => FakeCodec.transform(FakeCodec.decode(r), 32, 24, 8))
+        .toDF()
         .select(col("doc_id"), col("kind"), col("out_w"), col("out_h"), col("n_sampled"))
         .orderBy(col("doc_id"))
     }

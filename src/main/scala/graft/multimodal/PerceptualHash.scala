@@ -1,10 +1,8 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 import graft.multimodal.Multimodal.Bmp
 
@@ -39,8 +37,6 @@ import graft.multimodal.Multimodal.Bmp
   */
 object PerceptualHash {
 
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
   /** The pixel-source key: runs of image docs share payloads so the
     * corpus contains real duplicate groups. */
   def sourceKey(id: Long): Long = id - id % 12 + 1
@@ -49,15 +45,12 @@ object PerceptualHash {
     * resample (the Q196 rule), bit (x, y) set iff lum(x+1, y) >
     * lum(x, y); returned as (hi, lo) 32-bit halves (bit index
     * y*8 + x: y 0-3 -> lo, y 4-7 -> hi) so the SQL oracle can fold the
-    * same integers without BIGINT overflow. */
-  def dhash(img: Bmp.Decoded): (Long, Long) = dhashOf(img.w, img.h, img.rgb)
-
-  /** The same 64-bit dHash over ANY w x h RGB accessor — one kernel
-    * shared by the image entry and the q291 video-clip composition
-    * (each sampled AVI frame hashes through this exact fold). */
-  def dhashOf(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int)): (Long, Long) = {
+    * same integers without BIGINT overflow. One kernel for the image
+    * entry and the q291 video-clip composition (each sampled AVI frame
+    * is a [[Raster]] too). */
+  def dhash(img: Raster): (Long, Long) = {
     val l = Array.tabulate(8, 9) { (y, x) =>
-      val (r, g, b) = rgb(x * w / 9, y * h / 8)
+      val (r, g, b) = img.rgb(x * img.w / 9, y * img.h / 8)
       r + g + b
     }
     var hi = 0L; var lo = 0L
@@ -72,15 +65,9 @@ object PerceptualHash {
 
   case class DHashRow(doc_id: Long, dh_hi: Long, dh_lo: Long)
 
-  object DHashCodec {
-    final class Handle private[DHashCodec] () {
-      def hashBatch(batch: Seq[(Long, Array[Byte])]): Seq[DHashRow] =
-        batch.map { case (id, bytes) =>
-          val (hi, lo) = dhash(Bmp.decode(bytes))
-          DHashRow(id, hi, lo)
-        }
-    }
-    def open(): Handle = new Handle()
+  def hashRow(id: Long, bytes: Array[Byte]): DHashRow = {
+    val (hi, lo) = dhash(Bmp.decode(bytes))
+    DHashRow(id, hi, lo)
   }
 
   /** q209's oracle: the dHash recomputed arithmetically — resampled
@@ -118,15 +105,7 @@ object PerceptualHash {
     // The oracle recomputes hash AND buckets from the formulas, so a
     // wrong bit anywhere collapses the groups and fails the hash check.
     Entry("q209_image_dhash_dedup", dhashSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, Bmp.encode(sourceKey(id))))
-      val hashed = payloads.mapPartitions { rows =>
-        val codec = DHashCodec.open()
-        rows.grouped(64).flatMap(codec.hashBatch)
-      }.toDF()
-      hashed
+      Multimodal.decoded(s, d, 1)(id => Bmp.encode(sourceKey(id)))(hashRow)
         .withColumn("bucket_n",
           count(lit(1)).over(Window.partitionBy(col("dh_hi"), col("dh_lo"))))
         .select(col("doc_id"), col("dh_hi"), col("dh_lo"), col("bucket_n"))

@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 import graft.multimodal.Multimodal.Wav
 
@@ -30,8 +28,6 @@ import graft.multimodal.Multimodal.Wav
   */
 object Resample {
 
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
   /** 2x linear-interpolation upsample, truncating integer midpoints. */
   def upsample2x(samples: Array[Int]): Array[Int] = {
     if (samples.isEmpty) Array.empty
@@ -51,17 +47,11 @@ object Resample {
   case class ResampleFeature(doc_id: Long, n_out: Int, sr_out: Int,
                              sum_s: Long, abs_sum: Long)
 
-  object ResampleCodec {
-    final class Handle private[ResampleCodec] () {
-      def analyzeBatch(batch: Seq[(Long, Array[Byte])]): Seq[ResampleFeature] =
-        batch.map { case (id, bytes) =>
-          val wav = Wav.decode(bytes)
-          val up = upsample2x(wav.samples)
-          ResampleFeature(id, up.length, wav.sampleRate * 2,
-            up.map(_.toLong).sum, up.map(s => math.abs(s).toLong).sum)
-        }
-    }
-    def open(): Handle = new Handle()
+  def analyze(id: Long, bytes: Array[Byte]): ResampleFeature = {
+    val wav = Wav.decode(bytes)
+    val up = upsample2x(wav.samples)
+    ResampleFeature(id, up.length, wav.sampleRate * 2,
+      up.map(_.toLong).sum, up.map(s => math.abs(s).toLong).sum)
   }
 
   /** q212's oracle: original samples plus midpoints via an i→i+1
@@ -88,17 +78,7 @@ object Resample {
     // interpolation; the oracle re-derives midpoints via a self-join.
     // Map-only, no shuffle before the output sort.
     Entry("q212_pcm_upsample", resampleSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Wav.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = ResampleCodec.open()
-        rows.grouped(64).flatMap(codec.analyzeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_out"), col("sr_out"),
-                col("sum_s"), col("abs_sum"))
-        .orderBy(col("doc_id"))
+      Multimodal.decoded(s, d, 2)(Wav.encode)(analyze).orderBy(col("doc_id"))
     }
   )
 }

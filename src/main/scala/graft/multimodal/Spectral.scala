@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 import graft.multimodal.Multimodal.Wav
 
@@ -34,8 +32,6 @@ import graft.multimodal.Multimodal.Wav
   * identical to the q196-q202 codec entries.
   */
 object Spectral {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   /** Iterative radix-2 FFT (in-place, decimation-in-time): bit-reversal
     * permutation then log2(n) butterfly passes. Public-knowledge
@@ -121,16 +117,10 @@ object Spectral {
 
   case class ToneFeature(doc_id: Long, n_samples: Int, dom_bin: Int, dom_hz: Int)
 
-  object SpectralCodec {
-    final class Handle private[SpectralCodec] () {
-      def analyzeBatch(batch: Seq[(Long, Array[Byte])]): Seq[ToneFeature] =
-        batch.map { case (id, bytes) =>
-          val wav = Wav.decode(bytes)              // the real container walk
-          val k = Fft.dominantBin(wav.samples)
-          ToneFeature(id, wav.samples.length, k, k * (wav.sampleRate / wav.samples.length))
-        }
-    }
-    def open(): Handle = new Handle()
+  def analyze(id: Long, bytes: Array[Byte]): ToneFeature = {
+    val wav = Wav.decode(bytes)              // the real container walk
+    val k = Fft.dominantBin(wav.samples)
+    ToneFeature(id, wav.samples.length, k, k * (wav.sampleRate / wav.samples.length))
   }
 
   val entries: Seq[Entry] = Seq(
@@ -144,15 +134,8 @@ object Spectral {
         |  CAST(1 + doc_id % 31 AS INT) AS dom_bin,
         |  CAST((1 + doc_id % 31) * 125 AS INT) AS dom_hz
         |FROM documents WHERE doc_id % 3 = 2 ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Wav.encodePcm(Tone.samples(id), withDecoy = id % 2 == 0)))
-      payloads.mapPartitions { rows =>
-        val codec = SpectralCodec.open()
-        rows.grouped(64).flatMap(codec.analyzeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("dom_bin"), col("dom_hz"))
+      Multimodal.decoded(s, d, 2)(
+        id => Wav.encodePcm(Tone.samples(id), withDecoy = id % 2 == 0))(analyze)
         .orderBy(col("doc_id"))
     }
   )

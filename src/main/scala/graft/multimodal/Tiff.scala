@@ -1,10 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
+import graft.multimodal.Multimodal.Bmp
 
 /** REAL dual-byte-order raster decode — baseline TIFF 6.0, uncompressed
   * RGB (SURVEY.md Q214). TIFF is the one raster container whose BYTE
@@ -32,16 +31,9 @@ import graft.queries.Entry
   */
 object Tiff {
 
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
   def width(id: Long): Int = (1 + id % 17).toInt
   def height(id: Long): Int = (1 + id % 8).toInt
   def bigEndian(id: Long): Boolean = id % 2 == 0
-
-  /** Channel formulas shared (as SQL) with the oracle — the Q196 set. */
-  def r(id: Long, x: Int, y: Int): Int = ((id * 31 + x * 7 + y * 13) % 256).toInt
-  def g(id: Long, x: Int, y: Int): Int = ((id * 17 + x * 11 + y * 5) % 256).toInt
-  def b(id: Long, x: Int, y: Int): Int = ((id * 23 + x * 3 + y * 19) % 256).toInt
 
   private final class Writer(big: Boolean) {
     val out = new java.io.ByteArrayOutputStream()
@@ -111,23 +103,16 @@ object Tiff {
     wr.out.write(softBytes)
     if (twoStrips) { stripOffsets.foreach(wr.u32); stripCounts.foreach(wr.u32) }
     for (y <- 0 until h; x <- 0 until w) {
-      wr.out.write(r(id, x, y)); wr.out.write(g(id, x, y)); wr.out.write(b(id, x, y))
+      wr.out.write(Bmp.r(id, x, y)); wr.out.write(Bmp.g(id, x, y)); wr.out.write(Bmp.b(id, x, y))
     }
     val bytes = wr.out.toByteArray
     require(bytes.length == pixelOff + 3 * w * h, "encoder layout bug")
     bytes
   }
 
-  final case class DecodedTiff(w: Int, h: Int, pix: Array[Byte]) {
-    def rgb(x: Int, y: Int): (Int, Int, Int) = {
-      val o = 3 * (y * w + x)
-      (pix(o) & 0xff, pix(o + 1) & 0xff, pix(o + 2) & 0xff)
-    }
-  }
-
   /** Parse a baseline-RGB TIFF in EITHER byte order; every required tag
     * validated, strips reassembled, unknown tags skipped. */
-  def decode(bytes: Array[Byte]): DecodedTiff = {
+  def decode(bytes: Array[Byte]): Raster.Packed = {
     require(bytes.length >= 8, "truncated TIFF header")
     val big = (bytes(0), bytes(1)) match {
       case ('M', 'M') => true
@@ -183,66 +168,17 @@ object Tiff {
       require(o + c <= bytes.length, "truncated strip")
       System.arraycopy(bytes, o, pix, at, c); at += c
     }
-    DecodedTiff(w, h, pix)
-  }
-
-  /** Same nearest-neighbor rule as Q196's resample. */
-  def resampleSum(img: DecodedTiff, outW: Int, outH: Int): Long =
-    (for (yo <- 0 until outH; xo <- 0 until outW) yield {
-      val (rr, gg, bb) = img.rgb(xo * img.w / outW, yo * img.h / outH)
-      (rr + gg + bb).toLong
-    }).sum
-
-  case class TiffFeature(doc_id: Long, w: Int, h: Int, lum_sum: Long, rs_sum: Long)
-
-  object TiffCodec {
-    final class Handle private[TiffCodec] () {
-      def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[TiffFeature] =
-        batch.map { case (id, bytes) =>
-          val img = decode(bytes)
-          val lum = (for (y <- 0 until img.h; x <- 0 until img.w) yield {
-            val (rr, gg, bb) = img.rgb(x, y); (rr + gg + bb).toLong
-          }).sum
-          TiffFeature(id, img.w, img.h, lum, resampleSum(img, 8, 6))
-        }
-    }
-    def open(): Handle = new Handle()
-  }
-
-  /** q214's oracle: the Q196 shape under TIFF dims (1+id%17 x 1+id%8). */
-  private def tiffSql: String = {
-    def lum(x: String, y: String) =
-      s"(doc_id*31 + ($x)*7 + ($y)*13) % 256 + (doc_id*17 + ($x)*11 + ($y)*5) % 256 + " +
-        s"(doc_id*23 + ($x)*3 + ($y)*19) % 256"
-    s"""WITH img AS (SELECT doc_id, CAST(1 + doc_id % 17 AS INT) AS w,
-      |                    CAST(1 + doc_id % 8 AS INT) AS h
-      |             FROM documents WHERE doc_id % 3 = 1),
-      |xs AS (SELECT UNNEST(range(17)) AS x), ys AS (SELECT UNNEST(range(8)) AS y),
-      |lum AS (SELECT doc_id, CAST(SUM(${lum("x", "y")}) AS BIGINT) AS lum_sum
-      |        FROM img, xs, ys WHERE x < w AND y < h GROUP BY 1),
-      |xo AS (SELECT UNNEST(range(8)) AS xo), yo AS (SELECT UNNEST(range(6)) AS yo),
-      |rs AS (SELECT doc_id, CAST(SUM(${lum(s"(xo*w) // 8", s"(yo*h) // 6")}) AS BIGINT) AS rs_sum
-      |       FROM img, xo, yo GROUP BY 1)
-      |SELECT i.doc_id, i.w, i.h, l.lum_sum, r.rs_sum
-      |FROM img i JOIN lum l ON l.doc_id = i.doc_id JOIN rs r ON r.doc_id = i.doc_id
-      |ORDER BY i.doc_id""".stripMargin
+    Raster.Packed(w, h, pix)
   }
 
   val entries: Seq[Entry] = Seq(
     // REAL dual-byte-order decode (see object doc): the oracle-checked
     // corpus alternates II/MM files and single/two-strip layouts; hash
-    // equality proves decoder == encoder⁻¹ across both orders. Map-only,
-    // no shuffle before the output sort.
-    Entry("q214_tiff_decode", tiffSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 1).select(col("doc_id")).as[Long]
-        .map(id => (id, encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = TiffCodec.open()
-        rows.grouped(64).flatMap(codec.decodeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("lum_sum"), col("rs_sum"))
+    // equality proves decoder == encoder⁻¹ across both orders; the oracle
+    // is the Q196 raster template under TIFF dims. Map-only, no shuffle
+    // before the output sort.
+    Entry("q214_tiff_decode", Raster.sql(17, 8)) { (s, d) =>
+      Multimodal.decoded(s, d, 1)(encode)((id, b) => RasterFeature.of(id, decode(b)))
         .orderBy(col("doc_id"))
     }
   )

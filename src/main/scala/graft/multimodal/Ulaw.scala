@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.{Dialect, Entry}
 
 /** REAL compressed-audio decode (SURVEY.md Q208) — G.711 µ-law in a Sun
@@ -35,8 +33,6 @@ import graft.queries.{Dialect, Entry}
   * fabrication seam disappears — the q196-q207 contract.
   */
 object Ulaw {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   val bias = 132
   val clip = 32635
@@ -168,17 +164,12 @@ object Ulaw {
   case class UlawFeature(doc_id: Long, n_samples: Int, sr: Int,
                          sum_s: Long, abs_sum: Long)
 
-  object UlawCodec {
-    final class Handle private[UlawCodec] () {
-      def decodeBatch(batch: Seq[(Long, Array[Byte])]): Seq[UlawFeature] =
-        batch.map { case (id, bytes) =>
-          val au = Au.decodeAu(bytes)
-          UlawFeature(id, au.samples.length, au.sampleRate,
-            au.samples.map(_.toLong).sum,
-            au.samples.map(s => math.abs(s).toLong).sum)
-        }
-    }
-    def open(): Handle = new Handle()
+  /** µ-law and A-law alike: the header picks the companding law. */
+  def feature(id: Long, bytes: Array[Byte]): UlawFeature = {
+    val au = Au.decodeAu(bytes)
+    UlawFeature(id, au.samples.length, au.sampleRate,
+      au.samples.map(_.toLong).sum,
+      au.samples.map(s => math.abs(s).toLong).sum)
   }
 
   /** q208's oracle: the µ-law expansion replicated as SQL integer
@@ -240,17 +231,7 @@ object Ulaw {
     // equality proves container + expansion. Map-only, no shuffle before
     // the output sort.
     Entry("q208_ulaw_decode", ulawSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Au.encodeAu(id)))
-      payloads.mapPartitions { rows =>
-        val codec = UlawCodec.open()
-        rows.grouped(64).flatMap(codec.decodeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("sr"),
-                col("sum_s"), col("abs_sum"))
-        .orderBy(col("doc_id"))
+      Multimodal.decoded(s, d, 2)(Au.encodeAu(_))(feature).orderBy(col("doc_id"))
     },
 
     // The A-law twin (see [[alawDecode]]): same AU container with the
@@ -261,16 +242,7 @@ object Ulaw {
     // oracle decodes it directly. Map-only, no shuffle before the sort.
     Entry("q213_alaw_decode",
       alawSql((a, b) => s"xor($a, $b)")) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Au.encodeAu(id, Au.EncAlaw)))
-      payloads.mapPartitions { rows =>
-        val codec = UlawCodec.open()
-        rows.grouped(64).flatMap(codec.decodeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("sr"),
-                col("sum_s"), col("abs_sum"))
+      Multimodal.decoded(s, d, 2)(Au.encodeAu(_, Au.EncAlaw))(feature)
         .orderBy(col("doc_id"))
     }.sqlTwin(Dialect.duckToSpark(alawSql((a, b) => s"CAST($a ^ $b AS INT)")))
   )

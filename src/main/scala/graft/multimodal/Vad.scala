@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 import graft.multimodal.Multimodal.Wav
 
@@ -34,8 +32,6 @@ import graft.multimodal.Multimodal.Wav
   */
 object Vad {
 
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
   val threshold = 1000
 
   /** (active sample count, segment count, longest run) of one clip. */
@@ -54,16 +50,10 @@ object Vad {
   case class VadFeature(doc_id: Long, n_samples: Int, n_active: Int,
                         n_segments: Int, max_run: Int)
 
-  object VadCodec {
-    final class Handle private[VadCodec] () {
-      def analyzeBatch(batch: Seq[(Long, Array[Byte])]): Seq[VadFeature] =
-        batch.map { case (id, bytes) =>
-          val wav = Wav.decode(bytes)
-          val (active, segs, longest) = segment(wav.samples)
-          VadFeature(id, wav.samples.length, active, segs, longest)
-        }
-    }
-    def open(): Handle = new Handle()
+  def analyze(id: Long, bytes: Array[Byte]): VadFeature = {
+    val wav = Wav.decode(bytes)
+    val (active, segs, longest) = segment(wav.samples)
+    VadFeature(id, wav.samples.length, active, segs, longest)
   }
 
   /** q211's oracle: gaps-and-islands over the generative samples — the
@@ -97,17 +87,7 @@ object Vad {
     // gaps-and-islands, so a boundary bug in either shape mismatches.
     // Map-only, no shuffle before the output sort.
     Entry("q211_audio_vad", vadSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Wav.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = VadCodec.open()
-        rows.grouped(64).flatMap(codec.analyzeBatch)
-      }.toDF()
-        .select(col("doc_id"), col("n_samples"), col("n_active"),
-                col("n_segments"), col("max_run"))
-        .orderBy(col("doc_id"))
+      Multimodal.decoded(s, d, 2)(Wav.encode)(analyze).orderBy(col("doc_id"))
     }
   )
 }

@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.queries.Entry
 
 /** REAL video container decode + frame sampling (SURVEY.md Q202) — the
@@ -26,9 +24,16 @@ import graft.queries.Entry
   * appended on ids%4==1 the walk must not mistake for frames — and the
   * DuckDB oracle recomputes every feature (dims, frame count, sampled
   * luminance) from the generative formulas alone, so hash equality proves
-  * decoder == encoder⁻¹ INCLUDING the sampling rule. Map-only, no shuffle
-  * before the output sort; at 100 TB the bytes arrive in the binary
-  * column and everything else is unchanged.
+  * decoder == encoder⁻¹ INCLUDING the sampling rule. Each decoded frame
+  * is a [[Raster]] over the file's own bytes (no copy), so the q202
+  * luminance and the q291 dHash are the raster-wide kernels.
+  *
+  * The codecs here ([[aviFeature]], [[clipHash]]) are per-payload
+  * functions run by `Dataset.map` through [[Multimodal.decoded]]: map-only,
+  * no shuffle before the output sort; at 100 TB the bytes arrive in the
+  * binary column and everything else is unchanged. A native video binding
+  * with per-partition state would bring its own `mapPartitions` at its
+  * call site.
   *
   * Reference scope note: the reference (hbase-observer-es) syncs opaque
   * cell bytes (`Observer.java:79-96` Bytes.toString) and has no media
@@ -36,8 +41,6 @@ import graft.queries.Entry
   * L1.
   */
 object Video {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
   /** RIFF AVI, 24 bpp BI_RGB 'DIB ' frames, bottom-up padded rows. */
   object Avi {
@@ -153,15 +156,9 @@ object Video {
 
     import ByteIo.{getLE, tag}
 
-    /** One decoded frame: Q196's accessor shape (y=0 at the TOP; the
-      * decoder hides bottom-up order and row padding). */
-    final case class Frame(w: Int, h: Int, bytes: Array[Byte], offset: Int, rs: Int) {
-      def rgb(x: Int, y: Int): (Int, Int, Int) = {
-        val o = offset + (h - 1 - y) * rs + 3 * x
-        (bytes(o + 2) & 0xff, bytes(o + 1) & 0xff, bytes(o) & 0xff)
-      }
-    }
-    final case class DecodedAvi(w: Int, h: Int, frames: IndexedSeq[Frame])
+    /** Each frame is Q196's raster layout (bottom-up padded BGR) in place
+      * inside the file's bytes. */
+    final case class DecodedAvi(w: Int, h: Int, frames: IndexedSeq[Raster.BottomUp])
 
     /** Parse a 'vids'/'DIB ' single-stream AVI; every header field the
       * format requires is validated, unknown chunks (JUNK, idx1) are
@@ -172,7 +169,7 @@ object Video {
         "not a RIFF/AVI file")
       require(getLE(bytes, 4, 4) == bytes.length - 8, "RIFF size field mismatch")
       var w = -1; var h = -1; var nf = -1
-      var frames = Vector.empty[Frame]
+      var frames = Vector.empty[Raster.BottomUp]
 
       def parseHdrl(start: Int, end: Int): Unit = {
         var off = start
@@ -212,7 +209,7 @@ object Video {
           require(off + 8 + sz <= end, "truncated movi chunk")
           if (t == "00db" || t == "00dc") {
             require(sz == rs * h, s"frame size $sz != ${rs * h}")
-            frames :+= Frame(w, h, bytes, off + 8, rs)
+            frames :+= Raster.BottomUp(w, h, bytes, off + 8, rs)
           }
           off += 8 + sz + (sz & 1)
         }
@@ -242,37 +239,25 @@ object Video {
   case class AviFeature(doc_id: Long, w: Int, h: Int, n_frames: Int,
                         n_sampled: Int, slum_sum: Long)
 
-  /** Partition-scoped batch handle, the [[Multimodal.RealCodec]] shape. */
-  object VideoCodec {
-    final class Handle private[VideoCodec] () {
-      def decodeAviBatch(batch: Seq[(Long, Array[Byte])]): Seq[AviFeature] =
-        batch.map { case (id, bytes) =>
-          val v = Avi.decode(bytes)
-          val sampled = Avi.sampledFrames(v.frames.size)
-          val slum = sampled.map { f =>
-            val fr = v.frames(f)
-            (for (y <- 0 until v.h; x <- 0 until v.w) yield {
-              val (r, g, b) = fr.rgb(x, y); (r + g + b).toLong
-            }).sum
-          }.sum
-          AviFeature(id, v.w, v.h, v.frames.size, sampled.size, slum)
-        }
+  /** q202: decode, uniformly sample (see [[Avi.sampledFrames]]) and sum
+    * the sampled frames' luminance. */
+  def aviFeature(id: Long, bytes: Array[Byte]): AviFeature = {
+    val v = Avi.decode(bytes)
+    val sampled = Avi.sampledFrames(v.frames.size)
+    AviFeature(id, v.w, v.h, v.frames.size, sampled.size,
+      sampled.map(f => v.frames(f).lumSum).sum)
+  }
 
-      /** q291: decode, sample (the q202 rule), dHash each sampled frame
-        * (the q209 kernel) — the clip fingerprint is the ORDERED
-        * (hi, lo) vector, 2 longs per sampled frame. */
-      def clipHashBatch(batch: Seq[(Long, Array[Byte])]): Seq[ClipHashRow] =
-        batch.map { case (id, bytes) =>
-          val v = Avi.decode(bytes)
-          val fp = Avi.sampledFrames(v.frames.size).flatMap { f =>
-            val fr = v.frames(f)
-            val (hi, lo) = PerceptualHash.dhashOf(v.w, v.h, fr.rgb)
-            Seq(hi, lo)
-          }
-          ClipHashRow(id, fp, v.frames.size)
-        }
+  /** q291: decode, sample (the q202 rule), dHash each sampled frame
+    * (the q209 kernel) — the clip fingerprint is the ORDERED (hi, lo)
+    * vector, 2 longs per sampled frame. */
+  def clipHash(id: Long, bytes: Array[Byte]): ClipHashRow = {
+    val v = Avi.decode(bytes)
+    val fp = Avi.sampledFrames(v.frames.size).flatMap { f =>
+      val (hi, lo) = PerceptualHash.dhash(v.frames(f))
+      Seq(hi, lo)
     }
-    def open(): Handle = new Handle()
+    ClipHashRow(id, fp, v.frames.size)
   }
 
   case class ClipHashRow(doc_id: Long, fp: Seq[Long], n_frames: Int)
@@ -315,17 +300,7 @@ object Video {
     // output sort; at 100 TB the bytes arrive in the binary column and
     // everything else is unchanged.
     Entry("q202_avi_frame_sample", aviSql) { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Avi.encode(id)))
-      payloads.mapPartitions { rows =>
-        val codec = VideoCodec.open()
-        rows.grouped(64).flatMap(codec.decodeAviBatch)
-      }.toDF()
-        .select(col("doc_id"), col("w"), col("h"), col("n_frames"),
-                col("n_sampled"), col("slum_sum"))
-        .orderBy(col("doc_id"))
+      Multimodal.decoded(s, d, 2)(Avi.encode)(aviFeature).orderBy(col("doc_id"))
     },
 
     // Video perceptual dedup (SURVEY Q291; VERDICT r19 #4) — the q209 ∘
@@ -333,8 +308,8 @@ object Video {
     // container variants of one clip must collapse to one training
     // example. Decode each clip (the q202 RIFF walk), uniformly sample
     // <= 4 frames (the q202 time-axis rule), dHash each sampled frame
-    // (the q209 kernel through the shared [[PerceptualHash.dhashOf]]
-    // fold over the frame accessor), and bucket clips by the ORDERED
+    // (the q209 kernel: [[PerceptualHash.dhash]] over each frame's
+    // [[Raster]]), and bucket clips by the ORDERED
     // frame-hash vector — dedup is then a plain group on the
     // fingerprint, the q60 posture applied to clips. Payloads are
     // fabricated from [[clipKey]] so the corpus genuinely contains
@@ -358,15 +333,7 @@ object Video {
     // arrive in the binary column, sampling bounds per-clip work, and
     // the group inherits the engine's skew/AQE remedies.
     Entry.benchOnly("q291_video_dhash_dedup") { (s, d) =>
-      import s.implicits._
-      val payloads = T(s, d, "documents")
-        .filter(col("doc_id") % 3 === 2).select(col("doc_id")).as[Long]
-        .map(id => (id, Avi.encode(clipKey(id))))
-      val hashed = payloads.mapPartitions { rows =>
-        val codec = VideoCodec.open()
-        rows.grouped(64).flatMap(codec.clipHashBatch)
-      }.toDF()
-      hashed
+      Multimodal.decoded(s, d, 2)(id => Avi.encode(clipKey(id)))(clipHash)
         .withColumn("fp",
           array_join(transform(col("fp"), _.cast("string")), ","))
         .withColumn("bucket_n", count(lit(1)).over(

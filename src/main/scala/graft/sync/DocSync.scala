@@ -1,6 +1,6 @@
 package graft.sync
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,20 +52,24 @@ object DocSync {
     *
     * Plan shape: one `groupBy(rowKey)` — `array_sort(collect_list(...))`
     * partial-aggregated before its one shuffle — then a map-only
-    * `aggregate` replay. A Delete sorts after a Put of the same `seq`
-    * (that Put is dead), and ops other than PUT/DELETE are ignored. */
+    * `aggregate` replay. Each cell is projected to `(qualifier, value)`
+    * inside the collected struct, so the family (dropped by the flatten
+    * anyway) never crosses the shuffle. A Delete sorts after a Put of the
+    * same `seq` (that Put is dead), and ops other than PUT/DELETE are
+    * ignored. */
   def foldIncrement(batch: DataFrame): DataFrame = {
     def state(doc: Column, hadDelete: Column): Column =
       struct(doc.as("doc"), hadDelete.as("hadDelete"))
     val events = batch.filter(col("op").isin("PUT", "DELETE"))
       .groupBy("rowKey")
       .agg(array_sort(collect_list(struct(col("seq"),
-        (col("op") === "DELETE").as("isDelete"), col("cells")))).as("events"))
+        (col("op") === "DELETE").as("isDelete"),
+        transform(col("cells"), c => struct(c("qualifier"), c("value"))).as("cells"))))
+        .as("events"))
     val replayed = aggregate(col("events"), state(emptyDoc, lit(false)), (acc, e) =>
       when(e("isDelete"), state(emptyDoc, lit(true)))
         .otherwise(state(
-          map_concat(acc("doc"), coalesce(map_from_entries(
-            transform(e("cells"), c => struct(c("qualifier"), c("value")))), emptyDoc)),
+          map_concat(acc("doc"), coalesce(map_from_entries(e("cells")), emptyDoc)),
           acc("hadDelete"))))
     events.select(col("rowKey"), replayed.as("s"))
       .select(col("rowKey"), col("s.doc").as("delta"), col("s.hadDelete").as("hadDelete"))
@@ -160,7 +164,7 @@ object DocSync {
         // bucket instead of (shuffle partitions x buckets) shards
         merged.repartition(math.min(numBuckets, dirty.length), col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(cur)
-        Files.writeString(Paths.get(s"$cur/_coverage"), dirty.mkString(","))
+        commit(cur, dirty.toSeq)
       }
     }
   }
@@ -193,8 +197,20 @@ object DocSync {
     currentState(spark, stateDir, numBuckets)
       .repartition(numBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(cur)
-    Files.writeString(Paths.get(s"$cur/_coverage"), (0 until numBuckets).mkString(","))
+    commit(cur, 0 until numBuckets)
     versions.foreach { case (_, v) => graft.core.Fs.deleteRecursively(v) }
+  }
+
+  /** Write version `dir`'s `_coverage` commit marker (the buckets it
+    * covers) as `_coverage.tmp` and rename it into place atomically: a
+    * crash mid-write leaves only the `.tmp`, which no reader looks at, so
+    * the version stays invisible — never a truncated marker that reads
+    * `3,12` as `3,1`, where bucket 1, covered with no dir, would read as
+    * emptied. */
+  private def commit(dir: String, buckets: Seq[Int]): Unit = {
+    val tmp = Paths.get(s"$dir/_coverage.tmp")
+    Files.writeString(tmp, buckets.mkString(","))
+    Files.move(tmp, Paths.get(s"$dir/_coverage"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   private val stateSchema = StructType(Seq(StructField("rowKey", StringType),

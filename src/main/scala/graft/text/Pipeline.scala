@@ -22,34 +22,31 @@ object Pipeline {
   case class ChunkEmb(doc_id: Long, chunk_id: Int,
                       e0: Double, e1: Double, e2: Double, e3: Double)
 
-  /** Stand-in for a real embedding-model binding (ONNX/JNI/GPU session):
-    * stateful per-partition handle + batch-in/batch-out API — the exact
-    * plumbing shape of Multimodal.FakeCodec. The "model" is a
-    * DETERMINISTIC FAKE (per-dimension hash folds over the chunk's
-    * tokens, L2-normalized) so the oracle replays it in SQL; swap
-    * `encodeBatch`'s body for the real forward pass and the Spark side is
-    * unchanged. */
+  /** Stand-in for a real embedding model (an ONNX/JNI/GPU forward pass):
+    * a per-chunk function run by `Dataset.map`, like every
+    * Multimodal codec. The "model" is a DETERMINISTIC FAKE (per-dimension
+    * hash folds over the chunk's tokens, L2-normalized) so the oracle
+    * replays it in SQL; swap `encode`'s body for the real forward pass and
+    * the Spark side is unchanged. A binding with per-partition state (a
+    * model session) would bring its own `mapPartitions` at its call site. */
   object FakeEncoder {
-    final class Handle private[FakeEncoder] () {
-      // ONE token-hash implementation engine-wide: the codegen'd kernel's
-      // static body (code-POINT fold) — a private re-implementation here
-      // would silently diverge from the kernel and both SQL oracles the
-      // day the analyzer admits non-BMP characters
-      private def tokenHash(w: String): Long =
-        graft.functions.TokenHash.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(w))
-      def encodeBatch(batch: Seq[ChunkRow]): Seq[ChunkEmb] =
-        batch.map { r =>
-          val s = Array.tabulate(4) { j =>
-            r.toks.map(w => (tokenHash(w) + j * 2654435761L) % 1000003L + 1).sum.toDouble
-          }
-          // raw doubles out; the query applies the shared ROUND(.,6) so
-          // rounding semantics stay the proven Spark/DuckDB pair
-          val nrm = math.sqrt(s.map(x => x * x).sum)
-          ChunkEmb(r.doc_id, r.chunk_id, s(0) / nrm, s(1) / nrm, s(2) / nrm, s(3) / nrm)
-        }
+    // ONE token-hash implementation engine-wide: the codegen'd kernel's
+    // static body (code-POINT fold) — a private re-implementation here
+    // would silently diverge from the kernel and both SQL oracles the
+    // day the analyzer admits non-BMP characters
+    private def tokenHash(w: String): Long =
+      graft.functions.TokenHash.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(w))
+
+    def encode(r: ChunkRow): ChunkEmb = {
+      val s = Array.tabulate(4) { j =>
+        r.toks.map(w => (tokenHash(w) + j * 2654435761L) % 1000003L + 1).sum.toDouble
+      }
+      // raw doubles out; the query applies the shared ROUND(.,6) so
+      // rounding semantics stay the proven Spark/DuckDB pair
+      val nrm = math.sqrt(s.map(x => x * x).sum)
+      ChunkEmb(r.doc_id, r.chunk_id, s(0) / nrm, s(1) / nrm, s(2) / nrm, s(3) / nrm)
     }
-    def open(): Handle = new Handle()
   }
 
   /** One row per size-32/stride-24 chunk index: (doc_id, ws, ci) off the
@@ -1078,15 +1075,14 @@ object Pipeline {
       curationReport(s, d)
     },
 
-    // ---- embedding-inference stage (chunk -> vector, batched binding) ----
+    // ---- embedding-inference stage (chunk -> vector) ----
     // The produce-embeddings step between q141's chunking and the ANN
-    // index: per-partition model handle, fixed-size batches through a
-    // batch-in/batch-out encode API (the GPU/ONNX session shape —
-    // Multimodal.FakeCodec's pattern on the text side). The model is a
+    // index: one typed map of a per-chunk encode function
+    // (Multimodal.FakeCodec's pattern on the text side). The model is a
     // deterministic fake (per-dim hash folds over chunk tokens, then
     // L2-normalize) so the oracle replays the arithmetic exactly; the
-    // plumbing — chunk slicing off the staged token index, batch shape,
-    // partition-scoped handle — is the real deployment path.
+    // plumbing — chunk slicing off the staged token index, the typed map —
+    // is the real deployment path.
     Entry("q155_embed_stage",
       s"""WITH toks AS (SELECT doc_id, ${Text.tokensSql} AS ws FROM documents),
         |c AS (SELECT doc_id, len(ws) AS n_tok, ws,
@@ -1116,10 +1112,7 @@ object Pipeline {
                 slice(col("ws"), col("ci") * 24 + 1,
                       least(lit(32), size(col("ws")) - col("ci") * 24)).as("toks"))
         .as[ChunkRow]
-      chunks.mapPartitions { rows =>
-        val model = FakeEncoder.open()   // per-partition session init
-        rows.grouped(64).flatMap(model.encodeBatch)
-      }.toDF()
+      chunks.map(FakeEncoder.encode).toDF()
         .select(col("doc_id"), col("chunk_id"),
                 round(col("e0"), 6).as("e0"), round(col("e1"), 6).as("e1"),
                 round(col("e2"), 6).as("e2"), round(col("e3"), 6).as("e3"))

@@ -168,11 +168,11 @@ object Utf8Repair {
       T(s, d, "documents")
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
+        .map { case (id, text) =>
           val bytes = corrupt(id, text)
           val (rep, bad) = repair(bytes)
           RepairRow(id, bytes.length.toLong, bad, rep)
-        })
+        }
         .toDF()
         .select(col("doc_id"), col("n_bytes_in"), col("n_invalid"),
           length(col("rep")).cast("bigint").as("n_chars_out"),

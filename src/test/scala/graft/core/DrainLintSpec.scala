@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Staging]]. A new hand-rolled drain loop, temp dir or persist fails
   * here instead of growing another copy to keep in step. The temp-dir
   * rule also scans `src/test/scala`: a spec's hand-made temp dir is
-  * never deleted, so every full run would leave it behind. */
+  * never deleted, so every full run would leave it behind. Media decode
+  * has one path too: a codec is a per-payload function run by
+  * `Dataset.map` (`graft.multimodal.Multimodal.decoded`), so no codec
+  * handle is opened and no partition is batched by hand. */
 class DrainLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -65,5 +68,15 @@ class DrainLintSpec extends AnyFunSuite {
     assert(rest.isEmpty, rest.mkString("\n"))
     assert(reliable.size == 1, found.mkString("\n"))
     assert(sites("clearCache()").isEmpty, sites("clearCache()").mkString("\n"))
+  }
+
+  test("one decode path: no codec handle, no hand batching, mapPartitions only for partition state") {
+    val handles = Seq("def open()", ".open()", ".grouped(64)").flatMap(sites(_))
+    assert(handles.isEmpty, handles.mkString("\n"))
+    // the two partitions that hold state: the per-host robots rule memo
+    // of q222 and of Funnel.decisionsOf
+    assert(filesOf(".mapPartitions").distinct ==
+      Seq("graft/text/Funnel.scala", "graft/text/Robots.scala"),
+      sites(".mapPartitions").mkString("\n"))
   }
 }

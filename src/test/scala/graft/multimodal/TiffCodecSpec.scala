@@ -4,6 +4,7 @@ import javax.imageio.ImageIO
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.multimodal.Multimodal.Bmp
 import graft.multimodal.Tiff
 
 /** The TIFF codec (q214) pinned Spark-free: pixel-exact round-trip over
@@ -21,7 +22,7 @@ class TiffCodecSpec extends AnyFunSuite {
       val img = Tiff.decode(Tiff.encode(id))
       assert(img.w == Tiff.width(id) && img.h == Tiff.height(id), s"id=$id dims")
       for (y <- 0 until img.h; x <- 0 until img.w) {
-        assert(img.rgb(x, y) == (Tiff.r(id, x, y), Tiff.g(id, x, y), Tiff.b(id, x, y)),
+        assert(img.rgb(x, y) == (Bmp.r(id, x, y), Bmp.g(id, x, y), Bmp.b(id, x, y)),
           s"id=$id pixel ($x,$y)")
       }
     }

@@ -131,4 +131,33 @@ class DocSyncSpec extends GraftSuite {
     assert(inc === Map("gone" -> (Map.empty[String, String] -> true),
       "live" -> (Map("a" -> "1") -> false)))
   }
+
+  test("_coverage commits by atomic rename: a .tmp marker is invisible, none is left behind") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def table(df: DataFrame): Map[String, Map[String, String]] =
+      df.collect().map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
+    def tmpMarkers(dir: String): Seq[String] =
+      Files.walk(Paths.get(dir)).iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".tmp")).toSeq
+
+    val dir = graft.core.Staging.scratchDir("graft_docsync_commit")
+    DocSync.mergeBatch(spark, log(put("a", 1, ("f", "q", "1"))), dir, 4)
+    DocSync.mergeBatch(spark, log(put("b", 2, ("f", "q", "2"))), dir, 4)
+    assert(tmpMarkers(dir).isEmpty)
+    DocSync.compact(spark, dir, 4)
+    assert(tmpMarkers(dir).isEmpty)
+    val committed = table(DocSync.docTable(spark, dir, 4))
+    assert(committed === Map("a" -> Map("q" -> "1"), "b" -> Map("q" -> "2")))
+
+    // a crash before the rename: the next version holds parquet files and
+    // only the temp marker, which must read as no commit at all
+    val torn = new java.io.File(dir, "v3")
+    DocSync.fold(log(put("c", 3, ("f", "q", "3"))))
+      .withColumn("bucket", lit(0))
+      .write.mode("overwrite").partitionBy("bucket").parquet(torn.getPath)
+    Files.writeString(new java.io.File(torn, "_coverage.tmp").toPath, "0,1,2,3")
+    assert(table(DocSync.docTable(spark, dir, 4)) === committed)
+    assert(table(DocSync.snapshot(spark, dir, asOf = 3, numBuckets = 4)) === committed)
+  }
 }

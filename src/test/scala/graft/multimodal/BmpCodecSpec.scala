@@ -6,7 +6,8 @@ import graft.multimodal.Multimodal.Bmp
 
 /** The real BMP codec (q196) pinned Spark-free: spec-compliant headers,
   * exact pixel round-trip through the padded bottom-up layout and loud
-  * failure on malformed bytes (RasterSpec pins the resample rule). (The
+  * failure on malformed bytes, and the resample rule against a direct
+  * reference (RasterSpec pins it for every raster codec). (The
   * cross-engine feature equality is the q196 oracle; this spec pins the
   * byte-level layer the oracle can't see.) */
 class BmpCodecSpec extends AnyFunSuite {
@@ -35,6 +36,18 @@ class BmpCodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Bmp.decode(wrongSize))              // size field
     val badBpp = good.clone(); badBpp(28) = 8
     intercept[IllegalArgumentException](Bmp.decode(badBpp))                 // bpp
+  }
+
+  test("nearest-neighbor resample matches a direct reference") {
+    (1L to 40L).foreach { id =>
+      val img = Bmp.decode(Bmp.encode(id))
+      val want = (for (yo <- 0 until 6; xo <- 0 until 8) yield {
+        val sx = xo * img.w / 8
+        val sy = yo * img.h / 6
+        (Bmp.r(id, sx, sy) + Bmp.g(id, sx, sy) + Bmp.b(id, sx, sy)).toLong
+      }).sum
+      assert(img.resampleSum(8, 6) == want, s"id=$id")
+    }
   }
 
   test("WAV round-trips every sample; the chunk walk skips the decoy chunk") {

@@ -60,4 +60,17 @@ class PngCodecSpec extends AnyFunSuite {
     val badIdat = good.clone(); badIdat(idatOff + 8) = (badIdat(idatOff + 8) ^ 0x7f).toByte
     intercept[IllegalArgumentException](Png.decode(badIdat))
   }
+
+  test("resample matches a direct reference") {
+    ids.take(40).foreach { id =>
+      val Bmp = Multimodal.Bmp
+      val img = Png.decode(Png.encode(id))
+      val want = (for (yo <- 0 until 6; xo <- 0 until 8) yield {
+        val sx = xo * img.w / 8
+        val sy = yo * img.h / 6
+        (Bmp.r(id, sx, sy) + Bmp.g(id, sx, sy) + Bmp.b(id, sx, sy)).toLong
+      }).sum
+      assert(img.resampleSum(8, 6) == want, s"id=$id")
+    }
+  }
 }

@@ -148,11 +148,6 @@ object CompressedShards {
           length(col("j.text")).cast("bigint").as("n_chars"),
           md5(encode(col("j.text"), "UTF-8")).as("txt_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, doc_id div 16 AS shard_id,
-        |  CASE WHEN (doc_id div 16) % 2 = 0 THEN 'gzip' ELSE 'zstd' END AS codec,
-        |  lang, CAST(length(text) AS BIGINT) AS n_chars,
-        |  md5(encode(text, 'UTF-8')) AS txt_md5
-        |FROM documents ORDER BY doc_id""".stripMargin)
+    }
   )
 }

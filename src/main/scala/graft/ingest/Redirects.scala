@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Staging, Tables}
-import graft.queries.{Dialect, Entry}
+import graft.queries.Entry
 import WarcShards.Warc
 
 /** Redirect-chain resolution (SURVEY.md Q233) — the tier between fetch
@@ -129,27 +129,23 @@ object Redirects {
        |$hops""".stripMargin
   }
 
-  /** The final URL: the one structural switch between the oracle and its
-    * twin (DuckDB's `||` casts the integer parts to text, Spark's needs
-    * `concat`). */
-  private def finalUrlExpr(duck: Boolean): String =
-    if (duck) "'https://www.site' || (r.cur % 5) || '.com/r/' || r.cur"
-    else "concat('https://www.site', r.cur % 5, '.com/r/', r.cur)"
+  /** The final URL of a resolved chain. */
+  private val finalUrl = "'https://www.site' || (r.cur % 5) || '.com/r/' || r.cur"
 
   /** `cur` still sits on a 3xx page (the unresolved/loop condition). */
   private val stillRedirecting =
     "(r.cur % 100 = 9 OR r.cur % 100 = 10 OR r.cur % 10 IN (1, 2, 3))"
 
-  private def oracleSql(duck: Boolean): String =
+  private val oracleSql: String =
     s"""$chainCtes
-       |SELECT r.doc_id, ${finalUrlExpr(duck)} AS final_url,
+       |SELECT r.doc_id, $finalUrl AS final_url,
        |  CAST(r.hops AS INT) AS n_hops,
        |  NOT $stillRedirecting AS resolved
        |FROM r$MaxHops r ORDER BY r.doc_id""".stripMargin
 
-  private def dedupOracleSql(duck: Boolean): String =
+  private val dedupOracleSql: String =
     s"""$chainCtes
-       |SELECT ${finalUrlExpr(duck)} AS final_url,
+       |SELECT $finalUrl AS final_url,
        |  MIN(r.doc_id) AS keeper_id, COUNT(*) AS n_aliases,
        |  COUNT(CASE WHEN r.hops > 0 THEN 1 END) AS n_chained
        |FROM r$MaxHops r
@@ -196,9 +192,9 @@ object Redirects {
   }
 
   val entries: Seq[Entry] = Seq(
-    Entry("q233_redirect_resolve", oracleSql(duck = true)) { (s, d) =>
+    Entry("q233_redirect_resolve", oracleSql) { (s, d) =>
       resolved(s, d).orderBy(col("doc_id"))
-    }.sqlTwin(Dialect.duckToSpark(oracleSql(duck = false))),
+    },
 
     // Resolved-final-URL dedup (SURVEY.md Q240) — the composition the two
     // tiers exist for: q233 collapses each 3xx chain onto the URL that
@@ -213,13 +209,13 @@ object Redirects {
     // arrived via >=1 redirect hop — the direct fetch is the remainder.
     // Cost on top of q233: ONE map-side-combinable agg keyed on the
     // resolved URL (MIN/COUNT partials collapse before the exchange).
-    Entry("q240_resolved_dedup", dedupOracleSql(duck = true)) { (s, d) =>
+    Entry("q240_resolved_dedup", dedupOracleSql) { (s, d) =>
       resolved(s, d).filter(col("resolved"))
         .groupBy(col("final_url"))
         .agg(min(col("doc_id")).as("keeper_id"),
           count(lit(1)).as("n_aliases"),
           count(when(col("n_hops") > 0, 1)).as("n_chained"))
         .orderBy(col("final_url"))
-    }.sqlTwin(Dialect.duckToSpark(dedupOracleSql(duck = false)))
+    }
   )
 }

@@ -209,12 +209,7 @@ object WarcShards {
         .select(col("doc_id"), col("shard_id"), col("canon_url"), col("status"),
                 md5(col("content")).as("content_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, doc_id div 8 AS shard_id,
-        |  concat('https://www.site', (doc_id div 4) % 5, '.com/docs/',
-        |    doc_id div 4, '/page?a=1&b=2') AS canon_url,
-        |  CAST(200 AS INT) AS status, md5(text) AS content_md5
-        |FROM documents ORDER BY doc_id""".stripMargin),
+    },
 
     // CDX-style random-access index over the WARC shards (SURVEY.md
     // Q223) — what makes a WARC archive QUERYABLE: per response record,
@@ -258,12 +253,6 @@ object WarcShards {
         }
         .toDF("doc_id", "shard_id", "rec_index", "canon_url", "seek_ok")
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, doc_id div 8 AS shard_id,
-        |  CAST(doc_id % 8 AS INT) AS rec_index,
-        |  concat('https://www.site', (doc_id div 4) % 5, '.com/docs/',
-        |    doc_id div 4, '/page?a=1&b=2') AS canon_url,
-        |  TRUE AS seek_ok
-        |FROM documents ORDER BY doc_id""".stripMargin)
+    }
   )
 }

@@ -1177,7 +1177,8 @@ object Search {
         .select(col("a.doc_id").as("doc_id")).distinct()
         .orderBy(col("doc_id"))
     }.sqlTwin(
-      // structural gap: pre-DISTINCT alias in ORDER BY (q74's twin shape)
+      // no dialect gap is known here (the oracle sorts by the projected
+      // name); the bridged oracle is the next twin to try (ROADMAP D6)
       s"""WITH ${Dialect.duckToSpark(graft.text.Text.wordsCtesSql)},
         |m AS (SELECT DISTINCT a.doc_id FROM words a
         |      JOIN words b ON b.doc_id = a.doc_id

@@ -278,26 +278,36 @@ object DocSync {
       element_at(col("doc"), "props").as("props"))
       .orderBy("row_key")
 
-  /** DuckDB oracle replaying the same fold (FIXTURES.md derived fixture). */
-  val oracleSqlDocTable: String =
-    """WITH puts AS (
+  /** The DuckDB replay of this fold (FIXTURES.md derived fixture) as
+    * suffix-parameterized CTE text over the events satisfying `where`:
+    * the one copy every fold oracle builds on (q03/q51/q57, q49, q220,
+    * and q227, which replays one fold per table version). Yields
+    * `docs<sfx>(row_key, event_type, value, user_id, props)`. */
+  private[sync] def foldCtes(sfx: String, where: String): String =
+    s"""puts$sfx AS (
       |  SELECT CAST(event_id % 199 AS VARCHAR) AS row_key, event_id AS seq,
       |         event_type,
       |         CAST(CAST(value AS DECIMAL(18,6)) AS VARCHAR) AS value_s,
       |         CASE WHEN event_id % 3 <> 0 THEN CAST(user_id AS VARCHAR) END AS user_id_s,
       |         props
-      |  FROM events),
-      |dels AS (
+      |  FROM events WHERE $where),
+      |dels$sfx AS (
       |  SELECT CAST((event_id + 25) % 199 AS VARCHAR) AS row_key, event_id AS seq
-      |  FROM events WHERE event_id % 50 = 0),
-      |last_del AS (SELECT row_key, MAX(seq) AS del_seq FROM dels GROUP BY 1),
-      |live AS (
-      |  SELECT p.* FROM puts p LEFT JOIN last_del d USING (row_key)
-      |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq)
-      |SELECT row_key,
-      |  arg_max(event_type, seq) AS event_type,
-      |  arg_max(value_s, seq) AS value,
-      |  arg_max(user_id_s, seq) FILTER (WHERE user_id_s IS NOT NULL) AS user_id,
-      |  arg_max(props, seq) FILTER (WHERE props IS NOT NULL) AS props
-      |FROM live GROUP BY row_key ORDER BY row_key""".stripMargin
+      |  FROM events WHERE event_id % 50 = 0 AND ($where)),
+      |last_del$sfx AS (SELECT row_key, MAX(seq) AS del_seq FROM dels$sfx GROUP BY 1),
+      |live$sfx AS (
+      |  SELECT p.* FROM puts$sfx p LEFT JOIN last_del$sfx d USING (row_key)
+      |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq),
+      |docs$sfx AS (
+      |  SELECT row_key,
+      |    arg_max(event_type, seq) AS event_type,
+      |    arg_max(value_s, seq) AS value,
+      |    arg_max(user_id_s, seq) FILTER (WHERE user_id_s IS NOT NULL) AS user_id,
+      |    arg_max(props, seq) FILTER (WHERE props IS NOT NULL) AS props
+      |  FROM live$sfx GROUP BY row_key)""".stripMargin
+
+  /** DuckDB oracle replaying the fold over the whole log (q03/q51/q57). */
+  val oracleSqlDocTable: String =
+    s"""WITH ${foldCtes("", "TRUE")}
+      |SELECT * FROM docs ORDER BY row_key""".stripMargin
 }

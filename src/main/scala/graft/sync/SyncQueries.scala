@@ -43,33 +43,6 @@ object SyncQueries {
       DocSync.mergeBatch(s, log.filter(col("seq") >= cutoff), dir, numBuckets = 16)
     }
 
-  /** The doc-table fold as suffix-parameterized CTE text (DuckDB flavor)
-    * restricted to events satisfying `where` — q220/q227 replay one fold
-    * per table version. Yields `docs<sfx>(row_key, event_type, value,
-    * user_id, props)`. */
-  private def foldCtes(sfx: String, where: String): String =
-    s"""puts$sfx AS (
-      |  SELECT CAST(event_id % 199 AS VARCHAR) AS row_key, event_id AS seq,
-      |         event_type,
-      |         CAST(CAST(value AS DECIMAL(18,6)) AS VARCHAR) AS value_s,
-      |         CASE WHEN event_id % 3 <> 0 THEN CAST(user_id AS VARCHAR) END AS user_id_s,
-      |         props
-      |  FROM events WHERE $where),
-      |dels$sfx AS (
-      |  SELECT CAST((event_id + 25) % 199 AS VARCHAR) AS row_key, event_id AS seq
-      |  FROM events WHERE event_id % 50 = 0 AND ($where)),
-      |last_del$sfx AS (SELECT row_key, MAX(seq) AS del_seq FROM dels$sfx GROUP BY 1),
-      |live$sfx AS (
-      |  SELECT p.* FROM puts$sfx p LEFT JOIN last_del$sfx d USING (row_key)
-      |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq),
-      |docs$sfx AS (
-      |  SELECT row_key,
-      |    arg_max(event_type, seq) AS event_type,
-      |    arg_max(value_s, seq) AS value,
-      |    arg_max(user_id_s, seq) FILTER (WHERE user_id_s IS NOT NULL) AS user_id,
-      |    arg_max(props, seq) FILTER (WHERE props IS NOT NULL) AS props
-      |  FROM live$sfx GROUP BY row_key)""".stripMargin
-
   val entries: Seq[Entry] = Seq(
 
     Entry("q03_merge_upsert", DocSync.oracleSqlDocTable) { (s, d) =>
@@ -77,18 +50,8 @@ object SyncQueries {
     },
 
     Entry("q49_map_funcs",
-      """WITH puts AS (
-        |  SELECT CAST(event_id % 199 AS VARCHAR) AS row_key, event_id AS seq, event_type
-        |  FROM events),
-        |dels AS (
-        |  SELECT CAST((event_id + 25) % 199 AS VARCHAR) AS row_key, event_id AS seq
-        |  FROM events WHERE event_id % 50 = 0),
-        |last_del AS (SELECT row_key, MAX(seq) AS del_seq FROM dels GROUP BY 1),
-        |live AS (
-        |  SELECT p.* FROM puts p LEFT JOIN last_del d USING (row_key)
-        |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq),
-        |docs AS (SELECT row_key, arg_max(event_type, seq) AS et FROM live GROUP BY 1)
-        |SELECT et AS event_type, COUNT(*) AS n, COUNT(DISTINCT row_key) AS n_keys
+      s"""WITH ${DocSync.foldCtes("", "TRUE")}
+        |SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT row_key) AS n_keys
         |FROM docs GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       // map-typed document access: element_at over the doc map
       // (map_keys integrity is exercised by q49_map_concat below)
@@ -112,27 +75,8 @@ object SyncQueries {
     // this entry was the round's one bench breach because each timed run
     // paid two fresh filesystem-commit-bound merges for a READ benchmark).
     Entry("q220_snapshot_read",
-      """WITH puts AS (
-        |  SELECT CAST(event_id % 199 AS VARCHAR) AS row_key, event_id AS seq,
-        |         event_type,
-        |         CAST(CAST(value AS DECIMAL(18,6)) AS VARCHAR) AS value_s,
-        |         CASE WHEN event_id % 3 <> 0 THEN CAST(user_id AS VARCHAR) END AS user_id_s,
-        |         props
-        |  FROM events WHERE event_id < (SELECT MAX(event_id) // 2 FROM events)),
-        |dels AS (
-        |  SELECT CAST((event_id + 25) % 199 AS VARCHAR) AS row_key, event_id AS seq
-        |  FROM events
-        |  WHERE event_id % 50 = 0 AND event_id < (SELECT MAX(event_id) // 2 FROM events)),
-        |last_del AS (SELECT row_key, MAX(seq) AS del_seq FROM dels GROUP BY 1),
-        |live AS (
-        |  SELECT p.* FROM puts p LEFT JOIN last_del d USING (row_key)
-        |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq)
-        |SELECT row_key,
-        |  arg_max(event_type, seq) AS event_type,
-        |  arg_max(value_s, seq) AS value,
-        |  arg_max(user_id_s, seq) FILTER (WHERE user_id_s IS NOT NULL) AS user_id,
-        |  arg_max(props, seq) FILTER (WHERE props IS NOT NULL) AS props
-        |FROM live GROUP BY row_key ORDER BY row_key""".stripMargin) { (s, d) =>
+      s"""WITH ${DocSync.foldCtes("", "event_id < (SELECT MAX(event_id) // 2 FROM events)")}
+        |SELECT * FROM docs ORDER BY row_key""".stripMargin) { (s, d) =>
       val dir = stagedMergeTable(s, d)
       DocSync.flattenDocs(DocSync.snapshot(s, dir, asOf = 0))
     },
@@ -147,8 +91,8 @@ object SyncQueries {
     // null-safe. Oracle replays BOTH folds (first half / whole log) and
     // the same categorization.
     Entry("q227_snapshot_diff",
-      s"""WITH ${foldCtes("0", "event_id < (SELECT MAX(event_id) // 2 FROM events)")},
-        |${foldCtes("1", "TRUE")},
+      s"""WITH ${DocSync.foldCtes("0", "event_id < (SELECT MAX(event_id) // 2 FROM events)")},
+        |${DocSync.foldCtes("1", "TRUE")},
         |cat AS (
         |  SELECT CASE
         |    WHEN a.row_key IS NULL THEN 'added'
@@ -182,26 +126,14 @@ object SyncQueries {
     Entry("q49_map_concat",
       // map_concat LWW + map_values/map_keys integrity: per doc, number of
       // fields and whether user_id is among the keys.
-      """WITH puts AS (
-        |  SELECT CAST(event_id % 199 AS STRING) AS row_key, event_id AS seq,
-        |         CASE WHEN event_id % 3 <> 0 THEN CAST(user_id AS STRING) END AS user_id_s,
-        |         props
-        |  FROM events),
-        |dels AS (
-        |  SELECT CAST((event_id + 25) % 199 AS STRING) AS row_key, event_id AS seq
-        |  FROM events WHERE event_id % 50 = 0),
-        |last_del AS (SELECT row_key, MAX(seq) AS del_seq FROM dels GROUP BY 1),
-        |live AS (
-        |  SELECT p.* FROM puts p LEFT JOIN last_del d USING (row_key)
-        |  WHERE d.del_seq IS NULL OR p.seq > d.del_seq),
-        |docs AS (SELECT row_key,
-        |           2 + CASE WHEN COUNT(user_id_s) > 0 THEN 1 ELSE 0 END
-        |             + CASE WHEN COUNT(props) > 0 THEN 1 ELSE 0 END AS n_fields,
-        |           CASE WHEN COUNT(user_id_s) > 0 THEN 1 ELSE 0 END AS has_user
-        |         FROM live GROUP BY 1)
+      s"""WITH ${DocSync.foldCtes("", "TRUE")},
+        |f AS (SELECT 2 + CASE WHEN user_id IS NOT NULL THEN 1 ELSE 0 END
+        |           + CASE WHEN props IS NOT NULL THEN 1 ELSE 0 END AS n_fields,
+        |         CASE WHEN user_id IS NOT NULL THEN 1 ELSE 0 END AS has_user
+        |       FROM docs)
         |SELECT CAST(n_fields AS INT) AS n_fields, CAST(SUM(has_user) AS BIGINT) AS n_has_user,
         |       COUNT(*) AS n
-        |FROM docs GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       docTable(s, d)
         .select(size(map_keys(col("doc"))).as("n_fields"),
                 when(array_contains(map_keys(col("doc")), "user_id"), 1).otherwise(0).as("has_user"))

@@ -79,24 +79,6 @@ object Domains {
           expr("sum_ppm div n_docs").as("mean_score_ppm"),
           expr("(sum_ppm div n_docs) < 500000").as("flagged"))
         .orderBy(col("host"))
-    }.sqlTwin(
-      s"""WITH q AS (
-        |  SELECT concat('www.site', (doc_id div 4) % 5, '.com') AS host,
-        |    doc_id div 4 AS g,
-        |    CAST(length(text) AS BIGINT) AS n_char,
-        |    CAST(size(${graft.queries.Dialect.tokensSparkSql}) AS BIGINT) AS n_tok,
-        |    CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '')) AS BIGINT) AS n_punct
-        |  FROM documents),
-        |s AS (
-        |  SELECT host, g,
-        |    (LEAST(n_tok, 100) * (n_char - n_punct) * 10000) div n_char AS score_ppm
-        |  FROM q WHERE n_tok > 0)
-        |SELECT host,
-        |  COUNT(*) AS n_docs,
-        |  COUNT(DISTINCT g) AS n_urls,
-        |  1000 - (1000 * COUNT(DISTINCT g)) div COUNT(*) AS dup_pm,
-        |  SUM(score_ppm) div COUNT(*) AS mean_score_ppm,
-        |  (SUM(score_ppm) div COUNT(*)) < 500000 AS flagged
-        |FROM s GROUP BY host ORDER BY host""".stripMargin)
+    }
   )
 }

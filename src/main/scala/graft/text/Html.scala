@@ -355,11 +355,6 @@ $ps
         .select(col("doc_id"), col("title"), col("n_blocks"), col("n_links"),
                 md5(col("content")).as("content_md5"))
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id, concat('Doc ', doc_id) AS title,
-        |  GREATEST(CAST(1 AS BIGINT), CAST(size(split(text, ' ')) div 12 AS BIGINT)) AS n_blocks,
-        |  CAST(9 + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS INT) AS n_links,
-        |  md5(text) AS content_md5
-        |FROM documents ORDER BY doc_id""".stripMargin)
+    }
   )
 }

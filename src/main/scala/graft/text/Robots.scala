@@ -205,16 +205,7 @@ object Robots {
         }
         .toDF("doc_id", "host", "allowed", "rule")
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      """SELECT doc_id,
-        |  concat('www.site', (doc_id div 4) % 5, '.com') AS host,
-        |  NOT ((((doc_id div 4) % 5) % 2 = 1) AND ((doc_id div 4) % 10 IN (1, 3))) AS allowed,
-        |  CASE WHEN (((doc_id div 4) % 5) % 2 = 1) AND ((doc_id div 4) % 10 = 1)
-        |         THEN '/docs/*1/page$'
-        |       WHEN (((doc_id div 4) % 5) % 2 = 1) AND ((doc_id div 4) % 10 = 3)
-        |         THEN '/docs/*3/page$'
-        |       ELSE '/docs/*/page$' END AS rule
-        |FROM documents ORDER BY doc_id""".stripMargin),
+    },
 
     // Sitemap discovery from robots.txt (SURVEY.md Q239) — RFC 9309
     // §2.3: `Sitemap:` lines are the protocol bridge between the
@@ -248,16 +239,6 @@ object Robots {
         }
         .toDF("host_idx", "sitemap_url")
         .orderBy(col("host_idx"), col("sitemap_url"))
-    }.sqlTwin(
-      """WITH h AS (SELECT DISTINCT (doc_id div 4) % 5 AS host_idx FROM documents)
-        |SELECT host_idx, sitemap_url FROM (
-        |  SELECT host_idx,
-        |    concat('https://www.site', host_idx, '.com/sitemap.xml') AS sitemap_url
-        |  FROM h
-        |  UNION ALL
-        |  SELECT host_idx,
-        |    concat('https://www.site', host_idx, '.com/sitemap-extra.xml')
-        |  FROM h WHERE host_idx % 2 = 0)
-        |ORDER BY host_idx, sitemap_url""".stripMargin)
+    }
   )
 }

@@ -369,24 +369,6 @@ object Sitemap {
             .when(col("cr_url").isNull, "sitemap_only")
             .otherwise("both").as("status"))
         .orderBy(col("canon_url"))
-    }.sqlTwin(
-      """WITH gs AS (SELECT DISTINCT doc_id div 4 AS g FROM documents),
-        |sm AS (
-        |  SELECT concat('https://www.site', g % 5, '.com/docs/', g,
-        |           '/page?a=1&b=2') AS u
-        |  FROM gs WHERE g % 7 <> 0
-        |  UNION ALL
-        |  SELECT concat('https://www.site', h, '.com/docs/teaser-', h, '/page')
-        |  FROM (SELECT DISTINCT g % 5 AS h FROM gs)),
-        |cr AS (
-        |  SELECT concat('https://www.site', g % 5, '.com/docs/', g,
-        |           '/page?a=1&b=2') AS u
-        |  FROM gs)
-        |SELECT COALESCE(sm.u, cr.u) AS canon_url,
-        |  CASE WHEN sm.u IS NULL THEN 'crawl_only'
-        |       WHEN cr.u IS NULL THEN 'sitemap_only'
-        |       ELSE 'both' END AS status
-        |FROM sm FULL OUTER JOIN cr ON sm.u = cr.u
-        |ORDER BY canon_url""".stripMargin)
+    }
   )
 }

@@ -223,10 +223,8 @@ object Text {
       .withColumn("row_unat", floor(lit(1000000) * -log(p)))
   }
 
-  /** q251's oracle body, parameterized on the host expression: the one
-    * structural switch (DuckDB's `||` casts the integer host id to text,
-    * Spark's needs `concat`); the twin is bridged from the concat side. */
-  private def heldoutGapSql(host: String): String =
+  /** q251's oracle: q247's held-out chain rolled up per host. */
+  private val heldoutGapSql: String =
     s"""WITH $wordsCtesSql,
        |$bigramCteSql,
        |$knHeldoutCtesSql,
@@ -236,7 +234,7 @@ object Text {
        |      $knHeldoutCaseSql)) AS BIGINT) AS row_unat
        |  $knHeldoutJoinSql),
        |hs AS (
-       |  SELECT $host AS host,
+       |  SELECT 'www.site' || ((sc.doc_id // 4) % 5) || '.com' AS host,
        |    CAST(COUNT(DISTINCT CASE WHEN held = 0 THEN sc.doc_id END) AS BIGINT) AS n_train_docs,
        |    CAST(COUNT(DISTINCT CASE WHEN held = 1 THEN sc.doc_id END) AS BIGINT) AS n_held_docs,
        |    CAST(SUM(CASE WHEN held = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_train_bigrams,
@@ -780,18 +778,11 @@ object Text {
         |SELECT DISTINCT a.doc_id AS doc_id FROM words a
         |JOIN words b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
         |WHERE a.w = 'data' AND b.w = 'stream'
-        |ORDER BY a.doc_id""".stripMargin) { (s, d) =>
+        |ORDER BY doc_id""".stripMargin) { (s, d) =>
       shinglesOf(TokenIndex.toks(s, d), 2)
         .filter(col("sh") === "data stream")
         .select(col("doc_id")).distinct().orderBy(col("doc_id"))
-    }.sqlTwin(
-      // structural gap: Spark won't resolve the pre-DISTINCT alias
-      // `a.doc_id` in ORDER BY — sort by the projected name instead
-      s"""WITH ${graft.queries.Dialect.duckToSpark(wordsCtesSql)}
-        |SELECT DISTINCT a.doc_id AS doc_id FROM words a
-        |JOIN words b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-        |WHERE a.w = 'data' AND b.w = 'stream'
-        |ORDER BY doc_id""".stripMargin),
+    },
 
     // ES match_phrase with slop=2, FULL two-term semantics: slop counts
     // permitted position moves, so an in-order pair matches when the gap
@@ -866,21 +857,7 @@ object Text {
                 round((col("fgc").cast("double") / nfg) /
                       (col("bgc").cast("double") / nbg), 6).as("lift"))
         .orderBy(col("lift").desc, col("term")).limit(15)
-    }.sqlTwin(
-      // structural gap: generator under SELECT DISTINCT (as in q76's twin)
-      s"""WITH words AS (
-        |  SELECT DISTINCT doc_id, lang, w
-        |  FROM (SELECT doc_id, lang, explode(${graft.queries.Dialect.tokensSparkSql}) AS w
-        |        FROM documents)),
-        |fg AS (SELECT w, COUNT(*) AS fgc FROM words WHERE lang = 'en' GROUP BY 1),
-        |bg AS (SELECT w, COUNT(*) AS bgc FROM words GROUP BY 1),
-        |n AS (SELECT COUNT(DISTINCT CASE WHEN lang = 'en' THEN doc_id END) AS nfg,
-        |             COUNT(DISTINCT doc_id) AS nbg FROM words)
-        |SELECT w AS term, CAST(fgc AS BIGINT) AS fg_docs,
-        |  ROUND((CAST(fgc AS DOUBLE) / (SELECT nfg FROM n)) /
-        |        (CAST(bgc AS DOUBLE) / (SELECT nbg FROM n)), 6) AS lift
-        |FROM fg JOIN bg USING (w) WHERE fgc >= 3
-        |ORDER BY lift DESC, term LIMIT 15""".stripMargin),
+    },
 
     // ES more_like_this: rank other docs by summed IDF of the distinct
     // terms they share with the query document (MLT's core scoring,
@@ -908,19 +885,7 @@ object Text {
         .groupBy(col("doc_id"))
         .agg(round(sum(log(lit(n.toDouble) / col("df"))), 6).as("score"))
         .orderBy(col("score").desc, col("doc_id")).limit(10)
-    }.sqlTwin(
-      // structural gap: Spark disallows a generator directly under
-      // SELECT DISTINCT — explode in a subquery, distinct above it
-      s"""WITH toks AS (SELECT doc_id, ${graft.queries.Dialect.tokensSparkSql} AS ws FROM documents),
-        |words AS (SELECT DISTINCT doc_id, w
-        |          FROM (SELECT doc_id, explode(ws) AS w FROM toks)),
-        |n AS (SELECT COUNT(*) AS n FROM documents),
-        |df AS (SELECT w, COUNT(*) AS df FROM words GROUP BY 1),
-        |qw AS (SELECT w FROM words WHERE doc_id = 1)
-        |SELECT doc_id, ROUND(SUM(ln(CAST((SELECT n FROM n) AS DOUBLE) / df)), 6) AS score
-        |FROM words JOIN qw USING (w) JOIN df USING (w)
-        |WHERE doc_id <> 1 GROUP BY doc_id
-        |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
+    },
 
     // ES `match` + `minimum_should_match` (the single most-used ES query;
     // reference delivers it via the ES 6.3 DSL, pom.xml:36-46): the
@@ -981,14 +946,7 @@ object Text {
         .filter(col("df") <= 2)
         .select(col("w").as("term"), col("df").cast("bigint").as("doc_count"))
         .orderBy(col("doc_count"), col("term")).limit(20)
-    }.sqlTwin(
-      // structural gap: generator under SELECT DISTINCT (as in q76's twin)
-      s"""WITH toks AS (SELECT doc_id, ${graft.queries.Dialect.tokensSparkSql} AS ws FROM documents),
-        |words AS (SELECT DISTINCT doc_id, w
-        |          FROM (SELECT doc_id, explode(ws) AS w FROM toks)),
-        |df AS (SELECT w, COUNT(*) AS df FROM words GROUP BY 1)
-        |SELECT w AS term, CAST(df AS BIGINT) AS doc_count FROM df
-        |WHERE df <= 2 ORDER BY doc_count, term LIMIT 20""".stripMargin),
+    },
 
     // ES boosting query: positive term scored by TF-IDF, docs also
     // matching the negative term have their score multiplied by
@@ -1313,20 +1271,7 @@ object Text {
         .withColumn("rnk", row_number().over(
           Window.orderBy(col("mean_unat").desc, col("host"))).cast("int"))
         .orderBy(col("host"))
-    }.sqlTwin(
-      s"""WITH ${graft.queries.Dialect.duckToSpark(knChainSql)},
-        |hs AS (
-        |  SELECT concat('www.site', (bg.doc_id div 4) % 5, '.com') AS host,
-        |    COUNT(DISTINCT bg.doc_id) AS n_docs,
-        |    COUNT(*) AS n_bigrams,
-        |    $knRowUnatSql,
-        |    CAST(SUM(CAST(FLOOR(1000000 * -ln($knPSql)) AS BIGINT)) div COUNT(*)
-        |      AS BIGINT) AS mean_unat
-        |  FROM $knScoreJoinSql
-        |  GROUP BY 1)
-        |SELECT host, n_docs, n_bigrams, nll_unat, mean_unat,
-        |  CAST(ROW_NUMBER() OVER (ORDER BY mean_unat DESC, host) AS INT) AS rnk
-        |FROM hs ORDER BY host""".stripMargin),
+    },
 
     // Held-out Kneser-Ney scoring (SURVEY Q247) — q244 deployment-shaped:
     // the model trains on HALF the corpus (even doc_ids) and scores the
@@ -1540,8 +1485,7 @@ object Text {
     // conditional integer sums; means are floor divisions of nonnegative
     // integers, the gap is a plain BIGINT difference (may be negative —
     // a host the model generalizes to better than its own training half).
-    Entry("q251_heldout_gap_by_host",
-      heldoutGapSql("'www.site' || ((sc.doc_id // 4) % 5) || '.com'")) { (s, d) =>
+    Entry("q251_heldout_gap_by_host", heldoutGapSql) { (s, d) =>
       knHeldoutScored(s, d)
         .groupBy(expr("concat('www.site', (doc_id div 4) % 5, '.com')").as("host"))
         .agg(
@@ -1557,8 +1501,7 @@ object Text {
             .as("held_mean_unat"))
         .withColumn("gap_unat", (col("held_mean_unat") - col("train_mean_unat")).cast("long"))
         .orderBy(col("host"))
-    }.sqlTwin(graft.queries.Dialect.duckToSpark(
-      heldoutGapSql("concat('www.site', (sc.doc_id // 4) % 5, '.com')"))),
+    },
 
     // ---- Q143 PMI collocation ranking (BPE merge-candidate signal) ----
     // Tokenizer-vocabulary induction starts from exactly this statistic:
@@ -1675,23 +1618,7 @@ object Text {
                 round((col("fgc").cast("double") / nfg) /
                       (col("bgc").cast("double") / nbg), 6).as("lift"))
         .orderBy(col("lift").desc, col("term")).limit(15)
-    }.sqlTwin(
-      // structural gap: generator under SELECT DISTINCT (q82's twin)
-      s"""WITH dd AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
-        |docs AS (SELECT d.doc_id, d.lang, d.text FROM documents d
-        |         JOIN dd ON dd.doc_id = d.doc_id),
-        |words AS (SELECT DISTINCT doc_id, lang, w
-        |  FROM (SELECT doc_id, lang, explode(${graft.queries.Dialect.tokensSparkSql}) AS w
-        |        FROM docs)),
-        |fg AS (SELECT w, COUNT(*) AS fgc FROM words WHERE lang = 'en' GROUP BY 1),
-        |bg AS (SELECT w, COUNT(*) AS bgc FROM words GROUP BY 1),
-        |n AS (SELECT COUNT(DISTINCT CASE WHEN lang = 'en' THEN doc_id END) AS nfg,
-        |             COUNT(DISTINCT doc_id) AS nbg FROM words)
-        |SELECT w AS term, CAST(fgc AS BIGINT) AS fg_docs,
-        |  ROUND((CAST(fgc AS DOUBLE) / (SELECT nfg FROM n)) /
-        |        (CAST(bgc AS DOUBLE) / (SELECT nbg FROM n)), 6) AS lift
-        |FROM fg JOIN bg USING (w) WHERE fgc >= 3
-        |ORDER BY lift DESC, term LIMIT 15""".stripMargin),
+    },
 
     // Cross-source duplication matrix — the curation question BEHIND the
     // pair report: which sources copy from which (mirror sites, scraped

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.{Dialect, Entry}
+import graft.queries.Entry
 
 /** Unigram-LM (SentencePiece-style) subword tokenizer (SURVEY.md
   * Q235/Q236) — the other mainstream subword algorithm beside BPE
@@ -365,18 +365,13 @@ object Unigram {
   /** q243's oracle: the shared encode chain aggregated at q230's host
     * key instead of per doc — tokenizer FERTILITY (pieces per word) by
     * domain, the corpus-noise signal tokenizer papers report per source
-    * (noisy hosts segment into more pieces per word). `duck` is the one
-    * structural switch: DuckDB's `||` casts the integer host id to text,
-    * Spark's needs `concat`. */
-  private def fertilitySql(duck: Boolean): String = {
-    val host =
-      if (duck) "'www.site' || ((t.doc_id // 4) % 5) || '.com'"
-      else "concat('www.site', (t.doc_id // 4) % 5, '.com')"
+    * (noisy hosts segment into more pieces per word). */
+  private def fertilitySql: String = {
     val pieces =
       s"""SUM(CASE WHEN length(t.w) > $MaxLen THEN length(t.w)
          |      ELSE 1024 * ((v.value + 16) // 1024) - v.value END)""".stripMargin
     s"""WITH $chainSql
-       |SELECT $host AS host,
+       |SELECT 'www.site' || ((t.doc_id // 4) % 5) || '.com' AS host,
        |  COUNT(DISTINCT t.doc_id) AS n_docs,
        |  COUNT(*) AS n_words,
        |  CAST($pieces AS BIGINT) AS n_pieces,
@@ -464,7 +459,7 @@ object Unigram {
     // word-keyed join, and the rollup is ONE host-keyed agg (q230's
     // posture — O(hosts) output, integer per-mille fertility so the
     // rollup is order-independent and hash-exact).
-    Entry("q243_token_fertility", fertilitySql(duck = true)) { (s, d) =>
+    Entry("q243_token_fertility", fertilitySql) { (s, d) =>
       import s.implicits._
       val pv = rules(s, d).map(r => r.piece -> r.v).toMap
       val wordVals = TokenIndex.words(s, d).select(col("w")).distinct()
@@ -481,6 +476,6 @@ object Unigram {
           sum(col("n")).as("n_pieces"),
           expr("CAST((1000 * SUM(n)) div COUNT(*) AS BIGINT)").as("fert_pm"))
         .orderBy(col("host"))
-    }.sqlTwin(Dialect.duckToSpark(fertilitySql(duck = false)))
+    }
   )
 }

@@ -159,10 +159,6 @@ object Urls {
         .groupBy(col("canon_url"))
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_dups"))
         .orderBy(col("canon_url"))
-    }.sqlTwin(
-      """SELECT concat('https://www.site', (doc_id div 4) % 5, '.com/docs/',
-        |         doc_id div 4, '/page?a=1&b=2') AS canon_url,
-        |  MIN(doc_id) AS keeper_id, COUNT(*) AS n_dups
-        |FROM documents GROUP BY 1 ORDER BY canon_url""".stripMargin)
+    }
   )
 }

@@ -15,12 +15,15 @@ object SparkEntry {
 
   // SQL entry path (SURVEY.md §3.4 C): entries without an explicit
   // Spark-dialect twin get one derived from the oracle SQL by the dialect
-  // bridge (`Entry.sparkSql`); SqlParitySpec executes every twin against
-  // the DataFrame plan, so a bad derivation cannot pass silently. A
+  // bridge (`Entry.sparkSql`). An `Entry.sql` entry runs that twin as its
+  // only implementation, so Verify checks it against the DuckDB oracle;
+  // for an entry with a DataFrame body, SqlParitySpec executes the twin
+  // against the body, so a bad derivation cannot pass silently. A
   // derivation REJECT (rule token inside a string literal) is isolated to
-  // that entry — recorded in [[twinDerivationErrors]] and failed by
-  // SqlParitySpec — instead of throwing here, where one bad oracle would
-  // take down registration for every unrelated bench/correctness run.
+  // that entry — recorded in [[twinDerivationErrors]], failed by
+  // SqlParitySpec and thrown by an `Entry.sql` entry's `fn` — instead of
+  // throwing here, where one bad oracle would take down registration for
+  // every unrelated bench/correctness run.
   val allEntries: Seq[Entry] =
     Relational.entries ++
     Aggregates.entries ++

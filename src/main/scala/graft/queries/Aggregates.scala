@@ -21,41 +21,23 @@ object Aggregates {
 
   val entries: Seq[Entry] = Seq(
 
-    Entry("q21_terms_agg",
+    Entry.sql("q21_terms_agg",
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |  ROUND(SUM(l_quantity), 4) AS sum_qty,
         |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-             round(sum(col("l_quantity")), 4).as("sum_qty"),
-             round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    Entry("q22_stats_agg",
+    Entry.sql("q22_stats_agg",
       """SELECT o_orderpriority, COUNT(*) AS n,
         |  ROUND(SUM(o_totalprice), 4) AS sum_price,
         |  ROUND(AVG(o_totalprice), 6) AS avg_price,
         |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-      T(s, d, "orders").groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-             round(sum(col("o_totalprice")), 4).as("sum_price"),
-             round(avg(col("o_totalprice")), 6).as("avg_price"),
-             min(col("o_totalprice")).as("min_price"),
-             max(col("o_totalprice")).as("max_price"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    Entry("q23_cardinality",
+    Entry.sql("q23_cardinality",
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // HLL sketch variant (ES `cardinality`): bench-only, rel-err asserted in tests
     Entry.benchOnly("q23_cardinality_approx") { (s, d) =>
@@ -64,16 +46,11 @@ object Aggregates {
         .orderBy(col("l_returnflag"))
     },
 
-    Entry("q24_percentile",
+    Entry.sql("q24_percentile",
       """SELECT o_orderpriority,
         |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS p50,
         |  ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-      T(s, d, "orders").groupBy(col("o_orderpriority"))
-        .agg(round(expr("percentile(o_totalprice, 0.5)"), 4).as("p50"),
-             round(expr("percentile(o_totalprice, 0.9)"), 4).as("p90"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // TDigest-analog sketch variant: bench-only
     Entry.benchOnly("q24_percentile_approx") { (s, d) =>
@@ -82,33 +59,19 @@ object Aggregates {
         .orderBy(col("o_orderpriority"))
     },
 
-    Entry("q25_histogram",
+    Entry.sql("q25_histogram",
       """SELECT CAST(FLOOR(l_quantity / 10) * 10 AS BIGINT) AS bucket, COUNT(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem")
-        .groupBy((floor(col("l_quantity") / 10) * 10).cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n")).orderBy(col("bucket"))
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Entry("q26_date_histogram",
+    Entry.sql("q26_date_histogram",
       """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n")).orderBy(col("day"))
-    },
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Entry("q27_range_agg",
+    Entry.sql("q27_range_agg",
       """SELECT CASE WHEN o_totalprice < 1000 THEN 'low'
         |            WHEN o_totalprice < 10000 THEN 'mid'
         |            ELSE 'high' END AS bucket, COUNT(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "orders")
-        .groupBy(when(col("o_totalprice") < 1000, "low")
-                 .when(col("o_totalprice") < 10000, "mid")
-                 .otherwise("high").as("bucket"))
-        .agg(count(lit(1)).as("n")).orderBy(col("bucket"))
-    },
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     Entry("q28_filters_agg",
       """SELECT COUNT(*) FILTER (WHERE event_type = 'click') AS n_click,
@@ -121,27 +84,15 @@ object Aggregates {
         count(when(col("event_type") === "purchase", 1)).as("n_purchase"))
     },
 
-    Entry("q29_distinct",
-      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders ORDER BY 1, 2") { (s, d) =>
-      T(s, d, "orders").select(col("o_orderstatus"), col("o_orderpriority"))
-        .distinct().orderBy(col("o_orderstatus"), col("o_orderpriority"))
-    },
+    Entry.sql("q29_distinct",
+      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders ORDER BY 1, 2"),
 
-    Entry("q30_rollup",
+    Entry.sql("q30_rollup",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag) AS INT) AS g1, CAST(GROUPING(l_linestatus) AS INT) AS g2,
         |  COUNT(*) AS n, ROUND(SUM(l_quantity), 4) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY g1, g2, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping("l_returnflag").cast("int").as("g1"),
-             grouping("l_linestatus").cast("int").as("g2"),
-             count(lit(1)).as("n"), round(sum(col("l_quantity")), 4).as("sum_qty"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-                col("g1"), col("g2"), col("n"), col("sum_qty"))
-        .orderBy(col("g1"), col("g2"),
-                 col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    },
+        |ORDER BY g1, g2, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
     // Q31 plan-invariance: the Q21 aggregate computed through an explicit
     // repartition (different partial-agg grouping) must match the same oracle.
@@ -157,36 +108,25 @@ object Aggregates {
 
     // ES percentile_ranks (inverse percentile): fraction of values at or
     // below given thresholds — one conditional-count pass, no sort.
-    Entry("q83_percentile_ranks",
+    Entry.sql("q83_percentile_ranks",
       """SELECT o_orderpriority,
         |  ROUND(SUM(CASE WHEN o_totalprice <= 50000 THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) AS pr_50k,
         |  ROUND(SUM(CASE WHEN o_totalprice <= 150000 THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) AS pr_150k
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "orders").groupBy(col("o_orderpriority"))
-        .agg(round(sum(when(col("o_totalprice") <= 50000, 1).otherwise(0)) /
-                   count(lit(1)).cast("double"), 6).as("pr_50k"),
-             round(sum(when(col("o_totalprice") <= 150000, 1).otherwise(0)) /
-                   count(lit(1)).cast("double"), 6).as("pr_150k"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES terms agg with order: {sub_agg: desc} — buckets ranked by a
     // sub-aggregation value, not by key or doc count.
-    Entry("q84_terms_by_subagg",
+    Entry.sql("q84_terms_by_subagg",
       """SELECT c_mktsegment, COUNT(*) AS n, ROUND(AVG(c_acctbal), 6) AS avg_bal
         |FROM customer GROUP BY 1
-        |ORDER BY avg_bal DESC, c_mktsegment""".stripMargin) { (s, d) =>
-      T(s, d, "customer").groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), round(avg(col("c_acctbal")), 6).as("avg_bal"))
-        .orderBy(col("avg_bal").desc, col("c_mktsegment"))
-    },
+        |ORDER BY avg_bal DESC, c_mktsegment""".stripMargin),
 
     // ES adjacency_matrix analog at the entity level: named filters
     // (purchase/click/view) -> per-user presence flags via one bool_or
     // agg, then one count per flag combination. Two map-side-combinable
     // hash aggs; the intersection counts ES computes per doc-set fall out
     // of the flag-combination counts without any pairwise work.
-    Entry("q95_adjacency_matrix",
+    Entry.sql("q95_adjacency_matrix",
       """WITH f AS (
         |  SELECT user_id,
         |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS has_p,
@@ -194,15 +134,7 @@ object Aggregates {
         |    MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS has_v
         |  FROM events GROUP BY user_id)
         |SELECT has_p, has_c, has_v, COUNT(*) AS n_users
-        |FROM f GROUP BY 1, 2, 3 ORDER BY has_p, has_c, has_v""".stripMargin) { (s, d) =>
-      T(s, d, "events").groupBy(col("user_id"))
-        .agg(max(when(col("event_type") === "purchase", 1).otherwise(0)).as("has_p"),
-             max(when(col("event_type") === "click", 1).otherwise(0)).as("has_c"),
-             max(when(col("event_type") === "view", 1).otherwise(0)).as("has_v"))
-        .groupBy(col("has_p"), col("has_c"), col("has_v"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy(col("has_p"), col("has_c"), col("has_v"))
-    },
+        |FROM f GROUP BY 1, 2, 3 ORDER BY has_p, has_c, has_v""".stripMargin),
 
     // ES max_bucket / avg_bucket pipeline aggs: sibling statistics OVER
     // the buckets of a date histogram — the histogram is one hash agg,
@@ -234,29 +166,21 @@ object Aggregates {
     // runs over O(buckets) rows (30 days), never source rows. Both
     // engines interpolate linearly over exact integer counts, so the
     // result doubles are identical (same contract as q24).
-    Entry("q109_percentiles_bucket",
+    Entry.sql("q109_percentiles_bucket",
       """WITH h AS (SELECT date_trunc('day', ts) AS day, COUNT(*) AS n
         |           FROM events GROUP BY 1)
         |SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
         |  ROUND(quantile_cont(n, 0.25), 4) AS p25,
         |  ROUND(quantile_cont(n, 0.50), 4) AS p50,
         |  ROUND(quantile_cont(n, 0.90), 4) AS p90
-        |FROM h""".stripMargin) { (s, d) =>
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).cast("bigint").as("n_buckets"),
-             round(expr("percentile(n, 0.25)"), 4).as("p25"),
-             round(expr("percentile(n, 0.50)"), 4).as("p50"),
-             round(expr("percentile(n, 0.90)"), 4).as("p90"))
-    },
+        |FROM h""".stripMargin),
 
     // ES diversified_sampler agg: cap the per-"diversity field" (source)
     // contribution BEFORE aggregating, so one dominant source cannot
     // swamp the downstream agg. Deterministic sample: top-3 per source by
     // (n_chars DESC, doc_id) — a per-source window, shuffle keyed on the
     // diversity field, then the per-lang agg over the bounded sample.
-    Entry("q110_diversified_sampler",
+    Entry.sql("q110_diversified_sampler",
       """WITH ranked AS (
         |  SELECT doc_id, lang, source, n_chars,
         |         row_number() OVER (PARTITION BY source
@@ -264,35 +188,19 @@ object Aggregates {
         |  FROM documents)
         |SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
         |FROM ranked WHERE rn <= 3
-        |GROUP BY 1 ORDER BY lang""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      T(s, d, "documents")
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).cast("bigint").as("chars"))
-        .orderBy(col("lang"))
-    },
+        |GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // ES matrix_stats analog: per-group second-order statistics between
     // two metrics (covariance + correlation). One map-side-combinable
     // hash agg — Spark's covar/corr carry (n, mean, co-moment) partials,
     // so the shuffle is O(groups), never O(rows).
-    Entry("q94_matrix_stats",
+    Entry.sql("q94_matrix_stats",
       """SELECT l_returnflag, COUNT(*) AS n,
         |  ROUND(AVG(l_quantity), 6) AS mean_q,
         |  ROUND(AVG(l_extendedprice), 4) AS mean_p,
         |  ROUND(covar_pop(l_quantity, l_extendedprice), 2) AS cov_qp,
         |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qp
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-             round(avg(col("l_quantity")), 6).as("mean_q"),
-             round(avg(col("l_extendedprice")), 4).as("mean_p"),
-             round(covar_pop(col("l_quantity"), col("l_extendedprice")), 2).as("cov_qp"),
-             round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Salted-aggregation invariance (SURVEY §4.3 skew posture): the
     // two-phase hot-key rewrite must hash-match the direct aggregation's
@@ -334,17 +242,11 @@ object Aggregates {
     // decimals, so the cast is lossless and the sums are EXACT in both
     // engines regardless of summation order); only the final division is
     // floating-point, on identical inputs -> identical doubles.
-    Entry("q104_weighted_avg",
+    Entry.sql("q104_weighted_avg",
       """SELECT l_returnflag,
         |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
         |        / CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 6) AS wavg_price
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dec = (c: String) => col(c).cast(org.apache.spark.sql.types.DecimalType(18, 2))
-      T(s, d, "lineitem").groupBy(col("l_returnflag"))
-        .agg(round(sum(dec("l_extendedprice") * dec("l_quantity")).cast("double")
-               / sum(dec("l_quantity")).cast("double"), 6).as("wavg_price"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES bucket_script + bucket_selector pipeline aggs: a per-bucket
     // derived metric computed FROM other sub-aggregations of the same
@@ -352,53 +254,35 @@ object Aggregates {
     // bucket filter on the derived value (threshold 0.2 keeps ~half the buckets at both fixture SFs). Conditional counts ride the
     // same single hash agg as the bucket count — one pass over events,
     // then bucket-level arithmetic over O(buckets) rows.
-    Entry("q105_bucket_script",
+    Entry.sql("q105_bucket_script",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n,
         |         COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS n_err
         |  FROM events GROUP BY 1)
         |SELECT day, n, n_err, ROUND(CAST(n_err AS DOUBLE) / n, 6) AS err_share
         |FROM h WHERE CAST(n_err AS DOUBLE) / n > 0.2
-        |ORDER BY day""".stripMargin) { (s, d) =>
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"),
-             count(when(col("event_type") === "error", 1)).as("n_err"))
-        .filter(col("n_err").cast("double") / col("n") > 0.2)
-        .select(col("day"), col("n"), col("n_err"),
-                round(col("n_err").cast("double") / col("n"), 6).as("err_share"))
-        .orderBy(col("day"))
-    },
+        |ORDER BY day""".stripMargin),
 
     // ES serial_diff (period 7) + moving_fn pipeline aggs: lag-k delta and
     // a trailing-window max over date-histogram buckets. The window runs
     // over O(buckets) rows (days), never raw events — the single
     // unpartitioned window is bounded by the histogram's bucket count,
     // not corpus size (same posture as q78).
-    Entry("q106_serial_diff",
+    Entry.sql("q106_serial_diff",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1)
         |SELECT day, n,
         |  CAST(n - lag(n, 7) OVER (ORDER BY day) AS BIGINT) AS diff7,
         |  CAST(MAX(n) OVER (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS max7
-        |FROM h ORDER BY day""".stripMargin) { (s, d) =>
-      val w = Window.orderBy(col("day"))
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("day"), col("n"),
-                (col("n") - lag(col("n"), 7).over(w)).cast("bigint").as("diff7"),
-                max(col("n")).over(w.rowsBetween(-6, 0)).cast("bigint").as("max7"))
-        .orderBy(col("day"))
-    },
+        |FROM h ORDER BY day""".stripMargin),
 
     // ES derivative pipeline agg (+ the chained second derivative ES
     // computes when a derivative feeds a derivative): first differences
     // over the date-histogram's O(buckets) rows — lag(1) windows on
     // bucket rows, never source rows (same posture as q106's serial_diff,
     // which is this operator at lag 7).
-    Entry("q151_derivative",
+    Entry.sql("q151_derivative",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1)
@@ -407,23 +291,13 @@ object Aggregates {
         |  CAST((n - lag(n, 1) OVER (ORDER BY day))
         |       - (lag(n, 1) OVER (ORDER BY day) - lag(n, 2) OVER (ORDER BY day))
         |       AS BIGINT) AS deriv2
-        |FROM h ORDER BY day""".stripMargin) { (s, d) =>
-      val w = Window.orderBy(col("day"))
-      val d1 = col("n") - lag(col("n"), 1).over(w)
-      val d2 = d1 - (lag(col("n"), 1).over(w) - lag(col("n"), 2).over(w))
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("day"), col("n"), d1.cast("bigint").as("deriv"),
-                d2.cast("bigint").as("deriv2"))
-        .orderBy(col("day"))
-    },
+        |FROM h ORDER BY day""".stripMargin),
 
     // ES extended_stats_bucket pipeline agg: the q111 moment family
     // computed over the sibling histogram's BUCKET VALUES — a second
     // tiny agg over O(buckets) rows collapsing to one row; source rows
     // are touched once, by the histogram itself.
-    Entry("q152_extended_stats_bucket",
+    Entry.sql("q152_extended_stats_bucket",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1)
@@ -433,24 +307,14 @@ object Aggregates {
         |  ROUND(stddev_pop(n), 6) AS std_n,
         |  ROUND(AVG(n) + 2 * stddev_pop(n), 6) AS std_upper,
         |  ROUND(AVG(n) - 2 * stddev_pop(n), 6) AS std_lower
-        |FROM h""".stripMargin) { (s, d) =>
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("n_buckets"), sum(col("n")).cast("bigint").as("sum_n"),
-             round(avg(col("n")), 6).as("avg_n"),
-             round(var_pop(col("n")), 6).as("var_n"),
-             round(stddev_pop(col("n")), 6).as("std_n"),
-             round(avg(col("n")) + lit(2) * stddev_pop(col("n")), 6).as("std_upper"),
-             round(avg(col("n")) - lit(2) * stddev_pop(col("n")), 6).as("std_lower"))
-    },
+        |FROM h""".stripMargin),
 
     // ES extended_stats: one hash agg emitting the full moment family —
     // count/sum/avg/sum_of_squares/variance/std_deviation plus the
     // ±2σ std bounds ES reports. All partials are (sum, sum_sq, count)
     // triples, map-side-combinable; l_quantity is O(50) so ROUND(.,6) is
     // stable across engine summation orders.
-    Entry("q111_extended_stats",
+    Entry.sql("q111_extended_stats",
       """SELECT l_returnflag, COUNT(*) AS n,
         |  ROUND(SUM(l_quantity), 6) AS sum_q,
         |  ROUND(AVG(l_quantity), 6) AS avg_q,
@@ -459,18 +323,7 @@ object Aggregates {
         |  ROUND(stddev_pop(l_quantity), 6) AS std_q,
         |  ROUND(AVG(l_quantity) + 2 * stddev_pop(l_quantity), 6) AS std_upper,
         |  ROUND(AVG(l_quantity) - 2 * stddev_pop(l_quantity), 6) AS std_lower
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-             round(sum(col("l_quantity")), 6).as("sum_q"),
-             round(avg(col("l_quantity")), 6).as("avg_q"),
-             round(sum(col("l_quantity") * col("l_quantity")), 6).as("sum_sq"),
-             round(var_pop(col("l_quantity")), 6).as("var_q"),
-             round(stddev_pop(col("l_quantity")), 6).as("std_q"),
-             round(avg(col("l_quantity")) + stddev_pop(col("l_quantity")) * 2, 6).as("std_upper"),
-             round(avg(col("l_quantity")) - stddev_pop(col("l_quantity")) * 2, 6).as("std_lower"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES scripted_metric: a user-authored map/combine/reduce aggregation.
     // The engine's surface for this is a typed Aggregator
@@ -499,35 +352,22 @@ object Aggregates {
     // ES date_range agg: explicit half-open date buckets with open ends
     // (*-1996, 1996-1999, 1999-*). A CASE over the scan — one hash agg,
     // no join; at scale the CASE folds into the scan's projection.
-    Entry("q114_date_range_agg",
+    Entry.sql("q114_date_range_agg",
       """SELECT CASE WHEN o_orderdate < TIMESTAMP '1996-01-01' THEN '*-1996'
         |            WHEN o_orderdate < TIMESTAMP '1999-01-01' THEN '1996-1999'
         |            ELSE '1999-*' END AS bucket,
         |       COUNT(*) AS n, ROUND(SUM(o_totalprice), 6) AS sum_price
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "orders")
-        .groupBy(when(col("o_orderdate") < lit("1996-01-01").cast("timestamp"), "*-1996")
-          .when(col("o_orderdate") < lit("1999-01-01").cast("timestamp"), "1996-1999")
-          .otherwise("1999-*").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-             round(sum(col("o_totalprice")), 6).as("sum_price"))
-        .orderBy(col("bucket"))
-    },
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES bucket_sort pipeline agg: rank the terms-agg buckets by a metric
     // and page into them (from=3, size=5). The paging runs over O(buckets)
     // rows — the nation terms agg output — never the source rows, so the
     // global sort+offset is bounded by bucket count (same posture as the
     // other pipeline aggs, q78/q100/q106).
-    Entry("q115_bucket_sort",
+    Entry.sql("q115_bucket_sort",
       """SELECT c_nationkey, COUNT(*) AS n, ROUND(AVG(c_acctbal), 6) AS avg_bal
         |FROM customer GROUP BY 1
-        |ORDER BY n DESC, c_nationkey LIMIT 5 OFFSET 3""".stripMargin) { (s, d) =>
-      T(s, d, "customer").groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"), round(avg(col("c_acctbal")), 6).as("avg_bal"))
-        .orderBy(col("n").desc, col("c_nationkey"))
-        .offset(3).limit(5)
-    },
+        |ORDER BY n DESC, c_nationkey LIMIT 5 OFFSET 3""".stripMargin),
 
     // ES auto_date_histogram: the interval is CHOSEN FROM THE DATA — the
     // smallest rung of the day/month/year ladder that keeps the bucket
@@ -611,41 +451,22 @@ object Aggregates {
         .orderBy(col("o_orderpriority"), col("rn"))
     },
 
-    Entry("q34_lag",
+    Entry.sql("q34_lag",
       """SELECT user_id, event_id,
         |  ROUND(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 6) AS delta
-        |FROM events WHERE user_id <= 20 ORDER BY user_id, event_id""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      T(s, d, "events").filter(col("user_id") <= 20)
-        .select(col("user_id"), col("event_id"),
-                round(col("value") - lag(col("value"), 1).over(w), 6).as("delta"))
-        .orderBy(col("user_id"), col("event_id"))
-    },
+        |FROM events WHERE user_id <= 20 ORDER BY user_id, event_id""".stripMargin),
 
-    Entry("q35_moving_avg",
+    Entry.sql("q35_moving_avg",
       """SELECT user_id, event_id,
         |  ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS mavg
-        |FROM events WHERE user_id <= 10 ORDER BY user_id, event_id""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-2, Window.currentRow)
-      T(s, d, "events").filter(col("user_id") <= 10)
-        .select(col("user_id"), col("event_id"), round(avg(col("value")).over(w), 6).as("mavg"))
-        .orderBy(col("user_id"), col("event_id"))
-    },
+        |FROM events WHERE user_id <= 10 ORDER BY user_id, event_id""".stripMargin),
 
-    Entry("q36_running_sum",
+    Entry.sql("q36_running_sum",
       """SELECT o_custkey, o_orderkey,
         |  ROUND(SUM(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T(s, d, "orders")
-        .select(col("o_custkey"), col("o_orderkey"),
-                round(sum(col("o_totalprice")).over(w), 4).as("running"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // pr/cd are canonicalized by TRUNCATION (floor(x*1e6)/1e6), not
     // ROUND: the fractions k/n land on exact decimal half-ties (sf0.1
@@ -670,44 +491,23 @@ object Aggregates {
     },
 
     // ---- sorts / limits / top-k (Q38-Q40) ----
-    Entry("q38_sort",
+    Entry.sql("q38_sort",
       """SELECT c_custkey, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC NULLS LAST, c_custkey""".stripMargin) { (s, d) =>
-      T(s, d, "customer").select(col("c_custkey"), col("c_acctbal"))
-        .orderBy(col("c_acctbal").desc_nulls_last, col("c_custkey"))
-    },
+        |ORDER BY c_acctbal DESC NULLS LAST, c_custkey""".stripMargin),
 
-    Entry("q39_limit",
+    Entry.sql("q39_limit",
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin) { (s, d) =>
-      T(s, d, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)
-    },
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
 
-    Entry("q39_paging",
+    Entry.sql("q39_paging",
       """SELECT o_orderkey, o_totalprice, CAST(rn AS INT) AS rn FROM (
         |  SELECT o_orderkey, o_totalprice,
         |    row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders)
-        |WHERE rn BETWEEN 11 AND 20 ORDER BY rn""".stripMargin) { (s, d) =>
-      // ES from+size paging: the wanted prefix is bounded (from+size = 20
-      // rows), so fetch it with TakeOrderedAndProject (per-partition top-20,
-      // tiny merge — no full-table single-partition window) and number rows
-      // only inside that bounded set. Deep-paging cost grows with from+size
-      // exactly as in ES; unbounded iteration is q86's keyset pager.
-      val w = Window.orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      T(s, d, "orders").select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(20)
-        .withColumn("rn", row_number().over(w).cast("int"))
-        .filter(col("rn").between(11, 20)).orderBy(col("rn"))
-    },
+        |WHERE rn BETWEEN 11 AND 20 ORDER BY rn""".stripMargin),
 
-    Entry("q40_topk",
+    Entry.sql("q40_topk",
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 5""".stripMargin) { (s, d) =>
-      // Spark plans TakeOrderedAndProject: per-partition top-5, tiny merge.
-      T(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber")).limit(5)
-    },
+        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 5""".stripMargin),
 
     // ES composite-aggregation analog: keyset-paged bucket iteration. The
     // `after` cursor is a tuple-compare filter on the BUCKET KEY evaluated
@@ -717,14 +517,9 @@ object Aggregates {
     // global window, no single-partition funnel (contrast q39_paging's
     // bounded from+size page); iterating all buckets re-runs with the last
     // emitted (lang, source) as the next cursor, exactly ES's `after`.
-    Entry("q86_composite_agg",
+    Entry.sql("q86_composite_agg",
       """SELECT lang, source, COUNT(*) AS n FROM documents
         |WHERE lang > 'de' OR (lang = 'de' AND source > 'src2')
-        |GROUP BY 1, 2 ORDER BY lang, source LIMIT 5""".stripMargin) { (s, d) =>
-      T(s, d, "documents")
-        .filter(col("lang") > "de" || (col("lang") === "de" && col("source") > "src2"))
-        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("source")).limit(5)
-    }
+        |GROUP BY 1, 2 ORDER BY lang, source LIMIT 5""".stripMargin)
   )
 }

@@ -12,8 +12,8 @@ import graft.core.Tables
   *
   * The fixtures carry no geo columns, so coordinates are SYNTHESIZED
   * deterministically from `c_custkey` with integer arithmetic — the same
-  * SQL fragment is fed verbatim to the Spark side (`expr`) and the DuckDB
-  * oracle. For q88/q89 the math is integer/exactly-rounded IEEE ops
+  * SQL fragment is fed verbatim to the DuckDB oracle and the Spark side
+  * (the bridged twin of an `Entry.sql` entry, or `expr` in a body). For q88/q89 the math is integer/exactly-rounded IEEE ops
   * (div, mod, sqrt-free), so cross-engine equality is exact by
   * construction. q87's haversine uses transcendentals (sin/cos/asin),
   * which are NOT correctly-rounded — Java Math vs DuckDB's libm may
@@ -261,16 +261,10 @@ object Geo {
     // ES geo_distance: customers within 2000 km of the query point. The
     // rounded distance is projected; the FILTER uses the unrounded value
     // (ES filters on true distance too).
-    Entry("q87_geo_distance",
+    Entry.sql("q87_geo_distance",
       s"""WITH g AS (SELECT c_custkey, $latSql AS lat, $lonSql AS lon FROM customer)
         |SELECT c_custkey, ROUND($distSql, 3) AS dist_km
-        |FROM g WHERE $distSql <= 2000 ORDER BY c_custkey""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(col("c_custkey"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .filter(expr(distSql) <= 2000)
-        .select(col("c_custkey"), round(expr(distSql), 3).as("dist_km"))
-        .orderBy(col("c_custkey"))
-    },
+        |FROM g WHERE $distSql <= 2000 ORDER BY c_custkey""".stripMargin),
 
     // ES geo_distance AGGREGATION (SURVEY Q281; VERDICT r17 #3): the
     // "stores within 2000/5000/10000 km" facet (continental radii — the
@@ -284,7 +278,7 @@ object Geo {
     // is NULL. Bucket count + exact min/max distance per bucket (min/max
     // of doubles is order-independent — no cross-engine summation drift;
     // the ROUND/boundary ulp posture is q87's, documented there).
-    Entry("q281_geo_distance_agg",
+    Entry.sql("q281_geo_distance_agg",
       s"""WITH g AS (SELECT c_custkey, $latSql AS lat, $lonSql AS lon FROM customer),
         |d AS (SELECT c_custkey, $distSql AS dist FROM g),
         |b AS (SELECT dist,
@@ -298,41 +292,15 @@ object Geo {
         |            ELSE CAST(from_km AS VARCHAR) || '-' || CAST(to_km AS VARCHAR) END AS bucket,
         |       from_km, to_km, COUNT(*) AS n_docs,
         |       ROUND(MIN(dist), 3) AS min_km, ROUND(MAX(dist), 3) AS max_km
-        |FROM b GROUP BY 1, 2, 3 ORDER BY from_km""".stripMargin) { (s, d) =>
-      val dist = expr(distSql)
-      T(s, d, "customer")
-        .select(col("c_custkey"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .select(dist.as("dist"))
-        .withColumn("from_km",
-          when(col("dist") < 2000, 0.0).when(col("dist") < 5000, 2000.0)
-            .when(col("dist") < 10000, 5000.0).otherwise(10000.0))
-        .withColumn("to_km",
-          when(col("dist") < 2000, 2000.0).when(col("dist") < 5000, 5000.0)
-            .when(col("dist") < 10000, 10000.0).otherwise(lit(null).cast("double")))
-        .groupBy(
-          when(col("from_km") === 0.0, "*-2000.0")
-            .when(col("to_km").isNull, "10000.0-*")
-            .otherwise(concat(col("from_km").cast("string"), lit("-"),
-                              col("to_km").cast("string"))).as("bucket"),
-          col("from_km"), col("to_km"))
-        .agg(count(lit(1)).as("n_docs"),
-             round(min(col("dist")), 3).as("min_km"),
-             round(max(col("dist")), 3).as("max_km"))
-        .orderBy(col("from_km"))
-    },
+        |FROM b GROUP BY 1, 2, 3 ORDER BY from_km""".stripMargin),
 
     // ES geo_bounding_box: pure range predicate on both axes — pushes to
     // the scan once lat/lon are real columns.
-    Entry("q88_geo_bbox",
+    Entry.sql("q88_geo_bbox",
       s"""WITH g AS (SELECT c_custkey, $latSql AS lat, $lonSql AS lon FROM customer)
         |SELECT c_custkey, lat, lon FROM g
         |WHERE lat BETWEEN -30 AND 30 AND lon BETWEEN 50 AND 120
-        |ORDER BY c_custkey""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(col("c_custkey"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .filter(col("lat").between(-30, 30) && col("lon").between(50, 120))
-        .orderBy(col("c_custkey"))
-    },
+        |ORDER BY c_custkey""".stripMargin),
 
     // ES geo_centroid: the mean coordinate per bucket (here per market
     // segment — on a deployment, per geohash cell or term bucket). One
@@ -340,55 +308,32 @@ object Geo {
     // the shuffle is O(buckets). The coordinates carry two decimals, so
     // double summation error is ~1e-12 relative and ROUND(.,6) is stable
     // across engine summation orders.
-    Entry("q103_geo_centroid",
+    Entry.sql("q103_geo_centroid",
       s"""WITH g AS (SELECT c_mktsegment AS seg, $latSql AS lat, $lonSql AS lon FROM customer)
         |SELECT seg, COUNT(*) AS n,
         |       ROUND(AVG(lat), 6) AS c_lat, ROUND(AVG(lon), 6) AS c_lon
-        |FROM g GROUP BY 1 ORDER BY seg""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(col("c_mktsegment").as("seg"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .groupBy(col("seg"))
-        .agg(count(lit(1)).as("n"),
-             round(avg(col("lat")), 6).as("c_lat"),
-             round(avg(col("lon")), 6).as("c_lon"))
-        .orderBy(col("seg"))
-    },
+        |FROM g GROUP BY 1 ORDER BY seg""".stripMargin),
 
     // ES geo_bounds: the smallest box enclosing each bucket's points —
     // top/bottom = max/min lat, left/right = min/max lon. Four
     // map-side-combinable min/max partials per bucket, O(buckets) shuffle;
     // the coordinates are exact two-decimal values so min/max equality is
     // exact across engines (no summation involved).
-    Entry("q116_geo_bounds",
+    Entry.sql("q116_geo_bounds",
       s"""WITH g AS (SELECT c_mktsegment AS seg, $latSql AS lat, $lonSql AS lon FROM customer)
         |SELECT seg, COUNT(*) AS n,
         |       ROUND(MAX(lat), 6) AS top, ROUND(MIN(lat), 6) AS bottom,
         |       ROUND(MIN(lon), 6) AS left_lon, ROUND(MAX(lon), 6) AS right_lon
-        |FROM g GROUP BY 1 ORDER BY seg""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(col("c_mktsegment").as("seg"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .groupBy(col("seg"))
-        .agg(count(lit(1)).as("n"),
-             round(max(col("lat")), 6).as("top"),
-             round(min(col("lat")), 6).as("bottom"),
-             round(min(col("lon")), 6).as("left_lon"),
-             round(max(col("lon")), 6).as("right_lon"))
-        .orderBy(col("seg"))
-    },
+        |FROM g GROUP BY 1 ORDER BY seg""".stripMargin),
 
     // ES geo_polygon: customers inside an arbitrary polygon ring — the one
     // 6.3 geo filter beyond distance/bbox/grid. Same scan + pushable-filter
     // shape as q88; the predicate is the unrolled ray-cast fragment.
-    Entry("q189_geo_polygon",
+    Entry.sql("q189_geo_polygon",
       s"""WITH g AS (SELECT c_custkey, $latSql AS lat, $lonSql AS lon FROM customer)
         |SELECT c_custkey, lat, lon FROM g
         |WHERE ${pointInPolygonSql("lat", "lon", polygon)}
-        |ORDER BY c_custkey""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(col("c_custkey"), expr(latSql).as("lat"), expr(lonSql).as("lon"))
-        .filter(expr(pointInPolygonSql("lat", "lon", polygon)))
-        .orderBy(col("c_custkey"))
-    },
+        |ORDER BY c_custkey""".stripMargin),
 
     // ES geo_shape shape-vs-shape — each document carries an indexed
     // SHAPE (here: an "envelope", a first-class ES 6.3 geo_shape type)
@@ -407,7 +352,7 @@ object Geo {
     // join (q89's geohash cells) to find candidates, then an exact
     // refine with a codegen'd Expression holding the query ring — the
     // q189 ray-cast note's scale path, applied pairwise.
-    Entry("q194_geo_shape",
+    Entry.sql("q194_geo_shape",
       s"""WITH g AS (SELECT c_custkey, $latSql AS lat, $lonSql AS lon,
         |  $shapeHhSql AS hh, $shapeHwSql AS hw FROM customer),
         |e AS (SELECT c_custkey, lat - hh AS ymin, lat + hh AS ymax,
@@ -418,38 +363,13 @@ object Geo {
         |       WHEN ymin <= 35 AND ymax >= -20 AND xmin <= 130 AND xmax >= 40 THEN 'INTERSECTS'
         |       ELSE 'DISJOINT' END AS relation FROM e)
         |SELECT c_custkey, relation FROM r
-        |WHERE relation <> 'DISJOINT' ORDER BY c_custkey""".stripMargin) { (s, d) =>
-      val e = T(s, d, "customer")
-        .select(col("c_custkey"),
-                expr(latSql).as("lat"), expr(lonSql).as("lon"),
-                expr(shapeHhSql).as("hh"), expr(shapeHwSql).as("hw"))
-        .select(col("c_custkey"),
-                (col("lat") - col("hh")).as("ymin"), (col("lat") + col("hh")).as("ymax"),
-                (col("lon") - col("hw")).as("xmin"), (col("lon") + col("hw")).as("xmax"))
-      e.withColumn("relation",
-          when(col("ymin") >= -20 && col("ymax") <= 35 &&
-               col("xmin") >= 40 && col("xmax") <= 130, "WITHIN")
-            .when(col("ymin") <= -20 && col("ymax") >= 35 &&
-                  col("xmin") <= 40 && col("xmax") >= 130, "CONTAINS")
-            .when(col("ymin") <= 35 && col("ymax") >= -20 &&
-                  col("xmin") <= 130 && col("xmax") >= 40, "INTERSECTS")
-            .otherwise("DISJOINT"))
-        .filter(col("relation") =!= "DISJOINT")
-        .select(col("c_custkey"), col("relation"))
-        .orderBy(col("c_custkey"))
-    },
+        |WHERE relation <> 'DISJOINT' ORDER BY c_custkey""".stripMargin),
 
     // ES geohash_grid: bucket count per geohash cell (precision 3).
-    Entry("q89_geohash_grid",
+    Entry.sql("q89_geohash_grid",
       s"""WITH b AS (SELECT ${geohashBitsSql(ghPrecision)} AS bits FROM customer),
         |g AS (SELECT ${geohashCharsSql(ghPrecision)} AS gh FROM b)
-        |SELECT gh, COUNT(*) AS n FROM g GROUP BY 1 ORDER BY gh""".stripMargin) { (s, d) =>
-      T(s, d, "customer")
-        .select(expr(Dialect.duckToSpark(geohashBitsSql(ghPrecision))).as("bits"))
-        .select(expr(Dialect.duckToSpark(geohashCharsSql(ghPrecision))).as("gh"))
-        .groupBy(col("gh")).agg(count(lit(1)).as("n"))
-        .orderBy(col("gh"))
-    },
+        |SELECT gh, COUNT(*) AS n FROM g GROUP BY 1 ORDER BY gh""".stripMargin),
 
     // General ring-vs-ring geo_shape — the q194 envelope entry's declared
     // scale path (SURVEY Q194/Q200). Spark side: doc triangles emit the

@@ -101,40 +101,23 @@ object Metrics {
     // and the missing flag is a null check on the join output. At scale
     // the distinct is one shuffle of keys only; the join then broadcasts
     // whichever side is small.
-    Entry("q127_missing_agg",
+    Entry.sql("q127_missing_agg",
       """SELECT c_mktsegment, COUNT(*) AS total,
         |  CAST(SUM(CASE WHEN o.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS missing_orders
         |FROM customer c
         |LEFT JOIN (SELECT DISTINCT o_custkey FROM orders) o ON c_custkey = o.o_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val buyers = T(s, d, "orders").select(col("o_custkey")).distinct()
-      T(s, d, "customer")
-        .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("total"),
-             sum(when(col("o_custkey").isNull, 1).otherwise(0)).cast("bigint")
-               .as("missing_orders"))
-        .orderBy(col("c_mktsegment"))
-    },
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES normalize pipeline agg (percent_of_sum): each daily bucket's
     // share of the total. The window runs over O(buckets) histogram rows
     // — an unpartitioned SUM() OVER () is only safe because the input IS
     // the bucket set, never source rows (same posture as q100/q109).
-    Entry("q128_normalize",
+    Entry.sql("q128_normalize",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1)
         |SELECT day, n, ROUND(n / SUM(n) OVER (), 6) AS pct_of_total
-        |FROM h ORDER BY day""".stripMargin) { (s, d) =>
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("day"), col("n"),
-                round(col("n") / sum(col("n")).over(Window.partitionBy()), 6)
-                  .as("pct_of_total"))
-        .orderBy(col("day"))
-    },
+        |FROM h ORDER BY day""".stripMargin),
 
     // ES cumulative_cardinality pipeline agg: distinct users ever seen up
     // to each day. Exact at any scale WITHOUT carrying per-day HLL state:
@@ -143,43 +126,26 @@ object Metrics {
     // over O(buckets) rows. Days with no first-time user emit no row
     // (ES emits every bucket; the running sum is identical on shared
     // days — documented divergence).
-    Entry("q129_cumulative_cardinality",
+    Entry.sql("q129_cumulative_cardinality",
       """WITH f AS (
         |  SELECT user_id, MIN(CAST(date_trunc('day', ts) AS DATE)) AS day
         |  FROM events GROUP BY 1),
         |d AS (SELECT day, COUNT(*) AS new_users FROM f GROUP BY 1)
         |SELECT day, new_users,
         |  CAST(SUM(new_users) OVER (ORDER BY day) AS BIGINT) AS cum_users
-        |FROM d ORDER BY day""".stripMargin) { (s, d) =>
-      val w = Window.orderBy(col("day"))
-      T(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(min(date_trunc("day", col("ts")).cast("date")).as("day"))
-        .groupBy(col("day")).agg(count(lit(1)).as("new_users"))
-        .select(col("day"), col("new_users"),
-                sum(col("new_users")).over(w).cast("bigint").as("cum_users"))
-        .orderBy(col("day"))
-    },
+        |FROM d ORDER BY day""".stripMargin),
 
     // ES moving_percentiles pipeline agg: trailing-7-bucket median of the
     // daily histogram. The percentile window runs over O(buckets) rows
     // with a 7-row frame — per-frame exact interpolation over ≤7 values,
     // never a sketch and never source rows.
-    Entry("q130_moving_percentiles",
+    Entry.sql("q130_moving_percentiles",
       """WITH h AS (
         |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n
         |  FROM events GROUP BY 1)
         |SELECT day, n,
         |  ROUND(quantile_cont(n, 0.5) OVER (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS p50_7
-        |FROM h ORDER BY day""".stripMargin) { (s, d) =>
-      val w = Window.orderBy(col("day")).rowsBetween(-6, 0)
-      T(s, d, "events")
-        .groupBy(date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("day"), col("n"),
-                round(percentile(col("n"), lit(0.5)).over(w), 6).as("p50_7"))
-        .orderBy(col("day"))
-    },
+        |FROM h ORDER BY day""".stripMargin),
 
     // ES median_absolute_deviation: median(|x - median(x)|) per bucket.
     // Two passes: a tiny per-group median table (O(groups) rows) joins
@@ -210,17 +176,11 @@ object Metrics {
     // expresses the escape as conditional aggregation: ONE scan, one hash
     // agg computing both the filtered-context stats (CASE-guarded
     // partials) and the unfiltered corpus stats, instead of two passes.
-    Entry("q140_global_agg",
+    Entry.sql("q140_global_agg",
       """SELECT COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_ctx,
         |  ROUND(AVG(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END), 6) AS avg_ctx,
         |  COUNT(*) AS n_all, ROUND(AVG(o_totalprice), 6) AS avg_all
-        |FROM orders""".stripMargin) { (s, d) =>
-      T(s, d, "orders")
-        .agg(count(when(col("o_orderstatus") === "F", 1)).as("n_ctx"),
-             round(avg(when(col("o_orderstatus") === "F", col("o_totalprice"))), 6).as("avg_ctx"),
-             count(lit(1)).as("n_all"),
-             round(avg(col("o_totalprice")), 6).as("avg_all"))
-    },
+        |FROM orders""".stripMargin),
 
     // ES t_test agg (Welch's unpaired, the ES default): compare mean order
     // value of finished vs open orders. One hash agg computes both

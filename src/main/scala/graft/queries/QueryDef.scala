@@ -3,22 +3,46 @@ package graft.queries
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftPlans
+
+import graft.core.Tables
 
 /** One declared query: the Spark implementation plus (when SQL-expressible)
   * the DuckDB oracle SQL the driver hash-compares against (SURVEY.md §2.2).
   * Oracle-less entries get the driver's weaker rows-only check (approx /
   * sketch variants whose outputs are engine-specific by design).
   *
-  * SQL entry path (SURVEY.md §3.4 entry C): every oracle-backed query must
-  * ALSO run via `spark.sql` and match the DataFrame result row-for-row —
-  * SqlParitySpec enforces it across the whole registry. [[sparkSql]] is
-  * that twin: the oracle bridged by [[Dialect.duckToSpark]], or the
-  * [[sqlTwin]] override where the twin differs structurally.
+  * SQL entry path (SURVEY.md §3.4 entry C): every oracle-backed query also
+  * runs via `spark.sql`. [[sparkSql]] is that twin: the oracle bridged by
+  * [[Dialect.duckToSpark]], or the [[sqlTwin]] override where the twin
+  * differs structurally.
+  *
+  * An entry has ONE implementation. By default ([[Entry.sql]]) it is the
+  * twin itself: [[fn]] runs [[sparkSql]] with the fixture tables bound to
+  * the given directory, so the DuckDB oracle (Verify + selfcheck) checks
+  * it directly. A DataFrame `body` is written only where its plan differs
+  * from the twin's (a join hint, a `Staging` step, a kernel, a stream, a
+  * side effect); SqlParitySpec matches such a body against the twin row
+  * for row, and fails one whose optimized plan and join hints equal the
+  * twin's.
   */
 case class Entry(name: String,
-                 fn: (SparkSession, String) => DataFrame,
+                 body: Option[(SparkSession, String) => DataFrame],
                  oracle: Option[String],
                  sparkSqlOverride: Option[String] = None) {
+
+  /** The implementation over the fixture directory `d`: the DataFrame
+    * body, or for an [[Entry.sql]] entry the twin over `d`'s tables. */
+  def fn: (SparkSession, String) => DataFrame = body.getOrElse(viaSql _)
+
+  /** Whether the twin is the only implementation ([[Entry.sql]]). */
+  def sqlOnly: Boolean = body.isEmpty
+
+  private def viaSql(s: SparkSession, d: String): DataFrame = {
+    val sql = sparkSql.getOrElse(throw new IllegalStateException(
+      s"$name has no spark.sql twin: ${twinError.getOrElse("no oracle")}"))
+    GraftPlans.sqlOver(s, sql, Tables.all.toSet)(Tables(s, d, _))
+  }
 
   /** The bridge's derivation, for an oracle-backed entry without an
     * override. A reject stays with this entry: [[sparkSql]] is then None
@@ -42,8 +66,10 @@ case class Entry(name: String,
 }
 
 object Entry {
+  /** An entry whose only implementation is its `spark.sql` twin. */
+  def sql(name: String, oracle: String): Entry = Entry(name, None, Some(oracle))
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Entry =
-    Entry(name, fn, Some(oracle))
+    Entry(name, Some(fn), Some(oracle))
   def benchOnly(name: String)(fn: (SparkSession, String) => DataFrame): Entry =
-    Entry(name, fn, None)
+    Entry(name, Some(fn), None)
 }

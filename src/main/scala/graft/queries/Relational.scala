@@ -9,7 +9,7 @@ import graft.core.Tables
   *
   * ES-6.3 query-DSL analogs (match_all / ids / bool / term / range /
   * prefix / wildcard / exists / terms) re-expressed as declarative
-  * DataFrame plans so Catalyst pushes predicates and prunes columns into
+  * plans (SQL or DataFrame) so Catalyst pushes predicates and prunes columns into
   * the parquet scan, and picks join strategies (broadcast for dims, SMJ
   * for fact-fact) — verified by plan-shape tests.
   */
@@ -20,15 +20,11 @@ object Relational {
   val entries: Seq[Entry] = Seq(
 
     // ---- scans / sources (Q01-Q04) ----
-    Entry("q01_scan",
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber") { (s, d) =>
-      T(s, d, "lineitem").orderBy(col("l_orderkey"), col("l_linenumber"))
-    },
+    Entry.sql("q01_scan",
+      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber"),
 
-    Entry("q02_lookup",
-      "SELECT * FROM orders WHERE o_orderkey = 42") { (s, d) =>
-      T(s, d, "orders").filter(col("o_orderkey") === 42)
-    },
+    Entry.sql("q02_lookup",
+      "SELECT * FROM orders WHERE o_orderkey = 42"),
 
     Entry("q04_roundtrip",
       "SELECT COUNT(*) AS n FROM lineitem") { (s, d) =>
@@ -47,25 +43,16 @@ object Relational {
         .select(col("l_orderkey"), col("l_extendedprice"))
     },
 
-    Entry("q06_term",
-      "SELECT COUNT(*) AS n FROM orders WHERE o_orderstatus = 'F'") { (s, d) =>
-      T(s, d, "orders").filter(col("o_orderstatus") === "F").agg(count(lit(1)).as("n"))
-    },
+    Entry.sql("q06_term",
+      "SELECT COUNT(*) AS n FROM orders WHERE o_orderstatus = 'F'"),
 
-    Entry("q07_range",
-      "SELECT COUNT(*) AS n FROM lineitem WHERE l_quantity BETWEEN 10 AND 20") { (s, d) =>
-      T(s, d, "lineitem").filter(col("l_quantity").between(10, 20)).agg(count(lit(1)).as("n"))
-    },
+    Entry.sql("q07_range",
+      "SELECT COUNT(*) AS n FROM lineitem WHERE l_quantity BETWEEN 10 AND 20"),
 
-    Entry("q08_bool",
+    Entry.sql("q08_bool",
       """SELECT COUNT(*) AS n FROM lineitem
         |WHERE l_discount > 0.05 AND (l_returnflag = 'R' OR l_tax < 0.02)
-        |  AND NOT l_linestatus = 'O'""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem").filter(
-        col("l_discount") > 0.05 &&
-        (col("l_returnflag") === "R" || col("l_tax") < 0.02) &&
-        !(col("l_linestatus") === "O")).agg(count(lit(1)).as("n"))
-    },
+        |  AND NOT l_linestatus = 'O'""".stripMargin),
 
     Entry("q09_like",
       """SELECT
@@ -86,17 +73,12 @@ object Relational {
         count(when(col("props").isNull, 1)).as("n_missing"))
     },
 
-    Entry("q11_in_set",
-      "SELECT COUNT(*) AS n FROM nation WHERE n_regionkey IN (0, 2, 4)") { (s, d) =>
-      T(s, d, "nation").filter(col("n_regionkey").isin(0, 2, 4)).agg(count(lit(1)).as("n"))
-    },
+    Entry.sql("q11_in_set",
+      "SELECT COUNT(*) AS n FROM nation WHERE n_regionkey IN (0, 2, 4)"),
 
     // ---- joins (Q12-Q20) ----
-    Entry("q12_inner_join",
-      "SELECT o_orderkey, c_name FROM orders JOIN customer ON o_custkey = c_custkey ORDER BY o_orderkey") { (s, d) =>
-      T(s, d, "orders").join(T(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_name")).orderBy(col("o_orderkey"))
-    },
+    Entry.sql("q12_inner_join",
+      "SELECT o_orderkey, c_name FROM orders JOIN customer ON o_custkey = c_custkey ORDER BY o_orderkey"),
 
     Entry("q13_broadcast_join",
       "SELECT p_brand, COUNT(*) AS n FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand ORDER BY p_brand") { (s, d) =>
@@ -106,23 +88,15 @@ object Relational {
         .groupBy(col("p_brand")).agg(count(lit(1)).as("n")).orderBy(col("p_brand"))
     },
 
-    Entry("q14_left_join",
+    Entry.sql("q14_left_join",
       """SELECT c_custkey, COUNT(o_orderkey) AS n_orders
         |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin) { (s, d) =>
-      T(s, d, "customer").join(T(s, d, "orders"), col("o_custkey") === col("c_custkey"), "left")
-        .groupBy(col("c_custkey")).agg(count(col("o_orderkey")).as("n_orders"))
-        .orderBy(col("c_custkey"))
-    },
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
 
-    Entry("q14_full_join",
+    Entry.sql("q14_full_join",
       """SELECT n_nationkey, n_name, s_suppkey
         |FROM nation FULL JOIN supplier ON s_nationkey = n_nationkey
-        |ORDER BY n_nationkey NULLS FIRST, s_suppkey NULLS FIRST""".stripMargin) { (s, d) =>
-      T(s, d, "nation").join(T(s, d, "supplier"), col("s_nationkey") === col("n_nationkey"), "full")
-        .select(col("n_nationkey"), col("n_name"), col("s_suppkey"))
-        .orderBy(col("n_nationkey").asc_nulls_first, col("s_suppkey").asc_nulls_first)
-    },
+        |ORDER BY n_nationkey NULLS FIRST, s_suppkey NULLS FIRST""".stripMargin),
 
     Entry("q15_semi_join",
       "SELECT c_custkey FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey") { (s, d) =>
@@ -204,10 +178,8 @@ object Relational {
         .orderBy(col("event_id"))
     },
 
-    Entry("q19_cross_join",
-      "SELECT COUNT(*) AS n FROM region CROSS JOIN nation") { (s, d) =>
-      T(s, d, "region").crossJoin(T(s, d, "nation")).agg(count(lit(1)).as("n"))
-    },
+    Entry.sql("q19_cross_join",
+      "SELECT COUNT(*) AS n FROM region CROSS JOIN nation"),
 
     Entry("q20_join5",
       """SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
@@ -248,17 +220,11 @@ object Relational {
     // so n export clients never coordinate — the exact ES sliced-scroll
     // contract. Products stay in int64: max orderkey (~6M at sf1) times
     // the multiplier is ~1.6e16, well under 2^63.
-    Entry("q168_sliced_scan",
+    Entry.sql("q168_sliced_scan",
       """SELECT CAST((l_orderkey * 2654435761) % 4 AS INT) AS slice,
         |  COUNT(*) AS n,
         |  CAST(SUM(l_orderkey * l_linenumber) AS BIGINT) AS checksum
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "lineitem")
-        .groupBy(((col("l_orderkey") * lit(2654435761L)) % 4).cast("int").as("slice"))
-        .agg(count(lit(1)).as("n"),
-             sum(col("l_orderkey") * col("l_linenumber")).cast("bigint").as("checksum"))
-        .orderBy(col("slice"))
-    },
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES _mget: fetch a BATCH of documents by id, results in REQUEST
     // order (the ids array's order, duplicates included — the mget
@@ -289,7 +255,7 @@ object Relational {
     // top-k (TakeOrdered), and the union is plan-level concatenation,
     // not a join; arms prune to their own columns/predicates exactly as
     // separate requests would.
-    Entry("q178_msearch",
+    Entry.sql("q178_msearch",
       s"""WITH s1 AS (SELECT 1 AS search_idx, doc_id, lang
         |            FROM documents
         |            WHERE list_contains(${graft.text.Text.tokensSql}, 'spark')
@@ -297,17 +263,7 @@ object Relational {
         |s2 AS (SELECT 2 AS search_idx, doc_id, lang FROM documents
         |       WHERE lang = 'de' AND n_chars >= 200 ORDER BY doc_id LIMIT 5)
         |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY search_idx, doc_id""".stripMargin) { (s, d) =>
-      val docs = T(s, d, "documents")
-      val s1 = docs
-        .filter(array_contains(graft.text.Text.tokens(col("text")), "spark"))
-        .select(lit(1).as("search_idx"), col("doc_id"), col("lang"))
-        .orderBy(col("doc_id")).limit(5)
-      val s2 = docs.filter(col("lang") === "de" && col("n_chars") >= 200)
-        .select(lit(2).as("search_idx"), col("doc_id"), col("lang"))
-        .orderBy(col("doc_id")).limit(5)
-      s1.unionAll(s2).orderBy(col("search_idx"), col("doc_id"))
-    },
+        |ORDER BY search_idx, doc_id""".stripMargin),
 
     // ES _delete_by_query: every document matching the query is deleted;
     // the response reports per-slice deleted counts and the post-delete
@@ -318,18 +274,11 @@ object Relational {
     // tombstone rows through the SAME bucketed merge the CDC path uses
     // (q57/q158's index maintenance) — O(changed buckets) I/O, not a
     // table rewrite; this entry is the read-side contract of that batch.
-    Entry("q177_delete_by_query",
+    Entry.sql("q177_delete_by_query",
       """SELECT lang, COUNT(*) AS docs_before,
         |  COUNT(CASE WHEN source = 'src2' AND n_chars < 500 THEN 1 END) AS deleted,
         |  COUNT(CASE WHEN NOT (source = 'src2' AND n_chars < 500) THEN 1 END) AS docs_after
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val hit = col("source") === "src2" && col("n_chars") < 500
-      T(s, d, "documents").groupBy(col("lang"))
-        .agg(count(lit(1)).as("docs_before"),
-             count(when(hit, 1)).as("deleted"),
-             count(when(!hit, 1)).as("docs_after"))
-        .orderBy(col("lang"))
-    },
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES _update_by_query — the sibling of q177's _delete_by_query (same
     // ES 6.3 document-level bulk API family): every document matching the
@@ -343,22 +292,13 @@ object Relational {
     // through the SAME bucketed merge the CDC path uses (q57/q158) —
     // O(changed buckets) I/O, tombstone-free, not a table rewrite; this
     // entry is the read-side contract of that batch.
-    Entry("q193_update_by_query",
+    Entry.sql("q193_update_by_query",
       """SELECT lang, COUNT(*) AS docs_total,
         |  COUNT(CASE WHEN source = 'src1' AND n_chars < 300 THEN 1 END) AS updated,
         |  CAST(SUM(n_chars) AS BIGINT) AS chars_before,
         |  CAST(SUM(CASE WHEN source = 'src1' AND n_chars < 300
         |               THEN n_chars + 17 ELSE n_chars END) AS BIGINT) AS chars_after
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val hit = col("source") === "src1" && col("n_chars") < 300
-      T(s, d, "documents").groupBy(col("lang"))
-        .agg(count(lit(1)).as("docs_total"),
-             count(when(hit, 1)).as("updated"),
-             sum(col("n_chars")).cast("bigint").as("chars_before"),
-             sum(when(hit, col("n_chars") + 17).otherwise(col("n_chars")))
-               .cast("bigint").as("chars_after"))
-        .orderBy(col("lang"))
-    },
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ES parent-child family (join datatype / `has_child` + `inner_hits`,
     // ES 6.3 query DSL). Parent = customer, children = that customer's
@@ -410,18 +350,12 @@ object Relational {
     // join and the output sort — no row_number pass. Parents without
     // matching children are not hits (the has_child query IS the
     // filter), matching ES.
-    Entry("q288_sort_by_child",
+    Entry.sql("q288_sort_by_child",
       """WITH k AS (SELECT o_custkey, MIN(o_totalprice) AS sort_price
         |           FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
         |SELECT c_custkey, c_name, sort_price
         |FROM customer JOIN k ON o_custkey = c_custkey
-        |ORDER BY sort_price, c_custkey""".stripMargin) { (s, d) =>
-      val k = T(s, d, "orders").filter(col("o_orderstatus") === "O")
-        .groupBy(col("o_custkey")).agg(min(col("o_totalprice")).as("sort_price"))
-      T(s, d, "customer").join(k, col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("sort_price"))
-        .orderBy(col("sort_price"), col("c_custkey"))
-    },
+        |ORDER BY sort_price, c_custkey""".stripMargin),
 
     // ES `has_parent` + `inner_hits`: children whose PARENT matches a
     // filter, each child hit carrying its matching parent doc as the

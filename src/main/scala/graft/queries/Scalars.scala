@@ -20,38 +20,22 @@ object Scalars {
   val entries: Seq[Entry] = Seq(
 
     // ---- set operations (Q41-Q43) ----
-    Entry("q41_union_distinct",
-      """SELECT o_custkey AS id FROM orders UNION SELECT user_id FROM events ORDER BY id""".stripMargin) { (s, d) =>
-      T(s, d, "orders").select(col("o_custkey").as("id"))
-        .union(T(s, d, "events").select(col("user_id")))
-        .distinct().orderBy(col("id"))
-    },
+    Entry.sql("q41_union_distinct",
+      """SELECT o_custkey AS id FROM orders UNION SELECT user_id FROM events ORDER BY id""".stripMargin),
 
-    Entry("q41_union_all",
+    Entry.sql("q41_union_all",
       """SELECT id, COUNT(*) AS n FROM (
         |  SELECT o_custkey AS id FROM orders UNION ALL SELECT user_id FROM events)
-        |GROUP BY id ORDER BY id""".stripMargin) { (s, d) =>
-      T(s, d, "orders").select(col("o_custkey").as("id"))
-        .union(T(s, d, "events").select(col("user_id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("n")).orderBy(col("id"))
-    },
+        |GROUP BY id ORDER BY id""".stripMargin),
 
-    Entry("q42_intersect",
-      """SELECT o_custkey AS id FROM orders INTERSECT SELECT user_id FROM events ORDER BY id""".stripMargin) { (s, d) =>
-      T(s, d, "orders").select(col("o_custkey").as("id"))
-        .intersect(T(s, d, "events").select(col("user_id")))
-        .orderBy(col("id"))
-    },
+    Entry.sql("q42_intersect",
+      """SELECT o_custkey AS id FROM orders INTERSECT SELECT user_id FROM events ORDER BY id""".stripMargin),
 
-    Entry("q43_except",
-      """SELECT c_custkey AS id FROM customer EXCEPT SELECT user_id FROM events ORDER BY id""".stripMargin) { (s, d) =>
-      T(s, d, "customer").select(col("c_custkey").as("id"))
-        .except(T(s, d, "events").select(col("user_id")))
-        .orderBy(col("id"))
-    },
+    Entry.sql("q43_except",
+      """SELECT c_custkey AS id FROM customer EXCEPT SELECT user_id FROM events ORDER BY id""".stripMargin),
 
     // ---- scalar families (Q44-Q50) ----
-    Entry("q44_string_funcs",
+    Entry.sql("q44_string_funcs",
       """SELECT p_partkey,
         |  upper(p_name) AS up, lower(p_type) AS lo,
         |  substring(p_name, 1, 5) AS sub,
@@ -66,26 +50,9 @@ object Scalars {
         |  CAST(strpos(p_name, 'e') AS INT) AS ip,
         |  reverse(p_brand) AS rev,
         |  repeat(p_brand, 2) AS rep
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, d) =>
-      T(s, d, "part").select(
-        col("p_partkey"),
-        upper(col("p_name")).as("up"), lower(col("p_type")).as("lo"),
-        substring(col("p_name"), 1, 5).as("sub"),
-        length(col("p_name")).as("len"),
-        concat(col("p_brand"), lit(":"), col("p_type")).as("cat"),
-        trim(concat(lit("  x"), col("p_name"), lit(" "))).as("trimmed"),
-        lpad(col("p_brand"), 12, "*").as("padded"),
-        translate(col("p_name"), "aeiou", "AEIOU").as("tr"),
-        regexp_replace(col("p_name"), "[aeiou]", "_").as("rr"),
-        regexp_extract(col("p_name"), "([a-z]+)", 1).as("rx"),
-        expr("split_part(p_name, ' ', 1)").as("sp"),
-        instr(col("p_name"), "e").as("ip"),
-        reverse(col("p_brand")).as("rev"),
-        expr("repeat(p_brand, 2)").as("rep"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    Entry("q45_date_funcs",
+    Entry.sql("q45_date_funcs",
       """SELECT o_orderkey,
         |  CAST(year(o_orderdate) AS INT) AS y,
         |  CAST(month(o_orderdate) AS INT) AS m,
@@ -97,22 +64,7 @@ object Scalars {
         |  last_day(CAST(o_orderdate AS DATE)) AS eom,
         |  CAST(epoch(o_orderdate) AS BIGINT) AS unix_s,
         |  strftime(o_orderdate, '%Y-%m-%d') AS fmt
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      T(s, d, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).as("y"),
-        month(col("o_orderdate")).as("m"),
-        dayofmonth(col("o_orderdate")).as("dom"),
-        // Spark dayofweek: 1=Sunday..7=Saturday; DuckDB dayofweek: 0=Sunday..6
-        (dayofweek(col("o_orderdate")) - 1).as("dow"),
-        date_add(col("o_orderdate").cast("date"), 7).as("plus7"),
-        datediff(col("o_orderdate").cast("date"), lit("1995-01-01").cast("date")).as("dd"),
-        date_trunc("month", col("o_orderdate")).cast("date").as("mon"),
-        last_day(col("o_orderdate").cast("date")).as("eom"),
-        unix_timestamp(col("o_orderdate")).as("unix_s"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("fmt"))
-        .orderBy(col("o_orderkey"))
-    }.sqlTwin(
+        |FROM orders ORDER BY o_orderkey""".stripMargin).sqlTwin(
       // structural dialect gaps: DuckDB datediff takes a unit, dayofweek is
       // 0-based, epoch()/strftime() rename to unix_timestamp/date_format
       """SELECT o_orderkey,
@@ -184,7 +136,7 @@ object Scalars {
         .orderBy(col("o_orderkey"))
     },
 
-    Entry("q48_array_funcs",
+    Entry.sql("q48_array_funcs",
       """SELECT vec_id,
         |  CAST(len(embedding) AS INT) AS dim,
         |  ROUND(CAST(embedding[1] AS DOUBLE), 6) AS e1,
@@ -193,19 +145,7 @@ object Scalars {
         |  CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
         |  ROUND((SELECT SUM(CAST(x AS DOUBLE)) FROM UNNEST(embedding) AS u(x)), 4) AS tot,
         |  ROUND(CAST(list_sort(embedding)[2] AS DOUBLE), 6) AS second_min
-        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, d) =>
-      T(s, d, "embeddings").select(
-        col("vec_id"),
-        size(col("embedding")).as("dim"),
-        round(element_at(col("embedding"), 1).cast("double"), 6).as("e1"),
-        round(array_min(col("embedding")).cast("double"), 6).as("mn"),
-        round(array_max(col("embedding")).cast("double"), 6).as("mx"),
-        size(filter(col("embedding"), x => x > 0)).as("n_pos"),
-        round(aggregate(col("embedding"), lit(0.0),
-              (acc, x) => acc + x.cast("double")), 4).as("tot"),
-        round(element_at(sort_array(col("embedding")), 2).cast("double"), 6).as("second_min"))
-        .orderBy(col("vec_id"))
-    }.sqlTwin(
+        |FROM embeddings ORDER BY vec_id""".stripMargin).sqlTwin(
       // structural gaps: DuckDB's 1-based [] vs element_at, UNNEST-subquery
       // sum vs the aggregate() lambda
       """SELECT vec_id,
@@ -218,13 +158,9 @@ object Scalars {
         |  ROUND(CAST(element_at(sort_array(embedding), 2) AS DOUBLE), 6) AS second_min
         |FROM embeddings ORDER BY vec_id""".stripMargin),
 
-    Entry("q50_json",
+    Entry.sql("q50_json",
       """SELECT CAST(json_extract_string(props, '$.k') AS INT) % 10 AS k_mod, COUNT(*) AS n
-        |FROM events WHERE props IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      T(s, d, "events").filter(col("props").isNotNull)
-        .groupBy((get_json_object(col("props"), "$.k").cast("int") % 10).as("k_mod"))
-        .agg(count(lit(1)).as("n")).orderBy(col("k_mod"))
-    },
+        |FROM events WHERE props IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin),
 
     Entry("q50_from_json",
       """SELECT CAST(MIN(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS k_min,

@@ -199,7 +199,7 @@ object Search {
     // best+rest shape as q99's dis_max, here ACROSS FIELDS of one doc
     // (p_name tokens vs p_type keyword) instead of across terms. Per-row
     // arithmetic over two CASE chains — folds into the scan.
-    Entry("q120_multi_match",
+    Entry.sql("q120_multi_match",
       """WITH f AS (SELECT p_partkey,
         |  (CASE WHEN ' ' || lower(p_name) || ' ' LIKE '% large %' THEN 1 ELSE 0 END
         | + CASE WHEN ' ' || lower(p_name) || ' ' LIKE '% economy %' THEN 1 ELSE 0 END) AS s_name,
@@ -210,21 +210,7 @@ object Search {
         |  ROUND(GREATEST(s_name, s_type)
         |        + 0.3 * CAST(s_name + s_type - GREATEST(s_name, s_type) AS DOUBLE), 6) AS score
         |FROM f WHERE s_name + s_type > 0
-        |ORDER BY score DESC, p_partkey""".stripMargin) { (s, d) =>
-      val padded = concat(lit(" "), lower(col("p_name")), lit(" "))
-      val sName = (when(padded.like("% large %"), 1).otherwise(0)
-        + when(padded.like("% economy %"), 1).otherwise(0)).as("s_name")
-      val sType = (when(lower(col("p_type")) === "large", 1).otherwise(0)
-        + when(lower(col("p_type")) === "economy", 1).otherwise(0)).as("s_type")
-      T(s, d, "part")
-        .select(col("p_partkey"), sName, sType)
-        .filter(col("s_name") + col("s_type") > 0)
-        .select(col("p_partkey"), col("s_name"), col("s_type"),
-                round(greatest(col("s_name"), col("s_type"))
-                  + (col("s_name") + col("s_type")
-                     - greatest(col("s_name"), col("s_type"))) * 0.3, 6).as("score"))
-        .orderBy(col("score").desc, col("p_partkey"))
-    },
+        |ORDER BY score DESC, p_partkey""".stripMargin),
 
     // ES simple_query_string: '+data -slow "data stream" batch vec*' —
     // required term, prohibited term, an optional phrase, an optional
@@ -497,15 +483,10 @@ object Search {
 
     // ES regexp query: anchored alternation over a keyword-ish field.
     // A single rlike predicate — pushable, no analysis pass.
-    Entry("q134_regexp_query",
+    Entry.sql("q134_regexp_query",
       """SELECT p_partkey, p_name FROM part
         |WHERE regexp_matches(p_name, '^(small|large) w')
-        |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-      T(s, d, "part")
-        .filter(col("p_name").rlike("^(small|large) w"))
-        .select(col("p_partkey"), col("p_name"))
-        .orderBy(col("p_partkey"))
-    },
+        |ORDER BY p_partkey""".stripMargin),
 
     // ES rescore: two-phase ranking — a CHEAP first pass (matched-term
     // count, pure membership arithmetic) picks a top-100 window, and the
@@ -1137,24 +1118,18 @@ object Search {
         |FROM o ORDER BY 1""".stripMargin),
 
     // ES wildcard query: `*` (any run) / `?` (one char) patterns on a
-    // keyword field, compiled to ONE pushable LIKE by [[wildcardToLike]]
-    // (literal %/_ in the pattern are escaped first, so data containing
-    // SQL wildcard chars can't false-match — the part ES's own
-    // term-automaton never has to think about). The compiled predicate
-    // is an ordinary scan filter; ES warns leading-* patterns walk the
-    // whole term dictionary — here every pattern is a full-column scan
-    // predicate anyway (columnar min/max skipping still applies to
-    // anchored prefixes via the LIKE's leading literal).
-    Entry("q184_wildcard",
+    // keyword field, each ONE pushable LIKE (`*s?ow*` -> '%s_ow%', as
+    // [[wildcardToLike]] compiles them for query_string, escaping literal
+    // %/_ first so data containing SQL wildcard chars can't false-match —
+    // the part ES's own term-automaton never has to think about). The
+    // predicate is an ordinary scan filter; ES warns leading-* patterns
+    // walk the whole term dictionary — here every pattern is a
+    // full-column scan predicate anyway (columnar min/max skipping still
+    // applies to anchored prefixes via the LIKE's leading literal).
+    Entry.sql("q184_wildcard",
       """SELECT p_partkey, p_name FROM part
         |WHERE p_name LIKE '%s_ow%' OR p_name LIKE 'p_o%'
-        |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-      T(s, d, "part")
-        .filter(col("p_name").like(wildcardToLike("*s?ow*")) ||
-                col("p_name").like(wildcardToLike("p?o*")))
-        .select(col("p_partkey"), col("p_name"))
-        .orderBy(col("p_partkey"))
-    },
+        |ORDER BY p_partkey""".stripMargin),
 
     // ES span_near with in_order=true — the ORDERED proximity span
     // (q97's phrase_slop is the unordered twin): 'data' must precede
@@ -1176,15 +1151,7 @@ object Search {
             col("b.pos") > col("a.pos") && col("b.pos") - col("a.pos") - 1 <= 2)
         .select(col("a.doc_id").as("doc_id")).distinct()
         .orderBy(col("doc_id"))
-    }.sqlTwin(
-      // no dialect gap is known here (the oracle sorts by the projected
-      // name); the bridged oracle is the next twin to try (ROADMAP D6)
-      s"""WITH ${Dialect.duckToSpark(graft.text.Text.wordsCtesSql)},
-        |m AS (SELECT DISTINCT a.doc_id FROM words a
-        |      JOIN words b ON b.doc_id = a.doc_id
-        |        AND b.pos > a.pos AND b.pos - a.pos - 1 <= 2
-        |      WHERE a.w = 'data' AND b.w = 'stream')
-        |SELECT doc_id FROM m ORDER BY doc_id""".stripMargin),
+    },
 
     // ES span_or: the union of several term spans, counted per doc (a
     // span clause other span queries compose over — its occurrence count

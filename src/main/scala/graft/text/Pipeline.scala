@@ -502,18 +502,11 @@ object Pipeline {
     // would overflow signed 64-bit past doc_id ~3.47e9 (ANSI mode throws;
     // DuckDB errors too), which a 100 TB corpus exceeds. The reduced form
     // is exact for all BIGINT doc_ids: 1000002 * 2654435761 < 2^63.
-    Entry("q91_stratified_sample",
+    Entry.sql("q91_stratified_sample",
       """SELECT doc_id, lang FROM documents
         |WHERE ((doc_id % 1000003) * 2654435761) % 1000 <
         |      CASE lang WHEN 'en' THEN 500 WHEN 'de' THEN 250 ELSE 100 END
-        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      T(s, d, "documents")
-        .filter((col("doc_id") % 1000003L * 2654435761L % 1000) <
-                when(col("lang") === "en", 500)
-                  .when(col("lang") === "de", 250).otherwise(100))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    },
+        |ORDER BY doc_id""".stripMargin),
 
     // ---- within-document repetition (Gopher repetition filter) ----
     // Duplicate-shingle fraction INSIDE each document — the repetition
@@ -1385,7 +1378,7 @@ object Pipeline {
     // codegen'd per-row regex ops, no shuffle, no join; at 100 TB this
     // is the cheapest stage in the pipeline and composes in front of
     // q154's curation report like any other per-doc signal.
-    Entry("q192_pii_redact",
+    Entry.sql("q192_pii_redact",
       s"""WITH pii AS (SELECT doc_id, text ||
         |    CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END ||
         |    CASE WHEN doc_id % 7 = 0 THEN ' call 555-867-5309' ELSE '' END ||
@@ -1401,29 +1394,7 @@ object Pipeline {
         |  FROM pii)
         |SELECT doc_id, n_emails, n_phones, n_ips,
         |  CAST(len(redacted) AS INT) AS redacted_len, md5(redacted) AS redacted_md5
-        |FROM red ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val t = concat(col("text"),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" contact user"), col("doc_id").cast("string"), lit("@example.com")))
-          .otherwise(""),
-        when(col("doc_id") % 7 === 0, lit(" call 555-867-5309")).otherwise(""),
-        when(col("doc_id") % 11 === 0,
-          concat(lit(" from 10.0."), (col("doc_id") % 200).cast("string"), lit(".7")))
-          .otherwise(""))
-      Tables(s, d, "documents")
-        .select(col("doc_id"), t.as("t"))
-        .select(col("doc_id"),
-                regexp_count(col("t"), lit(piiEmailRe)).cast("int").as("n_emails"),
-                regexp_count(col("t"), lit(piiPhoneRe)).cast("int").as("n_phones"),
-                regexp_count(col("t"), lit(piiIpRe)).cast("int").as("n_ips"),
-                regexp_replace(regexp_replace(regexp_replace(col("t"),
-                  piiEmailRe, "<EMAIL>"), piiPhoneRe, "<PHONE>"), piiIpRe, "<IP>")
-                  .as("redacted"))
-        .select(col("doc_id"), col("n_emails"), col("n_phones"), col("n_ips"),
-                length(col("redacted")).cast("int").as("redacted_len"),
-                md5(col("redacted")).as("redacted_md5"))
-        .orderBy(col("doc_id"))
-    }.sqlTwin(
+        |FROM red ORDER BY doc_id""".stripMargin).sqlTwin(
       // structural gaps: Spark string literals process backslash escapes
       // (patterns need doubled backslashes), regexp_count replaces
       // len(regexp_extract_all), regexp_replace is global by default

@@ -472,13 +472,9 @@ object Text {
   val entries: Seq[Entry] = Seq(
 
     // ---- Q60 exact dedup ----
-    Entry("q60_dedup_exact",
+    Entry.sql("q60_dedup_exact",
       """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_dups FROM documents
-        |GROUP BY text ORDER BY doc_id""".stripMargin) { (s, d) =>
-      T(s, d, "documents").groupBy(col("text"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups"))
-        .select(col("doc_id"), col("n_dups")).orderBy(col("doc_id"))
-    },
+        |GROUP BY text ORDER BY doc_id""".stripMargin),
 
     // ---- Q61 near-dup via exact 3-shingle Jaccard (oracle twin) ----
     Entry("q61_neardup_jaccard", neardupPairsOracleSql) { (s, d) =>
@@ -557,13 +553,9 @@ object Text {
     },
 
     // ---- Q66 facets ----
-    Entry("q66_facets",
+    Entry.sql("q66_facets",
       """SELECT lang, source, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      T(s, d, "documents").groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("lang"), col("source"))
-    },
+        |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // ---- training-data ops: lang-ID, quality, token counts, fingerprint, simhash ----
     Entry("q67_simhash",
@@ -750,17 +742,11 @@ object Text {
         .orderBy(col("doc_id"))
     },
 
-    Entry("q70_token_count",
+    Entry.sql("q70_token_count",
       s"""SELECT doc_id,
         |  CAST(len($tokensSql) AS INT) AS n_ws,
         |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS n_bpe
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      T(s, d, "documents").select(
-          col("doc_id"),
-          size(tokens(col("text"))).as("n_ws"),
-          size(expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)")).as("n_bpe"))
-        .orderBy(col("doc_id"))
-    }.sqlTwin(
+        |FROM documents ORDER BY doc_id""".stripMargin).sqlTwin(
       // structural gap: Spark regexp_extract_all needs the explicit group-0
       // argument (DuckDB returns the full match by default)
       s"""SELECT doc_id,

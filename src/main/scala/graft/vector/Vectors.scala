@@ -107,18 +107,11 @@ object Vectors {
         |ORDER BY q_id, rn""".stripMargin),
 
     // vector norms / arithmetic as first-class columns
-    Entry("q62_vector_stats",
+    Entry.sql("q62_vector_stats",
       """SELECT vec_id,
         |  ROUND(sqrt((SELECT SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) FROM UNNEST(embedding) AS u(x))), 6) AS l2,
         |  ROUND((SELECT SUM(CAST(x AS DOUBLE)) FROM UNNEST(embedding) AS u(x)) / len(embedding), 6) AS mean
-        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val v = asDouble(col("embedding"))
-      T(s, d, "embeddings").select(
-          col("vec_id"),
-          round(norm(v), 6).as("l2"),
-          round(dot(v, transform(v, _ => lit(1.0))) / size(col("embedding")), 6).as("mean"))
-        .orderBy(col("vec_id"))
-    }.sqlTwin(
+        |FROM embeddings ORDER BY vec_id""".stripMargin).sqlTwin(
       """SELECT vec_id,
         |  ROUND(sqrt(vec_dot(CAST(embedding AS ARRAY<DOUBLE>),
         |                     CAST(embedding AS ARRAY<DOUBLE>))), 6) AS l2,

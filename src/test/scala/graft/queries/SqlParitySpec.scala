@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+
 import graft.GraftSuite
 import graft.SparkEntry
 import graft.core.Tables
@@ -19,6 +21,14 @@ import graft.core.Tables
   * SQL twin (prefix-consistency: the drained stream must equal the batch
   * query over the same rows). Bench-only sketch entries have no twin by
   * design and are the only exclusions.
+  *
+  * For an `Entry.sql` entry the twin IS the implementation: the test then
+  * checks only the binding (the fixture tables bound per call vs the
+  * session views below), and the DuckDB oracle is its real check. A
+  * DataFrame body whose optimized plan `sameResult`s the twin's AND whose
+  * join hints equal the twin's is a second copy of the twin and fails
+  * here: `sameResult` alone ignores hints, and a `broadcast()` the twin
+  * lacks is a real plan difference.
   */
 @graft.tags.Slow
 class SqlParitySpec extends GraftSuite {
@@ -41,6 +51,12 @@ class SqlParitySpec extends GraftSuite {
       val viaSql = spark.sql(twin)
       assert(viaDf.columns.toSeq === viaSql.columns.toSeq, s"${e.name} column mismatch")
       assert(viaDf.collect().toSeq === viaSql.collect().toSeq, s"${e.name} row mismatch")
+      if (!e.sqlOnly) {
+        val (a, b) = (viaDf.queryExecution.optimizedPlan, viaSql.queryExecution.optimizedPlan)
+        def hints(p: LogicalPlan) = p.collect { case j: Join => j.hint }
+        assert(!(a.sameResult(b) && hints(a) == hints(b)),
+          s"${e.name}: the DataFrame body plans exactly like its twin; declare it Entry.sql")
+      }
       spark.catalog.clearCache()
     }
   }
